@@ -14,15 +14,14 @@ object PlanDump {
     val suffix = args(1)
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // optional session confs ("k=v,k=v") — e.g. pin the graph/cluster
     // fast-path thresholds to 0 so the DISTRIBUTED plan shapes of the
-    // driver-fast-path keys stay dumpable (r21, VERDICT item 7)
-    sys.env.get("SPARK_GRAFT_PLAN_CONFS").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    // driver-fast-path keys stay dumpable (r21, VERDICT item 7); parsed
+    // before the session starts so a malformed spec fails at once
+    val confs = sys.env.get("SPARK_GRAFT_PLAN_CONFS").map(parseConfs).getOrElse(Nil)
+    val spark = GraftSession.builder().getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
@@ -35,4 +34,16 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** `SPARK_GRAFT_PLAN_CONFS` as trimmed (key, value) pairs: blank
+    * segments (a trailing or doubled comma) are skipped, and a segment
+    * without `=` or with an empty key fails with its text. */
+  def parseConfs(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => (k.trim, v.trim)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_PLAN_CONFS: expected k=v, got '$seg'")
+      }
+    }
 }

@@ -41,7 +41,7 @@ object ScaleCheck {
       "knn_radius", "knn_filtered", "knn_ivf_opq",
       "ivf_pq_filtered_query", "sq8_radius_query", "ivf_stats",
       "ivf_pq_radius_query", "sq8_filtered_query", "ivf_opq_serve",
-      "ivf_sq8_query", "ivf_atomic_rww", "ivf_atomic_cost",
+      "ivf_sq8_query", "ivf_atomic_rww",
       "ann_ingest_churn", "ivf_refs_cost", "ann_ingest_replay_retrain",
       // self-synthesizes its chain edges, reads no corpus table — in
       // this set so a combined filtered run skips the big tables
@@ -567,14 +567,15 @@ object ScaleCheck {
     }
 
     // incremental ANN maintenance: the one-time build is the untimed
-    // big cost; the DAILY cost under measure is appendIvfPqIndex of a
-    // 1% batch against the staged artifacts — assignment+encode over
-    // the NEW vectors only (O(|new|·C·d)), independent of index size.
+    // big cost; the DAILY cost under measure is appendIvfPqIndexAtomic
+    // of a 1% batch against the staged artifacts — assignment+encode
+    // over the NEW vectors only (O(|new|·C·d)) plus the touched cells'
+    // rewrite, independent of the untouched index mass.
     val ivfAppend = if (!only("ivf_pq_append")) None else Some {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = operators.Scratch.diskDir("graft_scale_ivfpq")
+      val root = operators.Scratch.diskDir("graft_scale_ivfpq")
       val tb0 = System.nanoTime()
-      operators.Pq.writeIvfPqIndex(operators.Pq.buildIvfPq(emb), idxDir)
+      operators.Pq.stageIvfPqIndexVersion(operators.Pq.buildIvfPq(emb), root)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val maxId = emb.agg(max("vec_id")).collect()(0).getLong(0)
       val nNew = math.max(1L, (maxId + 1) / 100)
@@ -589,13 +590,13 @@ object ScaleCheck {
           (c + nz).cast("float")
         }).as("embedding"))
       val ta0 = System.nanoTime()
-      val appended = operators.Pq.appendIvfPqIndex(spark, idxDir, newVecs)
+      val appended = operators.Pq.appendIvfPqIndexAtomic(spark, root, newVecs)
       val appendSec = (System.nanoTime() - ta0) / 1e9
       // GDPR-sized erasure against the same staged index: one user's
       // 50 vectors → ≤50 of the ~√(n/2) cell directories rewritten
       val eraseIds = (0L until 50L).map(i => i * (maxId / 50L))
       val td0 = System.nanoTime()
-      val deleted = operators.Pq.deleteFromIvfPqIndex(spark, idxDir, eraseIds)
+      val deleted = operators.Pq.deleteFromIvfPqIndexAtomic(spark, root, eraseIds)
       val deleteSec = (System.nanoTime() - td0) / 1e9
       s""""ivf_pq_append":{"sec":$appendSec,"rows":$appended,"build_sec":$buildSec},""" +
         s""""ivf_pq_delete":{"sec":$deleteSec,"rows":$deleted}"""
@@ -624,7 +625,7 @@ object ScaleCheck {
     // round-17 serving rows: filtered queries off the COMPRESSED
     // staged tier (build once untimed, time only the query path —
     // the steady-state figure), radius + erasure on the staged SQ8
-    // index, and the index-health read + in-place retrain.
+    // index, and the index-health read + versioned retrain.
     val pqFilteredServe = if (!only("ivf_pq_filtered_query")) None else Some {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val idxDir = operators.Scratch.diskDir("graft_scale_ivfpq_filt")
@@ -643,9 +644,9 @@ object ScaleCheck {
     }
     val sq8RadiusServe = if (!only("sq8_radius_query")) None else Some {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = operators.Scratch.diskDir("graft_scale_sq8rad")
+      val root = operators.Scratch.diskDir("graft_scale_sq8rad")
       val tb0 = System.nanoTime()
-      operators.Quantize.writeSq8Index(emb, idxDir)
+      val idxDir = operators.Quantize.stageSq8IndexVersion(emb, root)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_sq8_radius")
       val tq0 = System.nanoTime()
@@ -658,28 +659,29 @@ object ScaleCheck {
       val maxId = emb.agg(max("vec_id")).collect()(0).getLong(0)
       val eraseIds = (0L until 50L).map(i => i * (maxId / 50L))
       val td0 = System.nanoTime()
-      val deleted = operators.Quantize.deleteFromSq8Index(spark, idxDir, eraseIds)
+      val deleted = operators.Quantize.deleteFromSq8IndexAtomic(spark, root, eraseIds)
       val deleteSec = (System.nanoTime() - td0) / 1e9
       s""""sq8_radius_query":{"sec":$qSec,"rows":${acc.value},"build_sec":$buildSec},""" +
         s""""sq8_delete":{"sec":$deleteSec,"rows":$deleted}"""
     }
     val ivfStats = if (!only("ivf_stats")) None else Some {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = operators.Scratch.diskDir("graft_scale_ivf_stats")
+      val root = operators.Scratch.diskDir("graft_scale_ivf_stats")
       val cut = emb.agg(max("vec_id")).collect()(0).getLong(0) / 2
       val tb0 = System.nanoTime()
-      operators.Similarity.writeIvfIndex(
-        emb.filter(col("vec_id") <= cut), idxDir)
-      operators.Similarity.appendIvfIndex(spark, idxDir,
+      operators.Similarity.stageIvfIndexVersion(
+        emb.filter(col("vec_id") <= cut), root)
+      operators.Similarity.appendIvfIndexAtomic(spark, root,
         emb.filter(col("vec_id") > cut))
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_ivf_stats")
       val ts0 = System.nanoTime()
-      operators.Similarity.ivfIndexStats(spark, idxDir, cut + 1)
+      operators.Similarity.ivfIndexStats(spark,
+        operators.IndexManifest.currentOrFail(spark, root), cut + 1)
         .queryExecution.toRdd.foreachPartition(it => acc.add(it.size.toLong))
       val statsSec = (System.nanoTime() - ts0) / 1e9
       val tr0 = System.nanoTime()
-      operators.Similarity.rebalanceIvfIndex(spark, idxDir)
+      operators.Similarity.rebalanceIvfIndexVersioned(spark, root)
       val rebalSec = (System.nanoTime() - tr0) / 1e9
       s""""ivf_stats":{"sec":$statsSec,"rows":${acc.value},"build_sec":$buildSec},""" +
         s""""ivf_rebalance":{"sec":$rebalSec,"rows":${acc.value}}"""
@@ -723,10 +725,10 @@ object ScaleCheck {
     // a GDPR-sized erasure (the PQ cell-directory rewrite verbatim)
     val opqServe = if (!only("ivf_opq_serve")) None else Some {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = operators.Scratch.diskDir("graft_scale_ivfopq")
+      val root = operators.Scratch.diskDir("graft_scale_ivfopq")
       val tb0 = System.nanoTime()
-      operators.Opq.writeIvfOpqIndex(
-        operators.Opq.buildIvfOpq(emb, metaCols = Seq("label")), idxDir)
+      val idxDir = operators.Opq.stageIvfOpqIndexVersion(
+        operators.Opq.buildIvfOpq(emb, metaCols = Seq("label")), root)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val staged = operators.Opq.readIvfOpqIndex(spark, idxDir)
       val acc = spark.sparkContext.longAccumulator("rows_opq_filtered")
@@ -750,11 +752,11 @@ object ScaleCheck {
         }).as("embedding"),
         pmod(col("id"), lit(7L)).cast("int").as("label"))
       val ta0 = System.nanoTime()
-      val appended = operators.Opq.appendIvfOpqIndex(spark, idxDir, newVecs)
+      val appended = operators.Opq.appendIvfOpqIndexAtomic(spark, root, newVecs)
       val appendSec = (System.nanoTime() - ta0) / 1e9
       val eraseIds = (0L until 50L).map(i => i * (maxId / 50L))
       val td0 = System.nanoTime()
-      val deleted = operators.Opq.deleteFromIvfOpqIndex(spark, idxDir, eraseIds)
+      val deleted = operators.Opq.deleteFromIvfOpqIndexAtomic(spark, root, eraseIds)
       val deleteSec = (System.nanoTime() - td0) / 1e9
       s""""ivf_opq_filtered_query":{"sec":$qSec,"rows":${acc.value},"build_sec":$buildSec},""" +
         s""""ivf_opq_append":{"sec":$appendSec,"rows":$appended},""" +
@@ -866,49 +868,12 @@ object ScaleCheck {
         s""""n_reads":${all.size},"n_mixed":0,""" +
         s""""read_ms_quiet":$quietMs,"read_ms_during_writes":$duringMs}"""
     }
-    // the PRICE of atomicity (r18): the same 1% batch appended to the
-    // same day-0 float index through the in-place fast path vs the
-    // manifest-atomic path — the delta is the hardlink mirror
-    // (metadata ops over the untouched cells) plus the touched-cell
-    // old∪new rewrite replacing a bare file append. Same for a
-    // 50-id erasure. This is the number a deployment weighs against
-    // the in-place paths' documented consistency residuals.
-    val atomicCost = if (!only("ivf_atomic_cost")) None else Some {
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val maxId = emb.agg(max("vec_id")).collect()(0).getLong(0)
-      val cut = maxId / 2
-      val base = emb.filter(col("vec_id") <= cut)
-      val rest = emb.filter(col("vec_id") > cut)
-      val eraseIds = (0L until 50L).map(i => i * (cut / 50L))
-      // in-place
-      val plainDir = operators.Scratch.diskDir("graft_scale_atomic_cost_plain")
-      operators.Similarity.writeIvfIndex(base, plainDir)
-      val tp0 = System.nanoTime()
-      val nIp = operators.Similarity.appendIvfIndex(spark, plainDir, rest)
-      val ipAppendSec = (System.nanoTime() - tp0) / 1e9
-      val tp1 = System.nanoTime()
-      operators.Similarity.deleteFromIvfIndex(spark, plainDir, eraseIds)
-      val ipDeleteSec = (System.nanoTime() - tp1) / 1e9
-      // atomic
-      val root = operators.Scratch.diskDir("graft_scale_atomic_cost_root")
-      operators.Similarity.stageIvfIndexVersion(base, root)
-      val ta0 = System.nanoTime()
-      val nAt = operators.Similarity.appendIvfIndexAtomic(spark, root, rest)
-      val atAppendSec = (System.nanoTime() - ta0) / 1e9
-      val ta1 = System.nanoTime()
-      operators.Similarity.deleteFromIvfIndexAtomic(spark, root, eraseIds)
-      val atDeleteSec = (System.nanoTime() - ta1) / 1e9
-      require(nIp == nAt, s"cost row appended different counts: $nIp vs $nAt")
-      s""""ivf_atomic_cost":{"sec":${atAppendSec + atDeleteSec},"rows":$nAt,""" +
-        s""""inplace_append_sec":$ipAppendSec,"atomic_append_sec":$atAppendSec,""" +
-        s""""inplace_delete_sec":$ipDeleteSec,"atomic_delete_sec":$atDeleteSec}"""
-    }
     // version-churn bound of the coalesced atomic streaming ingest
     // (r18 verdict item 5): the SAME high-rate small-batch stream —
     // the last 20% of the corpus in 20 micro-batches — ingested
     // per-batch-publish vs coalesced (publish every ~5 batches of
     // rows). Reported: total versions CREATED over the stream's life
-    // (the churn — each one costs an O(n_files) hardlink tree) and
+    // (the churn — each one costs a manifest and fresh store files) and
     // files on disk at end (bounded by keep-N either way). The
     // coalesced path must create ~B/5 versions for B batches at the
     // same final answer set (equality is StreamingSpec's job; this
@@ -955,14 +920,12 @@ object ScaleCheck {
         s""""versions_coalesced":$vCo,"files_end_per_batch":$filesPer,""" +
         s""""files_end_coalesced":$filesCo,"sec_per_batch_path":$secPer}"""
     }
-    // REFS vs LINK publish cost (r19 verdict item 2's DONE gate): the
-    // SAME fixed 1% batch appended to (and 50 ids erased from) a
-    // day-0 index holding the other 99% — the untouched mass whose
-    // size must NOT appear in the refs-mode publish bill. Link mode
-    // pays one metadata op per untouched file (a full data copy on
-    // stores without hardlinks); refs mode pays one manifest write.
-    // Read the row as: refs_*_sec ≈ flat across 100×/1000× while
-    // link_*_sec grows with the untouched file count.
+    // delta publish cost (r19 verdict item 2's DONE gate): a fixed 1%
+    // batch appended to (and 50 ids erased from) a day-0 index holding
+    // the other 99% — the untouched mass whose size must NOT appear in
+    // the publish bill, which is one manifest write plus the touched
+    // partitions' rewrite. Read the row as: *_sec ≈ flat across
+    // 100×/1000×.
     val refsCost = if (!only("ivf_refs_cost")) None else Some {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val maxId = emb.agg(max("vec_id")).collect()(0).getLong(0)
@@ -970,65 +933,47 @@ object ScaleCheck {
       val base = emb.filter(col("vec_id") <= cut)
       val batch = emb.filter(col("vec_id") > cut)
       val eraseIds = (0L until 50L).map(i => i * (cut / 50L))
-      def drive(mode: String): (Double, Double, Long) = {
-        spark.conf.set("spark.graft.manifest.mode", mode)
-        try {
-          val root = operators.Scratch.diskDir(s"graft_scale_refs_cost_$mode")
-          operators.Similarity.stageIvfIndexVersion(base, root)
-          val t0 = System.nanoTime()
-          val n = operators.Similarity.appendIvfIndexAtomic(spark, root, batch)
-          val aSec = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          operators.Similarity.deleteFromIvfIndexAtomic(spark, root, eraseIds)
-          val dSec = (System.nanoTime() - t1) / 1e9
-          (aSec, dSec, n)
-        } finally spark.conf.unset("spark.graft.manifest.mode")
-      }
-      // link first: any first-run JIT/codegen warm-up biases AGAINST
-      // refs, the mode under test (conservative ordering)
-      val (la, ld, _) = drive("link")
-      val (ra, rd, nRows) = drive("refs")
-      // The IVF corpus shape above cannot separate the layouts: ~32
-      // cells and a hash-spread batch mean every publish touches every
-      // partition, so both modes rewrite the whole tree. The regime
-      // the refs layout exists for is MANY partitions + a cell-local
-      // batch — per-publish metadata O(touched) vs O(all files). This
-      // synthetic tree measures exactly that, at STEADY STATE (the
-      // 2nd delta, so refs inherits via manifest parse instead of
-      // walking the full-publish tree):
+      val root = operators.Scratch.diskDir("graft_scale_refs_cost")
+      operators.Similarity.stageIvfIndexVersion(base, root)
+      val t0 = System.nanoTime()
+      val nRows = operators.Similarity.appendIvfIndexAtomic(spark, root, batch)
+      val ra = (System.nanoTime() - t0) / 1e9
+      val t1 = System.nanoTime()
+      operators.Similarity.deleteFromIvfIndexAtomic(spark, root, eraseIds)
+      val rd = (System.nanoTime() - t1) / 1e9
+      // The IVF corpus shape above cannot show the O(touched) bill:
+      // ~32 cells and a hash-spread batch mean every publish touches
+      // every partition. The regime the refs layout exists for is MANY
+      // partitions + a cell-local batch. This synthetic tree measures
+      // exactly that, at STEADY STATE (the 2nd delta, so the publish
+      // inherits via manifest parse instead of walking the
+      // full-publish tree):
       val pParts = math.min(4096L, 64L * mult)
-      def drivePartHeavy(mode: String): Double = {
-        spark.conf.set("spark.graft.manifest.mode", mode)
-        try {
-          val root = operators.Scratch.diskDir(s"graft_scale_refs_parts_$mode")
-          val rows = spark.range(pParts * 50)
-            .select(col("id").as("vec_id"), pmod(col("id"), lit(pParts)).as("cell"),
-              md5(col("id").cast("string")).as("payload"))
-          operators.IndexManifest.publish(spark, root) { dir =>
-            rows.repartition(col("cell"))
-              .write.partitionBy("cell").parquet(s"$dir/codes")
-          }
-          def batch(tag: Long) = spark.range(200)
-            .select((col("id") + pParts * 50 + tag * 1000).as("vec_id"),
-              pmod(col("id"), lit(4L)).as("cell"),
-              md5(col("id").cast("string")).as("payload"))
-          // warm delta (untimed): first refs delta pays the one-time
-          // full-publish tree walk; link pays JIT
-          operators.IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-            batch(0), keep = 2)
-          val t0 = System.nanoTime()
-          operators.IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-            batch(1), keep = 2)
-          (System.nanoTime() - t0) / 1e9
-        } finally spark.conf.unset("spark.graft.manifest.mode")
+      val phRefs = {
+        val root = operators.Scratch.diskDir("graft_scale_refs_parts")
+        val rows = spark.range(pParts * 50)
+          .select(col("id").as("vec_id"), pmod(col("id"), lit(pParts)).as("cell"),
+            md5(col("id").cast("string")).as("payload"))
+        operators.IndexManifest.publish(spark, root) { dir =>
+          rows.repartition(col("cell"))
+            .write.partitionBy("cell").parquet(s"$dir/codes")
+        }
+        def batch(tag: Long) = spark.range(200)
+          .select((col("id") + pParts * 50 + tag * 1000).as("vec_id"),
+            pmod(col("id"), lit(4L)).as("cell"),
+            md5(col("id").cast("string")).as("payload"))
+        // warm delta (untimed): the first delta pays the one-time
+        // full-publish tree walk
+        operators.IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
+          batch(0), keep = 2)
+        val t0 = System.nanoTime()
+        operators.IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
+          batch(1), keep = 2)
+        (System.nanoTime() - t0) / 1e9
       }
-      val phLink = drivePartHeavy("link")
-      val phRefs = drivePartHeavy("refs")
       s""""ivf_refs_cost":{"sec":${ra + rd},"rows":$nRows,""" +
-        s""""refs_append_sec":$ra,"link_append_sec":$la,""" +
-        s""""refs_delete_sec":$rd,"link_delete_sec":$ld,""" +
-        s""""parts":$pParts,"partheavy_refs_sec":$phRefs,""" +
-        s""""partheavy_link_sec":$phLink}"""
+        s""""refs_append_sec":$ra,"refs_delete_sec":$rd,""" +
+        s""""parts":$pParts,"partheavy_refs_sec":$phRefs}"""
     }
     // replay-after-retrain fence (r19 verdict item 1's DONE gate): a
     // batch lands, the index RETRAINS (fresh centroids+codebooks — the
@@ -1066,7 +1011,7 @@ object ScaleCheck {
       ++ pipe ++ scd2Apply ++ ivfAppend ++ sq8Serve
       ++ pqFilteredServe ++ sq8RadiusServe ++ ivfStats
       ++ pqRadiusServe ++ sq8FilteredServe ++ opqServe
-      ++ ivfSq8Serve ++ atomicRww ++ atomicCost ++ ingestChurn
+      ++ ivfSq8Serve ++ atomicRww ++ ingestChurn
       ++ refsCost ++ replayRetrain).mkString(",")
     println(s"""{"scale_mult":$mult,"n_events":$n,"ops":{$qs}}""")
     spark.stop()

@@ -764,8 +764,10 @@ object Graph {
     }
     var alive = truncated(edges.select(col("u"), col("v")))
     // the probe overflowed, so the edge list is non-empty — no upfront
-    // count needed; n = -1 never equals a real round count
-    var n = -1L
+    // count needed. A known count seeds the loop, so a first round that
+    // peels nothing converges at once (the driver path's round count);
+    // without one, n = -1 never equals a real count
+    var n = knownEdges.getOrElse(-1L)
     var converged = false
     var rounds = 0
     while (!converged) {

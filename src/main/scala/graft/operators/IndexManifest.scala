@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{CreateFlag, FileContext, FileUtil, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -65,26 +65,28 @@ import org.apache.spark.sql.functions.col
   * of displacing a genuinely readable version from the retention
   * window.
   *
-  * LAYOUTS (r19 verdict item 2): a DELTA publish (append/erase)
-  * materializes its new version in one of two ways, selected by
-  * `spark.graft.manifest.mode` (see [[layoutMode]]):
+  * LAYOUT: a version directory takes one of two shapes.
   *
-  *  - `refs` (DEFAULT): the version is a FILE-REFERENCE MANIFEST —
-  *    touched partitions land as fresh files in the shared
-  *    [[StoreDir]], everything else is inherited by reference in
-  *    [[RefsFile]]. Publish cost is O(touched bytes) + one manifest
-  *    write on EVERY filesystem; readers resolve through
-  *    [[readFrame]]. The lake-format shape (Iceberg/Delta's
-  *    version-as-file-list), reduced to one flat manifest because an
-  *    index version is immutable once published. At extreme file
-  *    counts (≳10⁶ files ≈ a 100 MB manifest) the flat form's
-  *    string-processing bill grows linearly — still ~100× cheaper
-  *    than per-file metadata ops, and the known upgrade path is
-  *    Iceberg-style hierarchical manifests behind the same API.
-  *  - `link`: the version is physically self-contained — unchanged
-  *    files hardlink ([[mirror]]); O(n_files) inode ops per publish
-  *    on a local FS, a full data copy anywhere without hardlinks.
-  *    For deployments that want rsync-able version dirs.
+  *  - PLAIN: every artifact file sits inside `v=n` and there is no
+  *    [[RefsFile]]. Every full publish ([[publish]], the restage and
+  *    retrain paths) writes this shape.
+  *  - REFS: a DELTA publish (append/erase — [[appendRowsAtomic]],
+  *    [[deleteVecIdsAtomic]], the only ways to change a published
+  *    index) writes its touched partitions as fresh files in the
+  *    shared [[StoreDir]] and inherits everything else by reference
+  *    in the version's [[RefsFile]]. Publish cost is O(touched bytes)
+  *    + one manifest write on every filesystem. This is the
+  *    lake-format shape (Iceberg/Delta's version-as-file-list),
+  *    reduced to one flat manifest because an index version is
+  *    immutable once published. At extreme file counts (≳10⁶ files ≈
+  *    a 100 MB manifest) the flat form's string-processing bill grows
+  *    linearly; the known upgrade path is Iceberg-style hierarchical
+  *    manifests behind the same API.
+  *
+  * Readers resolve both shapes through [[readFrame]], and a delta may
+  * sit on either, so indexes written by older releases (whose delta
+  * versions were plain hardlinked directories) keep serving and keep
+  * accepting deltas.
   *
   * RETRAIN EPOCHS (r19 verdict item 1): see [[EpochFile]] /
   * [[publishRetrain]] — full publishes advance an epoch counter that
@@ -94,14 +96,11 @@ import org.apache.spark.sql.functions.col
   * while un-flushed streaming pending rows exist.
   *
   * 100 TB: the manifest adds ONE tiny file read per query plan and
-  * one create+rename per restage, independent of index size; in refs
-  * mode a delta publish moves O(touched bytes) regardless of the
-  * untouched mass (ScaleCheck `ivf_refs_cost`: 3.5× over hardlinks at
-  * 4096 partitions on local FS — the gap is the whole data volume on
-  * an object store); the cost of atomicity is the
-  * double-materialization of a restaged version, which a restage
-  * (unlike the in-place append/delete fast paths) already pays by
-  * definition. */
+  * one create+rename per restage, independent of index size; a delta
+  * publish moves O(touched bytes) regardless of the untouched mass
+  * (ScaleCheck `ivf_refs_cost` times it on a 4096-partition tree);
+  * the cost of atomicity is the double-materialization of a restaged
+  * version, which a restage already pays by definition. */
 object IndexManifest {
 
   private val Pointer = "CURRENT"
@@ -121,7 +120,7 @@ object IndexManifest {
   val EpochFile = "_EPOCH"
 
   /** Basename of the shared physical-file store under an index root —
-    * REFS mode's data directory (see the mode note on [[mirror]] /
+    * the data directory of REFS versions (see LAYOUT above and
     * [[readFrame]]): delta publishes append their touched partitions'
     * fresh files here (`root/_store/<tree>/<partCol>=v/part-*.parquet`)
     * and versions reference them through `_REFS` manifests, so a
@@ -135,10 +134,10 @@ object IndexManifest {
     * INHERITED file, `relPath<TAB>absolutePath`, where relPath is the
     * version-relative artifact path (`codes/cell=7/part-x.parquet`)
     * and absolutePath points at the physical file (an older full
-    * version's tree or the shared store). Absent on full publishes
-    * (their files are all in-dir) and in link mode. Physical paths
-    * are always fully resolved when written — a chain of manifests
-    * never has to be chased at read time. */
+    * version's tree or the shared store). Absent on PLAIN versions
+    * (their files are all in-dir). Physical paths are always fully
+    * resolved when written — a chain of manifests never has to be
+    * chased at read time. */
   val RefsFile = "_REFS"
 
   /** Basename of the streaming sinks' durable pending-delta tree
@@ -353,10 +352,10 @@ object IndexManifest {
     // a FULL publish materializes fresh artifacts — any derived
     // assignment function may have moved, so the epoch advances. A
     // DELTA publish (publishFrom) froze the assignment by construction;
-    // its mirror normally carries the live `_EPOCH` file forward, and
-    // when the edit skipped it (pre-epoch trees, custom editors) the
-    // base's epoch is copied so a delta can never LOWER the epoch back
-    // to 0 and blind an epoch-fenced reader.
+    // its manifest never carries the control file `_EPOCH`, so unless
+    // the edit wrote one the base's epoch is copied forward — a delta
+    // can never LOWER the epoch back to 0 and blind an epoch-fenced
+    // reader.
     if (bumpEpoch)
       writeEpochFile(ctx, s"$root/$dirName",
         base.map(b => epochOf(spark, s"$root/$b")).getOrElse(0L) + 1)
@@ -434,17 +433,17 @@ object IndexManifest {
     val all = listVersions(ctx, new Path(root))
     val dropped = all.filter(_ < liveV).sorted.filterNot(retainedBelow)
     if (dropped.isEmpty) return Nil
-    // REACHABILITY (refs mode): a retained version — live, the kept
-    // history, or an in-flight claim above live — may resolve files
+    // REACHABILITY: a retained version — live, the kept history, or
+    // an in-flight claim above live — may resolve files
     // that physically live in a dropped version's directory (the last
     // full publish) or in the shared store. Only retained REFS entries
     // matter: retained IN-DIR files are inside retained directories by
     // definition, and a dropped (older) version can never reference a
     // newer retained directory. So the referenced set is a union of
     // small manifest reads — never a tree walk — keeping per-publish
-    // vacuum O(manifest lines), not O(index files). Link-mode chains
-    // have no manifests: the set is empty and every dropped directory
-    // deletes wholesale, exactly the self-contained-version rule.
+    // vacuum O(manifest lines), not O(index files). A chain of PLAIN
+    // versions has no manifests: the set is empty and every dropped
+    // directory deletes wholesale.
     val referenced = all.filterNot(dropped.contains)
       .flatMap(v => refsOf(spark, s"$root/v=$v").map(_._2))
       .map(qual(ctx, _)).toSet
@@ -505,7 +504,7 @@ object IndexManifest {
     val all = listVersions(ctx, new Path(root))
     val stale = all.filter(_ > liveV).sorted
     if (stale.isEmpty) return Nil
-    // refs mode: a stale claim's manifest lists the fresh store files
+    // a stale delta claim's manifest lists the fresh store files
     // its crashed publish landed — deleting only the directory would
     // orphan them invisibly. Reclaim store entries no surviving
     // version references (a claim's INHERITED store entries are in
@@ -529,9 +528,9 @@ object IndexManifest {
     }
   }
 
-  /** Deep store reclamation for the crash window refs mode cannot
-    * cover incrementally: a publisher that died AFTER landing fresh
-    * store files but BEFORE writing its version manifest leaves them
+  /** Deep store reclamation for the crash window delta publishes
+    * cannot cover incrementally: a publisher that died AFTER landing
+    * fresh store files but BEFORE writing its version manifest leaves them
     * referenced by nothing and listed nowhere. Walks the store once,
     * deletes every file no version (live, historical, or claimed)
     * references, and returns the deleted paths. O(store files) — an
@@ -572,10 +571,10 @@ object IndexManifest {
 
   /** [[publish]] with the LIVE version's directory handed to the
     * writer — the delta-publish primitive: `edit(live, next)`
-    * materializes the next version FROM the current one (reference or
-    * hardlink what didn't change per [[layoutMode]], rewrite what
-    * did — [[materializeDelta]] is the standard editor). Fails loudly
-    * when nothing is published yet.
+    * materializes the next version FROM the current one (reference
+    * what didn't change, rewrite what did — [[materializeDelta]] is
+    * the standard editor). Fails loudly when nothing is published
+    * yet.
     *
     * `requiredBaseEpoch` (r20 — closes the fence's check-then-act
     * window): a caller whose delta CONTENT was derived under a
@@ -672,36 +671,8 @@ object IndexManifest {
     throw new IllegalStateException("unreachable")
   }
 
-  /** The manifest layout mode, from the session conf
-    * `spark.graft.manifest.mode`:
-    *
-    *  - `refs` (DEFAULT): delta publishes materialize ONLY their
-    *    touched partitions (fresh files into [[StoreDir]]) and list
-    *    every inherited file in a [[RefsFile]] manifest — per-publish
-    *    cost is O(touched bytes) + one small manifest write,
-    *    INDEPENDENT of index size, on every filesystem (the property
-    *    object stores need: no server-side copy, no per-file
-    *    metadata op per untouched file).
-    *  - `link`: delta publishes hardlink-mirror the live version into
-    *    a self-contained directory ([[mirror]]) — each version is
-    *    physically complete, at O(n_files) metadata ops per publish
-    *    (cheap inode links on a local FS, a full data copy anywhere
-    *    without hardlinks). The local-FS fast path for deployments
-    *    that want `rsync`-able version dirs.
-    *
-    * Readers ([[readFrame]]) and the vacuum/recovery operators handle
-    * both layouts transparently, so the mode is a per-session choice,
-    * not an on-disk commitment — a refs-mode index keeps serving if
-    * the session later publishes link-mode versions and vice versa. */
-  private[graft] def layoutMode(spark: SparkSession): String =
-    spark.conf.get("spark.graft.manifest.mode", "refs") match {
-      case m @ ("refs" | "link") => m
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.manifest.mode must be 'refs' or 'link', got '$other'")
-    }
-
   /** Non-artifact control files of a version directory — never part
-    * of a frame, never mirrored as data, never referenced. */
+    * of a frame, never referenced. */
   private def isControlName(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
 
@@ -763,9 +734,10 @@ object IndexManifest {
 
   /** Read one artifact frame (`centroids`, `codes`, `postings`, …) of
     * a resolved version directory — THE reader seam of the manifest
-    * layer. A plain directory (no [[RefsFile]]: a full publish, a
-    * link-mode version, or any non-manifest staged index) reads
-    * exactly as before — one partition-discovering parquet load. A
+    * layer. A PLAIN directory (no [[RefsFile]]: a full publish, a
+    * delta version written by an older release's hardlink layout, or
+    * any non-manifest staged index) reads as one partition-discovering
+    * parquet load. A
     * refs version resolves its physical file list instead and reads
     * the files grouped by physical base directory (each group under
     * one `basePath`, so `partCol=v` directory names still become
@@ -793,117 +765,7 @@ object IndexManifest {
     }.reduce(_.unionByName(_))
   }
 
-  /** Mirror `src`'s artifact tree into `dst`, skipping any entry whose
-    * src-relative path is in `skip` (a skipped directory's whole
-    * subtree is skipped). Files are HARDLINKED when the filesystem is
-    * local — one inode-metadata op per file, zero data copied, and
-    * safe because published versions are immutable by contract — and
-    * byte-copied otherwise (HDFS has no user hardlinks; object-store
-    * deployments swap in their server-side copy here, which is the
-    * same O(metadata) shape).
-    *
-    * ONE recursive listing + a bounded thread pool over the link/copy
-    * ops (r18 verdict item 2): the previous per-directory walk issued
-    * one listStatus per directory and one createLink per file ON THE
-    * CALLING THREAD, which made the fixed per-publish bill the ~2×
-    * small-batch overhead the round-18 bench measured and the latency
-    * floor at 10⁵–10⁶ files. Link/copy ops are pure independent
-    * metadata — they parallelize embarrassingly. At 100 TB the
-    * delta-publish bill is O(touched-partition rewrite) data IO plus
-    * O(n_files / pool) wall-clock metadata ops — never a second
-    * materialization of the index. */
-  private[operators] def mirror(spark: SparkSession, src: String, dst: String,
-                                skip: Set[String] = Set.empty): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcRoot = new Path(src)
-    val fs = srcRoot.getFileSystem(conf)
-    // `_CLAIM` is the non-local claim marker of the SOURCE version —
-    // the destination already holds its own from claimVersion.
-    // `_REFS` describes the SOURCE's file set and must never ride into
-    // another version: a link-mode delta on a refs-mode base would
-    // otherwise serve the stale manifest beside its own rewritten
-    // partitions — every touched partition's superseded rows twice,
-    // and erased rows resurrected ([[materializeDelta]] materializes
-    // the base's refs physically instead).
-    def skipped(rel: String): Boolean =
-      rel == "_CLAIM" || rel == RefsFile ||
-        skip.exists(s => rel == s || rel.startsWith(s + "/"))
-    // one recursive listing (files only — parquet trees hold no
-    // meaningful empty directories; file parents are recreated below)
-    // skip-PRUNED walk: a skipped directory is never even listed (an
-    // append skipping every touched cell lists only the handful of
-    // untouched artifact dirs — Hadoop's recursive listFiles cannot
-    // prune and costs ~2s flat on a local version tree, measured
-    // r19). Directory mkdirs happen during the serial walk (cheap,
-    // one per dir); the per-file link/copy ops are deferred to the
-    // bounded pool below.
-    val files = Seq.newBuilder[(Path, String)]
-    def walk(rel: String): Unit = {
-      val here = if (rel.isEmpty) srcRoot else new Path(src, rel)
-      fs.listStatus(here).foreach { st =>
-        val childRel =
-          if (rel.isEmpty) st.getPath.getName
-          else s"$rel/${st.getPath.getName}"
-        if (!skipped(childRel)) {
-          if (st.isDirectory) {
-            fs.mkdirs(new Path(dst, childRel))
-            walk(childRel)
-          } else files += ((st.getPath, childRel))
-        }
-      }
-    }
-    walk("")
-    linkOrCopyAll(spark, dst, files.result(), mkParents = false)
-  }
-
-  /** Bounded-pool hardlink/copy of `(srcFile, dstRel)` entries into
-    * `dst` — the parallel metadata tail shared by [[mirror]] and the
-    * link-mode refs materialization. Hardlinks on the local FS (one
-    * inode op, zero data moved — safe because published files are
-    * immutable), byte-copies elsewhere. `mkParents` creates target
-    * parent directories first (mirror pre-creates them during its
-    * walk; refs entries arrive with no walk). */
-  private def linkOrCopyAll(spark: SparkSession, dst: String,
-                            entries: Seq[(Path, String)],
-                            mkParents: Boolean): Unit = {
-    if (entries.isEmpty) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dst).getFileSystem(conf)
-    val local = fs.getScheme == "file"
-    def localPath(p: Path): java.nio.file.Path =
-      java.nio.file.Paths.get(p.toUri.getPath)
-    if (mkParents)
-      entries.map { case (_, rel) => new Path(dst, rel).getParent }
-        .distinct.foreach { parent =>
-          if (local) java.nio.file.Files.createDirectories(localPath(parent))
-          else fs.mkdirs(parent)
-        }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, Runtime.getRuntime.availableProcessors()))
-    try {
-      val tasks = entries.map { case (srcFile, rel) =>
-        new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val target = new Path(dst, rel)
-            if (local)
-              java.nio.file.Files.createLink(
-                localPath(target), localPath(srcFile))
-            else
-              FileUtil.copy(fs, srcFile, fs, target, false, conf)
-            ()
-          }
-        }
-      }
-      pool.invokeAll(scala.jdk.CollectionConverters
-        .SeqHasAsJava(tasks).asJava).forEach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
-  }
-
-  /** REFS-mode fresh-file landing: write `rows` (touched partitions
+  /** Delta fresh-file landing: write `rows` (touched partitions
     * only) as new files into the shared store and return their
     * (versionRel, absolute) entries for the publishing version's
     * [[RefsFile]]. Append-only — files already in a store partition
@@ -955,42 +817,21 @@ object IndexManifest {
     rest.take(slash).toLongOption.exists(touched)
   }
 
-  /** Materialize the delta version `next` from `liveDir`: in link
-    * mode a hardlink mirror of everything but the touched partitions,
-    * which the caller then writes in-dir; in refs mode the touched
-    * partitions' merged rows land as fresh store files and everything
-    * else is INHERITED by reference — one manifest write, zero data
-    * motion for untouched bytes. */
+  /** Materialize the delta version `next` from `liveDir`: the touched
+    * partitions' merged rows land as fresh store files and every other
+    * file of the live version — in-dir (a full publish) or itself a
+    * reference — is INHERITED by reference in `next`'s [[RefsFile]].
+    * One manifest write, zero data motion for untouched bytes. */
   private def materializeDelta(spark: SparkSession, root: String,
                                liveDir: String, next: String, tree: String,
                                partCol: String, merged: DataFrame,
-                               touched: Set[Long]): Unit =
-    if (layoutMode(spark) == "link") {
-      mirror(spark, liveDir, next,
-        skip = touched.map(v => s"$tree/$partCol=$v"))
-      // a refs-mode live version is not physically self-contained: its
-      // inherited files exist only as manifest lines, which mirror
-      // deliberately does NOT carry (a copied manifest would list the
-      // touched partitions' superseded files beside the rewrite below —
-      // duplicate rows, and erased rows resurrected). Materialize them
-      // as real links/copies instead, so a link-mode delta on a refs
-      // base yields the same self-contained directory a link-on-link
-      // delta does — the mode stays a per-session choice mid-chain.
-      linkOrCopyAll(spark, next,
-        refsOf(spark, liveDir)
-          .filterNot { case (rel, _) =>
-            inTouchedPartition(rel, tree, partCol, touched) }
-          .map { case (rel, abs) => (new Path(abs), rel) },
-        mkParents = true)
-      merged.repartition(col(partCol))
-        .write.mode("append").partitionBy(partCol).parquet(s"$next/$tree")
-    } else {
-      val fresh = writeToStore(spark, root, tree, partCol, merged, touched)
-      val inherited = effectiveFiles(spark, liveDir)
-        .filterNot { case (rel, _) =>
-          inTouchedPartition(rel, tree, partCol, touched) }
-      writeRefs(spark, next, inherited ++ fresh)
-    }
+                               touched: Set[Long]): Unit = {
+    val fresh = writeToStore(spark, root, tree, partCol, merged, touched)
+    val inherited = effectiveFiles(spark, liveDir)
+      .filterNot { case (rel, _) =>
+        inTouchedPartition(rel, tree, partCol, touched) }
+    writeRefs(spark, next, inherited ++ fresh)
+  }
 
   /** Columns of `df` with `partCol` cast to long in place — the union
     * pin between a partition-discovered tree (whose partition column
@@ -1002,19 +843,18 @@ object IndexManifest {
   /** ATOMIC batch append on a versioned index whose mutable state is
     * one partition tree (`root/v=n/$tree/$partCol=…` — the float
     * tier's postings, every compressed tier's codes): inherit the
-    * live version except the batch's touched partition directories
-    * ([[materializeDelta]] — by reference or hardlink per
-    * [[layoutMode]]), write those partitions as old-rows ∪ batch into
-    * the fresh version, flip the pointer. A reader overlapping the append
-    * sees the wholly-old or wholly-new version — never some of the
-    * batch's cells and not others (the in-place fast paths'
-    * documented residual); a crash anywhere leaves the pointer on the
-    * old version, whose files the orphaned partial never touched.
+    * live version by reference except the batch's touched partition
+    * directories ([[materializeDelta]]), write those partitions as
+    * old-rows ∪ batch into the store, flip the pointer. A reader
+    * overlapping the append sees the wholly-old or wholly-new version
+    * — never some of the batch's cells and not others; a crash
+    * anywhere leaves the pointer on the old version, whose files the
+    * orphaned partial never touched.
     * `batch` must carry exactly the tree's columns (tier wrappers
     * enforce the metadata/dimension discipline before calling).
     * Returns appended rows. Cost: O(touched-partition rewrite) data
     * IO — the batch's own locality under the frozen assignment keeps
-    * that request-sized — plus the mirror's metadata ops.
+    * that request-sized — plus one manifest write.
     *
     * Concurrent-writer safe: a lost version claim retries against the
     * freshly published live version (re-reading ITS rows for the
@@ -1094,12 +934,11 @@ object IndexManifest {
   /** ATOMIC right-to-erasure on a versioned index (layout as
     * [[appendRowsAtomic]]): inherit the live version except the
     * partition directories holding an erased id, write their
-    * survivors into the fresh version (an emptied partition writes no
-    * rows — its directory simply never exists in the new version, no
-    * explicit retire step), flip the pointer. Readers never see a
-    * half-erased index and a crash leaves the old version serving —
-    * the consistency the in-place form's per-partition commits cannot
-    * give. Concurrent-writer safe as [[appendRowsAtomic]] (a lost
+    * survivors into the store (an emptied partition writes no rows —
+    * the new version simply lists no file for it, no explicit retire
+    * step), flip the pointer. Readers never see a half-erased index
+    * and a crash leaves the old version serving. Concurrent-writer
+    * safe as [[appendRowsAtomic]] (a lost
     * claim recomputes survivors against the fresh live version).
     * Returns deleted rows. */
   private[graft] def deleteVecIdsAtomic(spark: SparkSession, root: String,
@@ -1111,7 +950,7 @@ object IndexManifest {
     // version: drives the nothing-to-erase early exit, and is reused
     // by the closure whenever the claim lands on the same version it
     // was computed from — the uncontended case, which therefore scans
-    // exactly as often as the in-place form. Only a claim that lands
+    // the vec_id column exactly once. Only a claim that lands
     // on a DIFFERENT version (a concurrent publish won the race)
     // recomputes, so the survivor set can never be skewed by a stale
     // locate.

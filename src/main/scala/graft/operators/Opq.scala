@@ -321,8 +321,8 @@ object Opq {
     * `trainOn` (null = `vectors`): the TRAINING corpus for centroids,
     * basis, and codebooks, independent of the INDEXED corpus —
     * `buildIvfOpq(a ∪ b, trainOn = a)` is bit-identical to
-    * `appendIvfOpqIndex` after `buildIvfOpq(a)` (spec-asserted), the
-    * same incremental-lifecycle equation as the PQ tier's.
+    * `appendIvfOpqIndexAtomic` after `buildIvfOpq(a)` (spec-asserted),
+    * the same incremental-lifecycle equation as the PQ tier's.
     * `metaCols`: metadata columns riding the code postings (the
     * metadata-in-index recipe), enabling [[queryIvfOpqFiltered]]. */
   def buildIvfOpq(vectors: DataFrame, cells: Int = 0,
@@ -407,11 +407,13 @@ object Opq {
     IndexManifest.publish(index.pq.codes.sparkSession, root)(
       dir => writeIvfOpqIndex(index, dir))
 
-  /** ATOMIC rotated append: [[appendIvfOpqIndex]]'s encode-through-
-    * the-rotation-seam arithmetic, landed through
-    * [[IndexManifest.appendRowsAtomic]] — basis/centroids/codebooks
-    * and untouched cells hardlink into the new version, the batch's
-    * cells rewrite, one pointer flip. */
+  /** Durable ATOMIC rotated append: assign (original space) + rotate
+    * (staged basis) + encode (staged codebooks) the new vectors —
+    * [[Pq.encodeAgainst]] through the rotation seam — landed through
+    * [[IndexManifest.appendRowsAtomic]]: basis/centroids/codebooks and
+    * untouched cells are inherited by reference, the batch's cells
+    * rewrite, one pointer flip. O(touched cells), never O(index);
+    * metadata and dimension discipline are the PQ path's own. */
   def appendIvfOpqIndexAtomic(spark: SparkSession, root: String,
                               newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
@@ -422,7 +424,10 @@ object Opq {
   }
 
   /** ATOMIC rotated erasure — the codes tree is the PQ layout
-    * byte-for-byte, so this IS [[Pq.deleteFromIvfPqIndexAtomic]]. */
+    * byte-for-byte (rotation only changed what the codes MEAN, not
+    * where they live), so this IS [[Pq.deleteFromIvfPqIndexAtomic]]:
+    * affected cell directories rewritten, basis/centroids/codebooks
+    * (trained aggregates) stand. */
   def deleteFromIvfOpqIndexAtomic(spark: SparkSession, root: String,
                                   vecIds: Seq[Long], keep: Int = 2): Long =
     Pq.deleteFromIvfPqIndexAtomic(spark, root, vecIds, keep)
@@ -462,30 +467,6 @@ object Opq {
     IndexManifest.publishRetrain(spark, root, keep)(
       dir => writeIvfOpqIndex(rebuilt, dir))
   }
-
-  /** Durable append: assign (original space) + rotate (staged basis)
-    * + encode (staged codebooks) the new vectors — [[Pq.encodeAgainst]]
-    * through the rotation seam — and append only their cell-clustered
-    * code files. O(|new|), never O(index); metadata discipline and
-    * dimension discipline are the PQ path's own. */
-  def appendIvfOpqIndex(spark: SparkSession, path: String,
-                        newVectors: DataFrame): Long = {
-    val index = readIvfOpqIndex(spark, path)
-    val newCodes = Pq.encodeAgainst(index.pq, newVectors, 0, index.basis)
-    val staged = Scratch.stageReuse(newCodes, "ivf_opq_append_codes")
-    staged.repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-    staged.count()
-  }
-
-  /** Right-to-erasure on the rotated index: the codes tree is the PQ
-    * layout byte-for-byte (rotation only changed what the codes MEAN,
-    * not where they live), so erasure IS [[Pq.deleteFromIvfPqIndex]] —
-    * affected cell directories rewritten, basis/centroids/codebooks
-    * (trained aggregates) stand. */
-  def deleteFromIvfOpqIndex(spark: SparkSession, path: String,
-                            vecIds: Seq[Long]): Long =
-    Pq.deleteFromIvfPqIndex(spark, path, vecIds)
 
   /** Top-k off the staged rotated index — [[Pq.queryIvfPq]] with the
     * basis threaded: probes rank in original space, ADC tables build
@@ -579,40 +560,42 @@ object Opq {
   /** Driver query (key `knn_ivf_opq_append`): the rotated tier's
     * incremental-maintenance lifecycle END TO END through the
     * cross-engine gate — day-0 build on the base half (centroids,
-    * basis, AND codebooks all trained on `vec_id <= max/2`), durable
-    * stage, [[appendIvfOpqIndex]] of the rest (assign original-space +
-    * rotate through the staged basis + encode against the frozen
-    * codebooks), then the staged query path over the full corpus. The
-    * oracle replays `buildIvfOpq(all, trainOn = base)` — bit-identical
-    * to the append by the OpqSpec CRUD equation — so a hash match
-    * checks the rotated append arithmetic itself cross-engine. */
+    * basis, AND codebooks all trained on `vec_id <= max/2`), staged as
+    * a manifest version, [[appendIvfOpqIndexAtomic]] of the rest
+    * (assign original-space + rotate through the staged basis + encode
+    * against the frozen codebooks), then the staged query path over
+    * the full corpus off the live version. The oracle replays
+    * `buildIvfOpq(all, trainOn = base)` — bit-identical to the append
+    * by the OpqSpec CRUD equation — so a hash match checks the rotated
+    * append arithmetic itself cross-engine. */
   def knnIvfOpqAppend(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val cut = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val path = Scratch.reuseDir("ivf_opq_append_idx")
-    writeIvfOpqIndex(buildIvfOpq(base), path)
-    appendIvfOpqIndex(spark, path, rest)
-    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
-      0L until Similarity.NQueries.toLong)
+    val root = Scratch.reuseDir("ivf_opq_append_key_root")
+    stageIvfOpqIndexVersion(buildIvfOpq(base), root)
+    appendIvfOpqIndexAtomic(spark, root, rest)
+    queryIvfOpq(readIvfOpqIndex(spark, IndexManifest.currentOrFail(spark, root)),
+      vectors, 0L until Similarity.NQueries.toLong)
   }
 
   /** Driver query (key `knn_ivf_opq_delete`): the rotated erasure
-    * lifecycle at the gate — full-corpus build, durable stage,
-    * [[deleteFromIvfOpqIndex]] of the [[Pq.DeleteLo]]..[[Pq.DeleteHi]]
-    * slice (only touched cell directories rewritten — the PQ erasure
-    * verbatim), staged query. Oracle = the classic rotated composition
+    * lifecycle at the gate — full-corpus build staged as a manifest
+    * version, [[deleteFromIvfOpqIndexAtomic]] of the
+    * [[Pq.DeleteLo]]..[[Pq.DeleteHi]] slice (only touched cell
+    * directories rewritten — the PQ erasure verbatim), staged query
+    * off the live version. Oracle = the classic rotated composition
     * with exactly those ids excluded from candidate enumeration:
     * basis, centroids, and codebooks are trained AGGREGATES an erasure
     * never edits. */
   def knnIvfOpqDelete(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val path = Scratch.reuseDir("ivf_opq_delete_idx")
-    writeIvfOpqIndex(buildIvfOpq(vectors), path)
-    deleteFromIvfOpqIndex(spark, path, Pq.DeleteLo to Pq.DeleteHi)
-    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
-      0L until Similarity.NQueries.toLong)
+    val root = Scratch.reuseDir("ivf_opq_delete_key_root")
+    stageIvfOpqIndexVersion(buildIvfOpq(vectors), root)
+    deleteFromIvfOpqIndexAtomic(spark, root, Pq.DeleteLo to Pq.DeleteHi)
+    queryIvfOpq(readIvfOpqIndex(spark, IndexManifest.currentOrFail(spark, root)),
+      vectors, 0L until Similarity.NQueries.toLong)
   }
 
   /** The append replay: the TRAINED rotated prefix (covariance/basis

@@ -358,7 +358,7 @@ object Pq {
     * gate — day-0 build on the base half of the corpus
     * (`vec_id <= max/2`), staged as a manifest version, then (since
     * r18) [[appendIvfPqIndexAtomic]] of the rest — the batch encoded
-    * against the frozen staged artifacts lands as a hardlink-mirrored
+    * against the frozen staged artifacts lands as a reference-inherited
     * new version with one pointer flip — and the staged-index query
     * path over the full corpus off the live version. With
     * `knn_ivf_delete` running the atomic ERASURE, both delta types of
@@ -397,9 +397,10 @@ object Pq {
 
   /** Driver query (key `knn_ivf_pq_delete`): the erasure half of the
     * index CRUD lifecycle run END TO END through the cross-engine gate
-    * — build over the full corpus, stage durably, [[deleteFromIvfPqIndex]]
-    * of ids [[DeleteLo]]..[[DeleteHi]] (only their cell directories are
-    * rewritten), then the staged-index query path. The oracle replays
+    * — build over the full corpus, stage as a manifest version,
+    * [[deleteFromIvfPqIndexAtomic]] of ids [[DeleteLo]]..[[DeleteHi]]
+    * (only their cell directories are rewritten), then the
+    * staged-index query path off the live version. The oracle replays
     * the classic composed IVFADC search with exactly those ids removed
     * from candidate enumeration — centroids, codebooks, probes, and
     * every surviving code are unchanged by an erasure (they are
@@ -409,10 +410,11 @@ object Pq {
     * byte-identity, idempotence) live in SimilaritySpec. */
   def knnIvfPqDelete(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val path = graft.operators.Scratch.reuseDir("ivf_pq_delete_idx")
-    writeIvfPqIndex(buildIvfPq(vectors), path)
-    deleteFromIvfPqIndex(spark, path, DeleteLo to DeleteHi)
-    queryIvfPq(readIvfPqIndex(spark, path), vectors,
+    val root = graft.operators.Scratch.reuseDir("ivf_pq_delete_key_root")
+    stageIvfPqIndexVersion(buildIvfPq(vectors), root)
+    deleteFromIvfPqIndexAtomic(spark, root, DeleteLo to DeleteHi)
+    queryIvfPq(readIvfPqIndex(spark,
+      IndexManifest.currentOrFail(spark, root)), vectors,
       0L until NQueries.toLong)
   }
 
@@ -764,7 +766,7 @@ object Pq {
 
   /** The append arithmetic alone: `newVectors` assigned + encoded
     * against `index`'s artifacts, as a codes frame. `private[graft]`:
-    * the streaming ingest sink (Streams.annIngestSink) reuses it
+    * the streaming ingest sink (Streams.annIngestSinkAtomic) reuses it
     * verbatim per micro-batch. */
   private[graft] def encodeAgainst(index: IvfPqIndex, newVectors: DataFrame,
                                    dim: Int, basis: DataFrame = null): DataFrame = {
@@ -828,30 +830,16 @@ object Pq {
     }
   }
 
-  /** Durable append against a [[writeIvfPqIndex]]-staged index: encode
-    * the new vectors against the staged artifacts and APPEND only
-    * their cell-clustered code files — centroids, codebooks, and every
-    * existing code file stay byte-identical (spec-asserted), which is
-    * what makes a daily append write O(|new|), not O(index). Returns
-    * the number of appended code rows. */
-  def appendIvfPqIndex(spark: SparkSession, path: String,
-                       newVectors: DataFrame, dim: Int = 0): Long = {
-    val index = readIvfPqIndex(spark, path)
-    val newCodes = encodeAgainst(index, newVectors, dim)
-    val staged = graft.operators.Scratch.stageReuse(newCodes, "ivf_pq_append_codes")
-    staged.repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-    staged.count()
-  }
-
-  /** ATOMIC durable append (r17 verdict item 1): the same encode
-    * arithmetic as [[appendIvfPqIndex]], landed through
+  /** Durable ATOMIC append (r17 verdict item 1): encode the new
+    * vectors against the live version's artifacts ([[encodeAgainst]]
+    * — the [[appendToIvfPq]] arithmetic) and land them through
     * [[IndexManifest.appendRowsAtomic]] on a MANIFEST-rooted index
-    * ([[stageIvfPqIndexVersion]]) — untouched cell directories
-    * hardlink into a fresh version, the batch's cells rewrite as
-    * old ∪ new, one pointer flip. A concurrent reader sees the batch
-    * wholly or not at all; a crash leaves the old version serving.
-    * Answers are bit-identical to the in-place form's (spec). */
+    * ([[stageIvfPqIndexVersion]]) — centroids, codebooks and untouched
+    * cell directories are inherited by reference, the batch's cells
+    * rewrite as old ∪ new, one pointer flip. A concurrent reader sees
+    * the batch wholly or not at all; a crash leaves the old version
+    * serving. Answers are bit-identical to [[appendToIvfPq]]'s (spec).
+    * Returns the number of appended code rows. */
   def appendIvfPqIndexAtomic(spark: SparkSession, root: String,
                              newVectors: DataFrame, dim: Int = 0,
                              keep: Int = 2): Long = {
@@ -864,12 +852,20 @@ object Pq {
       requireEpoch = Some(IndexManifest.epochOf(spark, live)))
   }
 
-  /** ATOMIC right-to-erasure: [[deleteFromIvfPqIndex]]'s survivor
-    * semantics through [[IndexManifest.deleteVecIdsAtomic]] — no
-    * reader ever sees a half-erased index, emptied cells simply don't
-    * exist in the new version, crash-safe by the pointer flip. Shared
-    * verbatim by the IVF-SQ8 and OPQ tiers (their codes trees are
-    * this layout byte-for-byte). */
+  /** Right-to-erasure on the SERVING index (the GDPR hard-delete
+    * counterpart of [[graft.streaming.Streams]]' CDC-lake erasure),
+    * ATOMIC: drop the code rows of `vecIds` through
+    * [[IndexManifest.deleteVecIdsAtomic]], rewriting ONLY the cell
+    * directories that contain an erased id — every other partition is
+    * inherited by reference, so the erasure bill is O(affected cells),
+    * not O(index). No reader ever sees a half-erased index, emptied
+    * cells simply don't exist in the new version, crash-safe by the
+    * pointer flip. The locate pass scans only the `vec_id` column
+    * (column-pruned). Centroids/codebooks are unaffected: they are
+    * trained AGGREGATES, not personal records — re-train on the next
+    * reindex cadence. Shared verbatim by the IVF-SQ8 and OPQ tiers
+    * (their codes trees are this layout byte-for-byte). Returns the
+    * number of deleted code rows. */
   def deleteFromIvfPqIndexAtomic(spark: SparkSession, root: String,
                                  vecIds: Seq[Long], keep: Int = 2): Long =
     IndexManifest.deleteVecIdsAtomic(spark, root, "codes", "cell",
@@ -910,10 +906,11 @@ object Pq {
     val vectors = Tables.embeddings(spark, dir)
     val cut = vectors.agg(org.apache.spark.sql.functions.max(
       col("vec_id"))).collect()(0).getLong(0) / 2
-    val path = graft.operators.Scratch.reuseDir("ivf_pq_stats_idx")
-    writeIvfPqIndex(buildIvfPq(vectors.filter(col("vec_id") <= cut)), path)
-    appendIvfPqIndex(spark, path, vectors.filter(col("vec_id") > cut))
-    ivfPqIndexStats(spark, path, appendedFrom = cut + 1)
+    val root = graft.operators.Scratch.reuseDir("ivf_pq_stats_key_root")
+    stageIvfPqIndexVersion(buildIvfPq(vectors.filter(col("vec_id") <= cut)), root)
+    appendIvfPqIndexAtomic(spark, root, vectors.filter(col("vec_id") > cut))
+    ivfPqIndexStats(spark, IndexManifest.currentOrFail(spark, root),
+      appendedFrom = cut + 1)
   }
 
   /** Retrain a drifted MANIFEST-rooted IVFADC index (r18 verdict
@@ -956,7 +953,7 @@ object Pq {
     // codes live in cell=<id> PARTITION DIRECTORIES: a probe prunes
     // whole directories (not just row groups) down to nprobe/C of the
     // corpus, an append adds files only under its batch's cells, and
-    // an erasure ([[deleteFromIvfPqIndex]]) rewrites only the
+    // an erasure ([[deleteFromIvfPqIndexAtomic]]) rewrites only the
     // directories that contain an erased id — the layout is what
     // makes the index's whole CRUD lifecycle O(touched cells).
     // The session's global dynamic partitionOverwriteMode means a
@@ -1005,55 +1002,6 @@ object Pq {
       .filterNot(Set("vec_id", "cell", "codes")).map(col)
     raw.select((Seq(col("vec_id"), col("cell").cast("long").as("cell"),
       col("codes")) ++ meta): _*)
-  }
-
-  /** Right-to-erasure on the SERVING index (the GDPR hard-delete
-    * counterpart of [[graft.streaming.Streams]]' CDC-lake erasure):
-    * drop the code rows of `vecIds`, rewriting ONLY the cell
-    * directories that contain an erased id — every other partition's
-    * files stay byte-identical (spec-asserted), so the erasure bill is
-    * O(affected cells), not O(index). A cell whose every vector is
-    * erased is deleted outright (dynamic overwrite writes nothing for
-    * an empty partition — the dedup-index precedent, Dedup.scala).
-    * The locate pass scans only the `vec_id` column (column-pruned);
-    * a deployment with erasure SLAs would keep an id→cell reverse
-    * index to skip it. Returns the number of deleted code rows.
-    * Centroids/codebooks are unaffected: they are trained AGGREGATES,
-    * not personal records — re-train on the next reindex cadence. */
-  def deleteFromIvfPqIndex(spark: SparkSession, path: String,
-                           vecIds: Seq[Long]): Long = {
-    if (vecIds.isEmpty) return 0L
-    val codesPath = s"$path/codes"
-    // the survivor rewrite must carry EVERY codes column — metadata
-    // included — or the rewritten cells would silently lose the
-    // filtered tier's predicate column (the float-delete discipline)
-    def codes = pinnedCodes(spark.read.parquet(codesPath))
-    val affected = codes.filter(col("vec_id").isInCollection(vecIds))
-      .select("cell").distinct().collect().map(_.getLong(0))
-    if (affected.isEmpty) return 0L
-    // survivors of the affected cells, staged OFF the index directory
-    // (a dynamic overwrite cannot read the path it rewrites)
-    val survivors = graft.operators.Scratch.stageReuse(
-      codes.filter(col("cell").isInCollection(affected.toSeq))
-        .filter(!col("vec_id").isInCollection(vecIds)),
-      "ivf_pq_delete_survivors")
-    val survivorCells = survivors.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val nBefore = codes.filter(col("cell").isInCollection(affected.toSeq)).count()
-    val nAfter = survivors.count()
-    survivors.repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(codesPath)
-    // an emptied cell has no survivor rows, so the dynamic overwrite
-    // left its stale directory behind — retire it explicitly
-    val fs = new org.apache.hadoop.fs.Path(codesPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (affected.toSet -- survivorCells).foreach { cell =>
-      fs.delete(new org.apache.hadoop.fs.Path(codesPath, s"cell=$cell"), true)
-      ()
-    }
-    nBefore - nAfter
   }
 
   /** Query a STAGED index: probe cells from the C-row centroid table,
@@ -1203,7 +1151,7 @@ object Pq {
   private[operators] def basisArrOf(basis: DataFrame): Array[Array[Double]] = {
     val rows = basis.select(col("pos"), col("b")).orderBy(col("pos")).collect()
       .map(_.getSeq[Double](1).toArray)
-    // loud-failure discipline (the appendIvfIndex headOption class): an
+    // loud-failure discipline (the appendIvfIndexAtomic headOption class): an
     // empty basis artifact would otherwise surface as an
     // ArrayIndexOutOfBounds deep in the encode/ADC derivation
     if (rows.isEmpty) throw new IllegalStateException(

@@ -72,7 +72,7 @@ object Quantize {
     quantizeCodesAgainst(vectors, quantizerRanges(vectors))
 
   /** Encode against a FIXED ranges artifact — the incremental form
-    * ([[appendSq8Index]]): a daily batch encodes against the day-0
+    * ([[appendSq8IndexAtomic]]): a daily batch encodes against the day-0
     * grid exactly as PQ appends encode against frozen codebooks, so
     * appends compose and the index stays self-consistent (decode uses
     * the one persisted artifact). Values OUTSIDE the trained span
@@ -184,7 +184,7 @@ object Quantize {
     * encoded against the STAGED ranges read back from parquet (exact
     * double round-trip), so artifact and codes can never drift. Codes
     * land in [[Sq8Buckets]] `grp=` partition directories — the
-    * erasure-granularity layout [[deleteFromSq8Index]] rewrites.
+    * erasure-granularity layout [[deleteFromSq8IndexAtomic]] rewrites.
     * `metaCols` names vector columns to ride the code rows (the
     * metadata-in-index layout [[querySq8IndexFiltered]] serves —
     * [[Pq.buildIvfPq]]'s recipe on the SQ8 tier): filter columns live
@@ -205,44 +205,20 @@ object Quantize {
       .write.mode("overwrite").partitionBy("grp").parquet(s"$path/codes")
   }
 
-  /** Incremental SQ8 maintenance: encode `newVectors` against the
-    * index's FROZEN ranges (saturating at the grid ends — see
-    * [[quantizeCodesAgainst]]) and append only their code files — the
-    * existing artifact and every existing code file stay untouched,
-    * so the append bill is O(|new|), never O(index). A batch whose
-    * vectors don't match the artifact's width FAILS (r15 advice — a
-    * truncated or short code row would silently poison every later
-    * scan; the width count is a d-row parquet read). Metadata columns
-    * riding the staged codes ([[writeSq8Index]]'s `metaCols`) are
-    * derived from the index schema and REQUIRED of the batch — a
-    * batch missing one would leave null-labeled rows invisible to
-    * every filtered query (the [[Pq.appendIvfPqIndex]] discipline).
+  /** Incremental SQ8 maintenance, ATOMIC (r17 verdict item 1): encode
+    * `newVectors` against the live version's FROZEN ranges (saturating
+    * at the grid ends — see [[quantizeCodesAgainst]]) and land them
+    * through [[IndexManifest.appendRowsAtomic]] on a manifest-rooted
+    * index ([[stageSq8IndexVersion]]) — the ranges artifact and
+    * untouched `grp=` buckets are inherited by reference, the batch's
+    * buckets rewrite as old ∪ new, one pointer flip. Concurrent
+    * readers see the batch wholly or not at all. A batch whose vectors
+    * don't match the artifact's width FAILS (r15 advice — a truncated
+    * or short code row would silently poison every later scan).
+    * Metadata columns riding the staged codes ([[writeSq8Index]]'s
+    * `metaCols`) are REQUIRED of the batch — a batch missing one
+    * would leave null-labeled rows invisible to every filtered query.
     * Returns the number of appended code rows. */
-  def appendSq8Index(spark: SparkSession, path: String,
-                     newVectors: DataFrame): Long = {
-    val ranges = IndexManifest.readFrame(spark, path, "ranges")
-    val riding = IndexManifest.readFrame(spark, path, "codes").columns.toSeq
-      .filterNot(Set("vec_id", "codes", "grp"))
-    riding.foreach(c => require(newVectors.columns.contains(c),
-      s"appendSq8Index: the staged codes ride metadata column '$c' " +
-        s"but the batch lacks it — appends must carry the index's riding set"))
-    val encoded = quantizeCodesAgainst(newVectors, ranges, dim = Some(ranges.count()))
-    val withMeta =
-      if (riding.isEmpty) encoded
-      else encoded.join(
-        newVectors.select((Seq("vec_id") ++ riding).map(col): _*), "vec_id")
-    val newCodes = Scratch.stageReuse(withGrp(withMeta), "sq8_append_codes")
-    newCodes.repartition(col("grp"))
-      .write.mode("append").partitionBy("grp").parquet(s"$path/codes")
-    newCodes.count()
-  }
-
-  /** ATOMIC SQ8 append (r17 verdict item 1): [[appendSq8Index]]'s
-    * encode arithmetic through [[IndexManifest.appendRowsAtomic]] on
-    * a manifest-rooted index — untouched `grp=` buckets hardlink into
-    * a fresh version, the batch's buckets rewrite as old ∪ new, one
-    * pointer flip. Concurrent readers see the batch wholly or not at
-    * all. */
   def appendSq8IndexAtomic(spark: SparkSession, root: String,
                            newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
@@ -264,65 +240,19 @@ object Quantize {
       requireEpoch = Some(IndexManifest.epochOf(spark, live)))
   }
 
-  /** ATOMIC SQ8 erasure: [[deleteFromSq8Index]]'s survivor semantics
-    * through the manifest — only buckets holding an erased id rewrite
-    * into the new version, no reader ever sees a half-erased index. */
+  /** Right-to-erasure on the staged SQ8 index, ATOMIC: drop the code
+    * rows of `vecIds` through [[IndexManifest.deleteVecIdsAtomic]] —
+    * only the `grp=` buckets holding an erased id rewrite into the new
+    * version (the [[Pq.deleteFromIvfPqIndexAtomic]] recipe with the
+    * erasure bucket standing in for the coarse cell), every other
+    * bucket is inherited by reference, and no reader ever sees a
+    * half-erased index. The ranges artifact is unaffected: it is a
+    * trained AGGREGATE, not per-record state — re-quantize on the
+    * next reindex cadence. Returns the number of deleted code rows. */
   def deleteFromSq8IndexAtomic(spark: SparkSession, root: String,
                                vecIds: Seq[Long], keep: Int = 2): Long =
     IndexManifest.deleteVecIdsAtomic(spark, root, "codes", "grp",
       vecIds, keep)
-
-  /** Right-to-erasure on the staged SQ8 index: drop the code rows of
-    * `vecIds`, rewriting ONLY the `grp=` bucket directories that
-    * contain an erased id — every other bucket's files stay
-    * byte-identical (spec-asserted), so the erasure bill is
-    * O(affected buckets · index/N), never O(index). An emptied bucket
-    * is retired outright (the [[Pq.deleteFromIvfPqIndex]] recipe —
-    * this function IS that recipe with the erasure bucket standing in
-    * for the coarse cell). The ranges artifact is unaffected: it is a
-    * trained AGGREGATE, not per-record state — re-quantize on the
-    * next reindex cadence. Crash residual shared with the PQ form:
-    * per-bucket commits, idempotent-retry repair. Returns the number
-    * of deleted code rows. */
-  def deleteFromSq8Index(spark: SparkSession, path: String,
-                         vecIds: Seq[Long]): Long = {
-    if (vecIds.isEmpty) return 0L
-    val codesPath = s"$path/codes"
-    // the survivor rewrite must carry EVERY posting column — dropping
-    // a riding metadata column here would silently erase the filtered
-    // tier (the deleteFromIvfPqIndex discipline)
-    def codes = {
-      val raw = spark.read.parquet(codesPath)
-      val meta = raw.columns.toSeq
-        .filterNot(Set("vec_id", "codes", "grp")).map(col)
-      raw.select((Seq(col("vec_id"), col("codes"),
-        col("grp").cast("long").as("grp")) ++ meta): _*)
-    }
-    val affected = codes.filter(col("vec_id").isInCollection(vecIds))
-      .select("grp").distinct().collect().map(_.getLong(0))
-    if (affected.isEmpty) return 0L
-    val survivors = Scratch.stageReuse(
-      codes.filter(col("grp").isInCollection(affected.toSeq))
-        .filter(!col("vec_id").isInCollection(vecIds)),
-      "sq8_delete_survivors")
-    val survivorGrps = survivors.select("grp").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val nBefore = codes.filter(col("grp").isInCollection(affected.toSeq)).count()
-    val nAfter = survivors.count()
-    survivors.repartition(col("grp"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("grp").parquet(codesPath)
-    // dynamic overwrite writes nothing for an emptied bucket — retire
-    // its stale directory explicitly
-    val fs = new org.apache.hadoop.fs.Path(codesPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (affected.toSet -- survivorGrps).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(codesPath, s"grp=$g"), true)
-      ()
-    }
-    nBefore - nAfter
-  }
 
   /** Query a STAGED SQ8 index: the [[knnSq8On]] scan over the
     * persisted codes + ranges, nothing rebuilt — queries and the
@@ -455,18 +385,20 @@ object Quantize {
   }
 
   /** Driver query (key `knn_sq8_delete`): the erasure half of the SQ8
-    * CRUD lifecycle end to end — stage over the full corpus,
-    * [[deleteFromSq8Index]] of ids [[Pq.DeleteLo]]..[[Pq.DeleteHi]]
-    * (only their buckets rewritten), then the staged top-k query. The
+    * CRUD lifecycle end to end — stage over the full corpus as a
+    * manifest version, [[deleteFromSq8IndexAtomic]] of ids
+    * [[Pq.DeleteLo]]..[[Pq.DeleteHi]] (only their buckets rewritten),
+    * then the staged top-k query off the live version. The
     * oracle replays the flat SQ8 search with exactly those ids
     * excluded from candidate enumeration — the ranges grid (a trained
     * aggregate) and every surviving code are unchanged by erasure. */
   def knnSq8Delete(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val path = Scratch.reuseDir("sq8_delete_idx")
-    writeSq8Index(vectors, path)
-    deleteFromSq8Index(spark, path, Pq.DeleteLo to Pq.DeleteHi)
-    querySq8Index(spark, path, vectors, 0L until Similarity.NQueries.toLong)
+    val root = Scratch.reuseDir("sq8_delete_key_root")
+    stageSq8IndexVersion(vectors, root)
+    deleteFromSq8IndexAtomic(spark, root, Pq.DeleteLo to Pq.DeleteHi)
+    querySq8Index(spark, IndexManifest.currentOrFail(spark, root), vectors,
+      0L until Similarity.NQueries.toLong)
   }
 
   /** FILTERED top-k off the staged SQ8 index (key `knn_sq8_filtered`)
@@ -762,8 +694,8 @@ object Quantize {
 
   /** Driver query (key `knn_sq8_append`): the scalar tier's
     * incremental-maintenance lifecycle at the cross-engine gate —
-    * day-0 grid trained on the base half ([[writeSq8Index]]), the
-    * rest [[appendSq8Index]]-encoded against that FROZEN grid
+    * day-0 grid trained on the base half ([[stageSq8IndexVersion]]),
+    * the rest [[appendSq8IndexAtomic]]-encoded against that FROZEN grid
     * (saturating at the ends), staged top-k query over everything.
     * The oracle re-derives the grid from the base slice and decodes
     * every vector against it with the same saturation, so a hash
@@ -773,10 +705,10 @@ object Quantize {
   def knnSq8Append(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val cut = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
-    val path = Scratch.reuseDir("sq8_append_idx")
-    writeSq8Index(vectors.filter(col("vec_id") <= cut), path)
-    appendSq8Index(spark, path, vectors.filter(col("vec_id") > cut))
-    querySq8Index(spark, path, vectors,
+    val root = Scratch.reuseDir("sq8_append_key_root")
+    stageSq8IndexVersion(vectors.filter(col("vec_id") <= cut), root)
+    appendSq8IndexAtomic(spark, root, vectors.filter(col("vec_id") > cut))
+    querySq8Index(spark, IndexManifest.currentOrFail(spark, root), vectors,
       0L until Similarity.NQueries.toLong)
   }
 
@@ -918,12 +850,12 @@ object Quantize {
   // SQ8 all stage durably): centroids + ranges + CELL-partitioned int8
   // codes. The codes tree is byte-shaped like the PQ tier's
   // (vec_id, codes, cell=<id> partition dirs), so erasure IS
-  // [[Pq.deleteFromIvfPqIndex]] and probes prune whole directories.
+  // [[Pq.deleteFromIvfPqIndexAtomic]] and probes prune whole directories.
 
   /** Stage the composed index durably. `trainOn` (null = `vectors`)
     * decouples training (Lloyd centroids + the quantizer grid) from
     * indexing — `writeIvfSq8Index(a ∪ b, trainOn = a)` equals
-    * `writeIvfSq8Index(a)` + [[appendIvfSq8Index]]`(b)` bit-for-bit
+    * `writeIvfSq8Index(a)` + [[appendIvfSq8IndexAtomic]]`(b)` bit-for-bit
     * (spec), the incremental-lifecycle equation every tier holds.
     * Codes are encoded against the STAGED ranges read back from
     * parquet (exact double round-trip — artifact and codes can never
@@ -1025,26 +957,9 @@ object Quantize {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
   }
 
-  /** Durable append on the composed index: assign (frozen centroids,
-    * float space) + quantize (frozen staged grid, end-saturating) the
-    * new vectors, append only their cell-clustered code files —
-    * O(|new|), never O(index). Riding metadata derives from the index
-    * schema and is required of the batch (the tier-wide discipline);
-    * a mis-dimensioned batch fails in-plan at the grid join / width
-    * check. Returns appended code rows. */
-  def appendIvfSq8Index(spark: SparkSession, path: String,
-                        newVectors: DataFrame): Long = {
-    val staged = Scratch.stageReuse(
-      ivfSq8AppendBatch(spark, path, newVectors), "ivf_sq8_append_codes")
-    staged.repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-    staged.count()
-  }
-
   /** The composed append's arithmetic alone — assign (frozen
     * centroids) + quantize (frozen staged grid) with riding metadata,
-    * as an unmaterialized code frame. Shared by the in-place fast
-    * path and the manifest-atomic form. */
+    * as an unmaterialized code frame for [[appendIvfSq8IndexAtomic]]. */
   private def ivfSq8AppendBatch(spark: SparkSession, path: String,
                                 newVectors: DataFrame): DataFrame = {
     val centroids = IndexManifest.readFrame(spark, path, "centroids")
@@ -1052,7 +967,7 @@ object Quantize {
     val riding = IndexManifest.readFrame(spark, path, "codes").columns.toSeq
       .filterNot(Set("vec_id", "codes", "cell"))
     riding.foreach(c => require(newVectors.columns.contains(c),
-      s"appendIvfSq8Index: the staged codes ride metadata column '$c' " +
+      s"appendIvfSq8IndexAtomic: the staged codes ride metadata column '$c' " +
         s"but the batch lacks it — appends must carry the index's riding set"))
     val vNew = newVectors
       .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
@@ -1077,16 +992,20 @@ object Quantize {
   /** Stage a composed IVF-SQ8 index as version 1 of a manifest-rooted
     * index — the atomic-lifecycle entry point (and the live-restage
     * path: centroids, grid, and codes flip together — the multi-frame
-    * residual the in-place writer documents). */
+    * residual [[writeIvfSq8Index]] documents). */
   def stageIvfSq8IndexVersion(vectors: DataFrame, root: String,
                               metaCols: Seq[String] = Seq.empty,
                               trainOn: DataFrame = null): String =
     IndexManifest.publish(vectors.sparkSession, root)(
       dir => writeIvfSq8Index(vectors, dir, metaCols, trainOn))
 
-  /** ATOMIC composed append: the batch through
+  /** Durable ATOMIC append on the composed index: assign (frozen
+    * centroids, float space) + quantize (frozen staged grid,
+    * end-saturating) the new vectors, landed through
     * [[IndexManifest.appendRowsAtomic]] on a manifest-rooted index —
-    * the PQ tier's atomic contract on the IVF-SQ8 layout. */
+    * the PQ tier's atomic contract on the IVF-SQ8 layout. Riding
+    * metadata derives from the index schema and is required of the
+    * batch (the tier-wide discipline). Returns appended code rows. */
   def appendIvfSq8IndexAtomic(spark: SparkSession, root: String,
                               newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
@@ -1131,15 +1050,6 @@ object Quantize {
     IndexManifest.publishRetrain(spark, root, keep)(
       dir => writeIvfSq8Index(corpus, dir, meta))
   }
-
-  /** Erasure on the composed index: the codes tree is the PQ layout
-    * byte-for-byte (vec_id, codes, cell=<id> dirs), so this IS
-    * [[Pq.deleteFromIvfPqIndex]] — only cell directories holding an
-    * erased id are rewritten; centroids and the grid (trained
-    * aggregates) stand. */
-  def deleteFromIvfSq8Index(spark: SparkSession, path: String,
-                            vecIds: Seq[Long]): Long =
-    Pq.deleteFromIvfPqIndex(spark, path, vecIds)
 
   /** Full DuckDB replay of the composed IVF-SQ8 search: the shared
     * IVF-build prefix (cells per vector), the [[knnSq8OracleSql]]

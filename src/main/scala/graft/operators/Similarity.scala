@@ -721,8 +721,8 @@ object Similarity {
     * lifecycle at the cross-engine gate — completing erasure-at-the-
     * gate across all four tiers (PQ `knn_ivf_pq_delete`, SQ8
     * `knn_sq8_delete`, OPQ `knn_ivf_opq_delete`, float here). Build +
-    * stage the postings, [[deleteFromIvfIndex]] of the bounded slice
-    * (only cell directories holding an erased id rewritten), staged
+    * stage the postings, [[deleteFromIvfIndexAtomic]] of the bounded
+    * slice (only cell directories holding an erased id rewritten), staged
     * top-k. Oracle = the classic IVF replay with exactly those ids
     * excluded from candidate enumeration — centroids and probes stand
     * (trained aggregates; the erased ids are query-disjoint). */
@@ -1627,38 +1627,9 @@ object Similarity {
       .filter(col("cosine") >= tau)
   }
 
-  /** Incremental float-tier maintenance: assign `newVectors` to the
-    * FROZEN staged centroids (the closure argmax — identical
-    * arithmetic to the build's assignment) and append only their
-    * cell-clustered posting files; centroids and every existing file
-    * stay byte-identical (spec-asserted), so the append bill is
-    * O(|new|), never O(index). Returns appended posting rows.
-    *
-    * Concurrent-reader residual (r16 advice): the append writes new
-    * files straight into the live postings tree, so a reader whose
-    * scan overlaps the job-commit window can see SOME of the batch's
-    * cells and not others — each file is complete (parquet commit is
-    * per-file rename), but the batch is not atomic as a set. A crash
-    * mid-append has the same shape: the partial batch's rows are
-    * valid postings, re-running the append would duplicate them — so
-    * recovery is delete-and-retry keyed on the batch's vec_ids. When
-    * the batch must land atomically for concurrent readers, use
-    * [[appendIvfIndexAtomic]] (same arithmetic, manifest-versioned
-    * publish — r17 verdict item 1). */
-  def appendIvfIndex(spark: SparkSession, path: String,
-                     newVectors: DataFrame): Long = {
-    val staged = Scratch.stageReuse(
-      ivfAppendBatch(spark, path, newVectors), "ivf_float_append")
-    staged.repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/postings")
-    staged.count()
-  }
-
   /** The float append's arithmetic alone — the batch assigned against
     * `path`'s frozen centroids with its metadata riding, as an
-    * (unmaterialized) posting frame. Shared by the in-place fast path
-    * ([[appendIvfIndex]]) and the manifest-atomic form
-    * ([[appendIvfIndexAtomic]]). */
+    * (unmaterialized) posting frame for [[appendIvfIndexAtomic]]. */
   private def ivfAppendBatch(spark: SparkSession, path: String,
                              newVectors: DataFrame): DataFrame = {
     val centroids = IndexManifest.readFrame(spark, path, "centroids")
@@ -1673,14 +1644,14 @@ object Similarity {
     val d = centroids.select(size(col("ce"))).limit(1).collect().headOption match {
       case Some(r) => r.getInt(0)
       case None => throw new IllegalStateException(
-        s"appendIvfIndex: no staged index at $path — the centroids " +
-          "artifact is empty; stage one with writeIvfIndex first")
+        s"appendIvfIndexAtomic: no staged index at $path — the centroids " +
+          "artifact is empty; stage one with stageIvfIndexVersion first")
     }
     val v = newVectors
       .select(col("vec_id"),
         when(size(col("embedding")) === lit(d), V.toDouble(col("embedding")))
           .otherwise(raise_error(concat(
-            lit("appendIvfIndex: vector "), col("vec_id"), lit(" has "),
+            lit("appendIvfIndexAtomic: vector "), col("vec_id"), lit(" has "),
             size(col("embedding")),
             lit(s" dims but the staged index has $d")))
             .cast("array<double>"))
@@ -1694,7 +1665,7 @@ object Similarity {
       .diff(Set("vec_id", "e", "nrm", "cell"))
     val batchMeta = metaCols(newVectors).toSet
     require(batchMeta == stagedMeta,
-      s"appendIvfIndex: batch metadata columns $batchMeta do not match " +
+      s"appendIvfIndexAtomic: batch metadata columns $batchMeta do not match " +
         s"the staged postings' $stagedMeta — stage and append the same shape")
     val flat = assignNearest(v, centroids, "cell", "ce", "cn")
       .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
@@ -1704,14 +1675,16 @@ object Similarity {
       .select((Seq("vec_id") ++ metaCols(newVectors)).map(col): _*), "vec_id")
   }
 
-  /** ATOMIC float-tier append (r17 verdict item 1): the same batch
-    * arithmetic as [[appendIvfIndex]], landed through
-    * [[IndexManifest.appendRowsAtomic]] against a VERSIONED index
-    * root ([[stageIvfIndexVersion]]) — a concurrent reader sees the
+  /** Incremental float-tier maintenance (ATOMIC): assign `newVectors`
+    * to the FROZEN staged centroids (the closure argmax — identical
+    * arithmetic to the build's assignment) and land the batch through
+    * [[IndexManifest.appendRowsAtomic]] on a VERSIONED index root
+    * ([[stageIvfIndexVersion]]). Centroids and every untouched cell
+    * stay byte-identical (inherited by reference), so the append bill
+    * is O(touched cells), never O(index). A concurrent reader sees the
     * wholly-old or wholly-new version, never some of the batch's
     * cells; a crash leaves the old version serving. Superseded
-    * versions retire behind `keep`. Answers are bit-identical to the
-    * in-place form's (spec). */
+    * versions retire behind `keep`. Returns appended posting rows. */
   def appendIvfIndexAtomic(spark: SparkSession, root: String,
                            newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
@@ -1723,12 +1696,15 @@ object Similarity {
       requireEpoch = Some(IndexManifest.epochOf(spark, live)))
   }
 
-  /** ATOMIC float-tier erasure: [[deleteFromIvfIndex]]'s semantics
-    * through [[IndexManifest.deleteVecIdsAtomic]] — only partition
-    * directories holding an erased id are rewritten into the new
-    * version (emptied cells simply don't exist in it), everything
-    * else hardlinks, one pointer flip. No reader ever sees a
-    * half-erased index; a crash leaves the old version serving. */
+  /** Right-to-erasure on the float serving index (ATOMIC): drop the
+    * postings of `vecIds` through [[IndexManifest.deleteVecIdsAtomic]]
+    * — only cell directories holding an erased id are rewritten into
+    * the new version (emptied cells simply don't exist in it),
+    * everything else is inherited by reference, one pointer flip. No
+    * reader ever sees a half-erased index; a crash leaves the old
+    * version serving. Every posting column, metadata included, rides
+    * the survivor rewrite. Returns the number of deleted posting
+    * rows. */
   def deleteFromIvfIndexAtomic(spark: SparkSession, root: String,
                                vecIds: Seq[Long], keep: Int = 2): Long =
     IndexManifest.deleteVecIdsAtomic(spark, root, "postings", "cell",
@@ -1742,62 +1718,6 @@ object Similarity {
   def stageIvfIndexVersion(vectors: DataFrame, root: String): String =
     IndexManifest.publish(vectors.sparkSession, root)(
       dir => writeIvfIndex(vectors, dir))
-
-  /** Right-to-erasure on the float serving index: drop the postings
-    * of `vecIds`, rewriting ONLY the cell directories that contain an
-    * erased id (the [[Pq.deleteFromIvfPqIndex]] recipe — emptied
-    * cells retired outright, every other file byte-identical).
-    * Returns the number of deleted posting rows.
-    *
-    * Crash residual (r16 advice): the survivor rewrite commits per
-    * cell directory (dynamic partition overwrite), so a crash
-    * mid-commit can leave SOME affected cells rewritten and others
-    * stale — unlike the writers' tmp+rename swap there is no single
-    * recovery copy. The state is still safe to repair: re-running the
-    * same delete is idempotent (stale cells still contain the erased
-    * ids and are rewritten; already-rewritten cells have no erased
-    * ids and are untouched — spec-asserted). A deployment that must
-    * never serve a half-erased index uses [[deleteFromIvfIndexAtomic]]
-    * (same survivor arithmetic, manifest-versioned publish — r17
-    * verdict item 1; the gate key `knn_ivf_delete` runs that path). */
-  def deleteFromIvfIndex(spark: SparkSession, path: String,
-                         vecIds: Seq[Long]): Long = {
-    if (vecIds.isEmpty) return 0L
-    val postPath = s"$path/postings"
-    // the survivor rewrite must carry EVERY posting column (metadata
-    // included) — a projection here would silently strip the filter
-    // columns from rewritten cells
-    def postings = {
-      val raw = spark.read.parquet(postPath)
-      val meta = raw.columns.toSeq
-        .filterNot(Set("vec_id", "e", "nrm", "cell")).map(col)
-      raw.select((Seq(col("vec_id"), col("e"), col("nrm"),
-        col("cell").cast("long").as("cell")) ++ meta): _*)
-    }
-    val affected = postings.filter(col("vec_id").isInCollection(vecIds))
-      .select("cell").distinct().collect().map(_.getLong(0))
-    if (affected.isEmpty) return 0L
-    val survivors = Scratch.stageReuse(
-      postings.filter(col("cell").isInCollection(affected.toSeq))
-        .filter(!col("vec_id").isInCollection(vecIds)),
-      "ivf_float_delete_survivors")
-    val survivorCells = survivors.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val nBefore = postings
-      .filter(col("cell").isInCollection(affected.toSeq)).count()
-    val nAfter = survivors.count()
-    survivors.repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(postPath)
-    // dynamic overwrite writes nothing for an emptied cell — retire
-    // its directory explicitly (the PQ-erasure precedent)
-    val fs = new org.apache.hadoop.fs.Path(postPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.filterNot(survivorCells).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$postPath/cell=$c"), true) }
-    nBefore - nAfter
-  }
 
   /** Auto-nprobe: close the recall-report loop (r16 verdict item 4 —
     * the dq_key_skew → saltedJoinAuto precedent: a diagnostic nothing
@@ -1875,10 +1795,11 @@ object Similarity {
   def knnIndexStats(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val cut = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
-    val path = Scratch.reuseDir("ivf_stats_idx")
-    writeIvfIndex(vectors.filter(col("vec_id") <= cut), path)
-    appendIvfIndex(spark, path, vectors.filter(col("vec_id") > cut))
-    ivfIndexStats(spark, path, appendedFrom = cut + 1)
+    val root = Scratch.reuseDir("ivf_stats_key_root")
+    stageIvfIndexVersion(vectors.filter(col("vec_id") <= cut), root)
+    appendIvfIndexAtomic(spark, root, vectors.filter(col("vec_id") > cut))
+    ivfIndexStats(spark, IndexManifest.currentOrFail(spark, root),
+      appendedFrom = cut + 1)
   }
 
   /** Oracle: the trained-on-base IVF prefix (Lloyd sees only
@@ -1901,36 +1822,21 @@ object Similarity {
        |  CAST(p.n * nc.c AS DOUBLE) / CAST(t.tot AS DOUBLE) AS skew
        |FROM percell p CROSS JOIN tot t CROSS JOIN nc""".stripMargin
 
-  /** Retrain a drifted staged index IN PLACE: rebuild centroids and
-    * re-partition the postings from the index's own vectors (the
-    * float payload IS the corpus — metadata columns ride through),
-    * restaged via [[writeIvfIndex]]'s tmp+rename discipline. After a
-    * rebalance the index answers exactly as a fresh build over the
-    * same vectors (spec-asserted): `toDouble` is the identity on the
+  /** Retrain a drifted MANIFEST-rooted float index (r17 verdict
+    * item 6 — retention wired into a lifecycle): rebuild centroids and
+    * re-partition the postings from the live version's own vectors
+    * (the float payload IS the corpus — metadata columns ride
+    * through), publish the rebuilt index as a new version (readers
+    * overlapping the retrain keep serving the old one), then retire
+    * superseded versions behind `keep`. After a rebalance the index
+    * answers exactly as a fresh build over the same vectors
+    * (spec-asserted): `toDouble` is the identity on the
     * already-widened payload, so the retrain sees bit-identical
     * geometry. Cost is the build's — the point of [[ivfIndexStats]]
-    * is to pay it only when the skew report says so. The corpus frame
-    * stages to scratch first: the writer overwrites the very
-    * directories its input would otherwise lazily re-read. */
-  def rebalanceIvfIndex(spark: SparkSession, path: String): Unit = {
-    val (postings, _) = readIvfIndex(spark, path)
-    val meta = postings.columns.toSeq
-      .filterNot(Set("vec_id", "e", "nrm", "cell")).map(col)
-    val corpus = Scratch.stageReuse(
-      postings.select((Seq(col("vec_id"), col("e").as("embedding")) ++ meta): _*),
-      "ivf_rebalance_corpus")
-    writeIvfIndex(corpus, path)
-  }
-
-  /** [[rebalanceIvfIndex]] on a MANIFEST-rooted index (r17 verdict
-    * item 6 — retention wired into a lifecycle): retrain from the
-    * live version's own postings, publish the rebuilt index as a new
-    * version (readers overlapping the retrain keep serving the old
-    * one — no tmp+rename window at all), then retire superseded
-    * versions behind `keep`. A rebuild touches every cell by
-    * definition, so nothing mirrors — this is the full-restage
-    * complement of the delta paths. Returns the published version
-    * directory. */
+    * is to pay it only when the skew report says so. A rebuild
+    * touches every cell by definition, so nothing is inherited — this
+    * is the full-restage complement of the delta paths. Returns the
+    * published version directory. */
   def rebalanceIvfIndexVersioned(spark: SparkSession, root: String,
                                  keep: Int = 2): String = {
     val live = IndexManifest.currentOrFail(spark, root)

@@ -529,85 +529,37 @@ object Streams {
       indexPath + "_compact_tmp", targetRowsPerFile, Seq("ixb"))
 
   /** Streaming ANN INGEST — the serving half of the embedding
-    * pipeline's daily lifecycle run continuously: each micro-batch of
-    * `(vec_id, embedding)` rows is assigned + encoded against the
-    * day-0 staged IVFADC artifacts
-    * ([[graft.operators.Pq.writeIvfPqIndex]], which MUST pre-exist —
-    * a missing index fails loudly rather than training on one
-    * micro-batch) and appended into the index's cell directories.
-    * Queries against the growing index stay bit-identical to a batch
-    * rebuild trained on day 0 (`buildIvfPq(all, trainOn = day0)` —
-    * the [[graft.operators.Pq.appendToIvfPq]] equation, spec-asserted
+    * pipeline's daily lifecycle run continuously (the streaming twin
+    * of [[graft.operators.Pq.appendIvfPqIndexAtomic]]): each
+    * micro-batch of `(vec_id, embedding)` rows is assigned + encoded
+    * against the live IVFADC artifacts under an
+    * [[graft.operators.IndexManifest]] root (a day-0
+    * [[graft.operators.Pq.stageIvfPqIndexVersion]], which MUST
+    * pre-exist — a missing index fails loudly rather than training on
+    * one micro-batch), and each EFFECTIVE micro-batch lands as a
+    * delta-published new version + one pointer flip, so concurrent
+    * queries never see part of a micro-batch. Queries against the
+    * growing index stay bit-identical to a batch rebuild trained on
+    * day 0 (`buildIvfPq(all, trainOn = day0)` — the
+    * [[graft.operators.Pq.appendToIvfPq]] equation, spec-asserted
     * end-to-end through this sink).
     *
     * Effectively-once under at-least-once replay WITHOUT a side
-    * ledger: the index itself is the claim registry. A vector's cell
-    * is a pure function of its embedding and the frozen centroids, so
-    * a replayed row re-lands in the SAME cell — the per-batch
-    * existing-id check reads only the batch's own cell directories
-    * (partition-pruned, the CDC-bucket argument) and the anti-join
-    * makes the one write idempotent. Per-batch bill:
-    * O(|batch|·C·d) encode + the touched cells' code files — never
+    * ledger: the LIVE version's codes are the claim registry. A
+    * vector's cell is a pure function of its embedding and the frozen
+    * centroids, so a replayed row re-lands in the SAME cell — the
+    * existing-id check reads only the batch's own cells
+    * (partition-pruned) and a replayed batch anti-joins to zero rows
+    * and publishes NOTHING, so replay neither duplicates codes nor
+    * churns versions; a crash mid-publish leaves the pointer on the
+    * old version and the full replay re-lands the batch wholly.
+    * Superseded versions retire behind `keep` (keep ≥ 2 keeps the
+    * immediately superseded version alive past any in-flight reader —
+    * the retention rule). Per-batch bill: O(|batch|·C·d) encode +
+    * anti-join + touched-cell rewrite + one manifest write — never
     * O(index). Contract: vec_ids unique across the stream (the corpus
     * key contract); near-dup admission is the upstream
     * [[minhashGuardSink]]'s job, not the index's. */
-  def annIngestSink(vectors: DataFrame, indexPath: String) =
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { annIngestMicroBatch(batch, indexPath); () }
-      }
-
-  /** The foreachBatch core (exposed for the replay spec): encode the
-    * batch against the staged artifacts, drop ids the index already
-    * holds (cell-pruned read), append the remainder. Returns the
-    * number of appended code rows (0 for a full replay). */
-  def annIngestMicroBatch(batch: DataFrame, indexPath: String): Long = {
-    val spark = batch.sparkSession
-    // scoped to the read: an absent/corrupt index must fail here, not
-    // be mistaken for an empty one (the readLakeOpt convention)
-    val index =
-      try graft.operators.Pq.readIvfPqIndex(spark, indexPath)
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"annIngestSink needs a day-0 writeIvfPqIndex artifact at " +
-            s"$indexPath — build once, then stream appends", e)
-      }
-    // one encode pass, staged: the cells probe, the idempotence
-    // anti-join, the write, and the count all read the same parquet
-    val newCodes = graft.operators.Scratch.stageReuse(
-      graft.operators.Pq.encodeAgainst(index, batch, 0), "ann_ingest_codes")
-    val cells = newCodes.select("cell").distinct()
-    val existingIds = index.codes
-      .join(broadcast(cells), Seq("cell"), "left_semi")
-      .select("vec_id")
-    val fresh = graft.operators.Scratch.stageReuse(
-      newCodes.join(existingIds, Seq("vec_id"), "left_anti"),
-      "ann_ingest_fresh")
-    val n = fresh.count()
-    if (n > 0)
-      fresh.repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexPath/codes")
-    n
-  }
-
-  /** ATOMIC form of [[annIngestSink]] (r18 — the streaming twin of
-    * [[graft.operators.Pq.appendIvfPqIndexAtomic]]): the index lives
-    * under an [[graft.operators.IndexManifest]] root and each
-    * EFFECTIVE micro-batch lands as a delta-published new version +
-    * one pointer flip, so concurrent queries never see part of a
-    * micro-batch (the in-place sink's residual: its per-cell appends
-    * are visible piecemeal during the batch's job commit). The
-    * idempotence claim registry is the LIVE version's codes — a
-    * replayed batch anti-joins to zero rows and publishes NOTHING, so
-    * at-least-once replay neither duplicates codes nor churns
-    * versions; a crash mid-publish leaves the pointer on the old
-    * version and the full replay re-lands the batch wholly. Superseded
-    * versions retire behind `keep` (keep ≥ 2 keeps the immediately
-    * superseded version alive past any in-flight reader — the
-    * retention rule). Per-batch bill: the in-place sink's encode +
-    * anti-join + touched-cell rewrite, plus the mirror's metadata ops. */
   def annIngestSinkAtomic(vectors: DataFrame, root: String, keep: Int = 2,
                           publishEveryRows: Long = 0L) =
     vectors.writeStream
@@ -656,7 +608,7 @@ object Streams {
     *
     * VERSION-CHURN COALESCING (r18 verdict item 5): one manifest
     * version per micro-batch means production batch rates grow the
-    * version chain — and each version's O(n_files) hardlink tree —
+    * version chain — and each version's manifest and store files —
     * unboundedly fast even behind keep-N. With `publishEveryRows > 0`
     * an effective batch lands in a durable PENDING delta tree under
     * the root instead ([[annPendingPath]], partitioned by cell like
@@ -665,7 +617,7 @@ object Streams {
     * ([[annIngestFlushPending]] — also callable directly to drain on
     * shutdown or a freshness deadline). The trade is read staleness
     * (queries serve the last PUBLISHED version; pending rows are
-    * invisible until the flush) for a version/inode churn bound of
+    * invisible until the flush) for a version/file churn bound of
     * one version per `publishEveryRows` ingested rows.
     *
     * Crash/replay safety is unchanged: pending is durable and written
@@ -673,10 +625,9 @@ object Streams {
     * ∪ pending, both cell-pruned), so an at-least-once replay appends
     * nothing; a crash between a flush's pointer flip and the pending
     * clear self-heals (the next flush's anti-join drops the
-    * already-published rows). Contract (shared with the in-place
-    * sink): a REBALANCE/RETRAIN of the index must be fenced against
-    * stream replay — stop the sink, drain the checkpoint, flush
-    * pending, rebalance, restart. A replayed row re-finds its prior
+    * already-published rows). Contract: a REBALANCE/RETRAIN of the
+    * index must be fenced against stream replay — stop the sink,
+    * drain the checkpoint, flush pending, rebalance, restart. A replayed row re-finds its prior
     * copy because its cell is a pure function of the FROZEN
     * centroids; retraining breaks that function, and the cell-pruned
     * claim check would re-admit the row as a duplicate. */
@@ -857,12 +808,12 @@ object Streams {
     n
   }
 
-  /** Batch twin of [[annIngestSink]] (key `stream_ann_ingest`): the
+  /** Batch twin of [[annIngestSinkAtomic]] (key `stream_ann_ingest`): the
     * same build-on-day-0 / append-the-rest lifecycle as ONE batch
     * call — shares `knn_ivf_pq_append`'s trainOn-decoupled oracle,
-    * and since r18 that key runs the ATOMIC append path, so the
-    * streamed lifecycle's arithmetic is gated through the same
-    * manifest machinery [[annIngestSinkAtomic]] uses. */
+    * and that key runs the ATOMIC append path, so the streamed
+    * lifecycle's arithmetic is gated through the same manifest
+    * machinery the sink uses. */
   def annIngestBatch(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Pq.knnIvfPqAppend(spark, dir)
 

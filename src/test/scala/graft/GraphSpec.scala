@@ -154,6 +154,21 @@ class GraphSpec extends SparkSpecBase {
     assert(all.map(_.getAs[Long]("p_partkey")).toSet == Set(1L, 2L, 3L, 4L))
   }
 
+  test("kcore: a known edge count seeds the distributed peel — a graph " +
+      "where nothing peels converges in one round on both paths") {
+    // K4 at k=2: every node has degree 3, so round 1 peels nothing.
+    // The driver path stops after that round (0 changing peels), and a
+    // zero oracle budget must hold on the distributed loop too once it
+    // is told the exact edge count up front
+    val g = edgesDf((1L,2L),(1L,3L),(1L,4L),(2L,3L),(2L,4L),(3L,4L))
+    def core(): Set[Long] = Graph.kcoreOn(g, k = 2, oracleRoundBudget = Some(0),
+      knownEdges = Some(6L)).collect().map(_.getAs[Long]("p_partkey")).toSet
+    assert(core() == Set(1L, 2L, 3L, 4L))
+    spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
+    try assert(core() == Set(1L, 2L, 3L, 4L))
+    finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
+  }
+
   test("kcore driver key: every core member keeps >= k core neighbors; core is a subgraph of the supported graph") {
     val rows = Graph.graphKcore(spark, sfDir).collect()
     if (rows.nonEmpty) {

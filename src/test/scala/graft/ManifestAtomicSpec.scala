@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.operators.{IndexManifest, Opq, Pq, Quantize, Similarity}
 
 /** The atomic index lifecycle (r17 verdict item 1): append and erase
-  * land as manifest-published versions — hardlinked-unchanged cells +
-  * touched-cell rewrite + one pointer flip — so a concurrent reader
-  * sees wholly-old or wholly-new, a crash mid-op leaves the old
-  * version serving, and superseded versions retire behind keep-N.
-  * Every tier's atomic form must answer bit-identically to its
-  * in-place fast path (whose answers the driver gate hash-checks).
+  * land as manifest-published versions — untouched cells inherited by
+  * reference + touched-cell rewrite + one pointer flip — so a
+  * concurrent reader sees wholly-old or wholly-new, a crash mid-op
+  * leaves the old version serving, and superseded versions retire
+  * behind keep-N. Every tier's delta must leave exactly the rows a
+  * manifest-free reference computes: the batch freshly assigned (or
+  * encoded) against the staged artifacts for an append, the pre-op
+  * live rows minus the erased ids for an erasure.
   *
   * r18 verdict item 3 adds the multi-writer discipline: concurrent
   * publishers serialize on a create-exclusive version claim — both
@@ -22,27 +24,12 @@ import graft.operators.{IndexManifest, Opq, Pq, Quantize, Similarity}
   * readable version from the keep window.
   *
   * Fixture sharing (r18 verdict item 8): the float tier stages ONE
-  * in-place twin and ONE versioned root, evolved across the cases in
-  * suite order (append → erase → crash/recovery) instead of a fresh
-  * staging per case — the QuantizeSpec staging pattern.
-  *
-  * This suite pins `spark.graft.manifest.mode = link` (r20): it IS
-  * the hardlink-tier spec — self-contained version directories,
-  * inode-identity assertions, wholesale vacuum. The default REFS
-  * layout (file-reference manifests, store-landed deltas) has its own
-  * suite, [[ManifestRefsSpec]], and is what every other suite and the
-  * driver gate exercise. */
-class ManifestAtomicSpec extends SparkSpecBase
-    with org.scalatest.BeforeAndAfterAll {
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.conf.set("spark.graft.manifest.mode", "link")
-  }
-  override def afterAll(): Unit = {
-    spark.conf.unset("spark.graft.manifest.mode")
-    super.afterAll()
-  }
+  * versioned root, evolved across the cases in suite order (append →
+  * erase → crash/recovery) instead of a fresh staging per case — the
+  * QuantizeSpec staging pattern. The file-reference layout's own
+  * properties (pure-manifest deltas, store reclamation, plain
+  * versions from older releases) are [[ManifestRefsSpec]]'s. */
+class ManifestAtomicSpec extends SparkSpecBase {
 
   private def vectors = graft.sources.Tables.embeddings(spark, sfDir)
 
@@ -53,68 +40,61 @@ class ManifestAtomicSpec extends SparkSpecBase
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def inode(p: String): Long =
-    java.nio.file.Files.getAttribute(
-      java.nio.file.Paths.get(p), "unix:ino").asInstanceOf[Long]
-
   private def versionDirs(root: String): Seq[String] = {
     val d = new java.io.File(root)
     d.listFiles().toSeq.filter(f => f.isDirectory && f.getName.startsWith("v="))
       .map(_.getName).sorted
   }
 
-  private def firstParquetUnder(dir: String): String = {
-    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try stream.filter(p => p.toString.endsWith(".parquet"))
-      .findFirst().get().toString
-    finally stream.close()
-  }
+  /** A version's files of one frame: version-relative path -> the
+    * physical file it resolves to. */
+  private def files(version: String, frame: String): Map[String, String] =
+    IndexManifest.effectiveFiles(spark, version)
+      .filter(_._1.startsWith(frame + "/")).toMap
 
   // ---- shared float-tier lifecycle fixtures (staged once) ----
   private lazy val cut =
     vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
   private lazy val base = vectors.filter(col("vec_id") <= cut)
   private lazy val rest = vectors.filter(col("vec_id") > cut)
-  private lazy val plainDir = {
-    val d = tmp("graft_atomic_plain"); Similarity.writeIvfIndex(base, d); d
-  }
   private lazy val rootDir = tmp("graft_atomic_root")
   private lazy val v1 = Similarity.stageIvfIndexVersion(base, rootDir)
 
   test("float tier: atomic append equals the in-place append; old version " +
       "immutable; untouched cells hardlink, not copy") {
-    // in-place twin: the lifecycle the driver gate already hash-checks
-    Similarity.appendIvfIndex(spark, plainDir, rest)
-    val expect = canon(Similarity.queryIvfIndex(spark, plainDir))
-    // atomic path
     val v1Answers = canon(Similarity.queryIvfIndex(spark, v1))
+    val v1Rows = IndexRefs.postingRows(spark, v1)
     val n = Similarity.appendIvfIndexAtomic(spark, rootDir, rest)
     assert(n == rest.count())
     val v2 = IndexManifest.currentOrFail(spark, rootDir)
     assert(v2 != v1)
-    assert(canon(Similarity.queryIvfIndex(spark, v2)).sameElements(expect),
-      "atomic append must answer exactly like the in-place append")
+    // reference: v1's postings plus the batch freshly assigned against
+    // v1's centroids, computed without the delta path
+    assert(IndexRefs.partOf(spark, v2, "postings") ==
+      IndexRefs.partOf(spark, v1, "postings") ++ IndexRefs.freshCells(spark, v1, rest),
+      "atomic append must equal a fresh assignment against the staged centroids")
+    assert(v1Rows.subsetOf(IndexRefs.postingRows(spark, v2)),
+      "every pre-append posting row must ride into the new version unchanged")
     // a reader that resolved v1 before the append still serves the
     // day-0 index unchanged — that is what "atomic for readers" means
     assert(canon(Similarity.queryIvfIndex(spark, v1)).sameElements(v1Answers),
       "the superseded version must be immutable under an atomic append")
     // O(touched) proof: the centroids artifact (untouched by an
-    // append) is HARDLINKED into v2 — same inode, zero bytes copied
-    assert(inode(firstParquetUnder(s"$v1/centroids")) ==
-      inode(firstParquetUnder(s"$v2/centroids")),
-      "untouched artifacts must hardlink into the new version")
-    // the batch's cells were REWRITTEN (old ∪ new), so v2's postings
-    // tree contains at least one file that is NOT a link into v1
-    val batchCells = spark.read.parquet(s"$v2/postings")
+    // append) is inherited by REFERENCE — v2 resolves v1's very file,
+    // zero bytes copied
+    assert(files(v2, "centroids") == files(v1, "centroids"),
+      "untouched artifacts must be inherited, not copied")
+    // the batch's cells were REWRITTEN (old ∪ new): v2 resolves a
+    // touched cell to fresh files, none of them v1's
+    val batchCells = IndexManifest.readFrame(spark, v2, "postings")
       .filter(col("vec_id") > cut)
       .select(col("cell").cast("long")).distinct().collect().map(_.getLong(0))
     assert(batchCells.nonEmpty)
-    val rewritten = s"$v2/postings/cell=${batchCells.min}"
-    val v1Twin = s"$v1/postings/cell=${batchCells.min}"
-    if (new java.io.File(v1Twin).exists())
-      assert(inode(firstParquetUnder(rewritten)) !=
-        inode(firstParquetUnder(v1Twin)),
-        "a touched cell must be rewritten, not linked")
+    val cellPrefix = s"postings/cell=${batchCells.min}/"
+    val v1Cell = files(v1, "postings").filter(_._1.startsWith(cellPrefix)).values.toSet
+    val v2Cell = files(v2, "postings").filter(_._1.startsWith(cellPrefix)).values.toSet
+    assert(v2Cell.nonEmpty && v2Cell.intersect(v1Cell).isEmpty,
+      "a touched cell must be rewritten, not inherited")
   }
 
   test("two interleaved atomic appenders serialize on the version claim: " +
@@ -139,7 +119,7 @@ class ManifestAtomicSpec extends SparkSpecBase
       s"two appends must CHAIN to v=3 (claims serialized), got $live")
     // the final version holds base ∪ restA ∪ restB exactly: the loser
     // remerged against the winner's version, dropping nothing
-    val ids = spark.read.parquet(s"$live/postings")
+    val ids = IndexManifest.readFrame(spark, live, "postings")
       .select("vec_id").collect().map(_.getLong(0)).sorted
     val want = vectors.select("vec_id").collect().map(_.getLong(0)).sorted
     assert(ids.sameElements(want),
@@ -150,21 +130,21 @@ class ManifestAtomicSpec extends SparkSpecBase
       "leaves the old version serving AND blocks the chain loudly until " +
       "releaseStaleClaims; vacuum then retires the rest") {
     val erased = Similarity.DeleteLo to Similarity.DeleteHi
-    // continue the shared fixtures: both now hold base ∪ rest
-    val nPlain = Similarity.deleteFromIvfIndex(spark, plainDir, erased)
-    val expect = canon(Similarity.queryIvfIndex(spark, plainDir))
+    // continue the shared fixture: it now holds base ∪ rest. Reference:
+    // the pre-erase live rows minus the erased ids
+    val preRows = IndexRefs.postingRows(spark,
+      IndexManifest.currentOrFail(spark, rootDir))
+    val want = preRows.filterNot(r => erased.contains(r._1))
     val n = Similarity.deleteFromIvfIndexAtomic(spark, rootDir, erased, keep = 3)
-    assert(n == nPlain, s"atomic erase removed $n rows, in-place $nPlain")
+    assert(n == (preRows.size - want.size).toLong,
+      s"atomic erase removed $n rows, the reference ${preRows.size - want.size}")
     val v3 = IndexManifest.currentOrFail(spark, rootDir)
     assert(v3.endsWith("v=3"))
-    assert(canon(Similarity.queryIvfIndex(spark, v3)).sameElements(expect),
-      "atomic erase must answer exactly like the in-place erase")
-    // no erased id survives in the new version; every id survives in
-    // the (immutable) pre-erase version v2
-    assert(spark.read.parquet(s"$v3/postings")
-      .filter(col("vec_id").between(Similarity.DeleteLo, Similarity.DeleteHi))
-      .count() == 0)
-    assert(spark.read.parquet(s"$rootDir/v=2/postings")
+    assert(IndexRefs.postingRows(spark, v3) == want,
+      "atomic erase must leave exactly the pre-erase rows minus the erased ids")
+    val expect = canon(Similarity.queryIvfIndex(spark, v3))
+    // every erased id survives in the (immutable) pre-erase version v2
+    assert(IndexManifest.readFrame(spark, s"$rootDir/v=2", "postings")
       .filter(col("vec_id").between(Similarity.DeleteLo, Similarity.DeleteHi))
       .count() == n)
     // crash INSIDE a delta publish — after the claim + partial write,
@@ -176,7 +156,7 @@ class ManifestAtomicSpec extends SparkSpecBase
     intercept[RuntimeException] {
       IndexManifest.publishFrom(spark, rootDir) { (live, next) =>
         // partial materialization, then death before the pointer flip
-        spark.read.parquet(s"$live/centroids")
+        IndexManifest.readFrame(spark, live, "centroids")
           .write.parquet(s"$next/centroids")
         throw new RuntimeException("simulated crash before the flip")
       }
@@ -197,21 +177,24 @@ class ManifestAtomicSpec extends SparkSpecBase
     assert(released.map(_.split('/').last) == Seq("v=4"),
       s"releaseStaleClaims must remove exactly the crashed claim, got $released")
     // keep-N retirement: below the live version only ONCE-LIVE
-    // versions exist here; keep=1 retires them all
+    // versions exist here; keep=1 retires the superseded delta v2
+    // outright, while the full publish v1 stays — the live version
+    // still resolves its untouched files (the centroids) there
     val gone = IndexManifest.vacuum(spark, rootDir, keep = 1)
-    assert(gone.map(_.split('/').last).sorted == Seq("v=1", "v=2"),
-      s"vacuum(keep=1) should retire the superseded v1+v2, got $gone")
+    assert(gone.map(_.split('/').last).filter(_.startsWith("v=")) == Seq("v=2"),
+      s"vacuum(keep=1) should retire the superseded v2, got $gone")
+    assert(versionDirs(rootDir) == Seq("v=1", "v=3"))
     assert(canon(Similarity.queryIvfIndex(spark, v3)).sameElements(expect),
       "the live version must survive vacuum")
     // the chain continues where it was blocked: the released id is
     // reclaimed by the next publish
-    val survivorId = spark.read.parquet(s"$v3/postings")
+    val survivorId = IndexManifest.readFrame(spark, v3, "postings")
       .agg(min("vec_id")).collect()(0).getLong(0)
     val n2 = Similarity.deleteFromIvfIndexAtomic(spark, rootDir,
       Seq(survivorId), keep = 1)
     assert(n2 == 1L)
     assert(IndexManifest.currentOrFail(spark, rootDir).endsWith("v=4"))
-    assert(versionDirs(rootDir) == Seq("v=4"))
+    assert(versionDirs(rootDir) == Seq("v=1", "v=4"))
   }
 
   test("vacuum counts only once-live versions: a crashed first publish's " +
@@ -247,10 +230,14 @@ class ManifestAtomicSpec extends SparkSpecBase
     Similarity.stageIvfIndexVersion(base, root)
     Similarity.appendIvfIndexAtomic(spark, root, rest) // v2, retires nothing
     assert(versionDirs(root) == Seq("v=1", "v=2"))
-    Similarity.deleteFromIvfIndexAtomic(spark, root, Seq(5L)) // v3, retires v1
-    assert(versionDirs(root) == Seq("v=2", "v=3"))
-    val v4 = Similarity.rebalanceIvfIndexVersioned(spark, root) // v4, retires v2
-    assert(versionDirs(root) == Seq("v=3", "v=4"))
+    // v3 drops v1 from the keep window, but v1 is the full publish the
+    // live chain still reads its untouched files from: it stays
+    Similarity.deleteFromIvfIndexAtomic(spark, root, Seq(5L))
+    assert(versionDirs(root) == Seq("v=1", "v=2", "v=3"))
+    // the rebalance is a full publish: the delta v2 retires; v1 stays
+    // while the retained v3 still references it
+    val v4 = Similarity.rebalanceIvfIndexVersioned(spark, root)
+    assert(versionDirs(root) == Seq("v=1", "v=3", "v=4"))
     assert(IndexManifest.currentOrFail(spark, root) == v4)
     // a rebalanced versioned index answers exactly like a fresh build
     // over the surviving corpus (the in-place rebalance equation)
@@ -258,31 +245,35 @@ class ManifestAtomicSpec extends SparkSpecBase
     Similarity.writeIvfIndex(vectors.filter(col("vec_id") =!= 5L), fresh)
     assert(canon(Similarity.queryIvfIndex(spark, v4))
       .sameElements(canon(Similarity.queryIvfIndex(spark, fresh))))
+    // once v3 leaves the window nothing references v1 and the chain
+    // collapses to the live full publish
+    IndexManifest.vacuum(spark, root, keep = 1)
+    assert(versionDirs(root) == Seq("v=4"))
   }
 
   test("PQ tier: atomic append and erase answer bit-identically to the " +
       "in-place forms") {
     val qids = 0L until Similarity.NQueries.toLong
-    // append
-    val plain = tmp("graft_atomic_pq_plain")
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(base), plain)
-    Pq.appendIvfPqIndex(spark, plain, rest)
+    def live(root: String) =
+      Pq.readIvfPqIndex(spark, IndexManifest.currentOrFail(spark, root))
+    // append — reference: the in-memory append against the staged v1
     val root = tmp("graft_atomic_pq_root")
-    Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(base), root)
+    val v1 = Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(base), root)
+    val appended = canon(Pq.queryIvfPq(
+      Pq.appendToIvfPq(Pq.readIvfPqIndex(spark, v1), rest), vectors, qids))
     Pq.appendIvfPqIndexAtomic(spark, root, rest)
-    assert(canon(Pq.queryIvfPq(Pq.readIvfPqIndex(spark,
-        IndexManifest.currentOrFail(spark, root)), vectors, qids))
-      .sameElements(canon(Pq.queryIvfPq(
-        Pq.readIvfPqIndex(spark, plain), vectors, qids))))
-    // erase on top of the appended index
+    assert(canon(Pq.queryIvfPq(live(root), vectors, qids)).sameElements(appended))
+    // erase on top of the appended index — reference: the pre-erase
+    // live codes minus the erased ids
     val erased = Pq.DeleteLo to Pq.DeleteHi
-    val nPlain = Pq.deleteFromIvfPqIndex(spark, plain, erased)
+    val pre = live(root)
+    val nPre = pre.codes.filter(col("vec_id").isInCollection(erased)).count()
+    val erasedAnswers = canon(Pq.queryIvfPq(
+      pre.copy(codes = pre.codes.filter(!col("vec_id").isInCollection(erased))),
+      vectors, qids))
     val nAtomic = Pq.deleteFromIvfPqIndexAtomic(spark, root, erased)
-    assert(nAtomic == nPlain)
-    assert(canon(Pq.queryIvfPq(Pq.readIvfPqIndex(spark,
-        IndexManifest.currentOrFail(spark, root)), vectors, qids))
-      .sameElements(canon(Pq.queryIvfPq(
-        Pq.readIvfPqIndex(spark, plain), vectors, qids))))
+    assert(nAtomic == nPre)
+    assert(canon(Pq.queryIvfPq(live(root), vectors, qids)).sameElements(erasedAnswers))
   }
 
   test("compressed-tier health loop: per-tier stats off the codes trees " +
@@ -305,16 +296,18 @@ class ManifestAtomicSpec extends SparkSpecBase
     // OPQ and IVF-SQ8 report the SAME rows: all three compressed tiers
     // assign against the identical deterministic coarse quantizer, so
     // one health report (and one driver oracle) covers them all
-    val opqPath = tmp("graft_health_opq")
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(base), opqPath)
-    Opq.appendIvfOpqIndex(spark, opqPath, rest)
-    assert(statsCanon(Opq.ivfOpqIndexStats(spark, opqPath, cut + 1))
+    val opqRoot = tmp("graft_health_opq")
+    Opq.stageIvfOpqIndexVersion(Opq.buildIvfOpq(base), opqRoot)
+    Opq.appendIvfOpqIndexAtomic(spark, opqRoot, rest)
+    assert(statsCanon(Opq.ivfOpqIndexStats(spark,
+        IndexManifest.currentOrFail(spark, opqRoot), cut + 1))
       .sameElements(pqStats),
       "OPQ stats must equal the PQ tier's (shared coarse assignment)")
-    val sq8Path = tmp("graft_health_ivfsq8")
-    Quantize.writeIvfSq8Index(base, sq8Path)
-    Quantize.appendIvfSq8Index(spark, sq8Path, rest)
-    assert(statsCanon(Quantize.ivfSq8IndexStats(spark, sq8Path, cut + 1))
+    val sq8Root = tmp("graft_health_ivfsq8")
+    Quantize.stageIvfSq8IndexVersion(base, sq8Root)
+    Quantize.appendIvfSq8IndexAtomic(spark, sq8Root, rest)
+    assert(statsCanon(Quantize.ivfSq8IndexStats(spark,
+        IndexManifest.currentOrFail(spark, sq8Root), cut + 1))
       .sameElements(pqStats),
       "IVF-SQ8 stats must equal the PQ tier's (shared coarse assignment)")
     // the retrain the stats gate: versioned rebalance over the declared
@@ -322,7 +315,8 @@ class ManifestAtomicSpec extends SparkSpecBase
     val qids = 0L until Similarity.NQueries.toLong
     val published = Pq.rebalanceIvfPqIndexVersioned(spark, pqRoot, vectors)
     assert(published.endsWith("v=3"))
-    assert(versionDirs(pqRoot) == Seq("v=2", "v=3"),
+    // keep=2 retains the appended v2, which still reads v1's files
+    assert(versionDirs(pqRoot) == Seq("v=1", "v=2", "v=3"),
       "retrain publishes a version and retires behind keep")
     assert(canon(Pq.queryIvfPq(Pq.readIvfPqIndex(spark, published), vectors, qids))
       .sameElements(canon(Pq.queryIvfPq(Pq.buildIvfPq(vectors), vectors, qids))),
@@ -339,31 +333,35 @@ class ManifestAtomicSpec extends SparkSpecBase
     val qids = 0L until Similarity.NQueries.toLong
     val erased = Pq.DeleteLo to Pq.DeleteHi
     // SQ8: the erasure bucket tree (grp=vec_id mod N) through the
-    // same generic delta publisher
-    val sq8Plain = tmp("graft_atomic_sq8_plain")
-    Quantize.writeSq8Index(base, sq8Plain)
-    Quantize.appendSq8Index(spark, sq8Plain, rest)
-    Quantize.deleteFromSq8Index(spark, sq8Plain, erased)
+    // same generic delta publisher. Reference: every vector encoded
+    // against the staged base grid, minus the erased ids
     val sq8Root = tmp("graft_atomic_sq8_root")
-    Quantize.stageSq8IndexVersion(base, sq8Root)
+    val sq8V1 = Quantize.stageSq8IndexVersion(base, sq8Root)
+    val sq8Want = Quantize.quantizeCodesAgainst(vectors,
+        IndexManifest.readFrame(spark, sq8V1, "ranges")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1).toList))
+      .filterNot(t => erased.contains(t._1)).toSet
     assert(Quantize.appendSq8IndexAtomic(spark, sq8Root, rest) == rest.count())
     Quantize.deleteFromSq8IndexAtomic(spark, sq8Root, erased)
-    assert(canon(Quantize.querySq8Index(spark,
-        IndexManifest.currentOrFail(spark, sq8Root), vectors, qids))
-      .sameElements(canon(Quantize.querySq8Index(spark, sq8Plain, vectors, qids))))
+    val sq8Live = IndexManifest.currentOrFail(spark, sq8Root)
+    assert(IndexManifest.readFrame(spark, sq8Live, "codes").collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toSet == sq8Want)
+    assert(Quantize.querySq8Index(spark, sq8Live, vectors, qids).collect()
+      .forall(r => !erased.contains(r.getLong(1))))
     // OPQ: append must rotate through the STAGED basis — the seam a
-    // wrong-space pairing would corrupt
-    val opqPlain = tmp("graft_atomic_opq_plain")
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(base), opqPlain)
-    Opq.appendIvfOpqIndex(spark, opqPlain, rest)
-    Opq.deleteFromIvfOpqIndex(spark, opqPlain, erased)
+    // wrong-space pairing would corrupt. Reference: the batch encoded
+    // in memory against v1's artifacts, minus the erased ids
     val opqRoot = tmp("graft_atomic_opq_root")
-    Opq.stageIvfOpqIndexVersion(Opq.buildIvfOpq(base), opqRoot)
+    val opqV1 = Opq.stageIvfOpqIndexVersion(Opq.buildIvfOpq(base), opqRoot)
+    val staged = Opq.readIvfOpqIndex(spark, opqV1)
+    val grown = staged.pq.codes.unionByName(
+      Pq.encodeAgainst(staged.pq, rest, 0, staged.basis))
+    val opqWant = canon(Opq.queryIvfOpq(staged.copy(pq = staged.pq.copy(
+      codes = grown.filter(!col("vec_id").isInCollection(erased)))), vectors, qids))
     Opq.appendIvfOpqIndexAtomic(spark, opqRoot, rest)
     Opq.deleteFromIvfOpqIndexAtomic(spark, opqRoot, erased)
     assert(canon(Opq.queryIvfOpq(Opq.readIvfOpqIndex(spark,
         IndexManifest.currentOrFail(spark, opqRoot)), vectors, qids))
-      .sameElements(canon(Opq.queryIvfOpq(
-        Opq.readIvfOpqIndex(spark, opqPlain), vectors, qids))))
+      .sameElements(opqWant))
   }
 }

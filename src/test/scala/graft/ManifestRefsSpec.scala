@@ -6,21 +6,21 @@ import org.apache.spark.sql.functions._
 import graft.operators.{IndexManifest, Similarity}
 
 /** The REFS manifest layout (r19 verdict item 2 — object-store-shaped
-  * delta publishes): a version is a `_REFS` file list; a delta lands
+  * delta publishes): a delta version is a `_REFS` file list; it lands
   * ONLY its touched partitions as fresh files in the shared `_store`
   * and inherits every other file by reference — per-publish data
-  * motion is O(touched bytes) on EVERY filesystem, where the link
-  * layout degrades to a full unchanged-partition copy without
-  * hardlinks. This is the session default; [[ManifestAtomicSpec]]
-  * pins and covers the link layout.
+  * motion is O(touched bytes) on EVERY filesystem. It is the only way
+  * a published index changes; [[ManifestAtomicSpec]] covers the
+  * lifecycle (claims, crashes, retention) on top of it.
   *
-  * Covered here: bit-identical answers vs the in-place fast path,
-  * zero-materialization deltas (no parquet under a delta version's
-  * directory), reachability vacuum (referenced full-publish files
-  * survive any keep policy; dead store files collect without a store
-  * walk), stale-claim release reclaiming the claim's fresh store
-  * files, orphan deep-sweep, and mixed link/refs chains (the mode is
-  * per-session, not an on-disk commitment). */
+  * Covered here: deltas leave exactly the rows a manifest-free
+  * reference computes, zero-materialization deltas (no parquet under
+  * a delta version's directory), reachability vacuum (referenced
+  * full-publish files survive any keep policy; dead store files
+  * collect without a store walk), stale-claim release reclaiming the
+  * claim's fresh store files, orphan deep-sweep, and plain delta
+  * versions without `_REFS` — what older releases published — serving
+  * and accepting deltas like a full publish. */
 class ManifestRefsSpec extends SparkSpecBase {
 
   private def vectors = graft.sources.Tables.embeddings(spark, sfDir)
@@ -55,24 +55,23 @@ class ManifestRefsSpec extends SparkSpecBase {
     vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
   private lazy val base = vectors.filter(col("vec_id") <= cut)
   private lazy val rest = vectors.filter(col("vec_id") > cut)
-  private lazy val plainDir = {
-    val d = tmp("graft_refs_plain"); Similarity.writeIvfIndex(base, d); d
-  }
   private lazy val rootDir = tmp("graft_refs_root")
   private lazy val v1 = Similarity.stageIvfIndexVersion(base, rootDir)
 
   test("refs delta publish: append answers bit-identically to in-place; " +
       "the delta version materializes ZERO inherited bytes (pure manifest); " +
       "fresh rows land in the shared store") {
-    Similarity.appendIvfIndex(spark, plainDir, rest)
-    val expect = canon(Similarity.queryIvfIndex(spark, plainDir))
     val v1Answers = canon(Similarity.queryIvfIndex(spark, v1))
+    val v1Rows = IndexRefs.postingRows(spark, v1)
     val n = Similarity.appendIvfIndexAtomic(spark, rootDir, rest)
     assert(n == rest.count())
     val v2 = IndexManifest.currentOrFail(spark, rootDir)
     assert(v2 != v1)
-    assert(canon(Similarity.queryIvfIndex(spark, v2)).sameElements(expect),
-      "refs-mode atomic append must answer exactly like the in-place append")
+    assert(IndexRefs.partOf(spark, v2, "postings") ==
+      IndexRefs.partOf(spark, v1, "postings") ++ IndexRefs.freshCells(spark, v1, rest),
+      "a refs append must equal a fresh assignment against the staged centroids")
+    assert(v1Rows.subsetOf(IndexRefs.postingRows(spark, v2)),
+      "every pre-append posting row must be served unchanged")
     assert(canon(Similarity.queryIvfIndex(spark, v1)).sameElements(v1Answers),
       "the superseded version must be immutable under a refs append")
     // THE refs property: the delta version directory holds NO parquet
@@ -95,17 +94,17 @@ class ManifestRefsSpec extends SparkSpecBase {
       "but never a referenced full-publish file") {
     val erased = rest.select("vec_id").limit(7)
       .collect().map(_.getLong(0)).toSeq
-    Similarity.deleteFromIvfIndex(spark, plainDir, erased)
-    val expect = canon(Similarity.queryIvfIndex(spark, plainDir))
     // force the fixture chain (v1 full, v2 append) before erasing
     val v2 = IndexManifest.currentOrFail(spark, rootDir)
+    val want = IndexRefs.postingRows(spark, v2).filterNot(r => erased.contains(r._1))
     val storeBefore = parquetsUnder(s"$rootDir/${IndexManifest.StoreDir}").toSet
     val nDel = Similarity.deleteFromIvfIndexAtomic(spark, rootDir, erased,
       keep = 2)
     assert(nDel == erased.size.toLong)
     val v3 = IndexManifest.currentOrFail(spark, rootDir)
-    assert(canon(Similarity.queryIvfIndex(spark, v3)).sameElements(expect),
-      "refs-mode atomic erase must answer exactly like the in-place erase")
+    assert(IndexRefs.postingRows(spark, v3) == want,
+      "a refs erase must leave exactly the pre-erase rows minus the erased ids")
+    val expect = canon(Similarity.queryIvfIndex(spark, v3))
     // keep=2 retained v2; now vacuum to keep=1: v2's manifest dir
     // retires, and the store files ONLY v2 referenced (the erased
     // cells' pre-erase rewrites) are collected — while v1's
@@ -161,81 +160,63 @@ class ManifestRefsSpec extends SparkSpecBase {
       IndexManifest.currentOrFail(spark, rootDir))).sameElements(answers))
   }
 
-  test("mixed chains: a link-mode publish continues a refs chain and vice " +
-      "versa — the layout is a per-session choice, not an on-disk commitment") {
-    val root = tmp("graft_refs_mixed")
-    val plain = tmp("graft_refs_mixed_plain")
+  test("plain delta version without _REFS (what older releases published): " +
+      "readFrame serves it, and refs appends, erasures and vacuum on top of " +
+      "it give the same rows as on a full publish") {
     val maxId = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0)
     val third = maxId / 3
     val b0 = vectors.filter(col("vec_id") <= third)
     val b1 = vectors.filter(col("vec_id") > third && col("vec_id") <= 2 * third)
     val b2 = vectors.filter(col("vec_id") > 2 * third)
-    Similarity.writeIvfIndex(b0, plain)
+    // control: an all-refs chain from a full publish
+    val control = tmp("graft_refs_compat_control")
+    Similarity.stageIvfIndexVersion(b0, control)
+    Similarity.appendIvfIndexAtomic(spark, control, b1)
+    val controlV2 = IndexManifest.currentOrFail(spark, control)
+    // the chain under test: its v2 is a self-contained delta directory
+    // holding the same rows, hand-built the way the retired hardlink
+    // layout left it — every artifact in-dir, no _REFS file
+    val root = tmp("graft_refs_compat")
     Similarity.stageIvfIndexVersion(b0, root)
-    // link-mode delta on top of the full publish
-    spark.conf.set("spark.graft.manifest.mode", "link")
-    try Similarity.appendIvfIndexAtomic(spark, root, b1)
-    finally spark.conf.unset("spark.graft.manifest.mode")
-    Similarity.appendIvfIndex(spark, plain, b1)
-    assert(canon(Similarity.queryIvfIndex(spark,
-        IndexManifest.currentOrFail(spark, root)))
-      .sameElements(canon(Similarity.queryIvfIndex(spark, plain))),
-      "a link publish must serve correctly in a refs session")
-    // refs-mode delta on top of the link version (its _REFS inherits
-    // the link version's physical files)
-    Similarity.appendIvfIndexAtomic(spark, root, b2)
-    Similarity.appendIvfIndex(spark, plain, b2)
-    val live = IndexManifest.currentOrFail(spark, root)
-    assert(parquetsUnder(live).isEmpty,
-      "the refs delta on a link base must still be a pure manifest")
-    assert(canon(Similarity.queryIvfIndex(spark, live))
-      .sameElements(canon(Similarity.queryIvfIndex(spark, plain))),
-      "a refs publish over a link base must answer identically")
-  }
-
-  test("link-mode delta on a REFS base: the base's manifest materializes " +
-      "physically and never rides along — appended partitions serve once " +
-      "(no stale-refs double-serving) and erased rows stay erased") {
-    val root = tmp("graft_refs_linkonrefs")
-    val plain = tmp("graft_refs_linkonrefs_plain")
-    val maxId = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0)
-    val third = maxId / 3
-    val b0 = vectors.filter(col("vec_id") <= third)
-    val b1 = vectors.filter(col("vec_id") > third && col("vec_id") <= 2 * third)
-    val b2 = vectors.filter(col("vec_id") > 2 * third)
-    Similarity.writeIvfIndex(b0, plain)
-    Similarity.stageIvfIndexVersion(b0, root)
-    // refs base: v2 is a pure manifest whose inherited files exist
-    // only as _REFS lines
-    Similarity.appendIvfIndexAtomic(spark, root, b1)
-    Similarity.appendIvfIndex(spark, plain, b1)
-    spark.conf.set("spark.graft.manifest.mode", "link")
-    try {
-      // the bug this pins: a mirror that copied the refs base's _REFS
-      // verbatim would serve the touched partitions' superseded files
-      // BESIDE the link rewrite — every pre-existing row in the
-      // batch's cells twice (the canon compare below catches any
-      // duplicate), and erased rows resurrected (the erase leg)
-      Similarity.appendIvfIndexAtomic(spark, root, b2)
-      Similarity.appendIvfIndex(spark, plain, b2)
+    val plainV2 = IndexManifest.publishFrom(spark, root) { (_, next) =>
+      IndexManifest.readFrame(spark, controlV2, "centroids")
+        .write.parquet(s"$next/centroids")
+      IndexManifest.readFrame(spark, controlV2, "postings")
+        .repartition(col("cell")).write.partitionBy("cell")
+        .parquet(s"$next/postings")
+    }
+    assert(!new java.io.File(s"$plainV2/${IndexManifest.RefsFile}").exists())
+    assert(parquetsUnder(plainV2).nonEmpty)
+    def same(what: String): Unit = {
       val live = IndexManifest.currentOrFail(spark, root)
-      assert(!new java.io.File(s"$live/${IndexManifest.RefsFile}").exists(),
-        "a link version must be self-contained — no manifest may ride along")
-      assert(parquetsUnder(live).nonEmpty,
-        "the refs base's inherited files must have materialized physically")
+      val ctl = IndexManifest.currentOrFail(spark, control)
+      assert(IndexRefs.postingRows(spark, live) == IndexRefs.postingRows(spark, ctl),
+        s"$what: the chain on a plain version diverged from the all-refs chain")
       assert(canon(Similarity.queryIvfIndex(spark, live))
-        .sameElements(canon(Similarity.queryIvfIndex(spark, plain))),
-        "link-on-refs append must serve each row exactly once")
-      // erase rows that live ONLY via the refs base's store files
-      val erased = b1.select("vec_id").limit(5)
-        .collect().map(_.getLong(0)).toSeq
-      Similarity.deleteFromIvfIndexAtomic(spark, root, erased)
-      Similarity.deleteFromIvfIndex(spark, plain, erased)
-      assert(canon(Similarity.queryIvfIndex(spark,
-          IndexManifest.currentOrFail(spark, root)))
-        .sameElements(canon(Similarity.queryIvfIndex(spark, plain))),
-        "link-on-refs erase must not resurrect rows through a stale manifest")
-    } finally spark.conf.unset("spark.graft.manifest.mode")
+        .sameElements(canon(Similarity.queryIvfIndex(spark, ctl))), what)
+    }
+    same("readFrame of the plain version")
+    // erase rows that live only in the plain version's files: the refs
+    // delta on top inherits every untouched cell from it
+    val erased = b1.select("vec_id").limit(5).collect().map(_.getLong(0)).toSeq
+    assert(Similarity.deleteFromIvfIndexAtomic(spark, root, erased) == erased.size.toLong)
+    Similarity.deleteFromIvfIndexAtomic(spark, control, erased)
+    val v3 = IndexManifest.currentOrFail(spark, root)
+    assert(parquetsUnder(v3).isEmpty,
+      "the refs delta on a plain base must still be a pure manifest")
+    assert(IndexManifest.effectiveFiles(spark, v3).exists(_._2.startsWith(plainV2 + "/")),
+      "the refs delta must inherit the plain version's files by reference")
+    same("refs erase on a plain version")
+    Similarity.appendIvfIndexAtomic(spark, root, b2)
+    Similarity.appendIvfIndexAtomic(spark, control, b2)
+    same("refs append over a plain version")
+    // vacuum: the plain v2 leaves the keep window but the live version
+    // still reads its files, so it stays and the chain keeps serving
+    IndexManifest.vacuum(spark, root, keep = 1)
+    IndexManifest.vacuum(spark, control, keep = 1)
+    assert(new java.io.File(plainV2).exists(),
+      "vacuum must keep a plain version the live chain still references")
+    same("vacuum over a plain version")
   }
 
   test("epoch-pinned delta publish: a retrain landing between a delta's " +

@@ -90,24 +90,25 @@ class ObjectStoreSpec extends SparkSpecBase {
     val base = vectors.filter(col("vec_id") <= maxId / 2)
     val rest = vectors.filter(col("vec_id") > maxId / 2)
     val root = s"$stubRoot/refs_idx"
-    val plain = java.nio.file.Files.createTempDirectory("graft_stub_plain").toString
-    Similarity.writeIvfIndex(base, plain)
-    Similarity.appendIvfIndex(spark, plain, rest)
+    // reference: the same lifecycle on the local filesystem
+    val local = java.nio.file.Files.createTempDirectory("graft_stub_local").toString
+    Similarity.stageIvfIndexVersion(base, local)
+    Similarity.appendIvfIndexAtomic(spark, local, rest)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
+    def localAnswers = canon(Similarity.queryIvfIndex(spark,
+      IndexManifest.currentOrFail(spark, local)))
     val v1 = Similarity.stageIvfIndexVersion(base, root)
     // the non-local claim branch (_CLAIM exclusive create) ran:
     assert(v1.startsWith("stub://"), s"version must resolve through the scheme, got $v1")
     val n = Similarity.appendIvfIndexAtomic(spark, root, rest)
     assert(n == rest.count())
     val v2 = IndexManifest.currentOrFail(spark, root)
-    assert(canon(Similarity.queryIvfIndex(spark, v2))
-      .sameElements(canon(Similarity.queryIvfIndex(spark, plain))),
-      "stub-scheme refs append must answer exactly like the in-place twin")
+    assert(canon(Similarity.queryIvfIndex(spark, v2)).sameElements(localAnswers),
+      "stub-scheme refs append must answer exactly like the local-FS twin")
     // THE object-store property: the delta version holds no parquet at
-    // all (pure manifest) — with the link layout on this scheme every
-    // unchanged partition would have BYTE-COPIED (FileUtil.copy)
+    // all (pure manifest) — no unchanged partition is copied
     val v2local = v2.stripPrefix("stub://")
     val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(v2local))
     val parquets = try {
@@ -119,15 +120,13 @@ class ObjectStoreSpec extends SparkSpecBase {
       s"a stub-scheme refs delta must move zero unchanged bytes, found $parquets")
     // erasure + vacuum keep the chain serving through the scheme
     val erased = rest.select("vec_id").limit(5).collect().map(_.getLong(0)).toSeq
-    Similarity.deleteFromIvfIndex(spark, plain, erased)
+    Similarity.deleteFromIvfIndexAtomic(spark, local, erased)
     assert(Similarity.deleteFromIvfIndexAtomic(spark, root, erased) == erased.size.toLong)
     assert(canon(Similarity.queryIvfIndex(spark,
-        IndexManifest.currentOrFail(spark, root)))
-      .sameElements(canon(Similarity.queryIvfIndex(spark, plain))))
+        IndexManifest.currentOrFail(spark, root))).sameElements(localAnswers))
     IndexManifest.vacuum(spark, root, keep = 1)
     assert(canon(Similarity.queryIvfIndex(spark,
-        IndexManifest.currentOrFail(spark, root)))
-      .sameElements(canon(Similarity.queryIvfIndex(spark, plain))),
+        IndexManifest.currentOrFail(spark, root))).sameElements(localAnswers),
       "vacuum through the scheme must never break the live chain")
   }
 }

@@ -217,9 +217,10 @@ class OpqSpec extends SparkSpecBase {
     val cut = vectors.agg(max("vec_id")).collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfopq_crud").toString
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(base), dir)
-    val nApp = Opq.appendIvfOpqIndex(spark, dir, rest)
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfopq_crud").toString
+    Opq.stageIvfOpqIndexVersion(Opq.buildIvfOpq(base), root)
+    def dir = graft.operators.IndexManifest.currentOrFail(spark, root)
+    val nApp = Opq.appendIvfOpqIndexAtomic(spark, root, rest)
     assert(nApp == rest.count(), "append must encode every batch row")
     // the incremental-lifecycle equation, rotated: assignment, basis
     // projection, and encode against frozen artifacts equal a rebuild
@@ -232,7 +233,7 @@ class OpqSpec extends SparkSpecBase {
     // mechanics (untouched-cell byte-identity, idempotence) are the
     // PQ erasure's own specs — the codes tree IS the PQ layout
     val erased = (cut - 3 to cut).filter(_ >= Similarity.NQueries)
-    val nDel = Opq.deleteFromIvfOpqIndex(spark, dir, erased)
+    val nDel = Opq.deleteFromIvfOpqIndexAtomic(spark, root, erased)
     assert(nDel == erased.length, s"expected ${erased.length} erasures, got $nDel")
     val after = canonK(Opq.queryIvfOpq(Opq.readIvfOpqIndex(spark, dir), vectors, qids))
     assert(after.forall(t => !erased.contains(t._2)),

@@ -1004,4 +1004,16 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("TakeOrderedAndProject"),
       s"top-K fell into a global sort:\n$p")
   }
+
+  test("PlanDump conf spec: blank segments skipped, a malformed segment " +
+      "fails naming itself") {
+    assert(PlanDump.parseConfs(" a.b = 0 ,, c=x=y,") ==
+      Seq("a.b" -> "0", "c" -> "x=y"))
+    assert(PlanDump.parseConfs(" , ").isEmpty)
+    Seq("novalue", "=v").foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        PlanDump.parseConfs(s"a=1,$bad") }
+      assert(e.getMessage.contains(s"expected k=v, got '$bad'"), e.getMessage)
+    }
+  }
 }

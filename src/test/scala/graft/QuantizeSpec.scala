@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Quantize
+import graft.operators.{IndexManifest, Quantize}
 
 class QuantizeSpec extends SparkSpecBase {
 
@@ -135,31 +135,29 @@ class QuantizeSpec extends SparkSpecBase {
       .collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val path2 = java.nio.file.Files.createTempDirectory("graft_sq8_app").toString
-    Quantize.writeSq8Index(base, path2)
-    val fs = new org.apache.hadoop.fs.Path(path2)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def listing(): Map[String, Long] = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$path2/codes"), true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += (st.getPath.getName -> st.getModificationTime) }
-      b.result()
-    }
-    val before = listing()
-    val appended = Quantize.appendSq8Index(spark, path2, rest)
+    val root2 = java.nio.file.Files.createTempDirectory("graft_sq8_app").toString
+    val v1 = Quantize.stageSq8IndexVersion(base, root2)
+    // a version's files of one frame: version-relative path -> the
+    // physical file it resolves to
+    def listing(v: String, frame: String): Map[String, String] =
+      IndexManifest.effectiveFiles(spark, v)
+        .filter(_._1.startsWith(frame + "/")).toMap
+    val before = listing(v1, "codes")
+    val appended = Quantize.appendSq8IndexAtomic(spark, root2, rest)
     assert(appended == rest.count(), "every new vector appends one code row")
-    val after = listing()
-    assert(before.forall { case (f, m) => after.get(f).contains(m) },
-      "pre-append code files must stay byte-untouched")
-    assert(after.size > before.size, "append must add new files only")
+    val path2 = IndexManifest.currentOrFail(spark, root2)
+    assert(listing(path2, "ranges") == listing(v1, "ranges"),
+      "append must not re-derive the ranges artifact")
+    assert(listing(v1, "codes") == before,
+      "the superseded version's code files must stay untouched")
+    assert(listing(path2, "codes").values.exists(_.contains(s"/${IndexManifest.StoreDir}/")),
+      "the append's rows must land as fresh store files")
     // appended codes == encoding the full corpus against the FROZEN
     // base ranges (the trainOn-decoupling equation, SQ8 form)
     val allAgainstBase = Quantize.quantizeCodesAgainst(vectors,
-        spark.read.parquet(s"$path2/ranges")).collect()
+        IndexManifest.readFrame(spark, path2, "ranges")).collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toMap
-    val stored = spark.read.parquet(s"$path2/codes").collect()
+    val stored = IndexManifest.readFrame(spark, path2, "codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toMap
     assert(stored == allAgainstBase,
       "append(build(base), rest) must equal encodeAgainst(all, ranges(base))")
@@ -191,9 +189,10 @@ class QuantizeSpec extends SparkSpecBase {
     val cut = vectors.agg(max("vec_id")).collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivfsq8_app").toString
-    Quantize.writeIvfSq8Index(base, dir2)
-    val nApp = Quantize.appendIvfSq8Index(spark, dir2, rest)
+    val root2 = java.nio.file.Files.createTempDirectory("graft_ivfsq8_app").toString
+    Quantize.stageIvfSq8IndexVersion(base, root2)
+    def dir2 = graft.operators.IndexManifest.currentOrFail(spark, root2)
+    val nApp = Quantize.appendIvfSq8IndexAtomic(spark, root2, rest)
     assert(nApp == rest.count(), "append must encode every batch row")
     val dir3 = java.nio.file.Files.createTempDirectory("graft_ivfsq8_tw").toString
     Quantize.writeIvfSq8Index(vectors, dir3, trainOn = base)
@@ -203,9 +202,9 @@ class QuantizeSpec extends SparkSpecBase {
     // erasure is the PQ cell-directory rewrite verbatim: erased ids
     // vanish, a second identical delete finds nothing
     val erased = (cut - 3 to cut).filter(_ >= Similarity.NQueries)
-    val nDel = Quantize.deleteFromIvfSq8Index(spark, dir2, erased)
+    val nDel = Quantize.deleteFromIvfSq8IndexAtomic(spark, root2, erased)
     assert(nDel == erased.length)
-    assert(Quantize.deleteFromIvfSq8Index(spark, dir2, erased) == 0L,
+    assert(Quantize.deleteFromIvfSq8IndexAtomic(spark, root2, erased) == 0L,
       "erasure must be idempotent")
     val after = canon(Quantize.queryIvfSq8Index(spark, dir2, vectors, qids))
     assert(after.forall(t => !erased.contains(t._2)),
@@ -321,16 +320,17 @@ class QuantizeSpec extends SparkSpecBase {
       (1L, Seq(0.0f, 1.0f, 2.0f)),
       (2L, Seq(1.0f, 2.0f, 3.0f)),
       (3L, Seq(0.5f, 1.5f, 2.5f))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft_sq8_dim").toString
-    Quantize.writeSq8Index(base, path)
-    def codesNow() = spark.read.parquet(s"$path/codes").collect()
+    val root = java.nio.file.Files.createTempDirectory("graft_sq8_dim").toString
+    val v1 = Quantize.stageSq8IndexVersion(base, root)
+    def live = IndexManifest.currentOrFail(spark, root)
+    def codesNow() = IndexManifest.readFrame(spark, live, "codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toSet
     val before = codesNow()
     // too LONG: position 4 has no grid row — formerly silently dropped
     // by the inner join, appending a truncated code row
     val tooLong = Seq((10L, Seq(0.1f, 0.2f, 0.3f, 0.4f))).toDF("vec_id", "embedding")
     val eLong = intercept[Throwable] {
-      Quantize.appendSq8Index(spark, path, tooLong) }
+      Quantize.appendSq8IndexAtomic(spark, root, tooLong) }
     assert(causes(eLong).exists(_.contains("beyond the trained grid")),
       s"wanted the out-of-grid diagnosis, got: ${causes(eLong).mkString(" | ")}")
     // too SHORT: every position matches a grid row, so only the width
@@ -338,16 +338,16 @@ class QuantizeSpec extends SparkSpecBase {
     // mismatched 3-wide literal grid downstream
     val tooShort = Seq((11L, Seq(0.1f, 0.2f))).toDF("vec_id", "embedding")
     val eShort = intercept[Throwable] {
-      Quantize.appendSq8Index(spark, path, tooShort) }
+      Quantize.appendSq8IndexAtomic(spark, root, tooShort) }
     assert(causes(eShort).exists(_.contains("the trained grid has 3")),
       s"wanted the width diagnosis, got: ${causes(eShort).mkString(" | ")}")
-    assert(codesNow() == before,
-      "a failed append must not write any code rows")
+    assert(live == v1 && codesNow() == before,
+      "a failed append must not publish any code rows")
     // positive control: a well-dimensioned batch still appends (and
     // saturates out-of-range values instead of failing)
     val ok = Seq((12L, Seq(9.0f, -9.0f, 2.5f))).toDF("vec_id", "embedding")
-    assert(Quantize.appendSq8Index(spark, path, ok) == 1L)
-    val row = spark.read.parquet(s"$path/codes")
+    assert(Quantize.appendSq8IndexAtomic(spark, root, ok) == 1L)
+    val row = IndexManifest.readFrame(spark, live, "codes")
       .filter(col("vec_id") === 12L).collect()(0).getSeq[Int](1).toList
     // dim1 spans [0,1]: 9.0 saturates high; dim2 spans [1,2]: -9.0
     // saturates low; dim3 spans [2,3]: 2.5 is the in-range midpoint
@@ -359,18 +359,14 @@ class QuantizeSpec extends SparkSpecBase {
   test("sq8 erasure: rewrites only affected buckets, retires emptied ones, " +
       "idempotent; erased ids vanish from staged answers") {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
-    val path = java.nio.file.Files.createTempDirectory("graft_sq8_del").toString
-    Quantize.writeSq8Index(vectors, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def listing(): Map[String, Long] = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$path/codes"), true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += (st.getPath.toString -> st.getModificationTime) }
-      b.result()
-    }
+    val root = java.nio.file.Files.createTempDirectory("graft_sq8_del").toString
+    Quantize.stageSq8IndexVersion(vectors, root)
+    def path = IndexManifest.currentOrFail(spark, root)
+    // the live version's code files: version-relative path -> the
+    // physical file it resolves to
+    def listing(): Map[String, String] =
+      IndexManifest.effectiveFiles(spark, path)
+        .filter(_._1.startsWith("codes/")).toMap
     val before = listing()
     // erase one full bucket (every id ≡ 5 mod 64) plus a slice of
     // another — the first bucket dir must be retired, the second
@@ -380,18 +376,18 @@ class QuantizeSpec extends SparkSpecBase {
     val partial = ids.filter(_ % Quantize.Sq8Buckets == 9L).take(3)
     assert(fullBucket.nonEmpty && partial.nonEmpty)
     val erase = (fullBucket ++ partial).toSeq
-    val n = Quantize.deleteFromSq8Index(spark, path, erase)
+    val n = Quantize.deleteFromSq8IndexAtomic(spark, root, erase)
     assert(n == erase.length, s"deleted $n of ${erase.length}")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes/grp=5")),
-      "an emptied bucket directory must be retired")
     val after = listing()
-    val touched = Set("grp=5", "grp=9")
-    before.foreach { case (f, m) =>
+    assert(!after.keys.exists(_.startsWith("codes/grp=5/")),
+      "an emptied bucket directory must be retired")
+    val touched = Set("grp=5/", "grp=9/")
+    before.foreach { case (f, phys) =>
       if (!touched.exists(f.contains))
-        assert(after.get(f).contains(m), s"untouched bucket file changed: $f")
+        assert(after.get(f).contains(phys), s"untouched bucket file changed: $f")
     }
     // erased ids are gone from the staged answers; survivors intact
-    val remaining = spark.read.parquet(s"$path/codes")
+    val remaining = IndexManifest.readFrame(spark, path, "codes")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(erase.forall(!remaining.contains(_)))
     assert(remaining.size == ids.length - erase.length)
@@ -399,10 +395,11 @@ class QuantizeSpec extends SparkSpecBase {
       0L until operators.Similarity.NQueries.toLong).collect()
     assert(res.forall(r => !erase.contains(r.getLong(1))),
       "an erased id survived in the staged answers")
-    // idempotence: nothing left to delete, nothing rewritten
-    val repeat = listing()
-    assert(Quantize.deleteFromSq8Index(spark, path, erase) == 0L)
-    assert(listing() == repeat, "a no-op delete must touch nothing")
+    // idempotence: nothing left to delete, nothing published
+    val repeat = path
+    assert(Quantize.deleteFromSq8IndexAtomic(spark, root, erase) == 0L)
+    assert(path == repeat, "a no-op delete must publish nothing")
+    assert(listing() == after, "a no-op delete must touch nothing")
   }
 
   test("sq8 radius off the staged index: exact-verified, deterministic, " +
@@ -471,22 +468,23 @@ class QuantizeSpec extends SparkSpecBase {
     val cut = vectors.agg(max("vec_id")).collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_sq8_filt_app").toString
-    Quantize.writeSq8Index(base, dir2, metaCols = Seq("label"))
+    val root2 = java.nio.file.Files.createTempDirectory("graft_sq8_filt_app").toString
+    Quantize.stageSq8IndexVersion(base, root2, metaCols = Seq("label"))
+    def dir2 = IndexManifest.currentOrFail(spark, root2)
     val e = intercept[IllegalArgumentException] {
-      Quantize.appendSq8Index(spark, dir2, rest.select("vec_id", "embedding"))
+      Quantize.appendSq8IndexAtomic(spark, root2, rest.select("vec_id", "embedding"))
     }
     assert(e.getMessage.contains("riding set"), e.getMessage)
-    assert(Quantize.appendSq8Index(spark, dir2, rest) == rest.count())
-    val appended = spark.read.parquet(s"$dir2/codes")
+    assert(Quantize.appendSq8IndexAtomic(spark, root2, rest) == rest.count())
+    val appended = IndexManifest.readFrame(spark, dir2, "codes")
     assert(appended.columns.contains("label") &&
       appended.filter(col("label").isNull).count() == 0,
       "append lost the riding metadata")
     // erasure: the survivor rewrite carries the metadata column and
     // the filtered answers exclude every erased id
     val erase = (cut - 5) to cut
-    assert(Quantize.deleteFromSq8Index(spark, dir2, erase) > 0L)
-    assert(spark.read.parquet(s"$dir2/codes").columns.contains("label"),
+    assert(Quantize.deleteFromSq8IndexAtomic(spark, root2, erase) > 0L)
+    assert(IndexManifest.readFrame(spark, dir2, "codes").columns.contains("label"),
       "delete's survivor rewrite stripped the metadata column")
     val post = canonF(Quantize.querySq8IndexFiltered(spark, dir2, vectors, qids))
     assert(post.forall(t => !erase.contains(t._2)),

@@ -4,25 +4,6 @@ import graft.operators.Similarity
 
 class SimilaritySpec extends SparkSpecBase {
 
-  /** Recursive (size, mtime) listing keyed by ROOT-RELATIVE path —
-    * string-prefix relativization, because `URI.relativize` returns
-    * the absolute URI unchanged on a scheme mismatch and the cell
-    * prefix checks would then silently never match. */
-  private def relListing(fs: org.apache.hadoop.fs.FileSystem,
-                         root: org.apache.hadoop.fs.Path): Map[String, (Long, Long)] = {
-    val rootStr = fs.makeQualified(root).toString
-    val it = fs.listFiles(root, true)
-    val b = Map.newBuilder[String, (Long, Long)]
-    while (it.hasNext) {
-      val st = it.next()
-      val p = fs.makeQualified(st.getPath).toString
-      assert(p.startsWith(rootStr + "/"), s"$p not under $rootStr")
-      b += (p.substring(rootStr.length + 1) ->
-        ((st.getLen, st.getModificationTime)))
-    }
-    b.result()
-  }
-
   test("knn bruteforce: k neighbors per query, ranked by cosine desc") {
     val rows = Similarity.knnBruteforce(spark, sfDir).collect()
     val perQuery = rows.groupBy(_.getLong(0))
@@ -368,10 +349,10 @@ class SimilaritySpec extends SparkSpecBase {
     val a = vectors.filter(col("vec_id") <= cut)
     val b1 = vectors.filter(col("vec_id") > cut && col("vec_id") <= cut2)
     val b2 = vectors.filter(col("vec_id") > cut2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_append").toString
-    // day 0: build on the base corpus, stage durably
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(a), dir)
-    val base = Pq.readIvfPqIndex(spark, dir)
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfpq_append").toString
+    // day 0: build on the base corpus, stage durably as version 1
+    val v1 = Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(a), root)
+    val base = Pq.readIvfPqIndex(spark, v1)
     val qids = (0L until Similarity.NQueries.toLong)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
@@ -391,27 +372,31 @@ class SimilaritySpec extends SparkSpecBase {
     val full = Pq.buildIvfPq(vectors, trainOn = a)
     assert(canon(Pq.queryIvfPq(full, vectors, qids)).sameElements(rTwo),
       "appended index diverged from the a-trained full rebuild")
-    // durable lifecycle: appendIvfPqIndex touches ONLY the codes dir,
-    // appending new files — every pre-append file stays byte-identical
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recursive: codes live in cell=<id> partition directories — keys
-    // are paths relative to the artifact root so per-cell file
-    // stability is asserted cell by cell
-    def listing(sub: String): Map[String, (Long, Long)] =
-      relListing(fs, new org.apache.hadoop.fs.Path(s"$dir/$sub"))
-    val before = Seq("centroids", "codebooks", "codes").map(s => s -> listing(s)).toMap
-    val n1 = Pq.appendIvfPqIndex(spark, dir, b1)
-    val n2 = Pq.appendIvfPqIndex(spark, dir, b2)
+    // durable lifecycle: appendIvfPqIndexAtomic rewrites ONLY the
+    // batch's cells — centroids, codebooks and every code file of an
+    // untouched cell are the SAME physical files, inherited by
+    // reference from v1 (whose own tree stays as staged)
+    def files(v: String, frame: String): Map[String, String] =
+      graft.operators.IndexManifest.effectiveFiles(spark, v)
+        .filter(_._1.startsWith(frame + "/")).toMap
+    val before = Seq("centroids", "codebooks", "codes").map(s => s -> files(v1, s)).toMap
+    val n1 = Pq.appendIvfPqIndexAtomic(spark, root, b1)
+    val n2 = Pq.appendIvfPqIndexAtomic(spark, root, b2)
     assert(n1 == b1.count() && n2 == b2.count())
+    val live = graft.operators.IndexManifest.currentOrFail(spark, root)
     Seq("centroids", "codebooks").foreach { s =>
-      assert(listing(s) == before(s), s"append must not rewrite $s") }
-    val codesAfter = listing("codes")
-    before("codes").foreach { case (name, meta) =>
-      if (name != "_SUCCESS")
-        assert(codesAfter.get(name).contains(meta),
-          s"pre-append codes file $name was rewritten") }
-    val reloaded = Pq.readIvfPqIndex(spark, dir)
+      assert(files(live, s) == before(s), s"append must not rewrite $s") }
+    val reloaded = Pq.readIvfPqIndex(spark, live)
+    val touched = reloaded.codes.filter(col("vec_id") > cut)
+      .select("cell").distinct().collect().map(_.getLong(0)).toSet
+    val codesAfter = files(live, "codes")
+    before("codes").foreach { case (rel, abs) =>
+      val cell = rel.split("cell=")(1).split("/")(0).toLong
+      if (!touched(cell))
+        assert(codesAfter.get(rel).contains(abs),
+          s"untouched codes file $rel was rewritten") }
+    assert(Pq.readIvfPqIndex(spark, v1).codes.count() == a.count(),
+      "the superseded version must be immutable under an append")
     assert(reloaded.codes.count() == vectors.count())
     assert(canon(Pq.queryIvfPq(reloaded, vectors, qids)).sameElements(rTwo),
       "durably appended index diverged from the in-memory append")
@@ -422,14 +407,16 @@ class SimilaritySpec extends SparkSpecBase {
     import graft.operators.Pq
     import org.apache.spark.sql.functions.col
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_delete").toString
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors), dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def listing(): Map[String, (Long, Long)] =
-      relListing(fs, new org.apache.hadoop.fs.Path(s"$dir/codes"))
-    val codes0 = spark.read.parquet(s"$dir/codes")
-      .select(col("vec_id"), col("cell").cast("long").as("cell")).collect()
+    import graft.operators.IndexManifest
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfpq_delete").toString
+    val v1 = Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(vectors), root)
+    // the live version's codes files: version-relative path -> the
+    // physical file it resolves to
+    def listing(): Map[String, String] =
+      IndexManifest.effectiveFiles(spark, IndexManifest.currentOrFail(spark, root))
+        .filter(_._1.startsWith("codes/")).toMap
+    val codes0 = Pq.readIvfPqIndex(spark, v1).codes
+      .select(col("vec_id"), col("cell")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val byCell = codes0.groupBy(_._2)
     // erase ONE full cell (forces the emptied-directory path) plus a
@@ -439,25 +426,29 @@ class SimilaritySpec extends SparkSpecBase {
     val partialIds = byCell(otherCell).map(_._1).sorted.take(2)
     val erase = byCell(fullCell).map(_._1) ++ partialIds
     val before = listing()
-    // erasing unknown ids first: a no-op that touches nothing
-    assert(Pq.deleteFromIvfPqIndex(spark, dir, Seq(-1L, -2L)) == 0L)
+    // erasing unknown ids first: a no-op that publishes nothing
+    assert(Pq.deleteFromIvfPqIndexAtomic(spark, root, Seq(-1L, -2L)) == 0L)
+    assert(IndexManifest.currentOrFail(spark, root) == v1,
+      "a no-op erasure must not publish a version")
     assert(listing() == before, "a no-op erasure must not touch files")
-    val n = Pq.deleteFromIvfPqIndex(spark, dir, erase.toSeq)
+    val n = Pq.deleteFromIvfPqIndexAtomic(spark, root, erase.toSeq)
     assert(n == erase.length, s"deleted $n of ${erase.length}")
+    val v2 = IndexManifest.currentOrFail(spark, root)
     val after = listing()
-    // the emptied cell's directory is gone entirely
-    assert(!after.keys.exists(_.startsWith(s"cell=$fullCell/")),
+    // the emptied cell is gone from the new version entirely
+    assert(!after.keys.exists(_.startsWith(s"codes/cell=$fullCell/")),
       "emptied cell directory must be retired")
-    // every cell OTHER than the two affected ones is byte-identical
-    before.foreach { case (name, meta) =>
-      val untouched = !name.startsWith(s"cell=$fullCell/") &&
-        !name.startsWith(s"cell=$otherCell/") && name != "_SUCCESS"
+    // every cell OTHER than the two affected ones is the same physical
+    // file, inherited by reference
+    before.foreach { case (name, phys) =>
+      val untouched = !name.startsWith(s"codes/cell=$fullCell/") &&
+        !name.startsWith(s"codes/cell=$otherCell/")
       if (untouched)
-        assert(after.get(name).contains(meta), s"unaffected file $name rewritten")
+        assert(after.get(name).contains(phys), s"unaffected file $name rewritten")
     }
     // erased ids are gone as candidates; queries match a fresh rebuild
     // over the survivors with the same training corpus
-    val reloaded = Pq.readIvfPqIndex(spark, dir)
+    val reloaded = Pq.readIvfPqIndex(spark, v2)
     assert(reloaded.codes.count() == codes0.length - erase.length)
     val eraseSet = erase.toSet
     val survivors = vectors.filter(!col("vec_id").isin(eraseSet.toSeq: _*))
@@ -469,8 +460,9 @@ class SimilaritySpec extends SparkSpecBase {
     assert(canon(Pq.queryIvfPq(reloaded, vectors, qids))
       .sameElements(canon(Pq.queryIvfPq(rebuilt, vectors, qids))),
       "post-erasure index diverged from a rebuild over the survivors")
-    // double delete: idempotent, zero rows, files untouched
-    assert(Pq.deleteFromIvfPqIndex(spark, dir, erase.toSeq) == 0L)
+    // double delete: idempotent, zero rows, no version, files untouched
+    assert(Pq.deleteFromIvfPqIndexAtomic(spark, root, erase.toSeq) == 0L)
+    assert(IndexManifest.currentOrFail(spark, root) == v2)
     assert(listing() == after)
   }
 
@@ -668,28 +660,27 @@ class SimilaritySpec extends SparkSpecBase {
       .collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivf_float_app").toString
-    Similarity.writeIvfIndex(base, dir2)
-    def listing(sub: String): Map[String, Long] = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$dir2/$sub"), true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += (st.getPath.toString -> st.getModificationTime) }
-      b.result()
-    }
-    val centsBefore = listing("centroids")
-    val postsBefore = listing("postings")
-    assert(Similarity.appendIvfIndex(spark, dir2, rest) == rest.count())
-    assert(listing("centroids") == centsBefore, "append must not retrain centroids")
-    val postsAfter = listing("postings")
-    assert(postsBefore.forall { case (f, m) => postsAfter.get(f).contains(m) },
-      "pre-append posting files must stay byte-untouched")
-    assert(postsAfter.size > postsBefore.size, "append must add new files only")
+    import graft.operators.IndexManifest
+    val root2 = java.nio.file.Files.createTempDirectory("graft_ivf_float_app").toString
+    val v1 = Similarity.stageIvfIndexVersion(base, root2)
+    // a version's files of one frame: version-relative path -> the
+    // physical file it resolves to
+    def listing(v: String, frame: String): Map[String, String] =
+      IndexManifest.effectiveFiles(spark, v)
+        .filter(_._1.startsWith(frame + "/")).toMap
+    val centsBefore = listing(v1, "centroids")
+    val postsBefore = listing(v1, "postings")
+    assert(Similarity.appendIvfIndexAtomic(spark, root2, rest) == rest.count())
+    val v2 = IndexManifest.currentOrFail(spark, root2)
+    assert(listing(v2, "centroids") == centsBefore, "append must not retrain centroids")
+    assert(listing(v1, "postings") == postsBefore,
+      "the superseded version's postings must stay untouched")
+    assert(listing(v2, "postings").values.exists(_.contains(s"/${IndexManifest.StoreDir}/")),
+      "the append's rows must land as fresh store files")
     // appended postings == assigning EVERYTHING against the frozen
     // base centroids (the SQ8/PQ trainOn-decoupling equation) — the
     // reference is a plain-Scala argmax with the house fold order
-    val cents2 = spark.read.parquet(s"$dir2/centroids").collect()
+    val cents2 = IndexManifest.readFrame(spark, v2, "centroids").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
     val expected = vectors.collect().map { r =>
@@ -705,35 +696,36 @@ class SimilaritySpec extends SparkSpecBase {
       }
       (vid, best)
     }.toSet
-    val stored = spark.read.parquet(s"$dir2/postings")
+    val stored = IndexManifest.readFrame(spark, v2, "postings")
       .select(col("vec_id"), col("cell").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(stored == expected,
       "append(build(base), rest) must equal assign-all-against-frozen-centroids")
     // the grown index answers well-formed, deterministic top-k
-    val q2 = canon(Similarity.queryIvfIndex(spark, dir2))
+    val q2 = canon(Similarity.queryIvfIndex(spark, v2))
     assert(q2.groupBy(_._1).forall(_._2.length == Similarity.K))
-    assert(canon(Similarity.queryIvfIndex(spark, dir2)).sameElements(q2))
+    assert(canon(Similarity.queryIvfIndex(spark, v2)).sameElements(q2))
     // --- erasure: one full cell + part of another, only their dirs touched
     val byCell = stored.groupBy(_._2)
     val fullCell = byCell.minBy { case (c, rows) => (rows.size, c) }._1
     val otherCell = byCell.keys.filter(_ != fullCell).min
     val partialIds = byCell(otherCell).map(_._1).toSeq.sorted.take(2)
     val erase = byCell(fullCell).map(_._1).toSeq ++ partialIds
-    val before = listing("postings")
-    assert(Similarity.deleteFromIvfIndex(spark, dir2, erase) == erase.length)
-    val after = listing("postings")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$dir2/postings/cell=$fullCell")), "emptied cell dir must be retired")
-    before.foreach { case (f, m) =>
+    val before = listing(v2, "postings")
+    assert(Similarity.deleteFromIvfIndexAtomic(spark, root2, erase) == erase.length)
+    val v3 = IndexManifest.currentOrFail(spark, root2)
+    val after = listing(v3, "postings")
+    assert(!after.keys.exists(_.startsWith(s"postings/cell=$fullCell/")),
+      "emptied cell dir must be retired")
+    before.foreach { case (f, phys) =>
       val cellOf = f.split("cell=")(1).split("/")(0).toLong
       if (cellOf != fullCell && cellOf != otherCell)
-        assert(after.get(f).contains(m), s"untouched cell file $f rewritten") }
-    val remaining = spark.read.parquet(s"$dir2/postings")
+        assert(after.get(f).contains(phys), s"untouched cell file $f rewritten") }
+    val remaining = IndexManifest.readFrame(spark, v3, "postings")
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(remaining == stored.map(_._1) -- erase,
       "post-erasure postings must be exactly the survivors")
-    val q3 = canon(Similarity.queryIvfIndex(spark, dir2))
+    val q3 = canon(Similarity.queryIvfIndex(spark, v3))
     assert(q3.forall(t => !erase.contains(t._2)),
       "erased ids must be gone from served neighbors")
   }
@@ -748,35 +740,37 @@ class SimilaritySpec extends SparkSpecBase {
     // --- float tier: 3-dim staged index
     val base = (0L until 20L).map(i =>
       (i, Seq(i.toFloat, (i % 5).toFloat, (i % 3).toFloat))).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_dim").toString
-    Similarity.writeIvfIndex(base, dir)
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_dim").toString
+    Similarity.stageIvfIndexVersion(base, root)
     val tooLong = Seq((100L, Seq(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding")
-    val eL = intercept[Throwable] { Similarity.appendIvfIndex(spark, dir, tooLong) }
+    val eL = intercept[Throwable] { Similarity.appendIvfIndexAtomic(spark, root, tooLong) }
     assert(causes(eL).exists(_.contains("staged index has 3")),
       s"wanted the width diagnosis, got: ${causes(eL).mkString(" | ")}")
     val tooShort = Seq((101L, Seq(1f, 2f))).toDF("vec_id", "embedding")
-    val eS = intercept[Throwable] { Similarity.appendIvfIndex(spark, dir, tooShort) }
+    val eS = intercept[Throwable] { Similarity.appendIvfIndexAtomic(spark, root, tooShort) }
     assert(causes(eS).exists(_.contains("staged index has 3")))
     // metadata mismatch: the staged postings have NO metadata columns
     val withMeta = Seq((102L, Seq(1f, 2f, 3f), 7)).toDF("vec_id", "embedding", "label")
-    val eM = intercept[Throwable] { Similarity.appendIvfIndex(spark, dir, withMeta) }
+    val eM = intercept[Throwable] { Similarity.appendIvfIndexAtomic(spark, root, withMeta) }
     assert(causes(eM).exists(_.contains("metadata columns")),
       s"wanted the metadata diagnosis, got: ${causes(eM).mkString(" | ")}")
     // positive control: a well-shaped batch still appends
     val ok = Seq((103L, Seq(9f, 9f, 9f))).toDF("vec_id", "embedding")
-    assert(Similarity.appendIvfIndex(spark, dir, ok) == 1L)
+    assert(Similarity.appendIvfIndexAtomic(spark, root, ok) == 1L)
     // --- PQ tier: 8-dim staged index (M=8, subW=1)
     val base8 = (0L until 20L).map(i =>
       (i, Seq.tabulate(8)(j => (i + j).toFloat))).toDF("vec_id", "embedding")
-    val dir8 = java.nio.file.Files.createTempDirectory("graft_ivfpq_dim").toString
-    graft.operators.Pq.writeIvfPqIndex(graft.operators.Pq.buildIvfPq(base8), dir8)
+    val root8 = java.nio.file.Files.createTempDirectory("graft_ivfpq_dim").toString
+    val v8 = graft.operators.Pq.stageIvfPqIndexVersion(
+      graft.operators.Pq.buildIvfPq(base8), root8)
     val tooLong8 = Seq((100L, Seq.tabulate(9)(_.toFloat))).toDF("vec_id", "embedding")
     val eP = intercept[Throwable] {
-      graft.operators.Pq.appendIvfPqIndex(spark, dir8, tooLong8) }
+      graft.operators.Pq.appendIvfPqIndexAtomic(spark, root8, tooLong8) }
     assert(causes(eP).exists(_.contains("the index encodes 8")),
       s"wanted the PQ width diagnosis, got: ${causes(eP).mkString(" | ")}")
-    // index untouched by the failed appends
-    assert(spark.read.parquet(s"$dir8/codes").count() == 20L)
+    // index untouched by the failed appends: no version was published
+    assert(graft.operators.IndexManifest.currentOrFail(spark, root8) == v8)
+    assert(graft.operators.Pq.readIvfPqIndex(spark, v8).codes.count() == 20L)
   }
 
   test("knn_radius: perfect precision, candidate-cut recall, cosines exact, " +
@@ -938,10 +932,11 @@ class SimilaritySpec extends SparkSpecBase {
       .collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_filt_app").toString
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(base, metaCols = Seq("label")), dir2)
-    assert(Pq.appendIvfPqIndex(spark, dir2, rest) == rest.count())
-    assert(canonF(Pq.queryIvfPqFiltered(Pq.readIvfPqIndex(spark, dir2), vectors, qids))
+    val root2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_filt_app").toString
+    Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(base, metaCols = Seq("label")), root2)
+    def live2 = graft.operators.IndexManifest.currentOrFail(spark, root2)
+    assert(Pq.appendIvfPqIndexAtomic(spark, root2, rest) == rest.count())
+    assert(canonF(Pq.queryIvfPqFiltered(Pq.readIvfPqIndex(spark, live2), vectors, qids))
       .sameElements(canonF(Pq.queryIvfPqFiltered(
         Pq.buildIvfPq(vectors, trainOn = base, metaCols = Seq("label")),
         vectors, qids))),
@@ -949,13 +944,13 @@ class SimilaritySpec extends SparkSpecBase {
     // a batch MISSING the index's metadata columns fails loudly
     val bare = rest.select(col("vec_id"), col("embedding"))
     val e = intercept[IllegalArgumentException] {
-      Pq.appendIvfPqIndex(spark, dir2, bare)
+      Pq.appendIvfPqIndexAtomic(spark, root2, bare)
     }
     assert(e.getMessage.contains("metadata columns"), e.getMessage)
     // erasure: the survivor rewrite carries the metadata column
     val erase = (cut - 5) to cut
-    assert(Pq.deleteFromIvfPqIndex(spark, dir2, erase) > 0L)
-    val afterDelete = Pq.readIvfPqIndex(spark, dir2)
+    assert(Pq.deleteFromIvfPqIndexAtomic(spark, root2, erase) > 0L)
+    val afterDelete = Pq.readIvfPqIndex(spark, live2)
     assert(afterDelete.codes.columns.contains("label"),
       "delete's survivor rewrite stripped the metadata column")
     val post = canonF(Pq.queryIvfPqFiltered(afterDelete, vectors, qids))
@@ -1029,10 +1024,12 @@ class SimilaritySpec extends SparkSpecBase {
       .collect()(0).getLong(0) / 2
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stats").toString
-    Similarity.writeIvfIndex(base, dir)
-    Similarity.appendIvfIndex(spark, dir, rest)
-    val stats = Similarity.ivfIndexStats(spark, dir, appendedFrom = cut + 1)
+    import graft.operators.IndexManifest
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_stats").toString
+    Similarity.stageIvfIndexVersion(base, root)
+    Similarity.appendIvfIndexAtomic(spark, root, rest)
+    val stats = Similarity.ivfIndexStats(spark,
+      IndexManifest.currentOrFail(spark, root), appendedFrom = cut + 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     // totals reconcile with the corpus; fractions and skew well-formed
@@ -1043,13 +1040,15 @@ class SimilaritySpec extends SparkSpecBase {
       assert(math.abs(frac - nApp.toDouble / n) == 0.0)
     }
     // the skew factors average ~1 weighted by n: sum(n·skew)/total = C·Σn²/total²
-    val c = spark.read.parquet(s"$dir/centroids").count()
+    val c = IndexManifest.readFrame(spark,
+      IndexManifest.currentOrFail(spark, root), "centroids").count()
     val total = stats.map(_._2).sum
     stats.foreach { case (_, n, _, _, skew) =>
       assert(math.abs(skew - n.toDouble * c / total) < 1e-12) }
-    // rebalance: retrain in place — answers equal a FRESH build over
-    // the same vectors (toDouble is the identity on the widened payload)
-    Similarity.rebalanceIvfIndex(spark, dir)
+    // rebalance: retrain as a new version — answers equal a FRESH build
+    // over the same vectors (toDouble is the identity on the widened
+    // payload)
+    val dir = Similarity.rebalanceIvfIndexVersioned(spark, root)
     val freshDir = java.nio.file.Files.createTempDirectory("graft_ivf_fresh").toString
     Similarity.writeIvfIndex(vectors, freshDir)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()

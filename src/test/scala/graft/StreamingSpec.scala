@@ -1091,7 +1091,7 @@ class StreamingSpec extends SparkSpecBase {
       "replay is a no-op, missing index fails loudly") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Pq, Similarity}
+    import graft.operators.{IndexManifest, Pq, Similarity}
     val vectors = sources.Tables.embeddings(spark, sfDir)
     val maxId = vectors.agg(max("vec_id")).collect()(0).getLong(0)
     val cut = maxId / 2; val cut2 = (maxId * 3) / 4
@@ -1102,16 +1102,17 @@ class StreamingSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     val b1 = slice(cut, cut2)
     val b2 = slice(cut2, maxId)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_ingest").toString
+    val root = java.nio.file.Files.createTempDirectory("graft_ann_ingest").toString
     // no day-0 artifact: refuse to ingest (never train on a micro-batch)
     intercept[IllegalStateException] {
-      Streams.annIngestMicroBatch(
-        Seq((0L, Seq(0f))).toDF("vec_id", "embedding"), s"$dir/absent")
+      Streams.annIngestMicroBatchAtomic(
+        Seq((0L, Seq(0f))).toDF("vec_id", "embedding"), s"$root/absent")
     }
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(base), dir)
+    Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(base), root)
+    def dir = IndexManifest.currentOrFail(spark, root)
     val mem = MemoryStream[(Long, Seq[Float])]
-    val q = Streams.annIngestSink(
-      mem.toDF.toDF("vec_id", "embedding"), dir).start()
+    val q = Streams.annIngestSinkAtomic(
+      mem.toDF.toDF("vec_id", "embedding"), root).start()
     try {
       mem.addData(b1.toSeq); q.processAllAvailable()
       mem.addData(b2.toSeq); q.processAllAvailable()
@@ -1128,8 +1129,8 @@ class StreamingSpec extends SparkSpecBase {
     assert(Pq.readIvfPqIndex(spark, dir).codes.count() == vectors.count())
     // at-least-once replay of a whole micro-batch: the cell-pruned
     // claim check appends nothing and answers stay identical
-    assert(Streams.annIngestMicroBatch(
-      b1.toSeq.toDF("vec_id", "embedding"), dir) == 0L)
+    assert(Streams.annIngestMicroBatchAtomic(
+      b1.toSeq.toDF("vec_id", "embedding"), root) == 0L)
     assert(Pq.readIvfPqIndex(spark, dir).codes.count() == vectors.count())
     assert(canon(Pq.queryIvfPq(Pq.readIvfPqIndex(spark, dir), vectors, qids))
       .sameElements(want))
