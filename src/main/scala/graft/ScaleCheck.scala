@@ -451,10 +451,11 @@ object ScaleCheck {
       // filtered top-k (2× probes, label-in-postings), the rotated
       // compressed scan composed with the inverted file, and the
       // frontier-only multi-source BFS on the graph corpus
-      run("knn_radius", operators.Similarity.knnRadiusOn(
-        spark.read.parquet(s"$dir/embeddings.parquet"))),
-      run("knn_filtered", operators.Similarity.knnFilteredOn(
-        spark.read.parquet(s"$dir/embeddings.parquet"))),
+      run("knn_radius", operators.Similarity.knnIvfOn(
+        spark.read.parquet(s"$dir/embeddings.parquet"),
+        operators.AnnSearch.Radius(operators.Similarity.RadiusTau))),
+      run("knn_filtered", operators.Similarity.knnIvfOn(
+        spark.read.parquet(s"$dir/embeddings.parquet"), sameLabel = true)),
       run("knn_ivf_opq", operators.Opq.knnIvfOpqOn(
         spark.read.parquet(s"$dir/embeddings.parquet"))),
       run("graph_bfs", operators.Graph.graphBfs(spark, s"$dir/graph")),
@@ -636,8 +637,8 @@ object ScaleCheck {
       val staged = operators.Pq.readIvfPqIndex(spark, idxDir)
       val acc = spark.sparkContext.longAccumulator("rows_pq_filtered")
       val tq0 = System.nanoTime()
-      operators.Pq.queryIvfPqFiltered(staged, emb,
-        0L until operators.Similarity.NQueries.toLong)
+      operators.Pq.queryIvfPqIndex(staged, emb,
+        0L until operators.Similarity.NQueries.toLong, sameLabel = true)
         .queryExecution.toRdd.foreachPartition(it => acc.add(it.size.toLong))
       val qSec = (System.nanoTime() - tq0) / 1e9
       s""""ivf_pq_filtered_query":{"sec":$qSec,"rows":${acc.value},"build_sec":$buildSec}"""
@@ -650,8 +651,9 @@ object ScaleCheck {
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_sq8_radius")
       val tq0 = System.nanoTime()
-      operators.Quantize.querySq8IndexRadius(spark, idxDir, emb,
-        0L until operators.Similarity.NQueries.toLong)
+      operators.Quantize.querySq8Index(spark, idxDir, emb,
+        0L until operators.Similarity.NQueries.toLong,
+        operators.AnnSearch.Radius(operators.Similarity.RadiusTau))
         .queryExecution.toRdd.foreachPartition(it => acc.add(it.size.toLong))
       val qSec = (System.nanoTime() - tq0) / 1e9
       // GDPR-sized erasure on the bucketed codes: 50 spread ids touch
@@ -698,8 +700,9 @@ object ScaleCheck {
       val staged = operators.Pq.readIvfPqIndex(spark, idxDir)
       val acc = spark.sparkContext.longAccumulator("rows_pq_radius")
       val tq0 = System.nanoTime()
-      operators.Pq.queryIvfPqRadius(staged, emb,
-        0L until operators.Similarity.NQueries.toLong)
+      operators.Pq.queryIvfPqIndex(staged, emb,
+        0L until operators.Similarity.NQueries.toLong,
+        operators.AnnSearch.Radius(operators.Similarity.RadiusTau))
         .queryExecution.toRdd.foreachPartition(it => acc.add(it.size.toLong))
       val qSec = (System.nanoTime() - tq0) / 1e9
       s""""ivf_pq_radius_query":{"sec":$qSec,"rows":${acc.value},"build_sec":$buildSec}"""
@@ -712,8 +715,8 @@ object ScaleCheck {
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_sq8_filtered")
       val tq0 = System.nanoTime()
-      operators.Quantize.querySq8IndexFiltered(spark, idxDir, emb,
-        0L until operators.Similarity.NQueries.toLong)
+      operators.Quantize.querySq8Index(spark, idxDir, emb,
+        0L until operators.Similarity.NQueries.toLong, sameLabel = true)
         .queryExecution.toRdd.foreachPartition(it => acc.add(it.size.toLong))
       val qSec = (System.nanoTime() - tq0) / 1e9
       s""""sq8_filtered_query":{"sec":$qSec,"rows":${acc.value},"build_sec":$buildSec}"""
@@ -733,8 +736,8 @@ object ScaleCheck {
       val staged = operators.Opq.readIvfOpqIndex(spark, idxDir)
       val acc = spark.sparkContext.longAccumulator("rows_opq_filtered")
       val tq0 = System.nanoTime()
-      operators.Opq.queryIvfOpqFiltered(staged, emb,
-        0L until operators.Similarity.NQueries.toLong)
+      operators.Opq.queryIvfOpq(staged, emb,
+        0L until operators.Similarity.NQueries.toLong, sameLabel = true)
         .queryExecution.toRdd.foreachPartition(it => acc.add(it.size.toLong))
       val qSec = (System.nanoTime() - tq0) / 1e9
       val maxId = emb.agg(max("vec_id")).collect()(0).getLong(0)

@@ -492,34 +492,42 @@ object Graph {
       val sc = spark.sparkContext
       val idxBc = sc.broadcast(nodeIdx)
       val degBc = sc.broadcast(degByIdx)
+      // the index-mapped edge list is read by every iteration:
+      // persisted once, so a round re-reads cached (int, int) pairs
+      // instead of re-scanning the staged edges and re-hashing ids
       val edgeIdx = edges
         .select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)]
         .rdd.mapPartitions { it =>
           val ix = idxBc.value
           it.map { case (u, v) => (ix.get(u).intValue, ix.get(v).intValue) }
         }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       var rankByIdx = Array.fill(nInt)(One / n)
       val arrayAdd: (Array[Long], Array[Long]) => Array[Long] = (a, b) => {
         var j = 0
         while (j < a.length) { a(j) += b(j); j += 1 }
         a
       }
-      (1 to iters).foreach { _ =>
-        val rankBc = sc.broadcast(rankByIdx)
-        val summed = edgeIdx.mapPartitions { it =>
-          val prev = rankBc.value
-          val dg = degBc.value
-          val sums = new Array[Long](prev.length)
-          it.foreach { case (ui, vi) =>
-            sums(vi) += prev(ui) / dg(ui)
-            sums(ui) += prev(vi) / dg(vi)
-          }
-          Iterator.single(sums)
-        }.treeReduce(arrayAdd, depth = 2)
-        rankBc.destroy()
-        rankByIdx = summed.map(s => teleport + 85L * s / 100L)
+      try {
+        (1 to iters).foreach { _ =>
+          val rankBc = sc.broadcast(rankByIdx)
+          val summed = edgeIdx.mapPartitions { it =>
+            val prev = rankBc.value
+            val dg = degBc.value
+            val sums = new Array[Long](prev.length)
+            it.foreach { case (ui, vi) =>
+              sums(vi) += prev(ui) / dg(ui)
+              sums(ui) += prev(vi) / dg(vi)
+            }
+            Iterator.single(sums)
+          }.treeReduce(arrayAdd, depth = 2)
+          rankBc.destroy()
+          rankByIdx = summed.map(s => teleport + 85L * s / 100L)
+        }
+      } finally {
+        edgeIdx.unpersist(blocking = false)
+        idxBc.destroy(); degBc.destroy()
       }
-      idxBc.destroy(); degBc.destroy()
       val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](nInt)
       var j = 0
       while (j < nInt) { buf += ((degArr(j)._1, rankByIdx(j), degByIdx(j))); j += 1 }

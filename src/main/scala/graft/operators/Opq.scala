@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.{VectorOps => V}
+import graft.operators.AnnSearch.{Cut, Radius, TopK}
 
 /** PCA-rotated product quantization (key `knn_opq`) — the OPQ insight
   * (Ge et al. 2013, "Optimized Product Quantization"; FAISS's
@@ -69,9 +70,7 @@ object Opq {
       .filter(col("__d").isNotNull).limit(1).collect().isEmpty
     if (empty)
       // empty corpus: empty result, schema-stable (knnLsh precedent)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
+      return AnnSearch.empty(vectors, TopK(k), sameLabel = false)
     val vn = vectors
       .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
       .withColumn("nrm", V.l2Norm(col("e")))
@@ -230,8 +229,8 @@ object Opq {
     s"""$opqRotatedPrefix, ${Pq.pqAdcOracleTail("rotu", OpqComponents)}"""
 
   /** Key `knn_ivf_opq`: the rotation composed with the INVERTED FILE
-    * — completing the serving matrix {flat, IVF} × {float, SQ8, PQ,
-    * OPQ} (every other column already has both rungs). The coarse
+    * — the IVF rung of the rotated tier, as every other tier has one.
+    * The coarse
     * quantizer routes in ORIGINAL space (the shared [[Similarity
     * .ivfIndex]] — routing sees full-dimensional geometry, so the
     * probe cut is exactly `knn_ivf_pq`'s and loses nothing to the
@@ -254,9 +253,7 @@ object Opq {
     val empty = vectors.select(size(col("embedding")).as("__d"))
       .filter(col("__d").isNotNull).limit(1).collect().isEmpty
     if (empty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
+      return AnnSearch.empty(vectors, TopK(k), sameLabel = false)
     val (indexed, centroids) =
       Similarity.ivfIndex(vectors, 0, "ivf_centroids_knn_ivf_opq")
     val probes = Pq.collectProbes(indexed, centroids)
@@ -294,15 +291,12 @@ object Opq {
   }
 
   // --------------------------------------------------------------------
-  // The DURABLE OPQ tier — completing the last column of the
-  // query-type × tier serving matrix (float/SQ8/PQ already serve all
-  // three query types off staged artifacts; OPQ served top-k only,
-  // and only in-memory). The index is the PQ tier's three frames PLUS
+  // The DURABLE OPQ tier. The index is the PQ tier's three frames PLUS
   // the rotation: an r-row `basis` artifact (pos, b: d doubles —
-  // perm-placed, so row `pos` IS rotated coordinate `pos`). Every
-  // query/append kernel is the PQ tier's, reached through the
-  // rotation-aware seams ([[Pq.adcQueryRows]]/[[Pq.encodeAgainst]]):
-  // one definition per kernel, no copies (the r16-advice discipline).
+  // perm-placed, so row `pos` IS rotated coordinate `pos`). The query
+  // and append kernels are the PQ tier's, reached through the
+  // rotation-aware seams ([[Pq.queryIvfPqIndex]]'s `basis`,
+  // [[Pq.encodeAgainst]]): one definition per kernel, no copies.
   // --------------------------------------------------------------------
 
   /** A staged rotated-IVFADC index: the [[Pq.IvfPqIndex]] frames (the
@@ -324,7 +318,7 @@ object Opq {
     * `appendIvfOpqIndexAtomic` after `buildIvfOpq(a)` (spec-asserted),
     * the same incremental-lifecycle equation as the PQ tier's.
     * `metaCols`: metadata columns riding the code postings (the
-    * metadata-in-index recipe), enabling [[queryIvfOpqFiltered]]. */
+    * metadata-in-index recipe), enabling a same-label [[queryIvfOpq]]. */
   def buildIvfOpq(vectors: DataFrame, cells: Int = 0,
                   r: Int = OpqComponents, iters: Int = OpqIters,
                   trainOn: DataFrame = null,
@@ -468,55 +462,16 @@ object Opq {
       dir => writeIvfOpqIndex(rebuilt, dir))
   }
 
-  /** Top-k off the staged rotated index — [[Pq.queryIvfPq]] with the
+  /** Query the staged rotated index — [[Pq.queryIvfPqIndex]] with the
     * basis threaded: probes rank in original space, ADC tables build
-    * from the rotated query, the code scan and exact rerank are the
-    * PQ kernels unchanged. */
-  def queryIvfOpq(index: IvfOpqIndex, vectors: DataFrame,
-                  queryIds: Seq[Long], k: Int = Similarity.K,
-                  nprobe: Int = Similarity.IvfNProbe): DataFrame =
-    Pq.queryIvfPq(index.pq, vectors, queryIds, k, nprobe,
+    * from the rotated query, and the code scan, the cut and the exact
+    * rerank on original floats are the PQ kernel's, for every
+    * (cut, sameLabel) pair. */
+  def queryIvfOpq(index: IvfOpqIndex, vectors: DataFrame, queryIds: Seq[Long],
+                  cut: Cut = TopK(Similarity.K), sameLabel: Boolean = false,
+                  nprobe: Int = 0): DataFrame =
+    Pq.queryIvfPqIndex(index.pq, vectors, queryIds, cut, sameLabel, nprobe,
       basis = index.basis)
-
-  /** FILTERED top-k off the staged rotated index: the label rides the
-    * code postings, the predicate evaluates inside the rotated ADC
-    * scan, probe width defaults to the [[Similarity.FilteredNProbe]]
-    * widening — the PQ filtered kernel through the rotation seam. */
-  def queryIvfOpqFiltered(index: IvfOpqIndex, vectors: DataFrame,
-                          queryIds: Seq[Long], k: Int = Similarity.K,
-                          nprobe: Int = Similarity.FilteredNProbe,
-                          filterCol: String = "label"): DataFrame =
-    Pq.queryIvfPqFiltered(index.pq, vectors, queryIds, k, nprobe,
-      filterCol, basis = index.basis)
-
-  /** RADIUS search off the staged rotated index: admission is the ADC
-    * cut adist ≤ 2(1−τ) in ROTATED space (the projection shrinks
-    * norms, so rotated ADC distances sit below their original-space
-    * images — admission is RECALL-side only), then the bounded
-    * admitted set exact-verifies against the float corpus: precision
-    * 1.0 by construction, exactly the PQ radius contract. */
-  def queryIvfOpqRadius(index: IvfOpqIndex, vectors: DataFrame,
-                        queryIds: Seq[Long],
-                        tau: Double = Similarity.RadiusTau,
-                        nprobe: Int = Similarity.IvfNProbe): DataFrame =
-    Pq.queryIvfPqRadius(index.pq, vectors, queryIds, tau, nprobe,
-      basis = index.basis)
-
-  /** FILTERED RADIUS off the staged rotated index — the PQ
-    * filtered-radius kernel through the rotation seam: same-label
-    * admission inside the rotated ADC scan at the widened probe cut,
-    * exact verify on original floats. Spec-checked (scan-time ==
-    * post-filter identity at equal probe width — radius has no slot
-    * semantics, so the predicate placement changes COST only); the
-    * cross-engine gate for this shape lives on the PQ tier
-    * (`knn_ivf_pq_radius_filtered`), whose kernel this IS. */
-  def queryIvfOpqRadiusFiltered(index: IvfOpqIndex, vectors: DataFrame,
-                                queryIds: Seq[Long],
-                                tau: Double = Similarity.RadiusTau,
-                                nprobe: Int = Similarity.FilteredNProbe,
-                                filterCol: String = "label"): DataFrame =
-    Pq.queryIvfPqRadiusFiltered(index.pq, vectors, queryIds, tau, nprobe,
-      filterCol, basis = index.basis)
 
   /** Driver query (key `knn_ivf_opq_filtered`): the rotated filtered
     * serving path END TO END through the cross-engine gate — build
@@ -529,13 +484,12 @@ object Opq {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("ivf_opq_filtered_idx")
     writeIvfOpqIndex(buildIvfOpq(vectors, metaCols = Seq("label")), path)
-    queryIvfOpqFiltered(readIvfOpqIndex(spark, path), vectors,
-      0L until Similarity.NQueries.toLong)
+    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
+      0L until Similarity.NQueries.toLong, sameLabel = true)
   }
 
-  /** Driver query (key `knn_ivf_opq_radius_filtered`): the LAST
-    * tier×query-type cell of the serving matrix at the cross-engine
-    * gate (r17 verdict item 5 — every other cell already has one) —
+  /** Driver query (key `knn_ivf_opq_radius_filtered`): the rotated
+    * tier's same-label radius search at the cross-engine gate —
     * build with the label riding the rotated codes, stage durably,
     * answer the same-label radius query inside the rotated compressed
     * scan at the widened probe cut, exact-verify on original floats. */
@@ -543,8 +497,8 @@ object Opq {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("ivf_opq_radius_filt_idx")
     writeIvfOpqIndex(buildIvfOpq(vectors, metaCols = Seq("label")), path)
-    queryIvfOpqRadiusFiltered(readIvfOpqIndex(spark, path), vectors,
-      0L until Similarity.NQueries.toLong)
+    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
+      0L until Similarity.NQueries.toLong, Radius(Similarity.RadiusTau), sameLabel = true)
   }
 
   /** Driver query (key `knn_ivf_opq_radius`): build, stage durably,
@@ -553,8 +507,8 @@ object Opq {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("ivf_opq_radius_idx")
     writeIvfOpqIndex(buildIvfOpq(vectors), path)
-    queryIvfOpqRadius(readIvfOpqIndex(spark, path), vectors,
-      0L until Similarity.NQueries.toLong)
+    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
+      0L until Similarity.NQueries.toLong, Radius(Similarity.RadiusTau))
   }
 
   /** Driver query (key `knn_ivf_opq_append`): the rotated tier's

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.{VectorOps => V}
+import graft.operators.AnnSearch.{Cut, Radius, TopK}
 
 /** Product-quantization ANN (key `knn_pq`) — the compressed-codes
   * scale path of the similarity tier (SURVEY §2.4), completing the
@@ -105,9 +106,7 @@ object Pq {
         case Some(r) => r.getInt(0)
         case None =>
           // empty corpus: empty result, schema-stable (knnLsh precedent)
-          return vectors.limit(0).select(
-            col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-            lit(0).as("rank"), lit(0.0).as("cosine"))
+          return AnnSearch.empty(vectors, TopK(k), sameLabel = false)
       }
     // float → double → unit-normalize (|q-x|² = 2-2cos thereafter)
     val vn = vectors
@@ -121,11 +120,13 @@ object Pq {
   /** The PQ build + ADC search pipeline over a prepared UNIT frame
     * `un` (vec_id, u: array<double>, any width `d` divisible by M) —
     * exact rerank against the float corpus `vn` (vec_id, e, nrm).
-    * Shared verbatim by [[knnPqOn]] (u = the unit-normalized corpus)
-    * and [[Opq.knnOpqOn]] (u = the PCA-rotated unit corpus): the
+    * Shared verbatim by [[knnPqOn]] (u = the unit-normalized corpus),
+    * [[knnIvfPqOn]] (the same, cell-tagged), and [[Opq.knnOpqOn]] /
+    * [[Opq.knnIvfOpqOn]] (u = the PCA-rotated unit corpus): the
     * rotation changes the GEOMETRY the codebooks train in, nothing
-    * about the build/scan/rerank machinery. */
-  /** `probes`, when given, makes the corpus pass CELL-PRUNED (the
+    * about the build/scan/rerank machinery.
+    *
+    * `probes`, when given, makes the corpus pass CELL-PRUNED (the
     * IVFADC cut): `un` must then carry a third `cell` column, vectors
     * in unprobed cells skip encode AND ADC entirely, and each query
     * scores only its own probed cells. The codebook build and every
@@ -232,48 +233,36 @@ object Pq {
     //     arithmetic as the l2sq column — three independent
     //     accumulators in one loop produce the exact bits of three
     //     separate folds), ADC sum in subspace order, and a bounded
-    //     Rerank-heap per query per partition (lossless pruning:
-    //     the global top-Rerank under (adist asc, vec_id asc) is a
-    //     subset of the union of per-partition top-Reranks)
-    val worstFirst: Ordering[(Long, Long, Double)] =
-      Ordering.by(t => (t._3, t._2))
+    //     Rerank-heap per query per partition
+    //     ([[AnnSearch.lowestPerQuery]] under (adist asc, vec_id asc))
     // a FUNCTION VALUE, not a nested def: a def here compiles to a
     // method on the Pq module, and the mapPartitions lambda would
     // capture the (non-serializable) module instance to call it
     val scanPartition: (Iterator[(Long, Array[Double], Long)],
                         (Long, Long) => Boolean) => Iterator[(Long, Long, Double)] =
         (it, admit) => {
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long, Double)]]
+      // one buffer per partition: a vector's hits are all consumed
+      // (the heaps take each row as it comes) before the next vector
+      // is encoded into it
       val codesBuf = new Array[Int](M)
-      it.foreach { case (vid, u, cell) =>
-        var encoded = false
-        var qi = 0
-        while (qi < qIds.length) {
-          val q = qIds(qi)
-          if (q != vid && admit(q, cell)) {
-            if (!encoded) {
-              var m = 0
-              while (m < M) {
-                codesBuf(m) = Pq.argminCode(u, m * subW, subW, centsByM(m))
-                m += 1
-              }
-              encoded = true
-            }
-            val dtm = dtByQ(q)
-            var acc = 0.0
-            var mm = 0
-            while (mm < M) { acc += dtm(mm)(codesBuf(mm)); mm += 1 }
-            val c = (q, vid, acc)
-            val h = heaps.getOrElseUpdate(q,
-              new scala.collection.mutable.PriorityQueue[(Long, Long, Double)]()(worstFirst))
-            if (h.size < Rerank) h.enqueue(c)
-            else if (worstFirst.compare(c, h.head) < 0) { h.dequeue(); h.enqueue(c) }
+      AnnSearch.lowestPerQuery(it.flatMap { case (vid, u, cell) =>
+        val hits = qIds.iterator.filter(q => q != vid && admit(q, cell))
+        if (hits.hasNext) {
+          // encoded once per vector, and only when some query scores it
+          var m = 0
+          while (m < M) {
+            codesBuf(m) = Pq.argminCode(u, m * subW, subW, centsByM(m))
+            m += 1
           }
-          qi += 1
         }
-      }
-      heaps.valuesIterator.flatMap(_.iterator)
+        hits.map { q =>
+          val dtm = dtByQ(q)
+          var acc = 0.0
+          var mm = 0
+          while (mm < M) { acc += dtm(mm)(codesBuf(mm)); mm += 1 }
+          (q, vid, acc)
+        }
+      }, Rerank)
     }
     val pruned = (probes match {
       case None =>
@@ -287,23 +276,12 @@ object Pq {
             scanPartition(it.filter(t => probedCells.contains(t._3)),
               (q, cell) => byQ(q).contains(cell)))
     }).toDF("query_id", "vec_id", "adist")
-    val cw = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    val cand = broadcast(pruned.withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= Rerank)
-      .select(col("query_id"), col("vec_id")))
 
     // --- exact cosine rerank over the Rerank·Q candidate sliver
     val queries = broadcast(vn.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vn, "vec_id").join(queries, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+    AnnSearch.rerank(AnnSearch.sliver(pruned, col("adist")), vn, queries,
+      TopK(k), sameLabel = false)
   }
 
   /** Collect each query's probed cells off a built IVF index — the
@@ -426,149 +404,23 @@ object Pq {
     * fraction shrinking as the corpus grows. */
   def knnIvfPqOn(vectors: DataFrame, k: Int = K, dim: Int = 0,
                  cells: Int = 0): DataFrame = {
-    import Similarity.IvfNProbe
     val d =
       if (dim > 0) dim
       else vectors.select(size(col("embedding")).as("__d"))
         .filter(col("__d").isNotNull).limit(1).collect().headOption match {
         case Some(r) => r.getInt(0)
-        case None =>
-          return vectors.limit(0).select(
-            col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-            lit(0).as("rank"), lit(0.0).as("cosine"))
+        case None => return AnnSearch.empty(vectors, TopK(k), sameLabel = false)
       }
     require(d % M == 0, s"embedding dim $d must be divisible by M=$M")
-    val subW = d / M
-
-    // --- coarse index: the shared IVF build (auto-C by default — the
-    //     same knob knn_ivf and the dedup tier run on)
+    // coarse index: the shared IVF build (auto-C by default — the same
+    // knob knn_ivf and the dedup tier run on); the PQ build, the
+    // cell-pruned ADC scan and the rerank are [[pqAdcSearchOn]]'s
     val (indexed, centroids) =
       Similarity.ivfIndex(vectors, cells, "ivf_centroids_knn_ivf_pq")
-    val spark = vectors.sparkSession
-    import spark.implicits._
-
-    // --- probes: per query the nprobe nearest cells (bounded Q·C
-    //     candidate rows, Q·nprobe survivors → a driver map shipped in
-    //     the scan closure, the knnPq distance-table precedent)
-    val (probesByQ, probedCells) = collectProbes(indexed, centroids)
-    val qIds: Array[Long] = probesByQ.keys.toArray.sorted
-
-    // --- PQ build over the unit-normalized corpus (identical recipe
-    //     to knnPqOn; the corpus frame here additionally carries the
-    //     coarse cell)
     val un = indexed.select(col("vec_id"),
       transform(col("e"), x => x / col("nrm")).as("u"), col("cell"))
-    val seedsByM: Array[Array[(Long, Array[Double])]] = {
-      val rows = un.orderBy(col("vec_id")).limit(Kc)
-        .select(col("vec_id"), col("u")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      Array.tabulate(M)(m => rows.map { case (vid, u) =>
-        (vid, java.util.Arrays.copyOfRange(u, m * subW, (m + 1) * subW)) })
-    }
-    val fa = un.select(col("vec_id"), col("u")).as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        it.flatMap { case (_, u) =>
-          (0 until M).iterator.map { m =>
-            val cm = seedsByM(m)
-            val best = Pq.argminCode(u, m * subW, subW, cm)
-            (m, cm(best)._1,
-              java.util.Arrays.copyOfRange(u, m * subW, (m + 1) * subW))
-          }
-        }
-      }.toDF("m", "code", "s")
-    val cents = fa
-      .select(col("m"), col("code"), posexplode(col("s")).as(Seq("pos", "v")))
-      .groupBy(col("m"), col("code"), col("pos"))
-      .agg((sum(col("v").cast("decimal(30,10)")).cast("double") / count(col("v")))
-        .as("mean"))
-      .groupBy(col("m"), col("code"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("mean")))).as("pm"))
-      .select(col("m"), col("code"),
-        transform(col("pm"), p => p.getField("mean")).as("cs"))
-    val centsByM: Array[Array[(Long, Array[Double])]] = {
-      val rows = cents.collect().map(r =>
-        (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      Array.tabulate(M)(m =>
-        rows.filter(_._1 == m).sortBy(_._2).map(t => (t._2, t._3)))
-    }
-
-    // --- per-query ADC distance tables (Q·M·Kc, bounded)
-    val qsub = un.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"),
-        explode(sequence(lit(0), lit(M - 1))).as("m"), col("u"))
-      .select(col("query_id"), col("m"),
-        slice(col("u"), col("m") * subW + 1, lit(subW)).as("qs"))
-    val dtRows = qsub.join(broadcast(cents), "m")
-      .select(col("query_id"), col("m"), col("code"),
-        l2sq(col("qs"), col("cs")).as("d2"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val dtByQ: Map[Long, Array[Array[Double]]] = qIds.map { q =>
-      q -> Array.tabulate(M) { m =>
-        val codeIdx = centsByM(m).iterator.map(_._1).zipWithIndex.toMap
-        val row = new Array[Double](centsByM(m).length)
-        dtRows.iterator.filter(t => t._1 == q && t._2 == m)
-          .foreach(t => row(codeIdx(t._3)) = t._4)
-        row
-      }
-    }.toMap
-
-    // --- the ONE corpus pass, cell-pruned: vectors in unprobed cells
-    //     skip encode AND ADC entirely (the inverted-file cut); probed
-    //     ones pay encode once + ADC per probing query
-    val worstFirst: Ordering[(Long, Long, Double)] =
-      Ordering.by(t => (t._3, t._2))
-    val pruned = un.as[(Long, Array[Double], Long)]
-      .mapPartitions { it =>
-        val heaps = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long, Double)]]
-        val codesBuf = new Array[Int](M)
-        it.foreach { case (vid, u, cell) =>
-          if (probedCells.contains(cell)) {
-            var m = 0
-            while (m < M) {
-              codesBuf(m) = Pq.argminCode(u, m * subW, subW, centsByM(m))
-              m += 1
-            }
-            var qi = 0
-            while (qi < qIds.length) {
-              val q = qIds(qi)
-              if (q != vid && probesByQ(q).contains(cell)) {
-                val dtm = dtByQ(q)
-                var acc = 0.0
-                var mm = 0
-                while (mm < M) { acc += dtm(mm)(codesBuf(mm)); mm += 1 }
-                val c = (q, vid, acc)
-                val h = heaps.getOrElseUpdate(q,
-                  new scala.collection.mutable.PriorityQueue[(Long, Long, Double)]()(worstFirst))
-                if (h.size < Rerank) h.enqueue(c)
-                else if (worstFirst.compare(c, h.head) < 0) { h.dequeue(); h.enqueue(c) }
-              }
-              qi += 1
-            }
-          }
-        }
-        heaps.valuesIterator.flatMap(_.iterator)
-      }
-      .toDF("query_id", "vec_id", "adist")
-    val cw = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    val cand = broadcast(pruned.withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= Rerank)
-      .select(col("query_id"), col("vec_id")))
-
-    // --- exact cosine rerank over the candidate sliver
-    val vnAll = indexed.select(col("vec_id"), col("e"), col("nrm"))
-    val qSide = broadcast(vnAll.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vnAll, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+    pqAdcSearchOn(un, indexed.select(col("vec_id"), col("e"), col("nrm")), d, k,
+      Some(collectProbes(indexed, centroids)))
   }
 
   // --- serving-shape split: build once, stage, query many ---------------
@@ -690,8 +542,8 @@ object Pq {
     * codebooks, same assign+encode arithmetic for b — which is what
     * makes the append path oracle-able against a full rebuild. */
   /** `metaCols` (opt-in): metadata columns of `vectors` to ride the
-    * code postings — the metadata-in-index layout that lets
-    * [[queryIvfPqFiltered]] evaluate a predicate INSIDE the compressed
+    * code postings — the metadata-in-index layout that lets a
+    * same-label [[queryIvfPqIndex]] evaluate a predicate INSIDE the compressed
     * scan ([[Similarity.writeIvfIndex]]'s metaCols recipe on the PQ
     * tier). The join is vec_id-keyed build cost, never query cost;
     * appends ride the same columns automatically ([[encodeAgainst]]
@@ -1004,105 +856,122 @@ object Pq {
       col("codes")) ++ meta): _*)
   }
 
-  /** Query a STAGED index: probe cells from the C-row centroid table,
-    * per-query ADC distance tables from the M·Kc codebooks, one scan
-    * over the (cell-filtered) codes, exact rerank against `vectors`
-    * restricted to the Rerank·Q candidate sliver. NOTHING is rebuilt:
-    * the corpus is touched only by the codes scan (compressed form)
-    * and the candidate point-lookups — the build-once/query-many
-    * contract. Same arithmetic and tie-breaks as [[knnIvfPqOn]], so a
-    * staged round-trip answers queries identically (spec-asserted). */
-  def queryIvfPq(index: IvfPqIndex, vectors: DataFrame,
-                 queryIds: Seq[Long], k: Int = K,
-                 nprobe: Int = Similarity.IvfNProbe,
-                 basis: DataFrame = null): DataFrame = {
+  /** Query a STAGED index — the PQ tier's one search body: top-k or
+    * radius, unfiltered or same-label, and (through `basis`) the
+    * rotated [[Opq]] tier. Probe cells come from the C-row centroid
+    * table, per-query ADC distance tables from the M·Kc codebooks,
+    * then ONE scan over the cell-pruned codes and the shared exact
+    * rerank ([[AnnSearch.rerank]]) against `vectors` restricted to the
+    * candidates. NOTHING is rebuilt: the corpus is touched only by the
+    * codes scan (compressed form), the Q query rows and the candidate
+    * point-lookups — the build-once/query-many contract. Same
+    * arithmetic and tie-breaks as [[knnIvfPqOn]], so a staged
+    * round-trip answers top-k identically (spec-asserted).
+    *
+    * The cut picks the candidate stage once per call:
+    *  - TopK: per-partition Rerank-heaps by (adist, vec_id), then the
+    *    broadcast Rerank·Q sliver;
+    *  - Radius: the codes encode the UNIT-normalized corpus, so on the
+    *    sphere |q−x|² = 2−2cos and the admission cos ≥ τ is the ADC
+    *    cut adist ≤ 2(1−τ) — a stateless filter inside the scan. The
+    *    admitted set is data-dependent, so unlike the sliver it is not
+    *    broadcast. The exact verify keeps precision at 1.0; recall is
+    *    bounded by the probe cut and the ADC error. A rotation shrinks
+    *    norms, so rotated ADC distances sit below their original-space
+    *    images and admission errs on the recall side only.
+    *
+    * `sameLabel` compares the `label` column riding the codes
+    * ([[buildIvfPq]]'s `metaCols`) AS LONG inside the scan (integral
+    * metadata; a string-labeled deployment dictionary-encodes first):
+    * a rejected candidate costs one compare, no ADC sum. Null labels
+    * match nothing (SQL equality): null-labelled code rows are
+    * filtered out before the typed scan and null-labelled queries
+    * before probing. `nprobe <= 0` picks the width from `sameLabel`
+    * ([[AnnSearch.probeWidth]]). */
+  def queryIvfPqIndex(index: IvfPqIndex, vectors: DataFrame, queryIds: Seq[Long],
+                      cut: Cut = TopK(K), sameLabel: Boolean = false,
+                      nprobe: Int = 0, basis: DataFrame = null): DataFrame = {
+    import AnnSearch.Label
     val spark = vectors.sparkSession
     import spark.implicits._
-    // query vectors + norms (Q point lookups on the corpus)
+    require(!sameLabel || index.codes.columns.contains(Label),
+      s"index codes carry no '$Label' column — " +
+        s"build the index with metaCols = Seq(\"$Label\")")
+    val lab = AnnSearch.labelCols(sameLabel)
     val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
+      .select((Seq(col("vec_id"), V.toDouble(col("embedding")).as("e")) ++ lab): _*)
       .withColumn("nrm", V.l2Norm(col("e")))
-    val qRows = queryRowsOf(vn, queryIds)
-    if (qRows.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
+    // the query rows, collected with their labels (Q point lookups)
+    val isQuery = col("vec_id").isInCollection(queryIds)
+    val qFrame = vn.filter(if (sameLabel) isQuery && col(Label).isNotNull else isQuery)
+    val qAll = qFrame
+      .select((Seq(col("vec_id"), col("e"), col("nrm")) ++ lab.map(_.cast("long"))): _*)
+      .collect()
+    if (qAll.isEmpty) return AnnSearch.empty(vectors, cut, sameLabel)
+    val qRows = qAll.map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+    val qLab: Map[Long, Long] =
+      if (sameLabel) qAll.map(r => r.getLong(0) -> r.getLong(3)).toMap else Map.empty
     // probes rank in ORIGINAL space; the ADC tables live in the
     // index's code space (rotated when an OPQ basis is staged)
     val (adcRows, subW) = adcQueryRows(qRows, basis)
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
+    val probesByQ = probesAgainst(index.centroids, qRows,
+      AnnSearch.probeWidth(nprobe, sameLabel))
     val probedCells = probesByQ.values.flatten.toSet
     val qIds = probesByQ.keys.toArray.sorted
     val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
-    // the ONE codes scan, cell-pruned, per-partition Rerank-heaps
-    val worstFirst: Ordering[(Long, Long, Double)] =
-      Ordering.by(t => (t._3, t._2))
-    // column-form cell filter BEFORE the typed scan: it pushes down to
-    // the staged codes parquet (cell-clustered files -> row-group
-    // min/max skipping), where a lambda filter would scan everything.
-    // The explicit projection drops any metadata columns riding the
-    // codes (buildIvfPq's metaCols) — the unfiltered scan never reads
-    // them, and the typed binding below is positional.
-    val pruned = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Long, Array[Long])]
-      .mapPartitions { it =>
-        val heaps = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long, Double)]]
-        it.foreach { case (vid, cell, cs) =>
-          var qi = 0
-          while (qi < qIds.length) {
-            val q = qIds(qi)
-            if (q != vid && probesByQ(q).contains(cell)) {
-              val dtm = dtByQ(q)
-              var acc = 0.0
-              var m = 0
-              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
-              val c = (q, vid, acc)
-              val h = heaps.getOrElseUpdate(q,
-                new scala.collection.mutable.PriorityQueue[(Long, Long, Double)]()(worstFirst))
-              if (h.size < Rerank) h.enqueue(c)
-              else if (worstFirst.compare(c, h.head) < 0) { h.dequeue(); h.enqueue(c) }
-            }
-            qi += 1
-          }
-        }
-        heaps.valuesIterator.flatMap(_.iterator)
+    // the per-call choices, as function values (see pqAdcSearchOn):
+    // which (query, cell, label) triples get an ADC sum, and which
+    // scored rows the candidate stage keeps
+    val admit: (Long, Long, Long) => Boolean =
+      if (sameLabel) (q, cell, l) => qLab(q) == l && probesByQ(q).contains(cell)
+      else (q, cell, _) => probesByQ(q).contains(cell)
+    val keep: Iterator[(Long, Long, Double)] => Iterator[(Long, Long, Double)] =
+      cut match {
+        case TopK(_) => scored => AnnSearch.lowestPerQuery(scored, Rerank)
+        case Radius(tau) =>
+          // 2(1−τ) in IEEE — exactly representable for the driver's
+          // τ=0.25; the oracle embeds the same computed double via strtod
+          val admitD2 = 2.0 * (1.0 - tau)
+          scored => scored.filter(_._3 <= admitD2)
       }
+    // column-form cell filter BEFORE the typed scan: it reaches the
+    // staged codes parquet as a static partition filter (whole cell=
+    // directories skipped), where a lambda filter would scan
+    // everything. The projection keeps only what the scan compares —
+    // an unfiltered scan binds a constant label and never reads one.
+    val probed = index.codes.filter(col("cell").isInCollection(probedCells.toSeq))
+    val scanned = (if (sameLabel) probed.filter(col(Label).isNotNull) else probed)
+      .select(col("vec_id"), col("cell"), col("codes"),
+        if (sameLabel) col(Label).cast("long") else lit(0L))
+      .as[(Long, Long, Array[Long], Long)]
+      .mapPartitions(it => keep(it.flatMap { case (vid, cell, cs, l) =>
+        qIds.iterator.filter(q => q != vid && admit(q, cell, l)).map { q =>
+          val dtm = dtByQ(q)
+          var acc = 0.0
+          var m = 0
+          while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
+          (q, vid, acc)
+        }
+      }))
       .toDF("query_id", "vec_id", "adist")
-    val cw = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    val cand = broadcast(pruned.withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= Rerank)
-      .select(col("query_id"), col("vec_id")))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vn, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+    val cand = cut match {
+      case TopK(_) => AnnSearch.sliver(scanned, col("adist"))
+      case Radius(_) => scanned.select(col("query_id"), col("vec_id"))
+    }
+    AnnSearch.rerank(cand, vn, broadcast(qFrame.select(col("vec_id").as("query_id"),
+      col("e").as("qe"), col("nrm").as("qnrm"))), cut, sameLabel)
   }
 
-  /** Driver-side query rows off the float corpus: (vec_id, e, nrm)
-    * for `queryIds` — Q point lookups, the bounded structure every
-    * staged query path ships in its scan closure. */
-  private[operators] def queryRowsOf(vn: DataFrame, queryIds: Seq[Long])
-      : Array[(Long, Array[Double], Double)] =
-    vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("e"), col("nrm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+  /** Top-k off a staged index: [[queryIvfPqIndex]] with `TopK(k)`. */
+  def queryIvfPq(index: IvfPqIndex, vectors: DataFrame, queryIds: Seq[Long],
+                 k: Int = K): DataFrame =
+    queryIvfPqIndex(index, vectors, queryIds, TopK(k))
 
   /** Per-query probed cells off the C-row staged centroid table —
     * driver-side, the same (cdist desc, cell asc) convention as
-    * [[Similarity.probeFrame]]; shared by [[queryIvfPq]] and
-    * [[queryIvfPqFiltered]] (r16-advice class: one definition, not
-    * copies, because the staged paths are spec-equated to the
-    * one-shot keys). */
+    * [[Similarity.probeFrame]], used by [[queryIvfPqIndex]] (r16-advice
+    * class: one definition, not copies, because the staged paths are
+    * spec-equated to the one-shot keys). */
   private[operators] def probesAgainst(centroids: DataFrame,
                             qRows: Array[(Long, Array[Double], Double)],
                             nprobe: Int): Map[Long, Set[Long]] = {
@@ -1202,110 +1071,6 @@ object Pq {
         ba.length / M)
     }
 
-  /** FILTERED top-k served off the STAGED compressed index (r16
-    * verdict item 1): [[queryIvfPq]]'s probe + ADC scan with the
-    * metadata predicate evaluated INSIDE the code scan — the filter
-    * column rides the code postings ([[buildIvfPq]]'s `metaCols`), so
-    * a filtered query touches the float corpus only for the Q query
-    * rows and the Rerank·Q candidate sliver, never per candidate. At
-    * 100 TB this is the whole point: the float postings are exactly
-    * what a filtered query cannot afford to scan, and a post-hoc
-    * filter on an unfiltered top-k under-fills k (the knn_filtered
-    * correctness trap).
-    *
-    * Probe width defaults to [[Similarity.FilteredNProbe]] — the
-    * selective filter must reach deeper into the global ranking to
-    * fill k same-label slots, and the widened probe still scans fewer
-    * post-filter codes than the unfiltered default width scans
-    * overall. The kernel compares the filter column AS LONG (integral
-    * metadata; a string-labeled deployment dictionary-encodes first).
-    * Output: (query_id, neighbor_id, label, rank, cosine) — exact
-    * cosines, the ADC order only shapes the candidate cut. */
-  def queryIvfPqFiltered(index: IvfPqIndex, vectors: DataFrame,
-                         queryIds: Seq[Long], k: Int = K,
-                         nprobe: Int = Similarity.FilteredNProbe,
-                         filterCol: String = "label",
-                         basis: DataFrame = null): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    require(index.codes.columns.contains(filterCol),
-      s"index codes carry no '$filterCol' column — " +
-        s"build the index with metaCols = Seq(\"$filterCol\")")
-    val vnl = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"),
-        col(filterCol).as("label"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val vn = vnl.select(col("vec_id"), col("e"), col("nrm"))
-    val qRows = queryRowsOf(vn, queryIds)
-    if (qRows.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        col(filterCol).as("label"), lit(0).as("rank"), lit(0.0).as("cosine"))
-    val (adcRows, subW) = adcQueryRows(qRows, basis)
-    // query labels: Q point lookups on the corpus projection — the
-    // oracle's `lab` CTE joined onto the query side
-    val qLab: Map[Long, Long] = vnl
-      .filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("label").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
-    val probedCells = probesByQ.values.flatten.toSet
-    val qIds = probesByQ.keys.toArray.sorted
-    val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
-    val worstFirst: Ordering[(Long, Long, Double)] =
-      Ordering.by(t => (t._3, t._2))
-    // the one codes scan: cell filter pushed to the partition dirs,
-    // label comparison per candidate INSIDE the kernel — a rejected
-    // candidate costs one long compare, no ADC sum
-    val pruned = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"),
-        col(filterCol).cast("long"))
-      .as[(Long, Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        val heaps = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long, Double)]]
-        it.foreach { case (vid, cell, cs, lab) =>
-          var qi = 0
-          while (qi < qIds.length) {
-            val q = qIds(qi)
-            if (q != vid && qLab(q) == lab && probesByQ(q).contains(cell)) {
-              val dtm = dtByQ(q)
-              var acc = 0.0
-              var m = 0
-              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
-              val c = (q, vid, acc)
-              val h = heaps.getOrElseUpdate(q,
-                new scala.collection.mutable.PriorityQueue[(Long, Long, Double)]()(worstFirst))
-              if (h.size < Rerank) h.enqueue(c)
-              else if (worstFirst.compare(c, h.head) < 0) { h.dequeue(); h.enqueue(c) }
-            }
-            qi += 1
-          }
-        }
-        heaps.valuesIterator.flatMap(_.iterator)
-      }
-      .toDF("query_id", "vec_id", "adist")
-    val cw = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    val cand = broadcast(pruned.withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= Rerank)
-      .select(col("query_id"), col("vec_id")))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    // exact rerank over the Rerank·Q sliver; the output label joins
-    // from the corpus projection so its TYPE is the source column's
-    cand.join(vnl, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id"), col("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label"), col("rank"), col("cosine"))
-  }
-
   /** Driver query (key `knn_ivf_pq_filtered`): the filtered serving
     * path run END TO END through the cross-engine gate — build with
     * the label riding the code postings, stage durably, read back,
@@ -1317,154 +1082,8 @@ object Pq {
     val vectors = Tables.embeddings(spark, dir)
     val path = graft.operators.Scratch.reuseDir("ivf_pq_filtered_idx")
     writeIvfPqIndex(buildIvfPq(vectors, metaCols = Seq("label")), path)
-    queryIvfPqFiltered(readIvfPqIndex(spark, path), vectors,
-      0L until NQueries.toLong)
-  }
-
-  /** RADIUS query off the STAGED compressed index (key
-    * `knn_ivf_pq_radius`) — range search at the ADC scan's byte cost,
-    * completing the radius row of the query-type × tier matrix
-    * (float [[Similarity.queryIvfIndexRadius]], SQ8
-    * [[Quantize.querySq8IndexRadius]], PQ here). The codes are
-    * encoded from the UNIT-normalized corpus, so on the sphere
-    * |q−x|² = 2−2cos and the cosine admission cos̃ ≥ τ is the ADC
-    * distance cut adist ≤ 2(1−τ) — a STATELESS filter inside the
-    * cell-pruned code scan (no heap, no window, the radius
-    * discipline), then the bounded admitted set is exact-verified
-    * against the float corpus so every emitted row genuinely clears τ
-    * (precision 1.0 by construction; recall bounded by the probe cut
-    * and the ADC quantization error — coarser than SQ8's, which is
-    * why the verify step is not optional on this tier).
-    *
-    * 100 TB: probes bound the scan to ~nprobe/C of the codes, the
-    * τ-filter collapses the candidate stream before any shuffle, and
-    * the float corpus is touched only for the Q query rows and the
-    * |admitted|-sized verify sliver. The admitted set is
-    * data-dependent, so unlike top-k's Rerank·Q sliver it is NOT
-    * broadcast — the verify join shuffles on vec_id. */
-  def queryIvfPqRadius(index: IvfPqIndex, vectors: DataFrame,
-                       queryIds: Seq[Long],
-                       tau: Double = Similarity.RadiusTau,
-                       nprobe: Int = Similarity.IvfNProbe,
-                       basis: DataFrame = null): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val qRows = queryRowsOf(vn, queryIds)
-    if (qRows.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0.0).as("cosine"))
-    val (adcRows, subW) = adcQueryRows(qRows, basis)
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
-    val probedCells = probesByQ.values.flatten.toSet
-    val qIds = probesByQ.keys.toArray.sorted
-    val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
-    // 2(1−τ) in IEEE — exactly representable for the driver's τ=0.25;
-    // the oracle embeds the same computed double via strtod
-    val admitD2 = 2.0 * (1.0 - tau)
-    val cand = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Long, Array[Long])]
-      .mapPartitions { it =>
-        it.flatMap { case (vid, cell, cs) =>
-          qIds.iterator
-            .filter(q => q != vid && probesByQ(q).contains(cell))
-            .map { q =>
-              val dtm = dtByQ(q)
-              var acc = 0.0
-              var m = 0
-              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
-              (q, vid, acc)
-            }
-            .filter(_._3 <= admitD2)
-        }
-      }
-      .toDF("query_id", "vec_id", "adist")
-      .select(col("query_id"), col("vec_id"))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    cand.join(vn, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
-  }
-
-  /** FILTERED RADIUS off the staged compressed index (key
-    * `knn_ivf_pq_radius_filtered`): [[queryIvfPqRadius]]'s stateless
-    * adist ≤ 2(1−τ) admission with [[queryIvfPqFiltered]]'s label
-    * predicate INSIDE the code scan at the [[Similarity
-    * .FilteredNProbe]] widening — the dedup-audit query shape served
-    * off the compressed tier. A rejected candidate costs one long
-    * compare before any ADC sum; the bounded same-label admitted set
-    * exact-verifies against the float corpus (precision 1.0 — the
-    * radius contract). Output (query_id, neighbor_id, label, cosine);
-    * the label joins from the corpus projection so its type is the
-    * source column's. Accepts the rotation seam (`basis`) so the OPQ
-    * tier serves this type through the same definition. */
-  def queryIvfPqRadiusFiltered(index: IvfPqIndex, vectors: DataFrame,
-                               queryIds: Seq[Long],
-                               tau: Double = Similarity.RadiusTau,
-                               nprobe: Int = Similarity.FilteredNProbe,
-                               filterCol: String = "label",
-                               basis: DataFrame = null): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    require(index.codes.columns.contains(filterCol),
-      s"index codes carry no '$filterCol' column — " +
-        s"build the index with metaCols = Seq(\"$filterCol\")")
-    val vnl = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"),
-        col(filterCol).as("label"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val vn = vnl.select(col("vec_id"), col("e"), col("nrm"))
-    val qRows = queryRowsOf(vn, queryIds)
-    if (qRows.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        col(filterCol).as("label"), lit(0.0).as("cosine"))
-    val (adcRows, subW) = adcQueryRows(qRows, basis)
-    val qLab: Map[Long, Long] = vnl
-      .filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("label").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
-    val probedCells = probesByQ.values.flatten.toSet
-    val qIds = probesByQ.keys.toArray.sorted
-    val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
-    val admitD2 = 2.0 * (1.0 - tau)
-    val cand = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"),
-        col(filterCol).cast("long"))
-      .as[(Long, Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        it.flatMap { case (vid, cell, cs, lab) =>
-          qIds.iterator
-            .filter(q => q != vid && qLab(q) == lab && probesByQ(q).contains(cell))
-            .map { q =>
-              val dtm = dtByQ(q)
-              var acc = 0.0
-              var m = 0
-              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
-              (q, vid, acc)
-            }
-            .filter(_._3 <= admitD2)
-        }
-      }
-      .toDF("query_id", "vec_id", "adist")
-      .select(col("query_id"), col("vec_id"))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    cand.join(vnl, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
+    queryIvfPqIndex(readIvfPqIndex(spark, path), vectors,
+      0L until NQueries.toLong, sameLabel = true)
   }
 
   /** Driver query (key `knn_ivf_pq_radius_filtered`): build with the
@@ -1474,8 +1093,8 @@ object Pq {
     val vectors = Tables.embeddings(spark, dir)
     val path = graft.operators.Scratch.reuseDir("ivf_pq_radius_filt_idx")
     writeIvfPqIndex(buildIvfPq(vectors, metaCols = Seq("label")), path)
-    queryIvfPqRadiusFiltered(readIvfPqIndex(spark, path), vectors,
-      0L until NQueries.toLong)
+    queryIvfPqIndex(readIvfPqIndex(spark, path), vectors,
+      0L until NQueries.toLong, Radius(Similarity.RadiusTau), sameLabel = true)
   }
 
   /** Driver query (key `knn_ivf_pq_radius`): build, stage durably,
@@ -1484,8 +1103,8 @@ object Pq {
     val vectors = Tables.embeddings(spark, dir)
     val path = graft.operators.Scratch.reuseDir("ivf_pq_radius_idx")
     writeIvfPqIndex(buildIvfPq(vectors), path)
-    queryIvfPqRadius(readIvfPqIndex(spark, path), vectors,
-      0L until NQueries.toLong)
+    queryIvfPqIndex(readIvfPqIndex(spark, path), vectors,
+      0L until NQueries.toLong, Radius(Similarity.RadiusTau))
   }
 
   /** Full DuckDB replay of the composed IVFADC search: the shared IVF

@@ -1,10 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.{VectorOps => V}
+import graft.operators.AnnSearch.{Cut, Radius, TopK}
 
 /** Scalar (per-dimension affine) int8 quantization of the embedding
   * corpus (key `vec_quantize`) — the storage/serving compression knob
@@ -186,7 +186,7 @@ object Quantize {
     * land in [[Sq8Buckets]] `grp=` partition directories — the
     * erasure-granularity layout [[deleteFromSq8IndexAtomic]] rewrites.
     * `metaCols` names vector columns to ride the code rows (the
-    * metadata-in-index layout [[querySq8IndexFiltered]] serves —
+    * metadata-in-index layout a same-label [[querySq8Index]] serves —
     * [[Pq.buildIvfPq]]'s recipe on the SQ8 tier): filter columns live
     * NEXT to the codes so a filtered query never joins the float
     * corpus per candidate. */
@@ -254,115 +254,38 @@ object Quantize {
     IndexManifest.deleteVecIdsAtomic(spark, root, "codes", "grp",
       vecIds, keep)
 
-  /** Query a STAGED SQ8 index: the [[knnSq8On]] scan over the
-    * persisted codes + ranges, nothing rebuilt — queries and the
-    * exact rerank read the float corpus only for the query vectors
-    * and the Rerank·Q candidate sliver. Answers bit-identically to
-    * the in-memory form (spec-asserted). */
-  def querySq8Index(spark: SparkSession, path: String, vectors: DataFrame,
-                    queryIds: Seq[Long], k: Int = Similarity.K,
-                    rerank: Int = Pq.Rerank): DataFrame = {
-    val rg = IndexManifest.readFrame(spark, path, "ranges")
-      .orderBy(col("pos")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    if (rg.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
-    sq8Scan(IndexManifest.readFrame(spark, path, "codes"), rg, vectors,
-      col("vec_id").isInCollection(queryIds), k, rerank)
-  }
-
-  /** RADIUS query over the staged SQ8 index (key `knn_sq8_radius`) —
-    * range search served off the COMPRESSED tier: the decode-in-kernel
-    * scan admits candidates whose APPROXIMATE cosine clears τ (a
-    * stateless filter — no window, no heap, the [[Similarity
-    * .knnRadiusOn]] tail at the compressed scan's byte cost), then the
-    * bounded candidate set is exact-verified against the float corpus,
-    * so every emitted row genuinely clears τ (precision 1.0 by
-    * construction; the approximate prefilter bounds recall by the
-    * decode error, |x−deq| ≤ span/510 per coordinate — near-exact).
+  /** Query a STAGED SQ8 index: [[sq8Scan]] over the persisted codes +
+    * ranges, nothing rebuilt — queries and the exact rerank read the
+    * float corpus only for the query vectors and the candidates.
+    * Serves every (cut, sameLabel) pair:
+    *  - top-k answers bit-identically to the in-memory [[knnSq8On]]
+    *    (spec-asserted);
+    *  - radius (`knn_sq8_radius`) is range search at the compressed
+    *    scan's byte cost: the decode-in-kernel scan admits candidates
+    *    whose APPROXIMATE cosine clears τ (a stateless filter — no
+    *    window, no heap), then the candidates exact-verify against the
+    *    float corpus, so every emitted row genuinely clears τ
+    *    (precision 1.0; the prefilter bounds recall by the decode
+    *    error, |x−deq| ≤ span/510 per coordinate — near-exact);
+    *  - same-label (`knn_sq8_filtered`) evaluates the predicate INSIDE
+    *    the decode scan — the label rides the code rows
+    *    ([[writeSq8Index]]'s `metaCols`), so a rejected candidate costs
+    *    one comparison before any decode arithmetic. The candidate
+    *    RANKING itself is same-label, so k slots always fill where the
+    *    corpus has them (a post-hoc filter on an unfiltered top-k
+    *    under-fills k — the knn_filtered correctness trap). No
+    *    probe-widening lever exists on the flat tier: the scan reads
+    *    every bucket by design.
     * Deterministic end-to-end: decode is the oracle-replayable
-    * [[vecQuantizeOn]] arithmetic and both thresshold comparisons are
-    * the same IEEE compare both engines — hence a full hash oracle.
-    *
-    * 100 TB: one narrow scan of the compressed codes, broadcast
-    * queries, the τ-filter collapses the candidate stream before any
-    * shuffle; the float corpus is touched only for Q query rows and
-    * the |result|-sized verify sliver. */
-  def querySq8IndexRadius(spark: SparkSession, path: String,
-                          vectors: DataFrame, queryIds: Seq[Long],
-                          tau: Double = Similarity.RadiusTau): DataFrame = {
-    val rg = IndexManifest.readFrame(spark, path, "ranges")
-      .orderBy(col("pos")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    if (rg.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0.0).as("cosine"))
-    val decoded = dequantized(IndexManifest.readFrame(spark, path, "codes"), rg)
-    val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val queries = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val cand = decoded.join(queries, col("vec_id") =!= col("query_id"))
-      .filter(V.cosineWithNorms(V.dot(col("de"), col("qe")),
-        col("dn"), col("qnrm")) >= tau)
-      .select(col("query_id"), col("vec_id"))
-    cand.join(vn, "vec_id").join(queries, "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
-  }
-
-  /** FILTERED RADIUS off the staged SQ8 index (key
-    * `knn_sq8_radius_filtered`): [[querySq8IndexRadius]]'s
-    * approximate-cosine admission with [[querySq8IndexFiltered]]'s
-    * scan-time label predicate — the label rides the code rows, so a
-    * rejected candidate costs one comparison before any decode
-    * arithmetic, and the bounded same-label admitted set
-    * exact-verifies against the float corpus (precision 1.0, the
-    * radius contract). Output (query_id, neighbor_id, label, cosine);
-    * label typed from the corpus projection. */
-  def querySq8IndexRadiusFiltered(spark: SparkSession, path: String,
-                                  vectors: DataFrame, queryIds: Seq[Long],
-                                  tau: Double = Similarity.RadiusTau,
-                                  filterCol: String = "label"): DataFrame = {
-    val rg = IndexManifest.readFrame(spark, path, "ranges")
-      .orderBy(col("pos")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val staged = IndexManifest.readFrame(spark, path, "codes")
-    require(staged.columns.contains(filterCol),
-      s"staged codes carry no '$filterCol' column — " +
-        s"stage the index with metaCols = Seq(\"$filterCol\")")
-    val vnl = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"),
-        col(filterCol).as("label"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val vn = vnl.select(col("vec_id"), col("e"), col("nrm"))
-    if (rg.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        col(filterCol).as("label"), lit(0.0).as("cosine"))
-    val decoded = dequantized(
-      staged.select(col("vec_id"), col("codes"), col(filterCol)), rg)
-    val queries = broadcast(vnl.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        col("nrm").as("qnrm"), col("label").as("qlabel")))
-    // label equality BEFORE the decode cosine in the conjunction: a
-    // cross-label candidate is dropped for one comparison
-    val cand = decoded.join(queries, col("vec_id") =!= col("query_id"))
-      .filter(col(filterCol) === col("qlabel") &&
-        V.cosineWithNorms(V.dot(col("de"), col("qe")),
-          col("dn"), col("qnrm")) >= tau)
-      .select(col("query_id"), col("vec_id"))
-    cand.join(vnl, "vec_id").join(queries, "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
+    * [[vecQuantizeOn]] arithmetic and every threshold comparison is
+    * the same IEEE compare in both engines — hence full hash oracles. */
+  def querySq8Index(spark: SparkSession, path: String, vectors: DataFrame,
+                    queryIds: Seq[Long], cut: Cut = TopK(Similarity.K),
+                    sameLabel: Boolean = false): DataFrame = {
+    val rg = rangesOf(IndexManifest.readFrame(spark, path, "ranges"))
+    if (rg.isEmpty) return AnnSearch.empty(vectors, cut, sameLabel)
+    sq8Scan(IndexManifest.readFrame(spark, path, "codes"), rg, vectors,
+      col("vec_id").isInCollection(queryIds), cut, sameLabel)
   }
 
   /** Driver query (key `knn_sq8_radius_filtered`): stage with the
@@ -371,8 +294,8 @@ object Quantize {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("sq8_radius_filt_idx")
     writeSq8Index(vectors, path, metaCols = Seq("label"))
-    querySq8IndexRadiusFiltered(spark, path, vectors,
-      0L until Similarity.NQueries.toLong)
+    querySq8Index(spark, path, vectors, 0L until Similarity.NQueries.toLong,
+      Radius(Similarity.RadiusTau), sameLabel = true)
   }
 
   /** Driver query (key `knn_sq8_radius`): stage the SQ8 index, answer
@@ -381,7 +304,8 @@ object Quantize {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("sq8_radius_idx")
     writeSq8Index(vectors, path)
-    querySq8IndexRadius(spark, path, vectors, 0L until Similarity.NQueries.toLong)
+    querySq8Index(spark, path, vectors, 0L until Similarity.NQueries.toLong,
+      Radius(Similarity.RadiusTau))
   }
 
   /** Driver query (key `knn_sq8_delete`): the erasure half of the SQ8
@@ -401,82 +325,15 @@ object Quantize {
       0L until Similarity.NQueries.toLong)
   }
 
-  /** FILTERED top-k off the staged SQ8 index (key `knn_sq8_filtered`)
-    * — the metadata predicate evaluated INSIDE the decode scan: the
-    * filter column rides the code rows ([[writeSq8Index]]'s
-    * `metaCols`), so a rejected candidate costs one comparison before
-    * any decode arithmetic and the float corpus is touched only for
-    * the Q query rows and the Rerank·Q rerank sliver. Post-filtering
-    * an unfiltered top-k under-fills k whenever the filter is
-    * selective (the knn_filtered correctness trap) — here the
-    * candidate RANKING itself is same-label, so k slots always fill
-    * where the corpus has them. No probe-widening lever exists on the
-    * flat tier (the scan reads every bucket by design); selectivity
-    * only SHRINKS the ranked stream. Output: (query_id, neighbor_id,
-    * label, rank, cosine) — exact cosines, the approximate decode
-    * order only shapes the candidate cut; the output label joins from
-    * the corpus projection so its TYPE is the source column's. */
-  def querySq8IndexFiltered(spark: SparkSession, path: String,
-                            vectors: DataFrame, queryIds: Seq[Long],
-                            k: Int = Similarity.K,
-                            rerank: Int = Pq.Rerank,
-                            filterCol: String = "label"): DataFrame = {
-    val rg = IndexManifest.readFrame(spark, path, "ranges")
-      .orderBy(col("pos")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    if (rg.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        col(filterCol).as("label"), lit(0).as("rank"), lit(0.0).as("cosine"))
-    val raw = IndexManifest.readFrame(spark, path, "codes")
-    require(raw.columns.contains(filterCol),
-      s"staged SQ8 codes carry no '$filterCol' column — " +
-        s"stage the index with metaCols = Seq(\"$filterCol\")")
-    val decoded = dequantized(
-      raw.select(col("vec_id"), col("codes"), col(filterCol)), rg)
-    val vnl = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"),
-        col(filterCol))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val queries = broadcast(vnl.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        col("nrm").as("qnrm"), col(filterCol).as("qlabel")))
-    val scored = decoded.join(queries, col("vec_id") =!= col("query_id"))
-      .filter(col(filterCol) === col("qlabel"))
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("de"), col("qe")), col("dn"), col("qnrm"))
-          .as("cosine"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val cand = broadcast(Similarity.partitionTopK(scored, rerank)
-      .withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= rerank)
-      .select(col("query_id"), col("vec_id")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vnl, "vec_id").join(queries, "query_id")
-      .select(col("query_id"), col("vec_id"), col(filterCol).as("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label"), col("rank"), col("cosine"))
-  }
-
   /** Driver query (key `knn_sq8_filtered`): stage the SQ8 index with
     * the label riding the code rows, answer same-label top-k with the
-    * predicate inside the compressed scan — filtered search now
-    * serves off ALL THREE tiers (float [[Similarity
-    * .queryIvfIndexFiltered]], PQ [[Pq.queryIvfPqFiltered]], SQ8
-    * here), completing the query-type × tier serving matrix's
-    * filtered row. */
+    * predicate inside the compressed scan. */
   def knnSq8Filtered(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("sq8_filtered_idx")
     writeSq8Index(vectors, path, metaCols = Seq("label"))
-    querySq8IndexFiltered(spark, path, vectors,
-      0L until Similarity.NQueries.toLong)
+    querySq8Index(spark, path, vectors, 0L until Similarity.NQueries.toLong,
+      sameLabel = true)
   }
 
   /** Serving scan over the int8 codes (key `knn_sq8`) — the search
@@ -488,7 +345,7 @@ object Quantize {
     * d-row ranges artifact (embedded as literal arrays — pure
     * codegen: element_at on a constant array + the affine dequant),
     * scores the decoded vector against the broadcast EXACT query set,
-    * keeps per-partition lossless top-`rerank` heaps (the
+    * keeps per-partition lossless top-[[Pq.Rerank]] heaps (the
     * knn_bruteforce cut), and exact-reranks only the Rerank·Q
     * candidate sliver against the float corpus.
     *
@@ -511,36 +368,30 @@ object Quantize {
   def knnSq8(spark: SparkSession, dir: String, k: Int = Similarity.K): DataFrame =
     knnSq8On(Tables.embeddings(spark, dir), k)
 
-  def knnSq8On(vectors: DataFrame, k: Int = Similarity.K,
-               rerank: Int = Pq.Rerank): DataFrame = {
-    val rg = quantizerRanges(vectors)
-      .orderBy(col("pos")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+  def knnSq8On(vectors: DataFrame, k: Int = Similarity.K): DataFrame = {
+    val rg = rangesOf(quantizerRanges(vectors))
     if (rg.isEmpty)
       // empty corpus: empty result, schema-stable (knnLsh precedent)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
+      return AnnSearch.empty(vectors, TopK(k), sameLabel = false)
     // the staged codes ARE the serving corpus: the scan below reads
     // this parquet, not the float source (build-once/query-many)
     val codes = Scratch.stageReuse(quantizeCodesOn(vectors), "sq8_codes")
-    sq8Scan(codes, rg, vectors, col("vec_id") < Similarity.NQueries, k, rerank)
+    sq8Scan(codes, rg, vectors, col("vec_id") < Similarity.NQueries, TopK(k),
+      sameLabel = false)
   }
 
-  /** The one SQ8 search scan, shared by the in-memory driver key and
-    * the staged-index query path: decode-in-kernel over `codes`
-    * against the collected `rg` ranges (literal arrays), approximate
-    * cosine vs the broadcast query rows selected by `queryPred` from
-    * the float corpus, lossless per-partition top-`rerank` heaps,
-    * exact rerank. */
+  /** A ranges frame (pos, mn, mx) collected pos-ascending — the d-row
+    * closure [[dequantized]] embeds. */
+  private def rangesOf(ranges: DataFrame): Array[(Long, Double, Double)] =
+    ranges.orderBy(col("pos")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+
   /** In-kernel dequant of a codes frame against the collected d-row
     * ranges (embedded as literal arrays — pure codegen): the exact
     * [[vecQuantizeOn]] arithmetic per element ((c+128)·span/255 off
     * the dimension's mn), degenerate dimensions decode to mn. Keeps
     * every non-`codes` input column (the IVF variant's cell, the
-    * staged layout's grp) and appends `de`/`dn`. ONE definition for
-    * the flat scan, the IVF scan, and the radius scan — the staged
-    * paths are spec-equated to the one-shot keys (r16-advice class). */
+    * riding label) and appends `de`/`dn`. */
   private def dequantized(codes: DataFrame,
                           rg: Array[(Long, Double, Double)]): DataFrame = {
     val mnA = array(rg.map(t => lit(t._2)): _*)
@@ -556,34 +407,61 @@ object Quantize {
       .withColumn("dn", V.l2Norm(col("de")))
   }
 
+  /** The SQ8 tier's one search body, shared by the in-memory keys
+    * ([[knnSq8On]], [[knnIvfSq8On]]) and the staged indexes
+    * ([[querySq8Index]], [[queryIvfSq8Index]]): decode-in-kernel over
+    * `codes` against the collected `rg` ranges, approximate cosine vs
+    * the broadcast query rows `queryPred` selects from the float
+    * corpus, the same-label predicate (when asked) before the decode
+    * cosine, then the candidate stage — lossless per-partition
+    * top-Rerank heaps and the Rerank·Q sliver for TopK, the stateless
+    * approximate-cosine ≥ τ admission for Radius — and the shared
+    * exact rerank ([[AnnSearch.rerank]]).
+    *
+    * `probe` (centroids, nprobe) restricts the scan to each query's
+    * probed cells (`codes` must carry `cell`): the probed set is a
+    * bounded driver collect (Q·nprobe rows), so the cell cut reaches
+    * the codes scan as a STATIC filter — partition-directory pruning
+    * on a staged index, and no decode work for unprobed codes —
+    * before the per-query cell join. */
   private def sq8Scan(codes: DataFrame, rg: Array[(Long, Double, Double)],
-                      vectors: DataFrame, queryPred: Column,
-                      k: Int, rerank: Int): DataFrame = {
-    val decoded = dequantized(codes, rg)
+                      vectors: DataFrame, queryPred: Column, cut: Cut,
+                      sameLabel: Boolean,
+                      probe: Option[(DataFrame, Int)] = None): DataFrame = {
+    import AnnSearch.Label
+    require(!sameLabel || codes.columns.contains(Label),
+      s"staged SQ8 codes carry no '$Label' column — " +
+        s"stage the index with metaCols = Seq(\"$Label\")")
+    val lab = AnnSearch.labelCols(sameLabel)
     val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
+      .select((Seq(col("vec_id"), V.toDouble(col("embedding")).as("e")) ++ lab): _*)
       .withColumn("nrm", V.l2Norm(col("e")))
     val queries = broadcast(vn.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val scored = decoded.join(queries, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("de"), col("qe")), col("dn"), col("qnrm"))
-          .as("cosine"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val cand = broadcast(Similarity.partitionTopK(scored, rerank)
-      .withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= rerank)
-      .select(col("query_id"), col("vec_id")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vn, "vec_id").join(queries, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+      .select((Seq(col("vec_id").as("query_id"), col("e").as("qe"),
+        col("nrm").as("qnrm")) ++ lab.map(_.as("qlabel"))): _*))
+    val scanCols = Seq(col("vec_id"), col("codes")) ++ lab
+    val pairs = probe match {
+      case None =>
+        dequantized(codes.select(scanCols: _*), rg)
+          .join(queries, col("vec_id") =!= col("query_id"))
+      case Some((centroids, nprobe)) =>
+        val probes = Similarity.probeCells(queries, centroids, nprobe)
+        val probedCells = probes.select(col("cell").cast("long"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        dequantized(codes.filter(col("cell").isInCollection(probedCells))
+          .select((scanCols :+ col("cell")): _*), rg)
+          .join(broadcast(probes), "cell")
+          .filter(col("vec_id") =!= col("query_id"))
+    }
+    val scored = (if (sameLabel) pairs.filter(col(Label) === col("qlabel")) else pairs)
+      .select(col("query_id"), col("vec_id"), AnnSearch.cosineTo("de", "dn"))
+    val cand = cut match {
+      case TopK(_) =>
+        AnnSearch.sliver(Similarity.partitionTopK(scored, Pq.Rerank), col("cosine").desc)
+      case Radius(tau) =>
+        scored.filter(col("cosine") >= tau).select(col("query_id"), col("vec_id"))
+    }
+    AnnSearch.rerank(cand, vn, queries, cut, sameLabel)
   }
 
   /** Full DuckDB replay of the SQ8 search: the [[vecQuantizeOracleSql]]
@@ -778,8 +656,7 @@ object Quantize {
     * (FAISS `IndexIVFScalarQuantizer`): the coarse quantizer routes
     * each query to its nprobe nearest cells, and the decode-in-kernel
     * scan pays dequant+cosine work ONLY for codes in probed cells —
-    * [[knnSq8On]]'s compressed scan with [[Pq.knnIvfPqOn]]'s pruning,
-    * completing the serving matrix {flat, IVF} × {float, SQ8, PQ}.
+    * [[knnSq8On]]'s compressed scan with [[Pq.knnIvfPqOn]]'s pruning.
     * Where IVFADC compresses harder (M code ids) and approximates by
     * codebook cell, IVF-SQ8 keeps per-dimension geometry at 1 byte/dim
     * — the middle rung deployments pick when PQ's recall is too lossy
@@ -797,52 +674,21 @@ object Quantize {
     knnIvfSq8On(Tables.embeddings(spark, dir), k)
 
   def knnIvfSq8On(vectors: DataFrame, k: Int = Similarity.K,
-                  rerank: Int = Pq.Rerank,
                   nprobe: Int = Similarity.IvfNProbe): DataFrame = {
-    val rg = quantizerRanges(vectors)
-      .orderBy(col("pos")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    if (rg.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
+    val rg = rangesOf(quantizerRanges(vectors))
+    if (rg.isEmpty) return AnnSearch.empty(vectors, TopK(k), sameLabel = false)
     val (indexed, centroids) =
       Similarity.ivfIndex(vectors, 0, "ivf_centroids_knn_ivf_sq8")
     // the serving frame: cell-tagged int8 codes, staged once — a
     // deployment writes these as cell partition directories so the
-    // probe prunes files; here the staged parquet carries the column
+    // probe prunes files ([[writeIvfSq8Index]]); here the staged
+    // parquet carries the column
     val codes = Scratch.stageReuse(
       quantizeCodesOn(vectors)
         .join(indexed.select(col("vec_id"), col("cell")), "vec_id"),
       "ivf_sq8_codes")
-    val decoded = dequantized(codes, rg)
-    val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val queries = vn.filter(col("vec_id") < Similarity.NQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm"))
-    val probes = Similarity.probeCells(queries, centroids, nprobe)
-    val scored = decoded.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("de"), col("qe")), col("dn"), col("qnrm"))
-          .as("cosine"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val cand = broadcast(Similarity.partitionTopK(scored, rerank)
-      .withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= rerank)
-      .select(col("query_id"), col("vec_id")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vn, "vec_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+    sq8Scan(codes, rg, vectors, col("vec_id") < Similarity.NQueries, TopK(k),
+      sameLabel = false, Some((centroids, nprobe)))
   }
 
   // --- composed IVF-SQ8 durable serving split -------------------------
@@ -903,58 +749,24 @@ object Quantize {
           s"the new codes tree is intact at $tmpPath")
   }
 
-  /** Query the staged composed index: probes off the C-row centroid
-    * artifact (the SAME [[Similarity.probeCells]] frame the one-shot
-    * key ranks with — staged answers are bit-identical, spec), a
-    * STATICALLY cell-pruned decode scan over the persisted codes
+  /** Query the staged composed index: [[sq8Scan]] restricted to the
+    * probes off the C-row centroid artifact (the SAME
+    * [[Similarity.probeCells]] frame the one-shot key ranks with —
+    * staged top-k answers are bit-identical, spec), a STATICALLY
+    * cell-pruned decode scan over the persisted codes
     * (partition-directory pruning — the IO cut the layout exists
-    * for), heap cut, exact rerank against the float corpus. */
+    * for), the cut, exact rerank against the float corpus. `nprobe
+    * <= 0` picks the width from `sameLabel` ([[AnnSearch.probeWidth]]). */
   def queryIvfSq8Index(spark: SparkSession, path: String,
                        vectors: DataFrame, queryIds: Seq[Long],
-                       k: Int = Similarity.K, rerank: Int = Pq.Rerank,
-                       nprobe: Int = Similarity.IvfNProbe): DataFrame = {
-    val rg = IndexManifest.readFrame(spark, path, "ranges")
-      .orderBy(col("pos")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    if (rg.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
-    val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val queries = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val centroids = IndexManifest.readFrame(spark, path, "centroids")
-    val probes = Similarity.probeCells(queries, centroids, nprobe)
-    // bounded driver collect (Q·nprobe rows) so the cell cut reaches
-    // the scan as a STATIC partition filter, not a runtime join
-    val probedCells = probes.select(col("cell").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val pruned = Pq.pinnedCodes(IndexManifest.readFrame(spark, path, "codes"))
-      .filter(col("cell").isInCollection(probedCells))
-      .select(col("vec_id"), col("cell"), col("codes"))
-    val decoded = dequantized(pruned, rg)
-    val scored = decoded.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("de"), col("qe")), col("dn"), col("qnrm"))
-          .as("cosine"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val cand = broadcast(Similarity.partitionTopK(scored, rerank)
-      .withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= rerank)
-      .select(col("query_id"), col("vec_id")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vn, "vec_id").join(queries, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+                       cut: Cut = TopK(Similarity.K), sameLabel: Boolean = false,
+                       nprobe: Int = 0): DataFrame = {
+    val rg = rangesOf(IndexManifest.readFrame(spark, path, "ranges"))
+    if (rg.isEmpty) return AnnSearch.empty(vectors, cut, sameLabel)
+    sq8Scan(Pq.pinnedCodes(IndexManifest.readFrame(spark, path, "codes")), rg,
+      vectors, col("vec_id").isInCollection(queryIds), cut, sameLabel,
+      Some((IndexManifest.readFrame(spark, path, "centroids"),
+        AnnSearch.probeWidth(nprobe, sameLabel))))
   }
 
   /** The composed append's arithmetic alone — assign (frozen

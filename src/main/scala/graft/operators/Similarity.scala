@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.{VectorOps => V}
+import graft.operators.AnnSearch.{Cut, Radius, TopK}
 
 /** Similarity search over the `embeddings` table (ANN tier of the
   * training-data pipeline).
@@ -48,14 +49,8 @@ object Similarity {
   def knnBruteforce(spark: SparkSession, dir: String, k: Int = K): DataFrame =
     knnBruteforceOn(Tables.embeddings(spark, dir), k)
 
-  def knnBruteforceOn(vectors: DataFrame, k: Int = K): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    partitionTopK(scoredFrame(vectors), k)
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-  }
+  def knnBruteforceOn(vectors: DataFrame, k: Int = K): DataFrame =
+    AnnSearch.finish(partitionTopK(scoredFrame(vectors), k), TopK(k), sameLabel = false)
 
   val knnBruteforceOracleSql: String =
     s"""WITH v AS (
@@ -323,7 +318,7 @@ object Similarity {
     * recall degrades gracefully toward nprobe/C on unclustered data,
     * which is the expected tradeoff, not a defect. */
   def knnIvf(spark: SparkSession, dir: String, k: Int = K): DataFrame =
-    knnIvfOn(Tables.embeddings(spark, dir), k)
+    knnIvfOn(Tables.embeddings(spark, dir), TopK(k))
 
   /** Shared IVF build: norm prep, deterministic seeds, ONE Lloyd
     * refinement, and the nearest-cell assignment of every corpus
@@ -396,30 +391,41 @@ object Similarity {
     (assignNearest(v, staged, "cell", "ce", "cn"), staged)
   }
 
-  /** `cells <= 0` (the default) auto-sizes the coarse quantizer from
-    * the corpus count ([[autoCells]], C=⌈√(n/2)⌉) — the fixed 16-cell
-    * knob left ~n/16-vector cells at 2M vectors, so a probe pruned
-    * almost nothing (the measured 1000× build-dominated wall). Pass an
-    * explicit positive C to pin it. */
-  def knnIvfOn(vectors: DataFrame, k: Int = K, cells: Int = 0,
-               nprobe: Int = IvfNProbe): DataFrame = {
+  /** The one-shot float IVF search behind `knn_ivf`, `knn_radius`,
+    * `knn_filtered` and `knn_radius_filtered`: build the index, then
+    * [[ivfSearch]] with the given cut. Under `sameLabel` the corpus
+    * label joins onto the postings (index-build cost, once). `cells <=
+    * 0` (the default) auto-sizes the coarse quantizer from the corpus
+    * count ([[autoCells]], C=⌈√(n/2)⌉) — the fixed 16-cell knob left
+    * ~n/16-vector cells at 2M vectors, so a probe pruned almost
+    * nothing (the measured 1000× build-dominated wall). Pass an
+    * explicit positive C to pin it. `nprobe <= 0` picks the width from
+    * `sameLabel` ([[AnnSearch.probeWidth]]). */
+  def knnIvfOn(vectors: DataFrame, cut: Cut = TopK(K), sameLabel: Boolean = false,
+               cells: Int = 0, nprobe: Int = 0): DataFrame = {
     val (indexed, centroids) = ivfIndex(vectors, cells, "ivf_centroids_knn_ivf")
+    val postings =
+      if (sameLabel) indexed.join(vectors.select(col("vec_id"), col(AnnSearch.Label)), "vec_id")
+      else indexed
+    ivfSearch(postings, centroids, cut, sameLabel, nprobe)
+  }
 
-    // --- search: per query, the nprobe nearest cells, then exact
-    //     rerank over only those cells' postings. Query vectors come
-    //     off the indexed frame (it already carries e and nrm) — no
-    //     second toDouble+norm pass over the corpus
-    val probes = probeFrame(indexed, centroids, nprobe)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    indexed.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+  /** The float tier's one search body, shared by the one-shot keys
+    * and the staged index: per query the probed cells' postings, the
+    * same-label predicate (when asked) evaluated in the scan before
+    * the dot product, exact cosines, then the cut. Query vectors come
+    * off the postings frame (it already carries e and nrm) — no second
+    * toDouble+norm pass over the corpus. */
+  private def ivfSearch(postings: DataFrame, centroids: DataFrame, cut: Cut,
+                        sameLabel: Boolean, nprobe: Int): DataFrame = {
+    val lab = AnnSearch.labelCols(sameLabel)
+    val probes = probeFrame(postings, centroids, AnnSearch.probeWidth(nprobe, sameLabel),
+      if (sameLabel) Seq(AnnSearch.Label) else Nil)
+    val notSelf = col("vec_id") =!= col("query_id")
+    AnnSearch.finish(postings.join(probes, "cell")
+      .filter(if (sameLabel) notSelf && col(AnnSearch.Label) === col("qlabel") else notSelf)
+      .select((Seq(col("query_id"), col("vec_id")) ++ lab :+
+        AnnSearch.cosineTo("e", "nrm")): _*), cut, sameLabel)
   }
 
   /** The probe frame every IVF query path shares: per query
@@ -434,26 +440,28 @@ object Similarity {
   private[operators] def probeFrame(indexed: DataFrame, centroids: DataFrame,
                                     nprobe: Int = IvfNProbe,
                                     extraCols: Seq[String] = Nil): DataFrame =
-    probeCells(
+    broadcast(probeCells(
       indexed.filter(col("vec_id") < NQueries)
         .select((Seq(col("vec_id").as("query_id"), col("e").as("qe"),
           col("nrm").as("qnrm")) ++ extraCols.map(c => col(c).as(s"q$c"))): _*),
-      centroids, nprobe)
+      centroids, nprobe))
 
   /** [[probeFrame]]'s core over an explicit queries frame (query_id,
-    * qe, qnrm, extras…) — also consumed by [[Quantize.knnIvfSq8On]],
-    * whose query frame is built before its index. Output = the input
-    * queries columns plus each survivor's probed `cell`. */
+    * qe, qnrm, extras…) — also consumed by the SQ8 tier's probed scan,
+    * whose query frame comes off the float corpus. Output = the input
+    * queries columns plus each survivor's probed `cell` (Q·nprobe
+    * rows). Unhinted, so a caller can also collect it; the join sites
+    * mark it broadcast. */
   private[operators] def probeCells(queries: DataFrame, centroids: DataFrame,
                                     nprobe: Int): DataFrame = {
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("cdist").desc, col("cell"))
-    broadcast(queries.join(broadcast(centroids))
+    queries.join(broadcast(centroids))
       .withColumn("cdist", V.cosineWithNorms(
         V.dot(col("qe"), col("ce")), col("qnrm"), col("cn")))
       .withColumn("rk", row_number().over(probeW))
       .filter(col("rk") <= nprobe)
-      .drop("ce", "cn", "cdist", "rk"))
+      .drop("ce", "cn", "cdist", "rk")
   }
 
   /** Assign each vector to its nearest (max-cosine) centroid: ONE
@@ -805,15 +813,8 @@ object Similarity {
     val probes = assignTopCells(indexed, centroids, nprobe)
     val cand = indexed.join(probes, "cell")
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    partitionTopK(cand, k)
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+      .select(col("query_id"), col("vec_id"), AnnSearch.cosineTo("e", "nrm"))
+    AnnSearch.finish(partitionTopK(cand, k), TopK(k), sameLabel = false)
   }
 
   /** Lossless per-partition top-k cut over (query_id, vec_id, cosine)
@@ -825,22 +826,11 @@ object Similarity {
   private[operators] def partitionTopK(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    // worst-first ordering: max under this = lowest cosine, then
-    // largest vec_id — the element a better candidate evicts.
-    val worstFirst: Ordering[(Long, Long, Double)] =
-      Ordering.by(t => (-t._3, t._2))
+    // the heaps keep the LOWEST (score, vec_id): score = −cosine, and
+    // negation is exact, so the cosines come back bit-identical
     scored.as[(Long, Long, Double)]
-      .mapPartitions { it =>
-        val heaps = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long, Double)]]
-        it.foreach { s =>
-          val h = heaps.getOrElseUpdate(s._1,
-            new scala.collection.mutable.PriorityQueue[(Long, Long, Double)]()(worstFirst))
-          if (h.size < k) h.enqueue(s)
-          else if (worstFirst.compare(s, h.head) < 0) { h.dequeue(); h.enqueue(s) }
-        }
-        heaps.valuesIterator.flatMap(_.iterator)
-      }
+      .mapPartitions(it => AnnSearch.lowestPerQuery(
+        it.map(s => (s._1, s._2, -s._3)), k).map(s => (s._1, s._2, -s._3)))
       .toDF("query_id", "vec_id", "cosine")
   }
 
@@ -1274,9 +1264,7 @@ object Similarity {
           // corpus is an EMPTY RESULT, not a NoSuchElementException
           // from the dim probe (r4 advice). Schema matches the main
           // path (vec_id's native type, int rank, double cosine).
-          return vectors.limit(0).select(
-            col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-            lit(0).as("rank"), lit(0.0).as("cosine"))
+          return AnnSearch.empty(vectors, TopK(k), sameLabel = false)
       }
     val v = vectors
       .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
@@ -1292,15 +1280,7 @@ object Similarity {
       .distinct()
     val queries = broadcast(v.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(v, "vec_id").join(queries, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+    AnnSearch.rerank(cand, v, queries, TopK(k), sameLabel = false)
   }
 
   /** Cosine radius for the range-search key (`knn_radius`): chosen
@@ -1332,18 +1312,7 @@ object Similarity {
     * is missed — the recall lever is nprobe, measured by
     * `knn_recall_report`. */
   def knnRadius(spark: SparkSession, dir: String): DataFrame =
-    knnRadiusOn(Tables.embeddings(spark, dir))
-
-  def knnRadiusOn(vectors: DataFrame, tau: Double = RadiusTau): DataFrame = {
-    val (indexed, centroids) = ivfIndex(vectors, 0, "ivf_centroids_knn_radius")
-    val probes = probeFrame(indexed, centroids)
-    indexed.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
-  }
+    knnIvfOn(Tables.embeddings(spark, dir), Radius(RadiusTau))
 
   /** Oracle: the shared IVF replay + the same probe CTE as
     * `knn_ivf`, tail swapped from a ranked window to the radius
@@ -1395,35 +1364,14 @@ object Similarity {
   val FilteredNProbe = 2 * IvfNProbe
 
   def knnFiltered(spark: SparkSession, dir: String, k: Int = K): DataFrame =
-    knnFilteredOn(Tables.embeddings(spark, dir), k)
-
-  def knnFilteredOn(vectors: DataFrame, k: Int = K,
-                    nprobe: Int = FilteredNProbe): DataFrame = {
-    val (indexed, centroids) = ivfIndex(vectors, 0, "ivf_centroids_knn_filtered")
-    val labels = vectors.select(col("vec_id"), col("label"))
-    // postings carry the filter column — built once with the index
-    val postings = indexed.join(labels, "vec_id")
-    val probes = probeFrame(postings, centroids, nprobe, Seq("label"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    postings.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id") &&
-        col("label") === col("qlabel"))
-      .select(col("query_id"), col("vec_id"), col("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label"), col("rank"), col("cosine"))
-  }
+    knnIvfOn(Tables.embeddings(spark, dir), TopK(k), sameLabel = true)
 
   /** Key `knn_radius_filtered`: RANGE search under a metadata
     * predicate — every corpus vector sharing the query's `label`
     * within cosine ≥ τ, composing the two query-type deltas that
-    * already exist separately: [[knnRadiusOn]]'s stateless admission
+    * already exist separately: [[knnRadius]]'s stateless admission
     * (no window, no heap — strictly cheaper than top-k) and
-    * [[knnFilteredOn]]'s scan-time predicate at the
+    * [[knnFiltered]]'s scan-time predicate at the
     * [[FilteredNProbe]] widening. This is the dedup-audit query shape
     * ("everything at least this similar FROM THE SAME SOURCE"): a
     * post-hoc label filter on an unfiltered radius result would be
@@ -1431,26 +1379,11 @@ object Similarity {
     * full unfiltered candidate stream; the scan-time predicate drops
     * a candidate for one comparison before the dot product.
     *
-    * 100 TB: the [[knnFilteredOn]] cost shape exactly — the label
+    * 100 TB: the [[knnFiltered]] cost shape exactly — the label
     * join onto the postings is build cost, the query path is the
     * radius plan plus one broadcast column and one predicate. */
   def knnRadiusFiltered(spark: SparkSession, dir: String): DataFrame =
-    knnRadiusFilteredOn(Tables.embeddings(spark, dir))
-
-  def knnRadiusFilteredOn(vectors: DataFrame, tau: Double = RadiusTau,
-                          nprobe: Int = FilteredNProbe): DataFrame = {
-    val (indexed, centroids) =
-      ivfIndex(vectors, 0, "ivf_centroids_knn_radius_filtered")
-    val postings = indexed.join(vectors.select(col("vec_id"), col("label")), "vec_id")
-    val probes = probeFrame(postings, centroids, nprobe, Seq("label"))
-    postings.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id") &&
-        col("label") === col("qlabel"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
-  }
+    knnIvfOn(Tables.embeddings(spark, dir), Radius(RadiusTau), sameLabel = true)
 
   /** Oracle: the radius replay with the `lab` CTE joined on both
     * sides (the knn_filtered deltas) — qlabel rides the widened
@@ -1484,9 +1417,8 @@ object Similarity {
   /** Stage the FLOAT IVF index durably: `centroids` (C rows) plus the
     * cell-PARTITIONED float postings (vec_id, e, nrm, cell) — the
     * uncompressed tier's serving artifact, completing the
-    * build-once/query-many split across the whole serving matrix
-    * (PQ: [[Pq.writeIvfPqIndex]]; SQ8: [[Quantize.writeSq8Index]];
-    * this was the one column whose index was rebuilt per query run).
+    * build-once/query-many split across every tier
+    * (PQ: [[Pq.writeIvfPqIndex]]; SQ8: [[Quantize.writeSq8Index]]).
     * Postings live in cell=<id> partition directories, so a probe
     * prunes whole directories and the append/erasure lifecycle
     * touches only its cells (the PQ layout, float payload). The codes
@@ -1502,7 +1434,8 @@ object Similarity {
     * stage", never "index lost". */
   /** Metadata columns of a vectors frame — everything that isn't the
     * key or the payload rides the posting list (the metadata-in-index
-    * layout [[knnFilteredOn]] queries), made DURABLE here. */
+    * layout a same-label [[queryIvfIndex]] filters on), made DURABLE
+    * here. */
   private def metaCols(vectors: DataFrame): Seq[String] =
     vectors.columns.toSeq.filterNot(c => c == "vec_id" || c == "embedding")
 
@@ -1542,89 +1475,20 @@ object Similarity {
      IndexManifest.readFrame(spark, path, "centroids"))
   }
 
-  /** Query a STAGED float index: the [[knnIvfOn]] probe + rank tail
-    * over the persisted frames, nothing rebuilt — answers
-    * bit-identically to the one-shot key (spec-asserted; the float
-    * payload round-trips parquet exactly). */
-  def queryIvfIndex(spark: SparkSession, path: String, k: Int = K): DataFrame = {
-    val (indexed, centroids) = readIvfIndex(spark, path)
-    val probes = probeFrame(indexed, centroids)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    indexed.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-  }
-
-  /** RADIUS query over the staged float index — [[knnRadiusOn]]'s
-    * probe + stateless-filter tail over the persisted frames, nothing
-    * rebuilt; answers bit-identically to the one-shot key (spec). */
-  def queryIvfIndexRadius(spark: SparkSession, path: String,
-                          tau: Double = RadiusTau): DataFrame = {
-    val (indexed, centroids) = readIvfIndex(spark, path)
-    val probes = probeFrame(indexed, centroids)
-    indexed.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
-  }
-
-  /** FILTERED top-k over the staged float index: the metadata column
-    * persisted in the postings ([[writeIvfIndex]]) is the filter —
-    * [[knnFilteredOn]]'s scan-time predicate served durably; answers
-    * bit-identically to the one-shot key (spec). `filterCol` names
-    * the posting metadata column (default `label`). */
-  def queryIvfIndexFiltered(spark: SparkSession, path: String, k: Int = K,
-                            nprobe: Int = FilteredNProbe,
-                            filterCol: String = "label"): DataFrame = {
-    val (indexed, centroids) = readIvfIndex(spark, path)
-    require(indexed.columns.contains(filterCol),
-      s"staged postings carry no '$filterCol' column — " +
-        s"stage the index from a vectors frame that has it")
-    val probes = probeFrame(indexed, centroids, nprobe, Seq(filterCol))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    indexed.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id") &&
-        col(filterCol) === col(s"q$filterCol"))
-      .select(col("query_id"), col("vec_id"), col(filterCol).as("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label"), col("rank"), col("cosine"))
-  }
-
-  /** FILTERED RADIUS over the staged float index — the fourth query
-    * type served off the one staged artifact ([[knnRadiusFilteredOn]]
-    * durably: scan-time label predicate + stateless τ admission at
-    * the widened probe cut); answers bit-identically to the one-shot
-    * key (spec). */
-  def queryIvfIndexRadiusFiltered(spark: SparkSession, path: String,
-                                  tau: Double = RadiusTau,
-                                  nprobe: Int = FilteredNProbe,
-                                  filterCol: String = "label"): DataFrame = {
-    val (indexed, centroids) = readIvfIndex(spark, path)
-    require(indexed.columns.contains(filterCol),
-      s"staged postings carry no '$filterCol' column — " +
-        s"stage the index from a vectors frame that has it")
-    val probes = probeFrame(indexed, centroids, nprobe, Seq(filterCol))
-    indexed.join(probes, "cell")
-      .filter(col("vec_id") =!= col("query_id") &&
-        col(filterCol) === col(s"q$filterCol"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col(filterCol).as("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
+  /** Query a STAGED float index: [[ivfSearch]] over the persisted
+    * frames, nothing rebuilt — answers bit-identically to the one-shot
+    * [[knnIvfOn]] with the same cut (spec-asserted; the float payload
+    * round-trips parquet exactly). A same-label search filters on the
+    * `label` column the postings carry ([[writeIvfIndex]] persists the
+    * vectors' metadata). `nprobe <= 0` picks the width from
+    * `sameLabel` ([[AnnSearch.probeWidth]]). */
+  def queryIvfIndex(spark: SparkSession, path: String, cut: Cut = TopK(K),
+                    sameLabel: Boolean = false, nprobe: Int = 0): DataFrame = {
+    val (postings, centroids) = readIvfIndex(spark, path)
+    require(!sameLabel || postings.columns.contains(AnnSearch.Label),
+      s"staged postings carry no '${AnnSearch.Label}' column — " +
+        "stage the index from a vectors frame that has it")
+    ivfSearch(postings, centroids, cut, sameLabel, nprobe)
   }
 
   /** The float append's arithmetic alone — the batch assigned against
@@ -1739,7 +1603,7 @@ object Similarity {
       .map(r => (r.getInt(0), r.getDouble(3))).sortBy(_._1)
     val nprobe = curve.find(_._2 >= targetRecall).map(_._1)
       .getOrElse(curve.last._1)
-    (nprobe, knnIvfOn(vectors, k, 0, nprobe))
+    (nprobe, knnIvfOn(vectors, TopK(k), nprobe = nprobe))
   }
 
   /** Per-cell health report of a STAGED float index (r16 verdict

@@ -1,0 +1,146 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+import graft.operators.{Opq, Pq, Quantize, Similarity}
+import graft.operators.AnnSearch.{Cut, Radius, TopK}
+
+/** One contract for every ANN tier's search body (float IVF, PQ, OPQ,
+  * SQ8, IVF-SQ8): the same (cut, sameLabel) pair means the same thing
+  * on each. The fixture is the spec corpus with null labels planted on
+  * one query and on half the rows sharing another query's label. */
+class AnnSearchSpec extends SparkSpecBase {
+
+  private val qids = 0L until Similarity.NQueries.toLong
+  private val radius = Radius(Similarity.RadiusTau)
+  private val nullQuery = 1L
+
+  private lazy val fixture: DataFrame = {
+    val v = graft.sources.Tables.embeddings(spark, sfDir)
+    val q0Label = v.filter(col("vec_id") === 0L).select(col("label")).head().getInt(0)
+    v.withColumn("label",
+      when(col("vec_id") === nullQuery ||
+        (col("label") === q0Label && col("vec_id") % 2 === 0 && col("vec_id") > 0L),
+        lit(null).cast("int"))
+        .otherwise(col("label")))
+  }
+
+  /** vec_id → label (None = null) over the fixture. */
+  private lazy val labelOf: Map[Long, Option[Int]] = fixture
+    .select(col("vec_id"), col("label")).collect()
+    .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+
+  /** A tier's staged search as (cut, sameLabel, nprobe) => answers,
+    * plus the same search over empty input. */
+  private case class Tier(search: (Cut, Boolean, Int) => DataFrame,
+                          onEmpty: (Cut, Boolean) => DataFrame)
+
+  private val tierNames = Seq("float IVF", "PQ", "OPQ", "SQ8", "IVF-SQ8")
+
+  private lazy val tiers: Map[String, Tier] = {
+    val v = fixture
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    val floatDir = tmp("ann_float")
+    Similarity.writeIvfIndex(v, floatDir)
+    val pqDir = tmp("ann_pq")
+    Pq.writeIvfPqIndex(Pq.buildIvfPq(v, metaCols = Seq("label")), pqDir)
+    val pq = Pq.readIvfPqIndex(spark, pqDir)
+    val opqDir = tmp("ann_opq")
+    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(v, metaCols = Seq("label")), opqDir)
+    val opq = Opq.readIvfOpqIndex(spark, opqDir)
+    val sq8Dir = tmp("ann_sq8")
+    Quantize.writeSq8Index(v, sq8Dir, metaCols = Seq("label"))
+    val ivfSq8Dir = tmp("ann_ivfsq8")
+    Quantize.writeIvfSq8Index(v, ivfSq8Dir, metaCols = Seq("label"))
+    Map(
+      // the staged float index serves the fixed query set (vec_id <
+      // NQueries); its empty input is an empty corpus
+      "float IVF" -> Tier(
+        (c, l, np) => Similarity.queryIvfIndex(spark, floatDir, c, l, np),
+        (c, l) => Similarity.knnIvfOn(v.limit(0), c, l)),
+      "PQ" -> Tier(
+        (c, l, np) => Pq.queryIvfPqIndex(pq, v, qids, c, l, np),
+        (c, l) => Pq.queryIvfPqIndex(pq, v, Nil, c, l)),
+      "OPQ" -> Tier(
+        (c, l, np) => Opq.queryIvfOpq(opq, v, qids, c, l, np),
+        (c, l) => Opq.queryIvfOpq(opq, v, Nil, c, l)),
+      // the flat tier scans every code: no probe width to set
+      "SQ8" -> Tier(
+        (c, l, _) => Quantize.querySq8Index(spark, sq8Dir, v, qids, c, l),
+        (c, l) => Quantize.querySq8Index(spark, sq8Dir, v, Nil, c, l)),
+      "IVF-SQ8" -> Tier(
+        (c, l, np) => Quantize.queryIvfSq8Index(spark, ivfSq8Dir, v, qids, c, l, np),
+        (c, l) => Quantize.queryIvfSq8Index(spark, ivfSq8Dir, v, Nil, c, l)))
+  }
+
+  private def expectedSchema(cut: Cut, sameLabel: Boolean): Seq[(String, DataType)] =
+    Seq("query_id" -> LongType, "neighbor_id" -> LongType) ++
+      (if (sameLabel) Seq("label" -> IntegerType) else Nil) ++
+      (cut match { case TopK(_) => Seq("rank" -> IntegerType); case _ => Nil }) :+
+      ("cosine" -> DoubleType)
+
+  private def schemaOf(df: DataFrame): Seq[(String, DataType)] =
+    df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+
+  tierNames.foreach { name =>
+    test(s"$name: null labels match nothing — a null-labelled query gets no " +
+        "neighbors and a null-labelled row is no query's neighbor") {
+      val tier = tiers(name)
+      Seq(TopK(Similarity.K), radius).foreach { cut =>
+        val res = tier.search(cut, true, 0).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        assert(res.exists(_._1 == 0L),
+          s"$name $cut: the query whose label survives lost its answers")
+        assert(!res.exists(_._1 == nullQuery),
+          s"$name $cut: the null-labelled query got neighbors")
+        res.foreach { case (q, n, lab) =>
+          assert(labelOf(n).nonEmpty, s"$name $cut: null-labelled row $n answered query $q")
+          assert(labelOf(q).contains(lab) && labelOf(n).contains(lab),
+            s"$name $cut: neighbor $n of query $q crossed the label filter")
+        }
+      }
+    }
+  }
+
+  test("every tier: same-label radius equals radius filtered to the query's " +
+      "label at equal nprobe, the default width only adds pairs, and every " +
+      "(cut, sameLabel) pair keeps its schema on empty input") {
+    val w = Similarity.IvfNProbe
+    tierNames.foreach { name =>
+      val tier = tiers(name)
+      // at the SAME nprobe the label predicate's placement (inside the
+      // scan vs after it) changes cost, never the admitted set — radius
+      // has no slots to under-fill
+      val scanTime = tier.search(radius, true, w).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
+      // post-hoc filter with SQL semantics: a null label equals nothing
+      val postHoc = tier.search(radius, false, w).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .filter { case (q, n, _) => labelOf(q).nonEmpty && labelOf(q) == labelOf(n) }
+        .toSet
+      assert(scanTime.nonEmpty, s"$name: the same-label radius answered nothing")
+      assert(scanTime == postHoc,
+        s"$name: scan-time label predicate diverged from radius ∩ same label")
+      // the served default (widened on the probed tiers) is well-formed
+      // and a superset of the narrow answer: probes only add cells
+      val served = tier.search(radius, true, 0).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+      served.foreach { case (q, n, lab, cos) =>
+        assert(labelOf(q).contains(lab) && labelOf(n).contains(lab),
+          s"$name: neighbor $n of query $q crossed the label filter")
+        assert(cos >= Similarity.RadiusTau, s"$name: ($q, $n) below tau")
+      }
+      assert(scanTime.map(t => (t._1, t._2)).subsetOf(served.map(t => (t._1, t._2)).toSet),
+        s"$name: widening the probe cut lost an admitted pair")
+      for (cut <- Seq(TopK(Similarity.K), radius); sameLabel <- Seq(false, true)) {
+        val want = expectedSchema(cut, sameLabel)
+        val empty = tier.onEmpty(cut, sameLabel)
+        assert(schemaOf(empty) == want, s"$name $cut sameLabel=$sameLabel: empty schema")
+        assert(empty.count() == 0L, s"$name $cut sameLabel=$sameLabel: empty input answered")
+        assert(schemaOf(tier.search(cut, sameLabel, 0)) == want,
+          s"$name $cut sameLabel=$sameLabel: answer schema")
+      }
+    }
+  }
+}

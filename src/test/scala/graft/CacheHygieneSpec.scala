@@ -32,4 +32,12 @@ class CacheHygieneSpec extends SparkSpecBase {
   test("agg_heavy_hitters releases its CMS term-count cache") {
     assertNoNewPins("agg_heavy_hitters")
   }
+
+  test("graph_pagerank's hybrid tier releases its persisted edge index") {
+    // edge threshold 0 skips the driver tier; the default node
+    // threshold keeps the fixture on the node-bounded hybrid tier
+    spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
+    try assertNoNewPins("graph_pagerank")
+    finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
+  }
 }

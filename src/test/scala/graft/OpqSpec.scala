@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Opq, Pq, Similarity}
+import graft.operators.AnnSearch.Radius
 
 class OpqSpec extends SparkSpecBase {
 
@@ -120,7 +121,7 @@ class OpqSpec extends SparkSpecBase {
     assert(canonK(Opq.queryIvfOpq(staged, vectors, qids)).sameElements(served))
     // radius off the SAME staged artifact: precision 1.0 by
     // construction (exact verify), admitted set ⊆ the exact radius set
-    val rad = Opq.queryIvfOpqRadius(staged, vectors, qids).collect()
+    val rad = Opq.queryIvfOpq(staged, vectors, qids, cut = Radius(Similarity.RadiusTau)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(rad.forall(_._3 >= Similarity.RadiusTau),
       "a radius answer below tau escaped the exact verify")
@@ -154,9 +155,9 @@ class OpqSpec extends SparkSpecBase {
     val staged = Opq.readIvfOpqIndex(spark, dir)
     assert(staged.pq.codes.columns.contains("label"),
       "the staged codes must carry the riding metadata column")
-    val served = canonF(Opq.queryIvfOpqFiltered(staged, vectors, qids))
-    assert(served.sameElements(canonF(Opq.queryIvfOpqFiltered(
-      Opq.buildIvfOpq(vectors, metaCols = Seq("label")), vectors, qids))),
+    val served = canonF(Opq.queryIvfOpq(staged, vectors, qids, sameLabel = true))
+    assert(served.sameElements(canonF(Opq.queryIvfOpq(
+      Opq.buildIvfOpq(vectors, metaCols = Seq("label")), vectors, qids, sameLabel = true))),
       "staged filtered serving diverged from the in-memory build")
     val qLab = vectors.filter(col("vec_id") < Similarity.NQueries)
       .select(col("vec_id"), col("label")).collect()
@@ -169,44 +170,6 @@ class OpqSpec extends SparkSpecBase {
     assert(canonK(Opq.queryIvfOpq(staged, vectors, qids))
       .sameElements(canonK(Opq.queryIvfOpq(Opq.buildIvfOpq(vectors), vectors, qids))),
       "metadata riding the codes changed the unfiltered answers")
-  }
-
-  test("opq filtered radius: scan-time predicate == post-filter at equal " +
-      "probe width (radius has no slot semantics); label/tau coherence") {
-    import org.apache.spark.sql.functions.col
-    val vectors = graft.sources.Tables.embeddings(spark, sfDir)
-    val qids = 0L until Similarity.NQueries.toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfopq_fr").toString
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(vectors, metaCols = Seq("label")), dir)
-    val staged = Opq.readIvfOpqIndex(spark, dir)
-    def canonFR(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2))
-    val labById = vectors.select(col("vec_id"), col("label")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    // at the SAME nprobe, evaluating the label inside the rotated ADC
-    // scan must equal post-filtering the unfiltered radius answer —
-    // the predicate placement changes cost, never the admitted set
-    val w = Similarity.IvfNProbe
-    val scanTime = canonFR(
-      Opq.queryIvfOpqRadiusFiltered(staged, vectors, qids, nprobe = w))
-    val postHoc = Opq.queryIvfOpqRadius(staged, vectors, qids, nprobe = w)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter { case (q, n, _) => labById(n) == labById(q) }
-      .map { case (q, n, c) => (q, n, labById(q), c) }
-      .sortBy(t => (t._1, t._2))
-    assert(scanTime.sameElements(postHoc),
-      "scan-time label predicate diverged from the post-filter identity")
-    // the served default (widened probes) is well-formed: same-label,
-    // and a superset of the narrow-probe answer (probes only add)
-    val served = canonFR(Opq.queryIvfOpqRadiusFiltered(staged, vectors, qids))
-    served.foreach { case (q, n, lab, cos) =>
-      assert(lab == labById(q) && labById(n) == labById(q))
-      assert(cos >= Similarity.RadiusTau)
-    }
-    assert(scanTime.map(t => (t._1, t._2)).toSet
-      .subsetOf(served.map(t => (t._1, t._2)).toSet),
-      "widening the probe cut lost an admitted pair")
   }
 
   test("opq index CRUD: append == build(all, trainOn = base) bit-for-bit; " +

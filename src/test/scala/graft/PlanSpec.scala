@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{Dedup, Etl}
+import graft.operators.{Dedup, Etl, Similarity}
+import graft.operators.AnnSearch.Radius
 import graft.queries.Analytics
 
 /** Physical-plan assertions: the properties that keep these operators
@@ -826,12 +827,12 @@ class PlanSpec extends SparkSpecBase {
       assert(!p.contains("CartesianProduct"), s"$what: cartesian in:\n$p")
     }
     assertPruned(Pq.queryIvfPq(staged, vectors, qids), "queryIvfPq")
-    assertPruned(Pq.queryIvfPqFiltered(staged, vectors, qids),
-      "queryIvfPqFiltered")
+    assertPruned(Pq.queryIvfPqIndex(staged, vectors, qids, sameLabel = true),
+      "queryIvfPqIndex sameLabel")
     // the radius tier prunes the same way and never ranks: admission
     // is a stateless threshold filter, not a window
-    val radius = Pq.queryIvfPqRadius(staged, vectors, qids)
-    assertPruned(radius, "queryIvfPqRadius")
+    val radius = Pq.queryIvfPqIndex(staged, vectors, qids, cut = Radius(Similarity.RadiusTau))
+    assertPruned(radius, "queryIvfPqIndex Radius")
     val pr = plan(radius)
     assert("Window \\[".r.findAllIn(pr).isEmpty,
       s"the radius tail must not rank anything:\n$pr")
@@ -884,10 +885,10 @@ class PlanSpec extends SparkSpecBase {
       assert(!p.contains("CartesianProduct"), s"$what: cartesian in:\n$p")
     }
     assertPruned(Opq.queryIvfOpq(staged, vectors, qids), "queryIvfOpq")
-    assertPruned(Opq.queryIvfOpqFiltered(staged, vectors, qids),
-      "queryIvfOpqFiltered")
-    val radius = Opq.queryIvfOpqRadius(staged, vectors, qids)
-    assertPruned(radius, "queryIvfOpqRadius")
+    assertPruned(Opq.queryIvfOpq(staged, vectors, qids, sameLabel = true),
+      "queryIvfOpq sameLabel")
+    val radius = Opq.queryIvfOpq(staged, vectors, qids, cut = Radius(Similarity.RadiusTau))
+    assertPruned(radius, "queryIvfOpq Radius")
     assert("Window \\[".r.findAllIn(plan(radius)).isEmpty,
       "the radius tail must not rank anything")
   }
@@ -909,7 +910,8 @@ class PlanSpec extends SparkSpecBase {
     assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"),
       s"decode fell out of codegen:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
-    val pr = plan(Quantize.querySq8IndexRadius(spark, dir, vectors, qids))
+    val pr = plan(Quantize.querySq8Index(spark, dir, vectors, qids,
+      Radius(Similarity.RadiusTau)))
     assert(pr.contains("ReadSchema: struct<vec_id:bigint,codes:array<int>>"),
       s"radius codes scan reads more than (vec_id, codes):\n$pr")
     assert("Window \\[".r.findAllIn(pr).isEmpty,
@@ -918,7 +920,7 @@ class PlanSpec extends SparkSpecBase {
     // metadata column — the erasure-bucket layout column still pruned
     val fdir = java.nio.file.Files.createTempDirectory("graft_sq8_fplan").toString
     Quantize.writeSq8Index(vectors, fdir, metaCols = Seq("label"))
-    val pf = plan(Quantize.querySq8IndexFiltered(spark, fdir, vectors, qids))
+    val pf = plan(Quantize.querySq8Index(spark, fdir, vectors, qids, sameLabel = true))
     assert(pf.contains("ReadSchema: struct<vec_id:bigint,codes:array<int>,label:int>"),
       s"filtered codes scan reads more than (vec_id, codes, label):\n$pf")
     assert(!pf.contains("BatchEvalPython") && !pf.contains("ScalaUDF"),

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{IndexManifest, Quantize}
+import graft.operators.{IndexManifest, Quantize, Similarity}
+import graft.operators.AnnSearch.Radius
 
 class QuantizeSpec extends SparkSpecBase {
 
@@ -411,7 +412,8 @@ class QuantizeSpec extends SparkSpecBase {
     val qids = 0L until operators.Similarity.NQueries.toLong
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    val res = canon(Quantize.querySq8IndexRadius(spark, path, vectors, qids))
+    val res = canon(Quantize.querySq8Index(spark, path, vectors, qids,
+      Radius(Similarity.RadiusTau)))
     val tau = operators.Similarity.RadiusTau
     // precision 1.0 by construction: every emitted cosine clears τ
     assert(res.forall(_._3 >= tau))
@@ -425,7 +427,8 @@ class QuantizeSpec extends SparkSpecBase {
     assert(got.subsetOf(exact), "a sub-τ pair leaked through the exact verify")
     assert(got.size.toDouble >= 0.9 * exact.size,
       s"sq8-radius recall ${got.size.toDouble / exact.size} below 0.9")
-    assert(canon(Quantize.querySq8IndexRadius(spark, path, vectors, qids))
+    assert(canon(Quantize.querySq8Index(spark, path, vectors, qids,
+      Radius(Similarity.RadiusTau)))
       .sameElements(res), "radius answers must be bit-deterministic")
   }
 
@@ -440,7 +443,7 @@ class QuantizeSpec extends SparkSpecBase {
     Quantize.writeSq8Index(vectors, dir, metaCols = Seq("label"))
     assert(spark.read.parquet(s"$dir/codes").columns.contains("label"),
       "the staged codes must carry the riding metadata column")
-    val served = canonF(Quantize.querySq8IndexFiltered(spark, dir, vectors, qids))
+    val served = canonF(Quantize.querySq8Index(spark, dir, vectors, qids, sameLabel = true))
     // every neighbor shares its query's label; ranks are 1..K dense
     val qLab = vectors.filter(col("vec_id") < operators.Similarity.NQueries)
       .select(col("vec_id"), col("label")).collect()
@@ -451,7 +454,7 @@ class QuantizeSpec extends SparkSpecBase {
       assert(rs.map(_._4).sorted.sameElements(1 to rs.length))
     }
     // determinism: a second staged query answers bit-identically
-    assert(canonF(Quantize.querySq8IndexFiltered(spark, dir, vectors, qids))
+    assert(canonF(Quantize.querySq8Index(spark, dir, vectors, qids, sameLabel = true))
       .sameElements(served), "filtered answers must be bit-deterministic")
     // the riding column leaves the UNFILTERED query of the same index
     // unchanged (its scan projects it out)
@@ -486,7 +489,7 @@ class QuantizeSpec extends SparkSpecBase {
     assert(Quantize.deleteFromSq8IndexAtomic(spark, root2, erase) > 0L)
     assert(IndexManifest.readFrame(spark, dir2, "codes").columns.contains("label"),
       "delete's survivor rewrite stripped the metadata column")
-    val post = canonF(Quantize.querySq8IndexFiltered(spark, dir2, vectors, qids))
+    val post = canonF(Quantize.querySq8Index(spark, dir2, vectors, qids, sameLabel = true))
     assert(post.forall(t => !erase.contains(t._2)),
       "an erased id survived in the filtered answers")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import graft.operators.AnnSearch.Radius
 
 class SimilaritySpec extends SparkSpecBase {
 
@@ -609,24 +610,27 @@ class SimilaritySpec extends SparkSpecBase {
     // ALL THREE query types serve from the one staged artifact: the
     // radius set and the metadata-filtered top-k answer bit-identically
     // to their one-shot keys (label rides the persisted postings)
-    val servedRadius = Similarity.queryIvfIndexRadius(spark, dir).collect()
+    val servedRadius = Similarity.queryIvfIndex(spark, dir, Radius(Similarity.RadiusTau))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    val oneShotRadius = Similarity.knnRadiusOn(vectors).collect()
+    val oneShotRadius = Similarity.knnIvfOn(vectors, cut = Radius(Similarity.RadiusTau)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
     assert(servedRadius.sameElements(oneShotRadius),
       "staged radius query diverged from the one-shot key")
     def canonF(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._4))
-    assert(canonF(Similarity.queryIvfIndexFiltered(spark, dir))
-      .sameElements(canonF(Similarity.knnFilteredOn(vectors))),
+    assert(canonF(Similarity.queryIvfIndex(spark, dir, sameLabel = true))
+      .sameElements(canonF(Similarity.knnIvfOn(vectors, sameLabel = true))),
       "staged filtered query diverged from the one-shot key")
     // ...and the FOURTH type, filtered radius, off the same artifact
     def canonFR(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
-    val servedFR = canonFR(Similarity.queryIvfIndexRadiusFiltered(spark, dir))
-    assert(servedFR.sameElements(canonFR(Similarity.knnRadiusFilteredOn(vectors))),
+    val servedFR = canonFR(Similarity.queryIvfIndex(spark, dir, Radius(Similarity.RadiusTau),
+      sameLabel = true))
+    assert(servedFR.sameElements(canonFR(Similarity.knnIvfOn(vectors,
+      Radius(Similarity.RadiusTau), sameLabel = true))),
       "staged filtered-radius query diverged from the one-shot key")
     // well-formed: every admitted pair shares the query's label and
     // genuinely clears tau (exact driver-side recompute)
@@ -777,7 +781,7 @@ class SimilaritySpec extends SparkSpecBase {
       "deterministic") {
     import org.apache.spark.sql.functions.col
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
-    val res = Similarity.knnRadiusOn(vectors).collect()
+    val res = Similarity.knnIvfOn(vectors, cut = Radius(Similarity.RadiusTau)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // plain-Scala exact radius set (sequential-fold dot, the V.dot order)
     val e = vectors.collect()
@@ -803,7 +807,7 @@ class SimilaritySpec extends SparkSpecBase {
     // 0.85 at sf0.01; the bar leaves margin for corpus regen)
     val recall = res.count(t => exact.contains((t._1, t._2))).toDouble / exact.size
     assert(recall >= 0.7, s"radius recall $recall below the probe-cut bar")
-    val again = Similarity.knnRadiusOn(vectors).collect()
+    val again = Similarity.knnIvfOn(vectors, cut = Radius(Similarity.RadiusTau)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(res.sorted.sameElements(again.sorted), "radius set must be deterministic")
   }
@@ -811,7 +815,7 @@ class SimilaritySpec extends SparkSpecBase {
   test("knn_filtered: every neighbor shares the query's label, ranks " +
       "well-formed, recall tracks the widened probe, deterministic") {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
-    val res = Similarity.knnFilteredOn(vectors).collect()
+    val res = Similarity.knnIvfOn(vectors, sameLabel = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4)))
     val rows = vectors.collect()
       .map(r => r.getLong(0) -> (r.getSeq[Float](1).toArray.map(_.toDouble), r.getInt(2)))
@@ -843,7 +847,7 @@ class SimilaritySpec extends SparkSpecBase {
     }.toSet
     val recall = res.count(t => exact.contains((t._1, t._2))).toDouble / exact.size
     assert(recall >= 0.7, s"filtered recall $recall below the widened-probe bar")
-    val again = Similarity.knnFilteredOn(vectors).collect()
+    val again = Similarity.knnIvfOn(vectors, sameLabel = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4)))
     assert(res.sortBy(t => (t._1, t._4)).sameElements(again.sortBy(t => (t._1, t._4))),
       "filtered top-k must be deterministic")
@@ -903,11 +907,11 @@ class SimilaritySpec extends SparkSpecBase {
     val staged = Pq.readIvfPqIndex(spark, dir)
     assert(staged.codes.columns.contains("label"),
       "the staged codes must carry the riding metadata column")
-    val served = canonF(Pq.queryIvfPqFiltered(staged, vectors, qids))
+    val served = canonF(Pq.queryIvfPqIndex(staged, vectors, qids, sameLabel = true))
     // staged round-trip == in-memory build: the codes parquet
     // round-trips longs + ints exactly
-    assert(served.sameElements(canonF(Pq.queryIvfPqFiltered(
-      Pq.buildIvfPq(vectors, metaCols = Seq("label")), vectors, qids))),
+    assert(served.sameElements(canonF(Pq.queryIvfPqIndex(
+      Pq.buildIvfPq(vectors, metaCols = Seq("label")), vectors, qids, sameLabel = true))),
       "staged filtered serving diverged from the in-memory build")
     // every neighbor shares its query's label; ranks are 1..K dense
     val qLab = vectors.filter(col("vec_id") < Similarity.NQueries)
@@ -936,10 +940,11 @@ class SimilaritySpec extends SparkSpecBase {
     Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(base, metaCols = Seq("label")), root2)
     def live2 = graft.operators.IndexManifest.currentOrFail(spark, root2)
     assert(Pq.appendIvfPqIndexAtomic(spark, root2, rest) == rest.count())
-    assert(canonF(Pq.queryIvfPqFiltered(Pq.readIvfPqIndex(spark, live2), vectors, qids))
-      .sameElements(canonF(Pq.queryIvfPqFiltered(
+    assert(canonF(Pq.queryIvfPqIndex(Pq.readIvfPqIndex(spark, live2), vectors, qids,
+      sameLabel = true))
+      .sameElements(canonF(Pq.queryIvfPqIndex(
         Pq.buildIvfPq(vectors, trainOn = base, metaCols = Seq("label")),
-        vectors, qids))),
+        vectors, qids, sameLabel = true))),
       "append lost or diverged the riding metadata")
     // a batch MISSING the index's metadata columns fails loudly
     val bare = rest.select(col("vec_id"), col("embedding"))
@@ -953,7 +958,7 @@ class SimilaritySpec extends SparkSpecBase {
     val afterDelete = Pq.readIvfPqIndex(spark, live2)
     assert(afterDelete.codes.columns.contains("label"),
       "delete's survivor rewrite stripped the metadata column")
-    val post = canonF(Pq.queryIvfPqFiltered(afterDelete, vectors, qids))
+    val post = canonF(Pq.queryIvfPqIndex(afterDelete, vectors, qids, sameLabel = true))
     assert(post.forall(t => !erase.contains(t._2)),
       "an erased id survived in the filtered answers")
   }
@@ -969,7 +974,7 @@ class SimilaritySpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_rad").toString
     Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors), dir)
     val staged = Pq.readIvfPqIndex(spark, dir)
-    val res = canon(Pq.queryIvfPqRadius(staged, vectors, qids))
+    val res = canon(Pq.queryIvfPqIndex(staged, vectors, qids, cut = Radius(Similarity.RadiusTau)))
     val tau = Similarity.RadiusTau
     // precision 1.0 by construction: every emitted cosine clears τ on
     // the TRUE vectors (the exact verify), never the ADC approximation
@@ -987,9 +992,10 @@ class SimilaritySpec extends SparkSpecBase {
     assert(got.size.toDouble >= 0.5 * exact.size,
       s"ivfpq-radius recall ${got.size.toDouble / exact.size} below 0.5")
     // staged round-trip == in-memory build, and bit-deterministic
-    assert(canon(Pq.queryIvfPqRadius(Pq.buildIvfPq(vectors), vectors, qids))
+    assert(canon(Pq.queryIvfPqIndex(Pq.buildIvfPq(vectors), vectors, qids,
+      Radius(Similarity.RadiusTau)))
       .sameElements(res), "staged radius serving diverged from in-memory")
-    assert(canon(Pq.queryIvfPqRadius(staged, vectors, qids))
+    assert(canon(Pq.queryIvfPqIndex(staged, vectors, qids, cut = Radius(Similarity.RadiusTau)))
       .sameElements(res), "radius answers must be bit-deterministic")
   }
 
@@ -1064,10 +1070,10 @@ class SimilaritySpec extends SparkSpecBase {
       .collect()
     assert(post.map(_.getLong(1)).sum == vectors.count())
     // all three query types keep serving off the rebalanced artifact
-    assert(Similarity.queryIvfIndexRadius(spark, dir).count() ==
-      Similarity.knnRadiusOn(vectors).count())
-    assert(Similarity.queryIvfIndexFiltered(spark, dir).count() ==
-      Similarity.knnFilteredOn(vectors).count())
+    assert(Similarity.queryIvfIndex(spark, dir, cut = Radius(Similarity.RadiusTau)).count() ==
+      Similarity.knnIvfOn(vectors, cut = Radius(Similarity.RadiusTau)).count())
+    assert(Similarity.queryIvfIndex(spark, dir, sameLabel = true).count() ==
+      Similarity.knnIvfOn(vectors, sameLabel = true).count())
   }
 
   test("index manifest: restage is atomic — readers see wholly old or " +
