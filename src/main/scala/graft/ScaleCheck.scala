@@ -612,7 +612,7 @@ object ScaleCheck {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val idxDir = operators.Scratch.diskDir("graft_scale_sq8")
       val tb0 = System.nanoTime()
-      operators.Quantize.writeSq8Index(emb, idxDir)
+      operators.AnnIndex.write(operators.Quantize.buildSq8(emb), idxDir)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_sq8_query")
       val tq0 = System.nanoTime()
@@ -631,7 +631,7 @@ object ScaleCheck {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val idxDir = operators.Scratch.diskDir("graft_scale_ivfpq_filt")
       val tb0 = System.nanoTime()
-      operators.Pq.writeIvfPqIndex(
+      operators.AnnIndex.write(
         operators.Pq.buildIvfPq(emb, metaCols = Seq("label")), idxDir)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val staged = operators.Pq.readIvfPqIndex(spark, idxDir)
@@ -647,7 +647,7 @@ object ScaleCheck {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val root = operators.Scratch.diskDir("graft_scale_sq8rad")
       val tb0 = System.nanoTime()
-      val idxDir = operators.Quantize.stageSq8IndexVersion(emb, root)
+      val idxDir = operators.AnnIndex.stage(operators.Quantize.buildSq8(emb), root)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_sq8_radius")
       val tq0 = System.nanoTime()
@@ -661,7 +661,8 @@ object ScaleCheck {
       val maxId = emb.agg(max("vec_id")).collect()(0).getLong(0)
       val eraseIds = (0L until 50L).map(i => i * (maxId / 50L))
       val td0 = System.nanoTime()
-      val deleted = operators.Quantize.deleteFromSq8IndexAtomic(spark, root, eraseIds)
+      val deleted = operators.AnnIndex.erase(spark, root,
+        operators.AnnIndex.Sq8, eraseIds)
       val deleteSec = (System.nanoTime() - td0) / 1e9
       s""""sq8_radius_query":{"sec":$qSec,"rows":${acc.value},"build_sec":$buildSec},""" +
         s""""sq8_delete":{"sec":$deleteSec,"rows":$deleted}"""
@@ -671,19 +672,20 @@ object ScaleCheck {
       val root = operators.Scratch.diskDir("graft_scale_ivf_stats")
       val cut = emb.agg(max("vec_id")).collect()(0).getLong(0) / 2
       val tb0 = System.nanoTime()
-      operators.Similarity.stageIvfIndexVersion(
-        emb.filter(col("vec_id") <= cut), root)
-      operators.Similarity.appendIvfIndexAtomic(spark, root,
+      operators.AnnIndex.stage(operators.Similarity.buildIvf(
+        emb.filter(col("vec_id") <= cut)), root)
+      operators.AnnIndex.append(spark, root, operators.AnnIndex.FloatIvf,
         emb.filter(col("vec_id") > cut))
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_ivf_stats")
       val ts0 = System.nanoTime()
-      operators.Similarity.ivfIndexStats(spark,
-        operators.IndexManifest.currentOrFail(spark, root), cut + 1)
+      operators.AnnIndex.stats(spark, operators.IndexManifest.currentOrFail(spark, root),
+        operators.AnnIndex.FloatIvf, cut + 1)
         .queryExecution.toRdd.foreachPartition(it => acc.add(it.size.toLong))
       val statsSec = (System.nanoTime() - ts0) / 1e9
       val tr0 = System.nanoTime()
-      operators.Similarity.rebalanceIvfIndexVersioned(spark, root)
+      operators.AnnIndex.retrain(spark, root, operators.AnnIndex.FloatIvf)(
+        (v, _) => operators.Similarity.buildIvf(v))
       val rebalSec = (System.nanoTime() - tr0) / 1e9
       s""""ivf_stats":{"sec":$statsSec,"rows":${acc.value},"build_sec":$buildSec},""" +
         s""""ivf_rebalance":{"sec":$rebalSec,"rows":${acc.value}}"""
@@ -695,7 +697,7 @@ object ScaleCheck {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val idxDir = operators.Scratch.diskDir("graft_scale_ivfpq_rad")
       val tb0 = System.nanoTime()
-      operators.Pq.writeIvfPqIndex(operators.Pq.buildIvfPq(emb), idxDir)
+      operators.AnnIndex.write(operators.Pq.buildIvfPq(emb), idxDir)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val staged = operators.Pq.readIvfPqIndex(spark, idxDir)
       val acc = spark.sparkContext.longAccumulator("rows_pq_radius")
@@ -711,7 +713,8 @@ object ScaleCheck {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val idxDir = operators.Scratch.diskDir("graft_scale_sq8filt")
       val tb0 = System.nanoTime()
-      operators.Quantize.writeSq8Index(emb, idxDir, metaCols = Seq("label"))
+      operators.AnnIndex.write(
+        operators.Quantize.buildSq8(emb, metaCols = Seq("label")), idxDir)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_sq8_filtered")
       val tq0 = System.nanoTime()
@@ -730,10 +733,11 @@ object ScaleCheck {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val root = operators.Scratch.diskDir("graft_scale_ivfopq")
       val tb0 = System.nanoTime()
-      val idxDir = operators.Opq.stageIvfOpqIndexVersion(
+      val idxDir = operators.AnnIndex.stage(
         operators.Opq.buildIvfOpq(emb, metaCols = Seq("label")), root)
       val buildSec = (System.nanoTime() - tb0) / 1e9
-      val staged = operators.Opq.readIvfOpqIndex(spark, idxDir)
+      val staged = operators.Opq.IvfOpqIndex(
+        operators.AnnIndex.read(spark, idxDir, operators.AnnIndex.IvfOpq))
       val acc = spark.sparkContext.longAccumulator("rows_opq_filtered")
       val tq0 = System.nanoTime()
       operators.Opq.queryIvfOpq(staged, emb,
@@ -755,11 +759,13 @@ object ScaleCheck {
         }).as("embedding"),
         pmod(col("id"), lit(7L)).cast("int").as("label"))
       val ta0 = System.nanoTime()
-      val appended = operators.Opq.appendIvfOpqIndexAtomic(spark, root, newVecs)
+      val appended = operators.AnnIndex.append(spark, root,
+        operators.AnnIndex.IvfOpq, newVecs)
       val appendSec = (System.nanoTime() - ta0) / 1e9
       val eraseIds = (0L until 50L).map(i => i * (maxId / 50L))
       val td0 = System.nanoTime()
-      val deleted = operators.Opq.deleteFromIvfOpqIndexAtomic(spark, root, eraseIds)
+      val deleted = operators.AnnIndex.erase(spark, root,
+        operators.AnnIndex.IvfOpq, eraseIds)
       val deleteSec = (System.nanoTime() - td0) / 1e9
       s""""ivf_opq_filtered_query":{"sec":$qSec,"rows":${acc.value},"build_sec":$buildSec},""" +
         s""""ivf_opq_append":{"sec":$appendSec,"rows":$appended},""" +
@@ -771,7 +777,7 @@ object ScaleCheck {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val idxDir = operators.Scratch.diskDir("graft_scale_ivfsq8")
       val tb0 = System.nanoTime()
-      operators.Quantize.writeIvfSq8Index(emb, idxDir)
+      operators.AnnIndex.write(operators.Quantize.buildIvfSq8(emb), idxDir)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val acc = spark.sparkContext.longAccumulator("rows_ivf_sq8_query")
       val tq0 = System.nanoTime()
@@ -797,8 +803,8 @@ object ScaleCheck {
       val maxId = emb.agg(max("vec_id")).collect()(0).getLong(0)
       val cut = maxId / 2
       val tb0 = System.nanoTime()
-      operators.Similarity.stageIvfIndexVersion(
-        emb.filter(col("vec_id") <= cut), root)
+      operators.AnnIndex.stage(operators.Similarity.buildIvf(
+        emb.filter(col("vec_id") <= cut)), root)
       val buildSec = (System.nanoTime() - tb0) / 1e9
       def fpOf(rows: Array[org.apache.spark.sql.Row]): Int =
         rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
@@ -834,14 +840,14 @@ object ScaleCheck {
       reader.start()
       phase.set(1)
       val ta0 = System.nanoTime()
-      val appended = operators.Similarity.appendIvfIndexAtomic(spark, root,
+      val appended = operators.AnnIndex.append(spark, root, operators.AnnIndex.FloatIvf,
         emb.filter(col("vec_id") > cut), keep = 3)
       val appendSec = (System.nanoTime() - ta0) / 1e9
       val fpB = fpOf(operators.Similarity.queryIvfIndex(spark,
         operators.IndexManifest.currentOrFail(spark, root)).collect())
       val eraseIds = (0L until 50L).map(i => i * (maxId / 50L))
       val td0 = System.nanoTime()
-      val deleted = operators.Similarity.deleteFromIvfIndexAtomic(spark, root,
+      val deleted = operators.AnnIndex.erase(spark, root, operators.AnnIndex.FloatIvf,
         eraseIds, keep = 3)
       val deleteSec = (System.nanoTime() - td0) / 1e9
       val fpC = fpOf(operators.Similarity.queryIvfIndex(spark,
@@ -937,12 +943,12 @@ object ScaleCheck {
       val batch = emb.filter(col("vec_id") > cut)
       val eraseIds = (0L until 50L).map(i => i * (cut / 50L))
       val root = operators.Scratch.diskDir("graft_scale_refs_cost")
-      operators.Similarity.stageIvfIndexVersion(base, root)
+      operators.AnnIndex.stage(operators.Similarity.buildIvf(base), root)
       val t0 = System.nanoTime()
-      val nRows = operators.Similarity.appendIvfIndexAtomic(spark, root, batch)
+      val nRows = operators.AnnIndex.append(spark, root, operators.AnnIndex.FloatIvf, batch)
       val ra = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      operators.Similarity.deleteFromIvfIndexAtomic(spark, root, eraseIds)
+      operators.AnnIndex.erase(spark, root, operators.AnnIndex.FloatIvf, eraseIds)
       val rd = (System.nanoTime() - t1) / 1e9
       // The IVF corpus shape above cannot show the O(touched) bill:
       // ~32 cells and a hash-spread batch mean every publish touches
@@ -996,8 +1002,8 @@ object ScaleCheck {
       val batch = emb.filter(col("vec_id") > cut)
         .select(col("vec_id"), col("embedding"))
       val n1 = graft.streaming.Streams.annIngestMicroBatchAtomic(batch, root)
-      Pq.rebalanceIvfPqIndexVersioned(spark, root,
-        emb.select(col("vec_id"), col("embedding")))
+      operators.AnnIndex.retrain(spark, root, operators.AnnIndex.IvfPq,
+        emb.select(col("vec_id"), col("embedding")))((v, m) => Pq.buildIvfPq(v, metaCols = m))
       val t0 = System.nanoTime()
       val nReplay = graft.streaming.Streams.annIngestMicroBatchAtomic(batch, root)
       val sec = (System.nanoTime() - t0) / 1e9

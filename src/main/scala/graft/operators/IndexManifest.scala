@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions.col
 /** Atomic publish/resolve for multi-frame index artifacts — the
   * manifest layer the staged ANN indexes' own docstrings call for
   * (r16 verdict item 2). A staged index is several parquet frames
-  * (float tier: centroids + postings, [[Similarity.writeIvfIndex]];
-  * PQ tier: centroids + codebooks + codes, [[Pq.writeIvfPqIndex]];
-  * SQ8: ranges + codes, [[Quantize.writeSq8Index]]) and each writer
-  * commits its frames separately, so RESTAGING a live index has a
-  * window where a reader pairs new centroids with old postings — and
-  * a crash inside that window leaves the mix on disk.
+  * (float tier: centroids + postings; PQ tier: centroids + codebooks +
+  * codes; SQ8: ranges + codes — see [[AnnIndex]]) and
+  * [[AnnIndex.write]] commits them separately, so RESTAGING a live
+  * index in place has a window where a reader pairs new centroids
+  * with old postings — and a crash inside that window leaves the mix
+  * on disk.
   *
   * The manifest closes both holes with the classic versioned-layout +
   * pointer-flip design (the ALSO-serving-reads shape of a Delta/
@@ -621,7 +621,7 @@ object IndexManifest {
     * retrain that proceeds anyway would let the next flush land rows
     * at stale cells with stale codebooks: silent recall loss now,
     * silent duplicates on the next replay. So this is the ONLY
-    * publish the tier rebalancers use, and it refuses — loudly,
+    * publish [[AnnIndex.retrain]] uses, and it refuses — loudly,
     * before claiming anything — while pending rows exist; the
     * operator drains them first (`Streams.annIngestFlushPending`).
     * The published version carries the advanced retrain epoch
@@ -850,8 +850,8 @@ object IndexManifest {
     * — never some of the batch's cells and not others; a crash
     * anywhere leaves the pointer on the old version, whose files the
     * orphaned partial never touched.
-    * `batch` must carry exactly the tree's columns (tier wrappers
-    * enforce the metadata/dimension discipline before calling).
+    * `batch` must carry exactly the tree's columns ([[AnnIndex.encode]]
+    * enforces the metadata/dimension discipline before calling).
     * Returns appended rows. Cost: O(touched-partition rewrite) data
     * IO — the batch's own locality under the frozen assignment keeps
     * that request-sized — plus one manifest write.
@@ -862,9 +862,9 @@ object IndexManifest {
     * retries fail loudly — rows are never silently dropped.
     *
     * `requireEpoch`: the retrain epoch the batch's rows were ENCODED
-    * under (tier wrappers and the streaming sink read it off the live
-    * version they encode against) — the publish then refuses, loudly
-    * and before claiming anything, if a retrain republished the index
+    * under ([[AnnIndex.append]] and the streaming sink read it off the
+    * live version they encode against) — the publish then refuses,
+    * loudly and before claiming anything, if a retrain republished the index
     * mid-flight ([[publishFrom]]'s `requiredBaseEpoch`). Without it a
     * batch encoded against the old assignment function could land on
     * the retrained tree: rows at stale cells with stale codes, silent

@@ -296,14 +296,25 @@ object Opq {
   // perm-placed, so row `pos` IS rotated coordinate `pos`). The query
   // and append kernels are the PQ tier's, reached through the
   // rotation-aware seams ([[Pq.queryIvfPqIndex]]'s `basis`,
-  // [[Pq.encodeAgainst]]): one definition per kernel, no copies.
+  // [[AnnIndex.IvfOpq]]'s encode): one definition per kernel, no copies.
   // --------------------------------------------------------------------
 
   /** A staged rotated-IVFADC index: the [[Pq.IvfPqIndex]] frames (the
     * codebooks and codes live in ROTATED r-dim space; the centroids
     * route in original space) plus the bounded r×d rotation basis that
-    * maps a query into code space. */
-  case class IvfOpqIndex(basis: DataFrame, pq: Pq.IvfPqIndex)
+    * maps a query into code space. Staged and maintained as
+    * [[AnnIndex.IvfOpq]]. */
+  case class IvfOpqIndex(basis: DataFrame, pq: Pq.IvfPqIndex) extends AnnIndex.Frames {
+    def tier: AnnIndex.Tier = AnnIndex.IvfOpq
+    def artifacts: Seq[DataFrame] = Seq(basis, pq.centroids, pq.codebooks)
+    def tree: DataFrame = pq.codes
+  }
+
+  object IvfOpqIndex {
+    /** The rotated view of staged OPQ frames ([[AnnIndex.read]]). */
+    def apply(f: AnnIndex.Frames): IvfOpqIndex =
+      IvfOpqIndex(f.artifact("basis"), Pq.IvfPqIndex(f))
+  }
 
   /** Build the staged rotated index: the SAME deterministic pipeline
     * the one-shot [[knnIvfOpqOn]] runs — shared `ivfIndex` coarse
@@ -315,8 +326,8 @@ object Opq {
     * `trainOn` (null = `vectors`): the TRAINING corpus for centroids,
     * basis, and codebooks, independent of the INDEXED corpus —
     * `buildIvfOpq(a ∪ b, trainOn = a)` is bit-identical to
-    * `appendIvfOpqIndexAtomic` after `buildIvfOpq(a)` (spec-asserted),
-    * the same incremental-lifecycle equation as the PQ tier's.
+    * [[AnnIndex.append]] of `b` after `buildIvfOpq(a)` (spec-asserted):
+    * the indexed corpus is encoded exactly as an append batch is.
     * `metaCols`: metadata columns riding the code postings (the
     * metadata-in-index recipe), enabling a same-label [[queryIvfOpq]]. */
   def buildIvfOpq(vectors: DataFrame, cells: Int = 0,
@@ -329,10 +340,10 @@ object Opq {
     val subW = r / Pq.M
     // empty-corpus contract (the buildIvfPq discipline): fail with a
     // diagnosis here, not an empty-max deep in the eigen procedure
-    if (train.select(size(col("embedding")).as("__d"))
-        .filter(col("__d").isNotNull).limit(1).collect().isEmpty)
-      throw new IllegalArgumentException(
-        "cannot build a rotated (OPQ) index over an empty corpus")
+    val d = train.select(size(col("embedding")).as("__d"))
+      .filter(col("__d").isNotNull).limit(1).collect().headOption
+      .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
+        "cannot build a rotated (OPQ) index over an empty corpus"))
     val (indexed, centroids) =
       Similarity.ivfIndex(train, cells, "ivf_centroids_build_ivf_opq")
     val comps = Similarity.principalComponents(
@@ -350,116 +361,21 @@ object Opq {
       col("cell"))
     val unTrain = indexed.select(col("vec_id"),
       transform(col("e"), x => x / col("nrm")).as("u"), col("cell"))
-    // the INDEXED corpus: when training is decoupled, assign every
-    // corpus vector to the trained centroids (the append arithmetic)
-    val unAll =
-      if (trainOn == null) unTrain
-      else {
-        val vAll = vectors
-          .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-          .withColumn("nrm", V.l2Norm(col("e")))
-        Similarity.assignNearest(vAll, centroids, "cell", "ce", "cn")
-          .select(col("vec_id"),
-            transform(col("e"), x => x / col("nrm")).as("u"), col("cell"))
-      }
     // collect the trained codebooks ONCE and hand both the encode
     // closure and the index frame the same bounded value
     // ([[Pq.codebooksFrame]] — staging no longer re-runs training)
     val centsByM = Pq.centsByMFrom(Pq.trainCodebooks(rotFrame(unTrain), subW))
-    val codes = Pq.encodeCodes(rotFrame(unAll), centsByM, subW)
-    val withMeta =
-      if (metaCols.isEmpty) codes
-      else codes.join(
-        vectors.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
     val spark = vectors.sparkSession
     import spark.implicits._
     val basisDf = basisArr.toSeq.zipWithIndex
       .map { case (b, i) => (i + 1, b.toSeq) }.toDF("pos", "b")
+    val codebooks = Pq.codebooksFrame(spark, centsByM)
+    val codes =
+      if (trainOn == null) Pq.encodeCodes(rotFrame(unTrain), centsByM, subW)
+      else AnnIndex.IvfOpq.encode(Map("basis" -> basisDf, "centroids" -> centroids,
+        "codebooks" -> codebooks), vectors, d)
     IvfOpqIndex(basisDf,
-      Pq.IvfPqIndex(centroids, Pq.codebooksFrame(spark, centsByM), withMeta))
-  }
-
-  /** Stage the rotated index durably: the basis (one r-row file — a
-    * driver-bounded artifact) plus the PQ writer's centroids/codebooks
-    * overwrite and tmp+rename codes swap. Shares the PQ writer's
-    * multi-frame staging residual — and the basis makes a torn
-    * restage SEMANTIC (a reader pairing a new rotation with old codes
-    * scores candidates in the wrong space), so a LIVE restage must go
-    * through [[stageIvfOpqIndexVersion]] (manifest publish + one
-    * atomic pointer flip — r17 advice); this raw form is for fresh
-    * directories only. */
-  def writeIvfOpqIndex(index: IvfOpqIndex, path: String): Unit = {
-    index.basis.coalesce(1).write.mode("overwrite").parquet(s"$path/basis")
-    Pq.writeIvfPqIndex(index.pq, path)
-  }
-
-  /** Stage a built rotated index as version 1 of a manifest-rooted
-    * index — the atomic-lifecycle entry point, and THE live-restage
-    * path (wholly-old or wholly-new basis+codes for every reader).
-    * Returns the published version directory. */
-  def stageIvfOpqIndexVersion(index: IvfOpqIndex, root: String): String =
-    IndexManifest.publish(index.pq.codes.sparkSession, root)(
-      dir => writeIvfOpqIndex(index, dir))
-
-  /** Durable ATOMIC rotated append: assign (original space) + rotate
-    * (staged basis) + encode (staged codebooks) the new vectors —
-    * [[Pq.encodeAgainst]] through the rotation seam — landed through
-    * [[IndexManifest.appendRowsAtomic]]: basis/centroids/codebooks and
-    * untouched cells are inherited by reference, the batch's cells
-    * rewrite, one pointer flip. O(touched cells), never O(index);
-    * metadata and dimension discipline are the PQ path's own. */
-  def appendIvfOpqIndexAtomic(spark: SparkSession, root: String,
-                              newVectors: DataFrame, keep: Int = 2): Long = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    val index = readIvfOpqIndex(spark, live)
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      Pq.encodeAgainst(index.pq, newVectors, 0, index.basis), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
-  }
-
-  /** ATOMIC rotated erasure — the codes tree is the PQ layout
-    * byte-for-byte (rotation only changed what the codes MEAN, not
-    * where they live), so this IS [[Pq.deleteFromIvfPqIndexAtomic]]:
-    * affected cell directories rewritten, basis/centroids/codebooks
-    * (trained aggregates) stand. */
-  def deleteFromIvfOpqIndexAtomic(spark: SparkSession, root: String,
-                                  vecIds: Seq[Long], keep: Int = 2): Long =
-    Pq.deleteFromIvfPqIndexAtomic(spark, root, vecIds, keep)
-
-  def readIvfOpqIndex(spark: SparkSession, path: String): IvfOpqIndex =
-    IvfOpqIndex(IndexManifest.readFrame(spark, path, "basis"),
-      Pq.readIvfPqIndex(spark, path))
-
-  /** Per-cell health report of a staged rotated index — the codes
-    * tree is the PQ layout, the coarse assignment is the SAME
-    * original-space quantizer, so the report IS the shared aggregate
-    * ([[Similarity.cellStatsOf]]; r18 verdict item 4). */
-  def ivfOpqIndexStats(spark: SparkSession, path: String,
-                       appendedFrom: Long): DataFrame = {
-    val index = readIvfOpqIndex(spark, path)
-    Similarity.cellStatsOf(index.pq.codes, index.pq.centroids, appendedFrom)
-  }
-
-  /** Retrain a drifted MANIFEST-rooted rotated index: re-run
-    * [[buildIvfOpq]] — fresh centroids, fresh PCA basis, fresh
-    * codebooks — over `corpus` (the declared float source; rotated
-    * codes are lossy), publish as a new version, retire behind
-    * `keep`. Same fence as every retrain: drain streaming appenders
-    * first (the assignment AND the rotation move). Post-rebalance
-    * answers equal a fresh [[buildIvfOpq]] over the corpus
-    * bit-for-bit (deterministic pipeline; spec-asserted). */
-  def rebalanceIvfOpqIndexVersioned(spark: SparkSession, root: String,
-                                    corpus: DataFrame,
-                                    keep: Int = 2): String = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    val meta = IndexManifest.readFrame(spark, live, "codes").columns.toSeq
-      .filterNot(Set("vec_id", "cell", "codes"))
-    val rebuilt = buildIvfOpq(corpus, metaCols = meta)
-    // publishRetrain = the ENFORCED fence (r19 verdict item 1): refuses
-    // while un-flushed streaming-pending rows exist, and advances the
-    // retrain epoch the ingest sink's claim check is keyed by
-    IndexManifest.publishRetrain(spark, root, keep)(
-      dir => writeIvfOpqIndex(rebuilt, dir))
+      Pq.IvfPqIndex(centroids, codebooks, AnnIndex.ride(codes, vectors, metaCols)))
   }
 
   /** Query the staged rotated index — [[Pq.queryIvfPqIndex]] with the
@@ -483,8 +399,8 @@ object Opq {
   def knnIvfOpqFiltered(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("ivf_opq_filtered_idx")
-    writeIvfOpqIndex(buildIvfOpq(vectors, metaCols = Seq("label")), path)
-    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
+    AnnIndex.write(buildIvfOpq(vectors, metaCols = Seq("label")), path)
+    queryIvfOpq(IvfOpqIndex(AnnIndex.read(spark, path, AnnIndex.IvfOpq)), vectors,
       0L until Similarity.NQueries.toLong, sameLabel = true)
   }
 
@@ -496,8 +412,8 @@ object Opq {
   def knnIvfOpqRadiusFiltered(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("ivf_opq_radius_filt_idx")
-    writeIvfOpqIndex(buildIvfOpq(vectors, metaCols = Seq("label")), path)
-    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
+    AnnIndex.write(buildIvfOpq(vectors, metaCols = Seq("label")), path)
+    queryIvfOpq(IvfOpqIndex(AnnIndex.read(spark, path, AnnIndex.IvfOpq)), vectors,
       0L until Similarity.NQueries.toLong, Radius(Similarity.RadiusTau), sameLabel = true)
   }
 
@@ -506,8 +422,8 @@ object Opq {
   def knnIvfOpqRadius(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("ivf_opq_radius_idx")
-    writeIvfOpqIndex(buildIvfOpq(vectors), path)
-    queryIvfOpq(readIvfOpqIndex(spark, path), vectors,
+    AnnIndex.write(buildIvfOpq(vectors), path)
+    queryIvfOpq(IvfOpqIndex(AnnIndex.read(spark, path, AnnIndex.IvfOpq)), vectors,
       0L until Similarity.NQueries.toLong, Radius(Similarity.RadiusTau))
   }
 
@@ -515,40 +431,33 @@ object Opq {
     * incremental-maintenance lifecycle END TO END through the
     * cross-engine gate — day-0 build on the base half (centroids,
     * basis, AND codebooks all trained on `vec_id <= max/2`), staged as
-    * a manifest version, [[appendIvfOpqIndexAtomic]] of the rest
-    * (assign original-space + rotate through the staged basis + encode
-    * against the frozen codebooks), then the staged query path over
-    * the full corpus off the live version. The oracle replays
-    * `buildIvfOpq(all, trainOn = base)` — bit-identical to the append
-    * by the OpqSpec CRUD equation — so a hash match checks the rotated
-    * append arithmetic itself cross-engine. */
+    * a manifest version, the ATOMIC append of the rest
+    * ([[AnnIndex.halfAppended]] — assign in the original space, rotate
+    * through the staged basis, encode against the frozen codebooks),
+    * then the staged query path over the full corpus off the live
+    * version. The oracle replays `buildIvfOpq(all, trainOn = base)` —
+    * bit-identical to the append by the OpqSpec CRUD equation — so a
+    * hash match checks the rotated append arithmetic itself
+    * cross-engine. */
   def knnIvfOpqAppend(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val cut = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
-    val base = vectors.filter(col("vec_id") <= cut)
-    val rest = vectors.filter(col("vec_id") > cut)
-    val root = Scratch.reuseDir("ivf_opq_append_key_root")
-    stageIvfOpqIndexVersion(buildIvfOpq(base), root)
-    appendIvfOpqIndexAtomic(spark, root, rest)
-    queryIvfOpq(readIvfOpqIndex(spark, IndexManifest.currentOrFail(spark, root)),
+    val (live, _) = AnnIndex.halfAppended(vectors, "ivf_opq_append_key_root")(buildIvfOpq(_))
+    queryIvfOpq(IvfOpqIndex(AnnIndex.read(spark, live, AnnIndex.IvfOpq)),
       vectors, 0L until Similarity.NQueries.toLong)
   }
 
   /** Driver query (key `knn_ivf_opq_delete`): the rotated erasure
     * lifecycle at the gate — full-corpus build staged as a manifest
-    * version, [[deleteFromIvfOpqIndexAtomic]] of the
-    * [[Pq.DeleteLo]]..[[Pq.DeleteHi]] slice (only touched cell
-    * directories rewritten — the PQ erasure verbatim), staged query
-    * off the live version. Oracle = the classic rotated composition
-    * with exactly those ids excluded from candidate enumeration:
-    * basis, centroids, and codebooks are trained AGGREGATES an erasure
-    * never edits. */
+    * version, the [[Pq.DeleteLo]]..[[Pq.DeleteHi]] slice erased
+    * atomically ([[AnnIndex.erased]] — only touched cell directories
+    * rewritten), staged query off the live version. Oracle = the
+    * classic rotated composition with exactly those ids excluded from
+    * candidate enumeration: basis, centroids, and codebooks are trained
+    * AGGREGATES an erasure never edits. */
   def knnIvfOpqDelete(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val root = Scratch.reuseDir("ivf_opq_delete_key_root")
-    stageIvfOpqIndexVersion(buildIvfOpq(vectors), root)
-    deleteFromIvfOpqIndexAtomic(spark, root, Pq.DeleteLo to Pq.DeleteHi)
-    queryIvfOpq(readIvfOpqIndex(spark, IndexManifest.currentOrFail(spark, root)),
+    val live = AnnIndex.erased(vectors, "ivf_opq_delete_key_root")(buildIvfOpq(_))
+    queryIvfOpq(IvfOpqIndex(AnnIndex.read(spark, live, AnnIndex.IvfOpq)),
       vectors, 0L until Similarity.NQueries.toLong)
   }
 

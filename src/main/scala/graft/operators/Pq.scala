@@ -334,30 +334,20 @@ object Pq {
   /** Driver query (key `knn_ivf_pq_append`): the incremental-
     * maintenance lifecycle run END TO END through the cross-engine
     * gate — day-0 build on the base half of the corpus
-    * (`vec_id <= max/2`), staged as a manifest version, then (since
-    * r18) [[appendIvfPqIndexAtomic]] of the rest — the batch encoded
-    * against the frozen staged artifacts lands as a reference-inherited
-    * new version with one pointer flip — and the staged-index query
-    * path over the full corpus off the live version. With
-    * `knn_ivf_delete` running the atomic ERASURE, both delta types of
-    * the atomic lifecycle are now oracle-gated every round. The
-    * oracle replays [[buildIvfPq]]`(all, trainOn = base)` —
-    * bit-identical to the append by the SimilaritySpec equation (and
-    * to the atomic form by ManifestAtomicSpec) — so a hash match
-    * checks the append arithmetic itself, not just its agreement with
-    * a rebuild inside one engine. The one `max(vec_id)` probe is a
-    * 1-row collect (bounded driver artifact). */
+    * (`vec_id <= max/2`), staged as a manifest version, then the
+    * ATOMIC append of the rest ([[AnnIndex.halfAppended]] — the batch
+    * encoded against the frozen staged artifacts lands as a
+    * reference-inherited new version with one pointer flip) and the
+    * staged-index query path over the full corpus off the live
+    * version. The oracle replays [[buildIvfPq]]`(all, trainOn = base)`
+    * — bit-identical to the append by the SimilaritySpec equation (and
+    * to the atomic form by ManifestAtomicSpec) — so a hash match checks
+    * the append arithmetic itself, not just its agreement with a
+    * rebuild inside one engine. */
   def knnIvfPqAppend(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val cut = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
-    val base = vectors.filter(col("vec_id") <= cut)
-    val rest = vectors.filter(col("vec_id") > cut)
-    val root = graft.operators.Scratch.reuseDir("ivf_pq_append_key_root")
-    stageIvfPqIndexVersion(buildIvfPq(base), root)
-    appendIvfPqIndexAtomic(spark, root, rest)
-    queryIvfPq(readIvfPqIndex(spark,
-      IndexManifest.currentOrFail(spark, root)), vectors,
-      0L until Similarity.NQueries.toLong)
+    val (live, _) = AnnIndex.halfAppended(vectors, "ivf_pq_append_key_root")(buildIvfPq(_))
+    queryIvfPq(readIvfPqIndex(spark, live), vectors, 0L until Similarity.NQueries.toLong)
   }
 
   /** Erased id slice of the erasure-lifecycle driver keys: bounded
@@ -375,25 +365,22 @@ object Pq {
 
   /** Driver query (key `knn_ivf_pq_delete`): the erasure half of the
     * index CRUD lifecycle run END TO END through the cross-engine gate
-    * — build over the full corpus, stage as a manifest version,
-    * [[deleteFromIvfPqIndexAtomic]] of ids [[DeleteLo]]..[[DeleteHi]]
-    * (only their cell directories are rewritten), then the
-    * staged-index query path off the live version. The oracle replays
-    * the classic composed IVFADC search with exactly those ids removed
-    * from candidate enumeration — centroids, codebooks, probes, and
-    * every surviving code are unchanged by an erasure (they are
-    * trained aggregates, not per-record state), which is precisely the
+    * — build over the full corpus, stage as a manifest version, erase
+    * ids [[DeleteLo]]..[[DeleteHi]] atomically ([[AnnIndex.erased]] —
+    * only their cell directories are rewritten), then the staged-index
+    * query path off the live version. The oracle replays the classic
+    * composed IVFADC search with exactly those ids removed from
+    * candidate enumeration — centroids, codebooks, probes, and every
+    * surviving code are unchanged by an erasure (they are trained
+    * aggregates, not per-record state), which is precisely the
     * arithmetic claim the hash match checks. The heavyweight engine-
     * internal equations (survivor-rebuild equality, untouched-cell
     * byte-identity, idempotence) live in SimilaritySpec. */
   def knnIvfPqDelete(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val root = graft.operators.Scratch.reuseDir("ivf_pq_delete_key_root")
-    stageIvfPqIndexVersion(buildIvfPq(vectors), root)
-    deleteFromIvfPqIndexAtomic(spark, root, DeleteLo to DeleteHi)
     queryIvfPq(readIvfPqIndex(spark,
-      IndexManifest.currentOrFail(spark, root)), vectors,
-      0L until NQueries.toLong)
+      AnnIndex.erased(vectors, "ivf_pq_delete_key_root")(buildIvfPq(_))),
+      vectors, 0L until NQueries.toLong)
   }
 
   /** `cells <= 0` (the default) auto-sizes the coarse quantizer
@@ -433,8 +420,20 @@ object Pq {
     * compressed form that IS the PQ memory story). The original
     * vector column is deliberately NOT part of the index: the exact
     * rerank reads it from the corpus by key over the bounded
-    * candidate sliver (Rerank·Q rows — a point-lookup join at scale). */
+    * candidate sliver (Rerank·Q rows — a point-lookup join at scale).
+    * Staged and maintained as [[AnnIndex.IvfPq]]. */
   case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame, codes: DataFrame)
+      extends AnnIndex.Frames {
+    def tier: AnnIndex.Tier = AnnIndex.IvfPq
+    def artifacts: Seq[DataFrame] = Seq(centroids, codebooks)
+    def tree: DataFrame = codes
+  }
+
+  object IvfPqIndex {
+    /** The PQ view of any IVFADC tier's frames (the OPQ tier's too). */
+    def apply(f: AnnIndex.Frames): IvfPqIndex =
+      IvfPqIndex(f.artifact("centroids"), f.artifact("codebooks"), f.tree)
+  }
 
   /** The M·Kc codebook table collected into per-subspace
     * (code, centroid) arrays sorted by code id — the closure form both
@@ -536,19 +535,17 @@ object Pq {
     *
     * `trainOn` (null = `vectors`): the TRAINING corpus for centroids
     * and codebooks, independent of the INDEXED corpus — the
-    * incremental-lifecycle contract. `buildIvfPq(a ∪ b, trainOn = a)`
-    * is bit-identical to `appendToIvfPq(buildIvfPq(a), b)`
-    * (spec-asserted): same ivfIndex(a) centroids, same a-trained
-    * codebooks, same assign+encode arithmetic for b — which is what
-    * makes the append path oracle-able against a full rebuild. */
-  /** `metaCols` (opt-in): metadata columns of `vectors` to ride the
+    * incremental-lifecycle contract. The indexed corpus is then
+    * encoded exactly as an append batch is ([[AnnIndex.IvfPq]]), so
+    * `buildIvfPq(a ∪ b, trainOn = a)` is bit-identical to
+    * `appendToIvfPq(buildIvfPq(a), b)` (spec-asserted) — which is what
+    * makes the append path oracle-able against a full rebuild.
+    *
+    * `metaCols` (opt-in): metadata columns of `vectors` to ride the
     * code postings — the metadata-in-index layout that lets a
-    * same-label [[queryIvfPqIndex]] evaluate a predicate INSIDE the compressed
-    * scan ([[Similarity.writeIvfIndex]]'s metaCols recipe on the PQ
-    * tier). The join is vec_id-keyed build cost, never query cost;
-    * appends ride the same columns automatically ([[encodeAgainst]]
-    * derives the set from the index schema and fails loudly on a
-    * mismatched batch). */
+    * same-label [[queryIvfPqIndex]] evaluate a predicate INSIDE the
+    * compressed scan. The join is vec_id-keyed build cost, never query
+    * cost; appends must carry the same columns ([[AnnIndex.encode]]). */
   def buildIvfPq(vectors: DataFrame, dim: Int = 0, cells: Int = 0,
                  trainOn: DataFrame = null,
                  metaCols: Seq[String] = Nil): IvfPqIndex = {
@@ -567,30 +564,17 @@ object Pq {
       Similarity.ivfIndex(train, cells, "ivf_centroids_build_ivf_pq")
     val un = indexed.select(col("vec_id"),
       transform(col("e"), x => x / col("nrm")).as("u"), col("cell"))
-    val codebooks = trainCodebooks(un, subW)
-    val centsByM = centsByMFrom(codebooks)
-    // the INDEXED corpus: when training is decoupled, assign every
-    // corpus vector to the trained centroids (the append arithmetic)
-    val unAll =
-      if (trainOn == null) un
-      else {
-        val vAll = vectors
-          .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-          .withColumn("nrm", V.l2Norm(col("e")))
-        Similarity.assignNearest(vAll, centroids, "cell", "ce", "cn")
-          .select(col("vec_id"),
-            transform(col("e"), x => x / col("nrm")).as("u"), col("cell"))
-      }
-    // one narrow encode pass: vec_id -> (cell, M code ids in m order)
-    val codes = encodeCodes(unAll, centsByM, subW)
-    val withMeta =
-      if (metaCols.isEmpty) codes
-      else codes.join(
-        vectors.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
     // the index carries the COLLECTED codebooks re-framed locally —
     // value-identical, and staging the index no longer re-runs the
     // training aggregate (see [[codebooksFrame]])
-    IvfPqIndex(centroids, codebooksFrame(vectors.sparkSession, centsByM), withMeta)
+    val centsByM = centsByMFrom(trainCodebooks(un, subW))
+    val codebooks = codebooksFrame(vectors.sparkSession, centsByM)
+    // one narrow encode pass: vec_id -> (cell, M code ids in m order)
+    val codes =
+      if (trainOn == null) encodeCodes(un, centsByM, subW)
+      else AnnIndex.IvfPq.encode(
+        Map("centroids" -> centroids, "codebooks" -> codebooks), vectors, d)
+    IvfPqIndex(centroids, codebooks, AnnIndex.ride(codes, vectors, metaCols))
   }
 
   /** Incremental index maintenance: assign + encode `newVectors`
@@ -611,250 +595,59 @@ object Pq {
     * indexed ones (same contract as the underlying corpus), and
     * centroid quality is the build corpus's — re-train when drift
     * accumulates, the standard IVF reindex cadence. */
-  def appendToIvfPq(index: IvfPqIndex, newVectors: DataFrame,
-                    dim: Int = 0): IvfPqIndex =
-    index.copy(codes =
-      index.codes.unionByName(encodeAgainst(index, newVectors, dim)))
+  def appendToIvfPq(index: IvfPqIndex, newVectors: DataFrame): IvfPqIndex =
+    index.copy(codes = index.codes.unionByName(encodeAgainst(index, newVectors)))
 
-  /** The append arithmetic alone: `newVectors` assigned + encoded
-    * against `index`'s artifacts, as a codes frame. `private[graft]`:
-    * the streaming ingest sink (Streams.annIngestSinkAtomic) reuses it
-    * verbatim per micro-batch. */
+  /** The append arithmetic alone, manifest-free: `newVectors` assigned
+    * + encoded against `index`'s artifacts (rotated through `basis`
+    * when given — the OPQ tier) with its riding metadata, as a codes
+    * frame ([[AnnIndex.encode]]). */
   private[graft] def encodeAgainst(index: IvfPqIndex, newVectors: DataFrame,
-                                   dim: Int, basis: DataFrame = null): DataFrame = {
-    // with a staged rotation the INPUT dim is the basis row width (the
-    // original space the batch arrives in), while the codebooks encode
-    // the rotated r — deriving d from the codebooks would reject every
-    // valid batch
-    val ba = if (basis == null) null else basisArrOf(basis)
-    val d =
-      if (ba != null) ba(0).length
-      else if (dim > 0) dim
-      else index.codebooks.select(size(col("cs")).as("__w"))
-        .limit(1).collect().headOption match {
-        case Some(r) => r.getInt(0) * M
-        case None => throw new IllegalArgumentException(
-          "cannot append to an index with empty codebooks")
-      }
-    val encDim = if (ba == null) d else ba.length
-    require(encDim % M == 0,
-      s"encoded dim $encDim must be divisible by M=$M")
-    val subW = encDim / M
-    // dimension discipline (the r15-advice class, PQ form): a
-    // too-short vector silently prefix-dots its cell assignment
-    // before the encode loop AIOOBEs, a too-long one AIOOBEs in the
-    // assignment — both now fail in-plan with a diagnosis
-    val vNew = newVectors
-      .select(col("vec_id"),
-        when(size(col("embedding")) === lit(d), V.toDouble(col("embedding")))
-          .otherwise(raise_error(concat(
-            lit("appendIvfPq: vector "), col("vec_id"), lit(" has "),
-            size(col("embedding")),
-            lit(s" dims but the index encodes $d")))
-            .cast("array<double>"))
-          .as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val unNew = Similarity.assignNearest(vNew, index.centroids, "cell", "ce", "cn")
-      .select(col("vec_id"),
-        transform(col("e"), x => x / col("nrm")).as("u"), col("cell"))
-    // rotated tier: the batch rotates through the SAME column-form
-    // basis dots the build used (bounded r×d literals), so appended
-    // codes are bit-identical to a rebuild's
-    val encIn =
-      if (ba == null) unNew
-      else unNew.select(col("vec_id"),
-        array(ba.map(b => V.dot(col("u"), array(b.map(lit): _*))): _*).as("u"),
-        col("cell"))
-    val encoded = encodeCodes(encIn, centsByMFrom(index.codebooks), subW)
-    // metadata discipline: the batch must ride exactly the columns the
-    // index's codes carry — a divergent-schema append would strip the
-    // filter column from (or null it in) every later filtered scan
-    val meta = index.codes.columns.toSeq
-      .filterNot(Set("vec_id", "cell", "codes"))
-    if (meta.isEmpty) encoded
-    else {
-      val missing = meta.filterNot(newVectors.columns.contains)
-      require(missing.isEmpty,
-        s"appendIvfPq: the index codes carry metadata columns $meta " +
-          s"but the batch lacks $missing — append the same shape")
-      encoded.join(
-        newVectors.select((Seq("vec_id") ++ meta).map(col): _*), "vec_id")
-    }
-  }
+                                   basis: DataFrame = null): DataFrame =
+    AnnIndex.encode(if (basis == null) index else Opq.IvfOpqIndex(basis, index),
+      newVectors)
 
-  /** Durable ATOMIC append (r17 verdict item 1): encode the new
-    * vectors against the live version's artifacts ([[encodeAgainst]]
-    * — the [[appendToIvfPq]] arithmetic) and land them through
-    * [[IndexManifest.appendRowsAtomic]] on a MANIFEST-rooted index
-    * ([[stageIvfPqIndexVersion]]) — centroids, codebooks and untouched
-    * cell directories are inherited by reference, the batch's cells
-    * rewrite as old ∪ new, one pointer flip. A concurrent reader sees
-    * the batch wholly or not at all; a crash leaves the old version
-    * serving. Answers are bit-identical to [[appendToIvfPq]]'s (spec).
-    * Returns the number of appended code rows. */
+  /** Durable ATOMIC append of `newVectors` to the manifest-rooted
+    * IVFADC index at `root` ([[AnnIndex.append]]): answers are
+    * bit-identical to [[appendToIvfPq]]'s (spec). `dim` is ignored: the
+    * width is read off the staged centroids. Returns the number of
+    * appended code rows. */
   def appendIvfPqIndexAtomic(spark: SparkSession, root: String,
                              newVectors: DataFrame, dim: Int = 0,
-                             keep: Int = 2): Long = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    // epoch-pinned (r20): the encode below derives cells/codes from
-    // THIS version's centroids+codebooks — a retrain publishing
-    // mid-flight fails the append loudly instead of landing stale rows
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      encodeAgainst(readIvfPqIndex(spark, live), newVectors, dim), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
-  }
+                             keep: Int = 2): Long =
+    AnnIndex.append(spark, root, AnnIndex.IvfPq, newVectors, keep)
 
-  /** Right-to-erasure on the SERVING index (the GDPR hard-delete
-    * counterpart of [[graft.streaming.Streams]]' CDC-lake erasure),
-    * ATOMIC: drop the code rows of `vecIds` through
-    * [[IndexManifest.deleteVecIdsAtomic]], rewriting ONLY the cell
-    * directories that contain an erased id — every other partition is
-    * inherited by reference, so the erasure bill is O(affected cells),
-    * not O(index). No reader ever sees a half-erased index, emptied
-    * cells simply don't exist in the new version, crash-safe by the
-    * pointer flip. The locate pass scans only the `vec_id` column
-    * (column-pruned). Centroids/codebooks are unaffected: they are
-    * trained AGGREGATES, not personal records — re-train on the next
-    * reindex cadence. Shared verbatim by the IVF-SQ8 and OPQ tiers
-    * (their codes trees are this layout byte-for-byte). Returns the
-    * number of deleted code rows. */
+  /** ATOMIC right-to-erasure on the manifest-rooted IVFADC index at
+    * `root` ([[AnnIndex.erase]]). Returns the number of deleted code
+    * rows. */
   def deleteFromIvfPqIndexAtomic(spark: SparkSession, root: String,
                                  vecIds: Seq[Long], keep: Int = 2): Long =
-    IndexManifest.deleteVecIdsAtomic(spark, root, "codes", "cell",
-      vecIds, keep)
+    AnnIndex.erase(spark, root, AnnIndex.IvfPq, vecIds, keep)
 
-  /** Stage a built PQ index as version 1 of a manifest-rooted index —
-    * entry point of the atomic lifecycle. Returns the published
-    * version directory; readers resolve
-    * [[IndexManifest.currentOrFail]] once per plan. */
+  /** Stage a built PQ index as the next version of a manifest-rooted
+    * index ([[AnnIndex.stage]]). Returns the published version
+    * directory. */
   def stageIvfPqIndexVersion(index: IvfPqIndex, root: String): String =
-    IndexManifest.publish(index.codes.sparkSession, root)(
-      dir => writeIvfPqIndex(index, dir))
-
-  /** Per-cell health report of a staged IVFADC index (r18 verdict
-    * item 4 — the compressed-tier twin of
-    * [[Similarity.ivfIndexStats]]): appends encode against FROZEN
-    * centroids and codebooks forever, so cells skew and ADC error
-    * drifts exactly as the float tier's postings do — and the codes
-    * tree aggregates the same way (one GROUP BY over `(cell,
-    * vec_id ≥ watermark)`; codes bytes never read). Feed the skew
-    * column to the retrain trigger ([[rebalanceIvfPqIndexVersioned]]),
-    * the same stats→rebalance loop as the float tier. */
-  def ivfPqIndexStats(spark: SparkSession, path: String,
-                      appendedFrom: Long): DataFrame = {
-    val index = readIvfPqIndex(spark, path)
-    Similarity.cellStatsOf(index.codes, index.centroids, appendedFrom)
-  }
+    AnnIndex.stage(index, root)
 
   /** Driver query (key `knn_pq_index_stats`): the PQ append
     * lifecycle's health read — stage the IVFADC index on the day-0
     * half, append the rest against the frozen artifacts, report
-    * per-cell stats with the watermark at the split. The coarse
-    * assignment is the SAME deterministic quantizer as the float
-    * tier's (the trainOn-decoupling equation), so the report shares
-    * `knn_index_stats`' oracle verbatim — the compressed tier's
-    * health row is hash-checked against the identical IVF replay. */
+    * per-cell stats ([[AnnIndex.stats]]) with the watermark at the
+    * split. The coarse assignment is the SAME deterministic quantizer
+    * as the float tier's (the trainOn-decoupling equation), so the
+    * report shares `knn_index_stats`' oracle verbatim — the compressed
+    * tier's health row is hash-checked against the identical IVF
+    * replay. */
   def knnPqIndexStats(spark: SparkSession, dir: String): DataFrame = {
-    val vectors = Tables.embeddings(spark, dir)
-    val cut = vectors.agg(org.apache.spark.sql.functions.max(
-      col("vec_id"))).collect()(0).getLong(0) / 2
-    val root = graft.operators.Scratch.reuseDir("ivf_pq_stats_key_root")
-    stageIvfPqIndexVersion(buildIvfPq(vectors.filter(col("vec_id") <= cut)), root)
-    appendIvfPqIndexAtomic(spark, root, vectors.filter(col("vec_id") > cut))
-    ivfPqIndexStats(spark, IndexManifest.currentOrFail(spark, root),
-      appendedFrom = cut + 1)
+    val (live, cut) = AnnIndex.halfAppended(Tables.embeddings(spark, dir),
+      "ivf_pq_stats_key_root")(buildIvfPq(_))
+    AnnIndex.stats(spark, live, AnnIndex.IvfPq, appendedFrom = cut + 1)
   }
 
-  /** Retrain a drifted MANIFEST-rooted IVFADC index (r18 verdict
-    * item 4): re-run [[buildIvfPq]] — fresh Lloyd centroids AND fresh
-    * codebooks — over `corpus`, the declared float-vector source (PQ
-    * codes are LOSSY: unlike the float tier, the index cannot retrain
-    * from its own payload, so the deployment names the corpus the
-    * index serves — the same frame its appends came from), publish the
-    * rebuilt index as a new version (readers overlapping the retrain
-    * keep serving the old one), retire superseded versions behind
-    * `keep`. Post-rebalance the index answers bit-identically to a
-    * fresh [[buildIvfPq]] over the corpus (spec-asserted — Lloyd and
-    * codebook training are deterministic). Metadata columns are
-    * re-derived from the live codes tree so the retrained index keeps
-    * serving its filtered queries.
-    *
-    * FENCE (shared with every retrain): stop and drain streaming
-    * appenders first — a retrain moves the cell assignment function,
-    * which breaks both the replay-idempotence claim check and any
-    * in-flight encode against the old artifacts. Returns the published
-    * version directory. */
-  def rebalanceIvfPqIndexVersioned(spark: SparkSession, root: String,
-                                   corpus: DataFrame, dim: Int = 0,
-                                   keep: Int = 2): String = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    val meta = IndexManifest.readFrame(spark, live, "codes").columns.toSeq
-      .filterNot(Set("vec_id", "cell", "codes"))
-    val rebuilt = buildIvfPq(corpus, dim, metaCols = meta)
-    // publishRetrain = the ENFORCED fence (r19 verdict item 1): refuses
-    // while un-flushed streaming-pending rows exist, and advances the
-    // retrain epoch the ingest sink's claim check is keyed by
-    IndexManifest.publishRetrain(spark, root, keep)(
-      dir => writeIvfPqIndex(rebuilt, dir))
-  }
-
-  /** Stage the index durably (three parquet frames under `path`). */
-  def writeIvfPqIndex(index: IvfPqIndex, path: String): Unit = {
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    index.codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
-    // codes live in cell=<id> PARTITION DIRECTORIES: a probe prunes
-    // whole directories (not just row groups) down to nprobe/C of the
-    // corpus, an append adds files only under its batch's cells, and
-    // an erasure ([[deleteFromIvfPqIndexAtomic]]) rewrites only the
-    // directories that contain an erased id — the layout is what
-    // makes the index's whole CRUD lifecycle O(touched cells).
-    // The session's global dynamic partitionOverwriteMode means a
-    // partitioned 'overwrite' of the live directory would only replace
-    // cells THIS corpus populates — restaging a path whose previous
-    // index had other cells would leave their stale directories to
-    // rejoin the candidate set on read (r14 advice). And a bare
-    // delete-then-rewrite of the live tree leaves no recovery copy if
-    // the write job dies mid-flight (r15 advice). So: write the full
-    // new codes tree to a sibling tmp directory, then swap via
-    // delete + rename (the Sinks.compact pattern) — the index is
-    // codes-less only for the duration of a directory rename, and a
-    // crash inside that window is recoverable (codes_tmp holds the
-    // complete new tree; recovery = rename it to codes). Residual
-    // (shared with Similarity.writeIvfIndex): centroids/codebooks and
-    // the codes swap are separate commits — restaging a LIVE index
-    // wants a manifest + atomic pointer flip on top of this.
-    val codesPath = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val tmpPath = new org.apache.hadoop.fs.Path(s"$path/codes_tmp")
-    val fs = codesPath.getFileSystem(
-      index.codes.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(tmpPath, true)
-    index.codes.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmpPath.toString)
-    fs.delete(codesPath, true)
-    if (!fs.rename(tmpPath, codesPath))
-      throw new IllegalStateException(
-        s"writeIvfPqIndex: rename $tmpPath -> $codesPath failed; " +
-          s"the new codes tree is intact at $tmpPath")
-  }
-
+  /** The staged IVFADC index at `path` ([[AnnIndex.read]]). */
   def readIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex =
-    IvfPqIndex(
-      IndexManifest.readFrame(spark, path, "centroids"),
-      IndexManifest.readFrame(spark, path, "codebooks"),
-      // re-pin the partition column's position and type: partitioned
-      // discovery appends `cell` last and may infer it narrow, while
-      // every consumer binds (vec_id, cell: long, codes) positionally;
-      // metadata columns (buildIvfPq's metaCols) keep riding after
-      pinnedCodes(IndexManifest.readFrame(spark, path, "codes")))
-
-  /** (vec_id, cell: long, codes, meta…) — the consumer-facing column
-    * order/type pin, metadata preserved. */
-  private[operators] def pinnedCodes(raw: DataFrame): DataFrame = {
-    val meta = raw.columns.toSeq
-      .filterNot(Set("vec_id", "cell", "codes")).map(col)
-    raw.select((Seq(col("vec_id"), col("cell").cast("long").as("cell"),
-      col("codes")) ++ meta): _*)
-  }
+    IvfPqIndex(AnnIndex.read(spark, path, AnnIndex.IvfPq))
 
   /** Query a STAGED index — the PQ tier's one search body: top-k or
     * radius, unfiltered or same-label, and (through `basis`) the
@@ -1020,12 +813,12 @@ object Pq {
   private[operators] def basisArrOf(basis: DataFrame): Array[Array[Double]] = {
     val rows = basis.select(col("pos"), col("b")).orderBy(col("pos")).collect()
       .map(_.getSeq[Double](1).toArray)
-    // loud-failure discipline (the appendIvfIndexAtomic headOption class): an
-    // empty basis artifact would otherwise surface as an
-    // ArrayIndexOutOfBounds deep in the encode/ADC derivation
+    // loud-failure discipline: an empty basis artifact would otherwise
+    // surface as an ArrayIndexOutOfBounds deep in the encode/ADC
+    // derivation
     if (rows.isEmpty) throw new IllegalStateException(
       "the staged rotation basis is empty — stage the index with " +
-        "Opq.writeIvfOpqIndex before querying or appending")
+        "AnnIndex.stage before querying or appending")
     rows
   }
 
@@ -1081,7 +874,7 @@ object Pq {
   def knnIvfPqFiltered(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = graft.operators.Scratch.reuseDir("ivf_pq_filtered_idx")
-    writeIvfPqIndex(buildIvfPq(vectors, metaCols = Seq("label")), path)
+    AnnIndex.write(buildIvfPq(vectors, metaCols = Seq("label")), path)
     queryIvfPqIndex(readIvfPqIndex(spark, path), vectors,
       0L until NQueries.toLong, sameLabel = true)
   }
@@ -1092,7 +885,7 @@ object Pq {
   def knnIvfPqRadiusFiltered(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = graft.operators.Scratch.reuseDir("ivf_pq_radius_filt_idx")
-    writeIvfPqIndex(buildIvfPq(vectors, metaCols = Seq("label")), path)
+    AnnIndex.write(buildIvfPq(vectors, metaCols = Seq("label")), path)
     queryIvfPqIndex(readIvfPqIndex(spark, path), vectors,
       0L until NQueries.toLong, Radius(Similarity.RadiusTau), sameLabel = true)
   }
@@ -1102,7 +895,7 @@ object Pq {
   def knnIvfPqRadius(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = graft.operators.Scratch.reuseDir("ivf_pq_radius_idx")
-    writeIvfPqIndex(buildIvfPq(vectors), path)
+    AnnIndex.write(buildIvfPq(vectors), path)
     queryIvfPqIndex(readIvfPqIndex(spark, path), vectors,
       0L until NQueries.toLong, Radius(Similarity.RadiusTau))
   }

@@ -72,7 +72,7 @@ object Quantize {
     quantizeCodesAgainst(vectors, quantizerRanges(vectors))
 
   /** Encode against a FIXED ranges artifact — the incremental form
-    * ([[appendSq8IndexAtomic]]): a daily batch encodes against the day-0
+    * ([[AnnIndex.Sq8]]'s append encode): a daily batch encodes against the day-0
     * grid exactly as PQ appends encode against frozen codebooks, so
     * appends compose and the index stays self-consistent (decode uses
     * the one persisted artifact). Values OUTSIDE the trained span
@@ -174,85 +174,31 @@ object Quantize {
     * all buckets by design. */
   val Sq8Buckets = 64L
 
-  private def withGrp(codes: DataFrame): DataFrame =
-    codes.withColumn("grp", pmod(col("vec_id"), lit(Sq8Buckets)))
+  /** The quantizer grid of `vectors` collected into a bounded d-row
+    * local frame, with d: the build's codes encode against exactly
+    * these doubles and the staged artifact writes them, so grid and
+    * codes can never drift, and the grid's corpus aggregate runs once. */
+  private def boundedRanges(vectors: DataFrame): (DataFrame, Int) = {
+    val rg = quantizerRanges(vectors)
+    val rows = rg.collect()
+    (vectors.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), rg.schema), rows.length)
+  }
 
-  /** Stage the SQ8 index durably (two parquet frames under `path`):
-    * the d-row ranges artifact and the int8 codes — the serving form a
-    * deployment persists, completing the build-once/query-many split
-    * the PQ tier has ([[Pq.writeIvfPqIndex]] precedent). Codes are
-    * encoded against the STAGED ranges read back from parquet (exact
-    * double round-trip), so artifact and codes can never drift. Codes
-    * land in [[Sq8Buckets]] `grp=` partition directories — the
-    * erasure-granularity layout [[deleteFromSq8IndexAtomic]] rewrites.
+  /** Build the flat SQ8 index for staging ([[AnnIndex.Sq8]]): the d-row
+    * ranges artifact and the int8 codes — the serving form a deployment
+    * persists, completing the build-once/query-many split the PQ tier
+    * has. Codes land in [[Sq8Buckets]] `grp=` partition directories —
+    * the erasure-granularity layout [[AnnIndex.erase]] rewrites.
     * `metaCols` names vector columns to ride the code rows (the
-    * metadata-in-index layout a same-label [[querySq8Index]] serves —
-    * [[Pq.buildIvfPq]]'s recipe on the SQ8 tier): filter columns live
-    * NEXT to the codes so a filtered query never joins the float
-    * corpus per candidate. */
-  def writeSq8Index(vectors: DataFrame, path: String,
-                    metaCols: Seq[String] = Seq.empty): Unit = {
-    val spark = vectors.sparkSession
-    quantizerRanges(vectors).write.mode("overwrite").parquet(s"$path/ranges")
-    val staged = IndexManifest.readFrame(spark, path, "ranges")
-    val codes = quantizeCodesAgainst(vectors, staged, dim = Some(staged.count()))
-    val withMeta =
-      if (metaCols.isEmpty) codes
-      else codes.join(
-        vectors.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    withGrp(withMeta)
-      .repartition(col("grp"))
-      .write.mode("overwrite").partitionBy("grp").parquet(s"$path/codes")
+    * metadata-in-index layout a same-label [[querySq8Index]] serves):
+    * filter columns live NEXT to the codes so a filtered query never
+    * joins the float corpus per candidate. */
+  def buildSq8(vectors: DataFrame, metaCols: Seq[String] = Seq.empty): AnnIndex.Index = {
+    val (ranges, d) = boundedRanges(vectors)
+    AnnIndex.Index(AnnIndex.Sq8, Seq(ranges), AnnIndex.ride(
+      AnnIndex.Sq8.encode(Map("ranges" -> ranges), vectors, d), vectors, metaCols))
   }
-
-  /** Incremental SQ8 maintenance, ATOMIC (r17 verdict item 1): encode
-    * `newVectors` against the live version's FROZEN ranges (saturating
-    * at the grid ends — see [[quantizeCodesAgainst]]) and land them
-    * through [[IndexManifest.appendRowsAtomic]] on a manifest-rooted
-    * index ([[stageSq8IndexVersion]]) — the ranges artifact and
-    * untouched `grp=` buckets are inherited by reference, the batch's
-    * buckets rewrite as old ∪ new, one pointer flip. Concurrent
-    * readers see the batch wholly or not at all. A batch whose vectors
-    * don't match the artifact's width FAILS (r15 advice — a truncated
-    * or short code row would silently poison every later scan).
-    * Metadata columns riding the staged codes ([[writeSq8Index]]'s
-    * `metaCols`) are REQUIRED of the batch — a batch missing one
-    * would leave null-labeled rows invisible to every filtered query.
-    * Returns the number of appended code rows. */
-  def appendSq8IndexAtomic(spark: SparkSession, root: String,
-                           newVectors: DataFrame, keep: Int = 2): Long = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    val ranges = IndexManifest.readFrame(spark, live, "ranges")
-    val riding = IndexManifest.readFrame(spark, live, "codes").columns.toSeq
-      .filterNot(Set("vec_id", "codes", "grp"))
-    riding.foreach(c => require(newVectors.columns.contains(c),
-      s"appendSq8IndexAtomic: the staged codes ride metadata column '$c' " +
-        s"but the batch lacks it — appends must carry the index's riding set"))
-    val encoded = quantizeCodesAgainst(newVectors, ranges, dim = Some(ranges.count()))
-    val withMeta =
-      if (riding.isEmpty) encoded
-      else encoded.join(
-        newVectors.select((Seq("vec_id") ++ riding).map(col): _*), "vec_id")
-    // epoch-pinned like every tier append (r20): the grid the encode
-    // used is this version's — a mid-flight retrain fails loudly
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "grp",
-      withGrp(withMeta), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
-  }
-
-  /** Right-to-erasure on the staged SQ8 index, ATOMIC: drop the code
-    * rows of `vecIds` through [[IndexManifest.deleteVecIdsAtomic]] —
-    * only the `grp=` buckets holding an erased id rewrite into the new
-    * version (the [[Pq.deleteFromIvfPqIndexAtomic]] recipe with the
-    * erasure bucket standing in for the coarse cell), every other
-    * bucket is inherited by reference, and no reader ever sees a
-    * half-erased index. The ranges artifact is unaffected: it is a
-    * trained AGGREGATE, not per-record state — re-quantize on the
-    * next reindex cadence. Returns the number of deleted code rows. */
-  def deleteFromSq8IndexAtomic(spark: SparkSession, root: String,
-                               vecIds: Seq[Long], keep: Int = 2): Long =
-    IndexManifest.deleteVecIdsAtomic(spark, root, "codes", "grp",
-      vecIds, keep)
 
   /** Query a STAGED SQ8 index: [[sq8Scan]] over the persisted codes +
     * ranges, nothing rebuilt — queries and the exact rerank read the
@@ -269,7 +215,7 @@ object Quantize {
     *    error, |x−deq| ≤ span/510 per coordinate — near-exact);
     *  - same-label (`knn_sq8_filtered`) evaluates the predicate INSIDE
     *    the decode scan — the label rides the code rows
-    *    ([[writeSq8Index]]'s `metaCols`), so a rejected candidate costs
+    *    ([[buildSq8]]'s `metaCols`), so a rejected candidate costs
     *    one comparison before any decode arithmetic. The candidate
     *    RANKING itself is same-label, so k slots always fill where the
     *    corpus has them (a post-hoc filter on an unfiltered top-k
@@ -282,10 +228,10 @@ object Quantize {
   def querySq8Index(spark: SparkSession, path: String, vectors: DataFrame,
                     queryIds: Seq[Long], cut: Cut = TopK(Similarity.K),
                     sameLabel: Boolean = false): DataFrame = {
-    val rg = rangesOf(IndexManifest.readFrame(spark, path, "ranges"))
+    val ix = AnnIndex.read(spark, path, AnnIndex.Sq8)
+    val rg = rangesOf(ix.artifact("ranges"))
     if (rg.isEmpty) return AnnSearch.empty(vectors, cut, sameLabel)
-    sq8Scan(IndexManifest.readFrame(spark, path, "codes"), rg, vectors,
-      col("vec_id").isInCollection(queryIds), cut, sameLabel)
+    sq8Scan(ix.tree, rg, vectors, col("vec_id").isInCollection(queryIds), cut, sameLabel)
   }
 
   /** Driver query (key `knn_sq8_radius_filtered`): stage with the
@@ -293,7 +239,7 @@ object Quantize {
   def knnSq8RadiusFiltered(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("sq8_radius_filt_idx")
-    writeSq8Index(vectors, path, metaCols = Seq("label"))
+    AnnIndex.write(buildSq8(vectors, metaCols = Seq("label")), path)
     querySq8Index(spark, path, vectors, 0L until Similarity.NQueries.toLong,
       Radius(Similarity.RadiusTau), sameLabel = true)
   }
@@ -303,26 +249,23 @@ object Quantize {
   def knnSq8Radius(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("sq8_radius_idx")
-    writeSq8Index(vectors, path)
+    AnnIndex.write(buildSq8(vectors), path)
     querySq8Index(spark, path, vectors, 0L until Similarity.NQueries.toLong,
       Radius(Similarity.RadiusTau))
   }
 
   /** Driver query (key `knn_sq8_delete`): the erasure half of the SQ8
     * CRUD lifecycle end to end — stage over the full corpus as a
-    * manifest version, [[deleteFromSq8IndexAtomic]] of ids
-    * [[Pq.DeleteLo]]..[[Pq.DeleteHi]] (only their buckets rewritten),
-    * then the staged top-k query off the live version. The
-    * oracle replays the flat SQ8 search with exactly those ids
-    * excluded from candidate enumeration — the ranges grid (a trained
-    * aggregate) and every surviving code are unchanged by erasure. */
+    * manifest version, erase ids [[Pq.DeleteLo]]..[[Pq.DeleteHi]]
+    * atomically ([[AnnIndex.erased]] — only their buckets rewritten),
+    * then the staged top-k query off the live version. The oracle
+    * replays the flat SQ8 search with exactly those ids excluded from
+    * candidate enumeration — the ranges grid (a trained aggregate) and
+    * every surviving code are unchanged by erasure. */
   def knnSq8Delete(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val root = Scratch.reuseDir("sq8_delete_key_root")
-    stageSq8IndexVersion(vectors, root)
-    deleteFromSq8IndexAtomic(spark, root, Pq.DeleteLo to Pq.DeleteHi)
-    querySq8Index(spark, IndexManifest.currentOrFail(spark, root), vectors,
-      0L until Similarity.NQueries.toLong)
+    querySq8Index(spark, AnnIndex.erased(vectors, "sq8_delete_key_root")(buildSq8(_)),
+      vectors, 0L until Similarity.NQueries.toLong)
   }
 
   /** Driver query (key `knn_sq8_filtered`): stage the SQ8 index with
@@ -331,7 +274,7 @@ object Quantize {
   def knnSq8Filtered(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
     val path = Scratch.reuseDir("sq8_filtered_idx")
-    writeSq8Index(vectors, path, metaCols = Seq("label"))
+    AnnIndex.write(buildSq8(vectors, metaCols = Seq("label")), path)
     querySq8Index(spark, path, vectors, 0L until Similarity.NQueries.toLong,
       sameLabel = true)
   }
@@ -572,8 +515,8 @@ object Quantize {
 
   /** Driver query (key `knn_sq8_append`): the scalar tier's
     * incremental-maintenance lifecycle at the cross-engine gate —
-    * day-0 grid trained on the base half ([[stageSq8IndexVersion]]),
-    * the rest [[appendSq8IndexAtomic]]-encoded against that FROZEN grid
+    * day-0 grid trained on the base half, the rest appended atomically
+    * ([[AnnIndex.halfAppended]]) encoded against that FROZEN grid
     * (saturating at the ends), staged top-k query over everything.
     * The oracle re-derives the grid from the base slice and decodes
     * every vector against it with the same saturation, so a hash
@@ -582,12 +525,8 @@ object Quantize {
     * exercises. */
   def knnSq8Append(spark: SparkSession, dir: String): DataFrame = {
     val vectors = Tables.embeddings(spark, dir)
-    val cut = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
-    val root = Scratch.reuseDir("sq8_append_key_root")
-    stageSq8IndexVersion(vectors.filter(col("vec_id") <= cut), root)
-    appendSq8IndexAtomic(spark, root, vectors.filter(col("vec_id") > cut))
-    querySq8Index(spark, IndexManifest.currentOrFail(spark, root), vectors,
-      0L until Similarity.NQueries.toLong)
+    val (live, _) = AnnIndex.halfAppended(vectors, "sq8_append_key_root")(buildSq8(_))
+    querySq8Index(spark, live, vectors, 0L until Similarity.NQueries.toLong)
   }
 
   /** The append replay (key `knn_sq8_append`): grid from the base
@@ -663,7 +602,7 @@ object Quantize {
     * for the rerank budget and the float scan too expensive.
     *
     * 100 TB: on a deployment the codes live in cell=<id> partition
-    * directories (the [[Pq.writeIvfPqIndex]] layout — here the staged
+    * directories (the [[AnnIndex.IvfPq]] layout — here the staged
     * frame carries the cell column; the probe prunes to ~nprobe/C of
     * the compressed corpus), queries broadcast, the heap cut bounds
     * the ranking shuffle, and the exact rerank touches Rerank·Q float
@@ -681,7 +620,7 @@ object Quantize {
       Similarity.ivfIndex(vectors, 0, "ivf_centroids_knn_ivf_sq8")
     // the serving frame: cell-tagged int8 codes, staged once — a
     // deployment writes these as cell partition directories so the
-    // probe prunes files ([[writeIvfSq8Index]]); here the staged
+    // probe prunes files ([[buildIvfSq8]]); here the staged
     // parquet carries the column
     val codes = Scratch.stageReuse(
       quantizeCodesOn(vectors)
@@ -692,61 +631,30 @@ object Quantize {
   }
 
   // --- composed IVF-SQ8 durable serving split -------------------------
-  // The last tier composition without one (float, PQ, OPQ, and flat
-  // SQ8 all stage durably): centroids + ranges + CELL-partitioned int8
-  // codes. The codes tree is byte-shaped like the PQ tier's
-  // (vec_id, codes, cell=<id> partition dirs), so erasure IS
-  // [[Pq.deleteFromIvfPqIndexAtomic]] and probes prune whole directories.
+  // centroids + ranges + CELL-partitioned int8 codes ([[AnnIndex.IvfSq8]]):
+  // the codes tree is shaped like the PQ tier's (vec_id, codes,
+  // cell=<id> partition dirs), so probes prune whole directories.
 
-  /** Stage the composed index durably. `trainOn` (null = `vectors`)
+  /** Build the composed index for staging. `trainOn` (null = `vectors`)
     * decouples training (Lloyd centroids + the quantizer grid) from
-    * indexing — `writeIvfSq8Index(a ∪ b, trainOn = a)` equals
-    * `writeIvfSq8Index(a)` + [[appendIvfSq8IndexAtomic]]`(b)` bit-for-bit
-    * (spec), the incremental-lifecycle equation every tier holds.
-    * Codes are encoded against the STAGED ranges read back from
-    * parquet (exact double round-trip — artifact and codes can never
-    * drift) and land via the tmp+rename swap (the
-    * [[Pq.writeIvfPqIndex]] recovery discipline). Restaging a LIVE
-    * index goes through [[stageIvfSq8IndexVersion]] instead —
-    * centroids, grid, and codes flip together (r17 advice). */
-  def writeIvfSq8Index(vectors: DataFrame, path: String,
-                       metaCols: Seq[String] = Seq.empty,
-                       trainOn: DataFrame = null): Unit = {
-    val spark = vectors.sparkSession
+    * indexing: the indexed corpus is then encoded exactly as an append
+    * batch is, so `buildIvfSq8(a ∪ b, trainOn = a)` equals
+    * `buildIvfSq8(a)` + [[AnnIndex.append]]`(b)` bit-for-bit (spec), the
+    * incremental-lifecycle equation every tier holds. */
+  def buildIvfSq8(vectors: DataFrame, metaCols: Seq[String] = Seq.empty,
+                  trainOn: DataFrame = null): AnnIndex.Index = {
     val train = Option(trainOn).getOrElse(vectors)
     val (indexed, centroids) =
       Similarity.ivfIndex(train, 0, "ivf_centroids_write_ivf_sq8")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    quantizerRanges(train).write.mode("overwrite").parquet(s"$path/ranges")
-    val stagedRg = IndexManifest.readFrame(spark, path, "ranges")
-    // the INDEXED corpus: when training is decoupled, assign every
-    // corpus vector to the trained centroids (the append arithmetic)
-    val cellOf =
-      if (trainOn == null) indexed.select(col("vec_id"), col("cell"))
-      else {
-        val vAll = vectors
-          .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-          .withColumn("nrm", V.l2Norm(col("e")))
-        Similarity.assignNearest(vAll, centroids, "cell", "ce", "cn")
-          .select(col("vec_id"), col("cell"))
-      }
-    val codes = quantizeCodesAgainst(vectors, stagedRg,
-      dim = Some(stagedRg.count())).join(cellOf, "vec_id")
-    val withMeta =
-      if (metaCols.isEmpty) codes
-      else codes.join(
-        vectors.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    val codesPath = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val tmpPath = new org.apache.hadoop.fs.Path(s"$path/codes_tmp")
-    val fs = codesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(tmpPath, true)
-    withMeta.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmpPath.toString)
-    fs.delete(codesPath, true)
-    if (!fs.rename(tmpPath, codesPath))
-      throw new IllegalStateException(
-        s"writeIvfSq8Index: rename $tmpPath -> $codesPath failed; " +
-          s"the new codes tree is intact at $tmpPath")
+    val (ranges, d) = boundedRanges(train)
+    val codes =
+      if (trainOn == null)
+        quantizeCodesAgainst(vectors, ranges, dim = Some(d.toLong))
+          .join(indexed.select(col("vec_id"), col("cell")), "vec_id")
+      else AnnIndex.IvfSq8.encode(
+        Map("centroids" -> centroids, "ranges" -> ranges), vectors, d)
+    AnnIndex.Index(AnnIndex.IvfSq8, Seq(centroids, ranges),
+      AnnIndex.ride(codes, vectors, metaCols))
   }
 
   /** Query the staged composed index: [[sq8Scan]] restricted to the
@@ -761,106 +669,11 @@ object Quantize {
                        vectors: DataFrame, queryIds: Seq[Long],
                        cut: Cut = TopK(Similarity.K), sameLabel: Boolean = false,
                        nprobe: Int = 0): DataFrame = {
-    val rg = rangesOf(IndexManifest.readFrame(spark, path, "ranges"))
+    val ix = AnnIndex.read(spark, path, AnnIndex.IvfSq8)
+    val rg = rangesOf(ix.artifact("ranges"))
     if (rg.isEmpty) return AnnSearch.empty(vectors, cut, sameLabel)
-    sq8Scan(Pq.pinnedCodes(IndexManifest.readFrame(spark, path, "codes")), rg,
-      vectors, col("vec_id").isInCollection(queryIds), cut, sameLabel,
-      Some((IndexManifest.readFrame(spark, path, "centroids"),
-        AnnSearch.probeWidth(nprobe, sameLabel))))
-  }
-
-  /** The composed append's arithmetic alone — assign (frozen
-    * centroids) + quantize (frozen staged grid) with riding metadata,
-    * as an unmaterialized code frame for [[appendIvfSq8IndexAtomic]]. */
-  private def ivfSq8AppendBatch(spark: SparkSession, path: String,
-                                newVectors: DataFrame): DataFrame = {
-    val centroids = IndexManifest.readFrame(spark, path, "centroids")
-    val stagedRg = IndexManifest.readFrame(spark, path, "ranges")
-    val riding = IndexManifest.readFrame(spark, path, "codes").columns.toSeq
-      .filterNot(Set("vec_id", "codes", "cell"))
-    riding.foreach(c => require(newVectors.columns.contains(c),
-      s"appendIvfSq8IndexAtomic: the staged codes ride metadata column '$c' " +
-        s"but the batch lacks it — appends must carry the index's riding set"))
-    val vNew = newVectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val assigned = Similarity.assignNearest(vNew, centroids, "cell", "ce", "cn")
-      .select(col("vec_id"), col("cell"))
-    val encoded = quantizeCodesAgainst(newVectors, stagedRg,
-      dim = Some(stagedRg.count())).join(assigned, "vec_id")
-    if (riding.isEmpty) encoded
-    else encoded.join(
-      newVectors.select((Seq("vec_id") ++ riding).map(col): _*), "vec_id")
-  }
-
-  /** Stage a flat SQ8 index as version 1 of a manifest-rooted index —
-    * the atomic-lifecycle entry point (and the live-restage path: the
-    * ranges artifact and codes flip together). */
-  def stageSq8IndexVersion(vectors: DataFrame, root: String,
-                           metaCols: Seq[String] = Seq.empty): String =
-    IndexManifest.publish(vectors.sparkSession, root)(
-      dir => writeSq8Index(vectors, dir, metaCols))
-
-  /** Stage a composed IVF-SQ8 index as version 1 of a manifest-rooted
-    * index — the atomic-lifecycle entry point (and the live-restage
-    * path: centroids, grid, and codes flip together — the multi-frame
-    * residual [[writeIvfSq8Index]] documents). */
-  def stageIvfSq8IndexVersion(vectors: DataFrame, root: String,
-                              metaCols: Seq[String] = Seq.empty,
-                              trainOn: DataFrame = null): String =
-    IndexManifest.publish(vectors.sparkSession, root)(
-      dir => writeIvfSq8Index(vectors, dir, metaCols, trainOn))
-
-  /** Durable ATOMIC append on the composed index: assign (frozen
-    * centroids, float space) + quantize (frozen staged grid,
-    * end-saturating) the new vectors, landed through
-    * [[IndexManifest.appendRowsAtomic]] on a manifest-rooted index —
-    * the PQ tier's atomic contract on the IVF-SQ8 layout. Riding
-    * metadata derives from the index schema and is required of the
-    * batch (the tier-wide discipline). Returns appended code rows. */
-  def appendIvfSq8IndexAtomic(spark: SparkSession, root: String,
-                              newVectors: DataFrame, keep: Int = 2): Long = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      ivfSq8AppendBatch(spark, live, newVectors), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
-  }
-
-  /** ATOMIC composed erasure — the codes tree is the PQ layout
-    * byte-for-byte, so this IS [[Pq.deleteFromIvfPqIndexAtomic]]. */
-  def deleteFromIvfSq8IndexAtomic(spark: SparkSession, root: String,
-                                  vecIds: Seq[Long], keep: Int = 2): Long =
-    Pq.deleteFromIvfPqIndexAtomic(spark, root, vecIds, keep)
-
-  /** Per-cell health report of a staged composed index — the same
-    * shared aggregate as every tier ([[Similarity.cellStatsOf]]; r18
-    * verdict item 4): the SQ8 grid never skews (it is per-dimension),
-    * but the coarse cells under appends do, identically to the float
-    * postings. */
-  def ivfSq8IndexStats(spark: SparkSession, path: String,
-                       appendedFrom: Long): DataFrame =
-    Similarity.cellStatsOf(
-      Pq.pinnedCodes(IndexManifest.readFrame(spark, path, "codes")),
-      IndexManifest.readFrame(spark, path, "centroids"), appendedFrom)
-
-  /** Retrain a drifted MANIFEST-rooted composed index: re-run
-    * [[writeIvfSq8Index]] — fresh centroids AND a fresh ranges grid —
-    * over `corpus` (the declared float source; int8 codes are lossy),
-    * published as a new version behind `keep`. Same fence as every
-    * retrain: drain streaming appenders first. Post-rebalance answers
-    * equal a fresh build over the corpus bit-for-bit (deterministic
-    * pipeline; spec-asserted). */
-  def rebalanceIvfSq8IndexVersioned(spark: SparkSession, root: String,
-                                    corpus: DataFrame,
-                                    keep: Int = 2): String = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    val meta = IndexManifest.readFrame(spark, live, "codes").columns.toSeq
-      .filterNot(Set("vec_id", "cell", "codes"))
-    // publishRetrain = the ENFORCED fence (r19 verdict item 1): refuses
-    // while un-flushed streaming-pending rows exist, and advances the
-    // retrain epoch the ingest sink's claim check is keyed by
-    IndexManifest.publishRetrain(spark, root, keep)(
-      dir => writeIvfSq8Index(corpus, dir, meta))
+    sq8Scan(ix.tree, rg, vectors, col("vec_id").isInCollection(queryIds), cut, sameLabel,
+      Some((ix.artifact("centroids"), AnnSearch.probeWidth(nprobe, sameLabel))))
   }
 
   /** Full DuckDB replay of the composed IVF-SQ8 search: the shared

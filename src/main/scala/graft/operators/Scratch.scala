@@ -91,14 +91,30 @@ private[graft] object Scratch {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
+  /** Materialize `df` into a fresh per-call [[dir]], hand a scan over
+    * it to `use`, and delete the directory once `use` returns — staging
+    * that two concurrent callers never share (unlike [[stageReuse]]).
+    * `use` must finish consuming the scan before it returns. */
+  def staged[A](df: org.apache.spark.sql.DataFrame, prefix: String)
+               (use: org.apache.spark.sql.DataFrame => A): A = {
+    val path = dir(prefix)
+    try {
+      df.write.mode("overwrite").parquet(path)
+      use(df.sparkSession.read.schema(df.schema).parquet(path))
+    } finally release(path)
+  }
+
   /** Eagerly delete a scratch directory from [[dir]]/[[diskDir]] whose
     * consumer is DONE with it (all scans materialized) — long-lived
     * processes that stage per-call (the manifest delta publisher under
     * a streaming sink: one staging per micro-batch for a JVM that
-    * lives for weeks) cannot defer to the exit hook. Best-effort; the
-    * exit hook remains the backstop. */
-  def release(path: String): Unit =
-    deleteRecursively(java.nio.file.Paths.get(path))
+    * lives for weeks) cannot defer to the exit hook, nor let its
+    * exit-hook queue grow per call. Best-effort. */
+  def release(path: String): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    deleteRecursively(p)
+    registered.remove(p)
+  }
 
   /** A fresh DISK-backed scratch directory (java.io.tmpdir), with the
     * same shutdown-hook cleanup as [[dir]]. For multi-GB scratch — the

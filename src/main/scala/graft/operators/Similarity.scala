@@ -728,24 +728,17 @@ object Similarity {
   /** Driver query (key `knn_ivf_delete`): the FLOAT tier's erasure
     * lifecycle at the cross-engine gate — completing erasure-at-the-
     * gate across all four tiers (PQ `knn_ivf_pq_delete`, SQ8
-    * `knn_sq8_delete`, OPQ `knn_ivf_opq_delete`, float here). Build +
-    * stage the postings, [[deleteFromIvfIndexAtomic]] of the bounded
-    * slice (only cell directories holding an erased id rewritten), staged
-    * top-k. Oracle = the classic IVF replay with exactly those ids
-    * excluded from candidate enumeration — centroids and probes stand
-    * (trained aggregates; the erased ids are query-disjoint). */
-  def knnIvfDelete(spark: SparkSession, dir: String): DataFrame = {
-    val vectors = Tables.embeddings(spark, dir)
-    // r17 verdict item 1: this gate key runs the ATOMIC erasure path —
-    // versioned stage, manifest-published survivor rewrite (wholly-old
-    // or wholly-new for any concurrent reader), pointer resolved once
-    // for the staged query — so the atomic lifecycle itself stays
-    // hash-checked cross-engine every round.
-    val root = Scratch.reuseDir("ivf_float_delete_key_root")
-    stageIvfIndexVersion(vectors, root)
-    deleteFromIvfIndexAtomic(spark, root, DeleteLo to DeleteHi)
-    queryIvfIndex(spark, IndexManifest.currentOrFail(spark, root))
-  }
+    * `knn_sq8_delete`, OPQ `knn_ivf_opq_delete`, float here). Stage
+    * the postings as a manifest version, erase the bounded slice
+    * through the ATOMIC path ([[AnnIndex.erased]] — only cell
+    * directories holding an erased id rewritten, one pointer flip), and
+    * answer staged top-k off the live version. Oracle = the classic IVF
+    * replay with exactly those ids excluded from candidate enumeration
+    * — centroids and probes stand (trained aggregates; the erased ids
+    * are query-disjoint). */
+  def knnIvfDelete(spark: SparkSession, dir: String): DataFrame =
+    queryIvfIndex(spark, AnnIndex.erased(Tables.embeddings(spark, dir),
+      "ivf_float_delete_key_root")(buildIvf))
 
   val knnIvfDeleteOracleSql: String =
     knnIvfOracleSqlFor(s"i.vec_id BETWEEN $DeleteLo AND $DeleteHi")
@@ -1414,174 +1407,37 @@ object Similarity {
 
   // --- float-tier serving split: build once, stage, query many ----------
 
-  /** Stage the FLOAT IVF index durably: `centroids` (C rows) plus the
-    * cell-PARTITIONED float postings (vec_id, e, nrm, cell) — the
-    * uncompressed tier's serving artifact, completing the
-    * build-once/query-many split across every tier
-    * (PQ: [[Pq.writeIvfPqIndex]]; SQ8: [[Quantize.writeSq8Index]]).
-    * Postings live in cell=<id> partition directories, so a probe
-    * prunes whole directories and the append/erasure lifecycle
-    * touches only its cells (the PQ layout, float payload). The codes
-    * tree swaps via tmp + delete/rename — a mid-write crash leaves a
-    * complete recovery copy (the r15-advice discipline).
-    *
-    * Residual (shared with [[Pq.writeIvfPqIndex]]): the centroids
-    * overwrite and the postings swap are two separate commits, so a
-    * crash or a concurrent reader BETWEEN them can pair new centroids
-    * with old postings. A deployment restaging LIVE indexes adds a
-    * manifest (version dir + atomic pointer flip) on top; the
-    * per-frame recovery copies here bound the damage to "re-run the
-    * stage", never "index lost". */
-  /** Metadata columns of a vectors frame — everything that isn't the
-    * key or the payload rides the posting list (the metadata-in-index
-    * layout a same-label [[queryIvfIndex]] filters on), made DURABLE
-    * here. */
-  private def metaCols(vectors: DataFrame): Seq[String] =
-    vectors.columns.toSeq.filterNot(c => c == "vec_id" || c == "embedding")
-
-  def writeIvfIndex(vectors: DataFrame, path: String): Unit = {
+  /** Build the FLOAT IVF index for staging ([[AnnIndex.FloatIvf]]):
+    * `centroids` (C rows) plus the float postings (vec_id, e, nrm,
+    * cell) — the uncompressed tier's serving artifact. Every column of
+    * `vectors` other than the key and the payload rides the postings
+    * (the metadata-in-index layout a same-label [[queryIvfIndex]]
+    * filters on). [[AnnIndex.write]] / [[AnnIndex.stage]] persist it
+    * with the postings in cell=<id> partition directories, so a probe
+    * prunes whole directories and an append or erasure touches only
+    * its cells. */
+  def buildIvf(vectors: DataFrame): AnnIndex.Index = {
     val (indexed, centroids) = ivfIndex(vectors, 0, "ivf_centroids_write_ivf")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    val postPath = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val tmpPath = new org.apache.hadoop.fs.Path(s"$path/postings_tmp")
-    val fs = postPath.getFileSystem(
-      vectors.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(tmpPath, true)
-    val flat = indexed.select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    val withMeta =
-      if (metaCols(vectors).isEmpty) flat
-      else flat.join(
-        vectors.select((Seq("vec_id") ++ metaCols(vectors)).map(col): _*), "vec_id")
-    withMeta
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmpPath.toString)
-    fs.delete(postPath, true)
-    if (!fs.rename(tmpPath, postPath))
-      throw new IllegalStateException(
-        s"writeIvfIndex: rename $tmpPath -> $postPath failed; " +
-          s"the new postings tree is intact at $tmpPath")
-  }
-
-  /** (postings, centroids) off a staged index — postings re-pin the
-    * partition column's position/type (the readIvfPqIndex discipline:
-    * partitioned discovery appends `cell` last and may infer it
-    * narrow, while consumers bind it positionally as long). */
-  def readIvfIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val raw = IndexManifest.readFrame(spark, path, "postings")
-    val meta = raw.columns.toSeq
-      .filterNot(Set("vec_id", "e", "nrm", "cell")).map(col)
-    (raw.select((Seq(col("vec_id"), col("e"), col("nrm"),
-       col("cell").cast("long").as("cell")) ++ meta): _*),
-     IndexManifest.readFrame(spark, path, "centroids"))
+    AnnIndex.Index(AnnIndex.FloatIvf, Seq(centroids),
+      AnnIndex.ride(indexed.select(col("vec_id"), col("e"), col("nrm"), col("cell")),
+        vectors, vectors.columns.toSeq.filterNot(Set("vec_id", "embedding"))))
   }
 
   /** Query a STAGED float index: [[ivfSearch]] over the persisted
     * frames, nothing rebuilt — answers bit-identically to the one-shot
     * [[knnIvfOn]] with the same cut (spec-asserted; the float payload
     * round-trips parquet exactly). A same-label search filters on the
-    * `label` column the postings carry ([[writeIvfIndex]] persists the
+    * `label` column the postings carry ([[buildIvf]] rides the
     * vectors' metadata). `nprobe <= 0` picks the width from
     * `sameLabel` ([[AnnSearch.probeWidth]]). */
   def queryIvfIndex(spark: SparkSession, path: String, cut: Cut = TopK(K),
                     sameLabel: Boolean = false, nprobe: Int = 0): DataFrame = {
-    val (postings, centroids) = readIvfIndex(spark, path)
-    require(!sameLabel || postings.columns.contains(AnnSearch.Label),
+    val ix = AnnIndex.read(spark, path, AnnIndex.FloatIvf)
+    require(!sameLabel || ix.tree.columns.contains(AnnSearch.Label),
       s"staged postings carry no '${AnnSearch.Label}' column — " +
         "stage the index from a vectors frame that has it")
-    ivfSearch(postings, centroids, cut, sameLabel, nprobe)
+    ivfSearch(ix.tree, ix.artifact("centroids"), cut, sameLabel, nprobe)
   }
-
-  /** The float append's arithmetic alone — the batch assigned against
-    * `path`'s frozen centroids with its metadata riding, as an
-    * (unmaterialized) posting frame for [[appendIvfIndexAtomic]]. */
-  private def ivfAppendBatch(spark: SparkSession, path: String,
-                             newVectors: DataFrame): DataFrame = {
-    val centroids = IndexManifest.readFrame(spark, path, "centroids")
-    // dimension discipline (the r15-advice class, float form): a
-    // too-SHORT vector would silently prefix-dot its way into some
-    // cell and poison the postings before any query fails; a
-    // too-long one would AIOOBE deep in the assignment loop. Both
-    // now fail in-plan with a diagnosis. The width probe is a 1-row
-    // read of the C-row artifact — headOption so an empty artifact
-    // (a path that holds no staged index) fails with a diagnosis,
-    // not an opaque index-out-of-bounds (r16 advice).
-    val d = centroids.select(size(col("ce"))).limit(1).collect().headOption match {
-      case Some(r) => r.getInt(0)
-      case None => throw new IllegalStateException(
-        s"appendIvfIndexAtomic: no staged index at $path — the centroids " +
-          "artifact is empty; stage one with stageIvfIndexVersion first")
-    }
-    val v = newVectors
-      .select(col("vec_id"),
-        when(size(col("embedding")) === lit(d), V.toDouble(col("embedding")))
-          .otherwise(raise_error(concat(
-            lit("appendIvfIndexAtomic: vector "), col("vec_id"), lit(" has "),
-            size(col("embedding")),
-            lit(s" dims but the staged index has $d")))
-            .cast("array<double>"))
-          .as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    // metadata discipline: an append batch whose metadata columns
-    // differ from the staged postings' would write a divergent-schema
-    // cell file (readers then see nulls or drop the filter column) —
-    // fail loudly instead
-    val stagedMeta = IndexManifest.readFrame(spark, path, "postings").columns.toSet
-      .diff(Set("vec_id", "e", "nrm", "cell"))
-    val batchMeta = metaCols(newVectors).toSet
-    require(batchMeta == stagedMeta,
-      s"appendIvfIndexAtomic: batch metadata columns $batchMeta do not match " +
-        s"the staged postings' $stagedMeta — stage and append the same shape")
-    val flat = assignNearest(v, centroids, "cell", "ce", "cn")
-      .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    // metadata rides the appended postings exactly as in the build
-    if (metaCols(newVectors).isEmpty) flat
-    else flat.join(newVectors
-      .select((Seq("vec_id") ++ metaCols(newVectors)).map(col): _*), "vec_id")
-  }
-
-  /** Incremental float-tier maintenance (ATOMIC): assign `newVectors`
-    * to the FROZEN staged centroids (the closure argmax — identical
-    * arithmetic to the build's assignment) and land the batch through
-    * [[IndexManifest.appendRowsAtomic]] on a VERSIONED index root
-    * ([[stageIvfIndexVersion]]). Centroids and every untouched cell
-    * stay byte-identical (inherited by reference), so the append bill
-    * is O(touched cells), never O(index). A concurrent reader sees the
-    * wholly-old or wholly-new version, never some of the batch's
-    * cells; a crash leaves the old version serving. Superseded
-    * versions retire behind `keep`. Returns appended posting rows. */
-  def appendIvfIndexAtomic(spark: SparkSession, root: String,
-                           newVectors: DataFrame, keep: Int = 2): Long = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    // epoch-pinned (r20): cell assignment derives from this version's
-    // centroids — a retrain publishing mid-flight fails loudly instead
-    // of landing the batch at stale cells on the retrained tree
-    IndexManifest.appendRowsAtomic(spark, root, "postings", "cell",
-      ivfAppendBatch(spark, live, newVectors), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
-  }
-
-  /** Right-to-erasure on the float serving index (ATOMIC): drop the
-    * postings of `vecIds` through [[IndexManifest.deleteVecIdsAtomic]]
-    * — only cell directories holding an erased id are rewritten into
-    * the new version (emptied cells simply don't exist in it),
-    * everything else is inherited by reference, one pointer flip. No
-    * reader ever sees a half-erased index; a crash leaves the old
-    * version serving. Every posting column, metadata included, rides
-    * the survivor rewrite. Returns the number of deleted posting
-    * rows. */
-  def deleteFromIvfIndexAtomic(spark: SparkSession, root: String,
-                               vecIds: Seq[Long], keep: Int = 2): Long =
-    IndexManifest.deleteVecIdsAtomic(spark, root, "postings", "cell",
-      vecIds, keep)
-
-  /** Stage a float index as version 1 of a manifest-rooted index —
-    * the entry point of the atomic lifecycle ([[appendIvfIndexAtomic]]
-    * / [[deleteFromIvfIndexAtomic]] / [[rebalanceIvfIndexVersioned]]
-    * maintain it; readers resolve [[IndexManifest.currentOrFail]]
-    * once per plan). Returns the published version directory. */
-  def stageIvfIndexVersion(vectors: DataFrame, root: String): String =
-    IndexManifest.publish(vectors.sparkSession, root)(
-      dir => writeIvfIndex(vectors, dir))
 
   /** Auto-nprobe: close the recall-report loop (r16 verdict item 4 —
     * the dq_key_skew → saltedJoinAuto precedent: a diagnostic nothing
@@ -1606,64 +1462,16 @@ object Similarity {
     (nprobe, knnIvfOn(vectors, TopK(k), nprobe = nprobe))
   }
 
-  /** Per-cell health report of a STAGED float index (r16 verdict
-    * item 5): appends assign against FROZEN centroids forever, so
-    * cells skew and recall decays as the corpus drifts — this is the
-    * retrain pre-flight (the dq_key_skew shape ON the index).
-    * One row per non-empty cell: posting count, appended count
-    * (vec_id ≥ `appendedFrom`, the caller's ingest watermark —
-    * deployments know the id their day-0 build ended at), appended
-    * fraction, and the skew factor n·C/total (1.0 = perfectly
-    * balanced; the max over cells bounds the worst probe's scan
-    * cost). All divisions are IEEE doubles of exact integers —
-    * hash-oracle-able. Metadata-sized: C rows out of one postings
-    * aggregate; the centroid count and total ride in as broadcast
-    * 1-row frames. */
-  def ivfIndexStats(spark: SparkSession, path: String,
-                    appendedFrom: Long): DataFrame = {
-    val (postings, centroids) = readIvfIndex(spark, path)
-    cellStatsOf(postings, centroids, appendedFrom)
-  }
-
-  /** The per-cell health aggregate of [[ivfIndexStats]], factored over
-    * ANY `(vec_id, cell, …)` assignment tree (r18 verdict item 4: the
-    * compressed tiers' codes trees skew under appends exactly like the
-    * float postings — the health loop must read all of them).
-    * `assigned` needs only `vec_id` and `cell` (column-pruned);
-    * `centroids` only its row count. Every division is an IEEE double
-    * of exact integers — hash-oracle-able, and because every tier
-    * assigns against the SAME deterministic coarse quantizer, one
-    * oracle covers them all. */
-  private[operators] def cellStatsOf(assigned: DataFrame, centroids: DataFrame,
-                                     appendedFrom: Long): DataFrame = {
-    val perCell = assigned.groupBy(col("cell").cast("long").as("cell"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("vec_id") >= appendedFrom, lit(1L)).otherwise(lit(0L)))
-          .as("n_appended"))
-    val tot = perCell.agg(sum(col("n")).as("tot"))
-    val nc = centroids.agg(count(lit(1)).as("c"))
-    perCell.crossJoin(broadcast(tot)).crossJoin(broadcast(nc))
-      .select(col("cell"), col("n"), col("n_appended"),
-        (col("n_appended").cast("double") / col("n").cast("double"))
-          .as("frac_appended"),
-        ((col("n") * col("c")).cast("double") / col("tot").cast("double"))
-          .as("skew"))
-  }
-
   /** Driver query (key `knn_index_stats`): the append lifecycle's
     * health read — stage the index on the day-0 half, append the
-    * rest against the frozen centroids, report per-cell stats with
-    * the append watermark at the split. The oracle replays the
-    * trained-on-base assignment (the spec-proven append equation)
-    * and aggregates the same report. */
+    * rest against the frozen centroids, report per-cell stats
+    * ([[AnnIndex.stats]]) with the append watermark at the split. The
+    * oracle replays the trained-on-base assignment (the spec-proven
+    * append equation) and aggregates the same report. */
   def knnIndexStats(spark: SparkSession, dir: String): DataFrame = {
-    val vectors = Tables.embeddings(spark, dir)
-    val cut = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
-    val root = Scratch.reuseDir("ivf_stats_key_root")
-    stageIvfIndexVersion(vectors.filter(col("vec_id") <= cut), root)
-    appendIvfIndexAtomic(spark, root, vectors.filter(col("vec_id") > cut))
-    ivfIndexStats(spark, IndexManifest.currentOrFail(spark, root),
-      appendedFrom = cut + 1)
+    val (live, cut) = AnnIndex.halfAppended(Tables.embeddings(spark, dir),
+      "ivf_stats_key_root")(buildIvf)
+    AnnIndex.stats(spark, live, AnnIndex.FloatIvf, appendedFrom = cut + 1)
   }
 
   /** Oracle: the trained-on-base IVF prefix (Lloyd sees only
@@ -1685,37 +1493,6 @@ object Similarity {
        |  CAST(p.n_appended AS DOUBLE) / CAST(p.n AS DOUBLE) AS frac_appended,
        |  CAST(p.n * nc.c AS DOUBLE) / CAST(t.tot AS DOUBLE) AS skew
        |FROM percell p CROSS JOIN tot t CROSS JOIN nc""".stripMargin
-
-  /** Retrain a drifted MANIFEST-rooted float index (r17 verdict
-    * item 6 — retention wired into a lifecycle): rebuild centroids and
-    * re-partition the postings from the live version's own vectors
-    * (the float payload IS the corpus — metadata columns ride
-    * through), publish the rebuilt index as a new version (readers
-    * overlapping the retrain keep serving the old one), then retire
-    * superseded versions behind `keep`. After a rebalance the index
-    * answers exactly as a fresh build over the same vectors
-    * (spec-asserted): `toDouble` is the identity on the
-    * already-widened payload, so the retrain sees bit-identical
-    * geometry. Cost is the build's — the point of [[ivfIndexStats]]
-    * is to pay it only when the skew report says so. A rebuild
-    * touches every cell by definition, so nothing is inherited — this
-    * is the full-restage complement of the delta paths. Returns the
-    * published version directory. */
-  def rebalanceIvfIndexVersioned(spark: SparkSession, root: String,
-                                 keep: Int = 2): String = {
-    val live = IndexManifest.currentOrFail(spark, root)
-    val postings = IndexManifest.readFrame(spark, live, "postings")
-    val meta = postings.columns.toSeq
-      .filterNot(Set("vec_id", "e", "nrm", "cell")).map(col)
-    val corpus = Scratch.stageReuse(
-      postings.select((Seq(col("vec_id"), col("e").as("embedding")) ++ meta): _*),
-      "ivf_rebalance_corpus")
-    // publishRetrain = the ENFORCED fence (r19 verdict item 1): refuses
-    // while un-flushed streaming-pending rows exist, and advances the
-    // retrain epoch the ingest sink's claim check is keyed by
-    IndexManifest.publishRetrain(spark, root, keep)(
-      dir => writeIvfIndex(corpus, dir))
-  }
 
   /** Oracle: the IVF replay with the label projection joined onto
     * both the query set and the candidate stream — the ranked window

@@ -530,11 +530,11 @@ object Streams {
 
   /** Streaming ANN INGEST — the serving half of the embedding
     * pipeline's daily lifecycle run continuously (the streaming twin
-    * of [[graft.operators.Pq.appendIvfPqIndexAtomic]]): each
+    * of [[graft.operators.AnnIndex.append]] on the IVF-PQ tier): each
     * micro-batch of `(vec_id, embedding)` rows is assigned + encoded
     * against the live IVFADC artifacts under an
     * [[graft.operators.IndexManifest]] root (a day-0
-    * [[graft.operators.Pq.stageIvfPqIndexVersion]], which MUST
+    * [[graft.operators.AnnIndex.stage]], which MUST
     * pre-exist — a missing index fails loudly rather than training on
     * one micro-batch), and each EFFECTIVE micro-batch lands as a
     * delta-published new version + one pointer flip, so concurrent
@@ -635,7 +635,7 @@ object Streams {
                                 keep: Int = 2,
                                 publishEveryRows: Long = 0L): Long = {
     val spark = batch.sparkSession
-    import graft.operators.{IndexManifest, Pq, Scratch}
+    import graft.operators.{AnnIndex, IndexManifest, Scratch}
     // config-downgrade drain (r19 advice): rows a PRIOR coalesced run
     // (publishEveryRows > 0) parked in the pending tree would, on the
     // per-batch path, stay durable yet permanently invisible — the
@@ -660,9 +660,9 @@ object Streams {
       catch {
         case e: IllegalStateException => throw new IllegalStateException(
           s"annIngestSinkAtomic needs a day-0 manifest version at $root " +
-            s"(Pq.stageIvfPqIndexVersion) — build once, then stream appends", e)
+            s"(AnnIndex.stage) — build once, then stream appends", e)
       }
-    val index = Pq.readIvfPqIndex(spark, live)
+    val index = AnnIndex.read(spark, live, AnnIndex.IvfPq)
     // THE REPLAY↔RETRAIN FENCE, detection half (r19 verdict item 1 —
     // previously a doc-comment contract): the cell-pruned claim check
     // below is sound only while the cell assignment function is the
@@ -679,53 +679,52 @@ object Streams {
     // advances after this batch lands), not per batch.
     val liveEpoch = IndexManifest.epochOf(spark, live)
     val epochMoved = !annIngestMarkerEpoch(spark, root).contains(liveEpoch)
-    val newCodes = Scratch.stageReuse(
-      Pq.encodeAgainst(index, batch, 0), "ann_ingest_atomic_codes")
-    val cells = newCodes.select("cell").distinct()
-    val liveIds =
-      if (epochMoved) index.codes.select("vec_id")
-      else index.codes
-        .join(broadcast(cells), Seq("cell"), "left_semi")
-        .select("vec_id")
-    // the claim registry is live ∪ pending: a replayed batch whose
-    // rows already wait in pending must not re-append them. Pending
-    // rows are BY CONSTRUCTION encoded under the live epoch (the
-    // stamp check here + the publishRetrain fence), so their claim
-    // stays cell-pruned even when the live epoch moved.
-    val pendingDf = readLakeOpt(spark, annPendingPath(root))
-    pendingDf.foreach { _ =>
-      val pendingEpoch = IndexManifest.epochOf(spark, annPendingPath(root))
-      require(pendingEpoch == liveEpoch,
-        s"annIngestMicroBatchAtomic: pending rows at ${annPendingPath(root)} " +
-          s"were encoded under retrain epoch $pendingEpoch but the live " +
-          s"index is at epoch $liveEpoch — a retrain bypassed the " +
-          "publishRetrain fence while rows pended. Their cells/codes are " +
-          "stale; re-ingest them from source after clearing the pending " +
-          "tree (if every pending vec_id is already live — the crash-" +
-          "between-flush-and-clear case — clearing alone is safe).")
-    }
-    val pendingIds = pendingDf
-      .map(_.join(broadcast(cells), Seq("cell"), "left_semi").select("vec_id"))
-      .getOrElse(liveIds.limit(0))
-    val fresh = newCodes.join(liveIds.unionByName(pendingIds),
-      Seq("vec_id"), "left_anti")
-    // no isEmpty pre-check: it would EXECUTE the anti-join (whose
-    // semi-join build side scans the live cells) once for the probe
-    // and again for the staging — both branches below stage first and
-    // read emptiness off the materialized count (a replayed batch
-    // stages an empty frame, appends nothing, publishes nothing)
-    val appended =
+    // per-call staging, released once the batch has landed: two sinks
+    // on different roots in one JVM must never share a staging dir
+    val appended = Scratch.staged(AnnIndex.encode(index, batch),
+        "ann_ingest_atomic_codes") { newCodes =>
+      val cells = newCodes.select("cell").distinct()
+      val liveIds =
+        if (epochMoved) index.tree.select("vec_id")
+        else index.tree
+          .join(broadcast(cells), Seq("cell"), "left_semi")
+          .select("vec_id")
+      // the claim registry is live ∪ pending: a replayed batch whose
+      // rows already wait in pending must not re-append them. Pending
+      // rows are BY CONSTRUCTION encoded under the live epoch (the
+      // stamp check here + the publishRetrain fence), so their claim
+      // stays cell-pruned even when the live epoch moved.
+      val pendingDf = readLakeOpt(spark, annPendingPath(root))
+      pendingDf.foreach { _ =>
+        val pendingEpoch = IndexManifest.epochOf(spark, annPendingPath(root))
+        require(pendingEpoch == liveEpoch,
+          s"annIngestMicroBatchAtomic: pending rows at ${annPendingPath(root)} " +
+            s"were encoded under retrain epoch $pendingEpoch but the live " +
+            s"index is at epoch $liveEpoch — a retrain bypassed the " +
+            "publishRetrain fence while rows pended. Their cells/codes are " +
+            "stale; re-ingest them from source after clearing the pending " +
+            "tree (if every pending vec_id is already live — the crash-" +
+            "between-flush-and-clear case — clearing alone is safe).")
+      }
+      val pendingIds = pendingDf
+        .map(_.join(broadcast(cells), Seq("cell"), "left_semi").select("vec_id"))
+        .getOrElse(liveIds.limit(0))
+      val fresh = newCodes.join(liveIds.unionByName(pendingIds),
+        Seq("vec_id"), "left_anti")
+      // no isEmpty pre-check: it would EXECUTE the anti-join (whose
+      // semi-join build side scans the live cells) once for the probe
+      // and again for the staging — both branches below stage first and
+      // read emptiness off the materialized count (a replayed batch
+      // stages an empty frame, appends nothing, publishes nothing)
       if (publishEveryRows <= 0L)
-        // requireEpoch closes the fence's last window (r20): a retrain
+        // the epoch pin closes the fence's last window (r20): a retrain
         // that publishes between this batch's encode (against `live`'s
         // centroids/codebooks) and the pointer flip would otherwise
         // land these rows on the retrained tree at stale cells — the
         // epoch-pinned publish fails loudly instead and the stream's
         // replay re-encodes against the fresh version
-        IndexManifest.appendRowsAtomic(spark, root, "codes", "cell", fresh,
-          keep, requireEpoch = Some(liveEpoch))
-      else {
-        val staged = Scratch.stageReuse(fresh, "ann_ingest_pending_batch")
+        AnnIndex.land(spark, root, AnnIndex.IvfPq, fresh, liveEpoch, keep)
+      else Scratch.staged(fresh, "ann_ingest_pending_batch") { staged =>
         val n = staged.count()
         if (n > 0L) {
           // stamp the epoch BEFORE the rows land: a crash between the
@@ -748,6 +747,7 @@ object Streams {
         if (pendingRows >= publishEveryRows) annIngestFlushPending(spark, root, keep)
         n
       }
+    }
     // marker advance AFTER the landing: a crash in between re-runs the
     // full-tree claim on the next batch — slower, never duplicating
     if (epochMoved) annIngestWriteMarker(spark, root, liveEpoch)
@@ -763,7 +763,7 @@ object Streams {
     * whenever pending reaches `publishEveryRows`. */
   def annIngestFlushPending(spark: SparkSession, root: String,
                             keep: Int = 2): Long = {
-    import graft.operators.{IndexManifest, Pq}
+    import graft.operators.{AnnIndex, IndexManifest}
     val pendingDf = readLakeOpt(spark, annPendingPath(root)).getOrElse {
       // a stamped-but-row-less tree (crash between the epoch stamp and
       // the first row write) holds no publishable rows but WOULD block
@@ -787,7 +787,7 @@ object Streams {
         s"encoded under retrain epoch $pendingEpoch but the live index is " +
         s"at epoch $liveEpoch — re-ingest them from source instead of " +
         "flushing (see annIngestMicroBatchAtomic's fence scaladoc).")
-    val liveCodes = Pq.readIvfPqIndex(spark, live).codes
+    val liveCodes = AnnIndex.read(spark, live, AnnIndex.IvfPq).tree
     val cells = pendingDf.select("cell").distinct()
     val dupIds = liveCodes
       .join(broadcast(cells), Seq("cell"), "left_semi")
@@ -798,9 +798,8 @@ object Streams {
     // epoch pin holds the fence through the publish itself: a retrain
     // landing after the check above would otherwise still receive
     // these stale-encoded rows.
-    val n = IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      pendingDf.join(dupIds, Seq("vec_id"), "left_anti"), keep,
-      requireEpoch = Some(liveEpoch))
+    val n = AnnIndex.land(spark, root, AnnIndex.IvfPq,
+      pendingDf.join(dupIds, Seq("vec_id"), "left_anti"), liveEpoch, keep)
     // clear AFTER the publish: a crash before this line leaves pending
     // intact (durable, replay-safe); one after it has already published
     val p = new org.apache.hadoop.fs.Path(annPendingPath(root))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
-import graft.operators.{Opq, Pq, Quantize, Similarity}
+import graft.operators.{AnnIndex, Opq, Pq, Quantize, Similarity}
 import graft.operators.AnnSearch.{Cut, Radius, TopK}
 
 /** One contract for every ANN tier's search body (float IVF, PQ, OPQ,
@@ -42,17 +42,17 @@ class AnnSearchSpec extends SparkSpecBase {
     val v = fixture
     def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
     val floatDir = tmp("ann_float")
-    Similarity.writeIvfIndex(v, floatDir)
+    AnnIndex.write(Similarity.buildIvf(v), floatDir)
     val pqDir = tmp("ann_pq")
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(v, metaCols = Seq("label")), pqDir)
+    AnnIndex.write(Pq.buildIvfPq(v, metaCols = Seq("label")), pqDir)
     val pq = Pq.readIvfPqIndex(spark, pqDir)
     val opqDir = tmp("ann_opq")
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(v, metaCols = Seq("label")), opqDir)
-    val opq = Opq.readIvfOpqIndex(spark, opqDir)
+    AnnIndex.write(Opq.buildIvfOpq(v, metaCols = Seq("label")), opqDir)
+    val opq = Opq.IvfOpqIndex(AnnIndex.read(spark, opqDir, AnnIndex.IvfOpq))
     val sq8Dir = tmp("ann_sq8")
-    Quantize.writeSq8Index(v, sq8Dir, metaCols = Seq("label"))
+    AnnIndex.write(Quantize.buildSq8(v, metaCols = Seq("label")), sq8Dir)
     val ivfSq8Dir = tmp("ann_ivfsq8")
-    Quantize.writeIvfSq8Index(v, ivfSq8Dir, metaCols = Seq("label"))
+    AnnIndex.write(Quantize.buildIvfSq8(v, metaCols = Seq("label")), ivfSq8Dir)
     Map(
       // the staged float index serves the fixed query set (vec_id <
       // NQueries); its empty input is an empty corpus

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexManifest, Opq, Pq, Quantize, Similarity}
+import graft.operators.{AnnIndex, IndexManifest, Opq, Pq, Quantize, Similarity}
 
 /** The atomic index lifecycle (r17 verdict item 1): append and erase
   * land as manifest-published versions — untouched cells inherited by
@@ -58,13 +58,13 @@ class ManifestAtomicSpec extends SparkSpecBase {
   private lazy val base = vectors.filter(col("vec_id") <= cut)
   private lazy val rest = vectors.filter(col("vec_id") > cut)
   private lazy val rootDir = tmp("graft_atomic_root")
-  private lazy val v1 = Similarity.stageIvfIndexVersion(base, rootDir)
+  private lazy val v1 = AnnIndex.stage(Similarity.buildIvf(base), rootDir)
 
   test("float tier: atomic append equals the in-place append; old version " +
       "immutable; untouched cells hardlink, not copy") {
     val v1Answers = canon(Similarity.queryIvfIndex(spark, v1))
     val v1Rows = IndexRefs.postingRows(spark, v1)
-    val n = Similarity.appendIvfIndexAtomic(spark, rootDir, rest)
+    val n = AnnIndex.append(spark, rootDir, AnnIndex.FloatIvf, rest)
     assert(n == rest.count())
     val v2 = IndexManifest.currentOrFail(spark, rootDir)
     assert(v2 != v1)
@@ -100,7 +100,7 @@ class ManifestAtomicSpec extends SparkSpecBase {
   test("two interleaved atomic appenders serialize on the version claim: " +
       "both deltas land in the final chain — never silent row loss") {
     val root = tmp("graft_atomic_conc")
-    Similarity.stageIvfIndexVersion(base, root)
+    AnnIndex.stage(Similarity.buildIvf(base), root)
     val restA = rest.filter(pmod(col("vec_id"), lit(2L)) === 0L)
     val restB = rest.filter(pmod(col("vec_id"), lit(2L)) === 1L)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -109,8 +109,8 @@ class ManifestAtomicSpec extends SparkSpecBase {
     // keep=3: each writer's vacuum must not retire the version the
     // other writer may still be staging its encode against (the
     // documented rule: keep ≥ concurrent writers + 1)
-    val fa = submit(Similarity.appendIvfIndexAtomic(spark, root, restA, keep = 3))
-    val fb = submit(Similarity.appendIvfIndexAtomic(spark, root, restB, keep = 3))
+    val fa = submit(AnnIndex.append(spark, root, AnnIndex.FloatIvf, restA, keep = 3))
+    val fb = submit(AnnIndex.append(spark, root, AnnIndex.FloatIvf, restB, keep = 3))
     val (na, nb) =
       try (fa.get(), fb.get()) finally pool.shutdown()
     assert(na == restA.count() && nb == restB.count())
@@ -135,7 +135,7 @@ class ManifestAtomicSpec extends SparkSpecBase {
     val preRows = IndexRefs.postingRows(spark,
       IndexManifest.currentOrFail(spark, rootDir))
     val want = preRows.filterNot(r => erased.contains(r._1))
-    val n = Similarity.deleteFromIvfIndexAtomic(spark, rootDir, erased, keep = 3)
+    val n = AnnIndex.erase(spark, rootDir, AnnIndex.FloatIvf, erased, keep = 3)
     assert(n == (preRows.size - want.size).toLong,
       s"atomic erase removed $n rows, the reference ${preRows.size - want.size}")
     val v3 = IndexManifest.currentOrFail(spark, rootDir)
@@ -190,7 +190,7 @@ class ManifestAtomicSpec extends SparkSpecBase {
     // reclaimed by the next publish
     val survivorId = IndexManifest.readFrame(spark, v3, "postings")
       .agg(min("vec_id")).collect()(0).getLong(0)
-    val n2 = Similarity.deleteFromIvfIndexAtomic(spark, rootDir,
+    val n2 = AnnIndex.erase(spark, rootDir, AnnIndex.FloatIvf,
       Seq(survivorId), keep = 1)
     assert(n2 == 1L)
     assert(IndexManifest.currentOrFail(spark, rootDir).endsWith("v=4"))
@@ -210,7 +210,7 @@ class ManifestAtomicSpec extends SparkSpecBase {
     assert(IndexManifest.current(spark, root).isEmpty)
     assert(versionDirs(root) == Seq("v=1")) // a partial nothing references
     // the retried first publish claims PAST the orphan
-    val v2 = Similarity.stageIvfIndexVersion(base, root)
+    val v2 = AnnIndex.stage(Similarity.buildIvf(base), root)
     assert(v2.endsWith("v=2"))
     // keep=2 must NOT count the unreadable never-live v1 as the one
     // retained below-live version (the r18-advice failure: doing so
@@ -219,7 +219,7 @@ class ManifestAtomicSpec extends SparkSpecBase {
     assert(gone.map(_.split('/').last) == Seq("v=1"),
       s"the never-live orphan must be vacuumed outright, got $gone")
     // whereas a once-live version IS retained under the same policy
-    Similarity.appendIvfIndexAtomic(spark, root, rest, keep = 2)
+    AnnIndex.append(spark, root, AnnIndex.FloatIvf, rest, keep = 2)
     assert(versionDirs(root) == Seq("v=2", "v=3"))
     assert(IndexManifest.currentOrFail(spark, root).endsWith("v=3"))
   }
@@ -227,22 +227,22 @@ class ManifestAtomicSpec extends SparkSpecBase {
   test("retention: the default keep=2 bounds the version chain through " +
       "append/erase/rebalance lifecycles") {
     val root = tmp("graft_atomic_keep_root")
-    Similarity.stageIvfIndexVersion(base, root)
-    Similarity.appendIvfIndexAtomic(spark, root, rest) // v2, retires nothing
+    AnnIndex.stage(Similarity.buildIvf(base), root)
+    AnnIndex.append(spark, root, AnnIndex.FloatIvf, rest) // v2, retires nothing
     assert(versionDirs(root) == Seq("v=1", "v=2"))
     // v3 drops v1 from the keep window, but v1 is the full publish the
     // live chain still reads its untouched files from: it stays
-    Similarity.deleteFromIvfIndexAtomic(spark, root, Seq(5L))
+    AnnIndex.erase(spark, root, AnnIndex.FloatIvf, Seq(5L))
     assert(versionDirs(root) == Seq("v=1", "v=2", "v=3"))
     // the rebalance is a full publish: the delta v2 retires; v1 stays
     // while the retained v3 still references it
-    val v4 = Similarity.rebalanceIvfIndexVersioned(spark, root)
+    val v4 = AnnIndex.retrain(spark, root, AnnIndex.FloatIvf)((v, _) => Similarity.buildIvf(v))
     assert(versionDirs(root) == Seq("v=1", "v=3", "v=4"))
     assert(IndexManifest.currentOrFail(spark, root) == v4)
     // a rebalanced versioned index answers exactly like a fresh build
     // over the surviving corpus (the in-place rebalance equation)
     val fresh = tmp("graft_atomic_keep_fresh")
-    Similarity.writeIvfIndex(vectors.filter(col("vec_id") =!= 5L), fresh)
+    AnnIndex.write(Similarity.buildIvf(vectors.filter(col("vec_id") =!= 5L)), fresh)
     assert(canon(Similarity.queryIvfIndex(spark, v4))
       .sameElements(canon(Similarity.queryIvfIndex(spark, fresh))))
     // once v3 leaves the window nothing references v1 and the chain
@@ -288,8 +288,8 @@ class ManifestAtomicSpec extends SparkSpecBase {
     val pqRoot = tmp("graft_health_pq_root")
     Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(base), pqRoot)
     Pq.appendIvfPqIndexAtomic(spark, pqRoot, rest)
-    val pqStats = statsCanon(Pq.ivfPqIndexStats(spark,
-      IndexManifest.currentOrFail(spark, pqRoot), appendedFrom = cut + 1))
+    val pqStats = statsCanon(AnnIndex.stats(spark,
+      IndexManifest.currentOrFail(spark, pqRoot), AnnIndex.IvfPq, appendedFrom = cut + 1))
     // internal consistency: Σn = corpus, Σn_appended = appended batch
     assert(pqStats.map(_._2).sum == vectors.count())
     assert(pqStats.map(_._3).sum == rest.count())
@@ -297,23 +297,34 @@ class ManifestAtomicSpec extends SparkSpecBase {
     // assign against the identical deterministic coarse quantizer, so
     // one health report (and one driver oracle) covers them all
     val opqRoot = tmp("graft_health_opq")
-    Opq.stageIvfOpqIndexVersion(Opq.buildIvfOpq(base), opqRoot)
-    Opq.appendIvfOpqIndexAtomic(spark, opqRoot, rest)
-    assert(statsCanon(Opq.ivfOpqIndexStats(spark,
-        IndexManifest.currentOrFail(spark, opqRoot), cut + 1))
+    AnnIndex.stage(Opq.buildIvfOpq(base), opqRoot)
+    AnnIndex.append(spark, opqRoot, AnnIndex.IvfOpq, rest)
+    assert(statsCanon(AnnIndex.stats(spark,
+        IndexManifest.currentOrFail(spark, opqRoot), AnnIndex.IvfOpq, cut + 1))
       .sameElements(pqStats),
       "OPQ stats must equal the PQ tier's (shared coarse assignment)")
     val sq8Root = tmp("graft_health_ivfsq8")
-    Quantize.stageIvfSq8IndexVersion(base, sq8Root)
-    Quantize.appendIvfSq8IndexAtomic(spark, sq8Root, rest)
-    assert(statsCanon(Quantize.ivfSq8IndexStats(spark,
-        IndexManifest.currentOrFail(spark, sq8Root), cut + 1))
+    AnnIndex.stage(Quantize.buildIvfSq8(base), sq8Root)
+    AnnIndex.append(spark, sq8Root, AnnIndex.IvfSq8, rest)
+    assert(statsCanon(AnnIndex.stats(spark,
+        IndexManifest.currentOrFail(spark, sq8Root), AnnIndex.IvfSq8, cut + 1))
       .sameElements(pqStats),
       "IVF-SQ8 stats must equal the PQ tier's (shared coarse assignment)")
     // the retrain the stats gate: versioned rebalance over the declared
     // float corpus == a fresh buildIvfPq over it, bit for bit
     val qids = 0L until Similarity.NQueries.toLong
-    val published = Pq.rebalanceIvfPqIndexVersioned(spark, pqRoot, vectors)
+    // a build of another tier is refused before any version is claimed
+    val liveBefore = IndexManifest.currentOrFail(spark, pqRoot)
+    val wrongTier = intercept[IllegalArgumentException] {
+      AnnIndex.retrain(spark, pqRoot, AnnIndex.IvfPq, vectors)(
+        (v, m) => Quantize.buildSq8(v, metaCols = m))
+    }
+    assert(wrongTier.getMessage.contains("Sq8"), wrongTier.getMessage)
+    assert(IndexManifest.currentOrFail(spark, pqRoot) == liveBefore)
+    assert(versionDirs(pqRoot) == Seq("v=1", "v=2"),
+      "a refused retrain must not claim a version")
+    val published = AnnIndex.retrain(spark, pqRoot, AnnIndex.IvfPq, vectors)(
+      (v, m) => Pq.buildIvfPq(v, metaCols = m))
     assert(published.endsWith("v=3"))
     // keep=2 retains the appended v2, which still reads v1's files
     assert(versionDirs(pqRoot) == Seq("v=1", "v=2", "v=3"),
@@ -323,7 +334,7 @@ class ManifestAtomicSpec extends SparkSpecBase {
       "post-retrain answers must equal a fresh rebuild bit-for-bit")
     // and the retrained index's stats read flat: no appended rows
     // above the new watermark, skew re-balanced by fresh Lloyd
-    val after = Pq.ivfPqIndexStats(spark, published,
+    val after = AnnIndex.stats(spark, published, AnnIndex.IvfPq,
       appendedFrom = vectors.count() + 1)
     assert(after.collect().forall(_.getLong(2) == 0L))
   }
@@ -336,13 +347,13 @@ class ManifestAtomicSpec extends SparkSpecBase {
     // same generic delta publisher. Reference: every vector encoded
     // against the staged base grid, minus the erased ids
     val sq8Root = tmp("graft_atomic_sq8_root")
-    val sq8V1 = Quantize.stageSq8IndexVersion(base, sq8Root)
+    val sq8V1 = AnnIndex.stage(Quantize.buildSq8(base), sq8Root)
     val sq8Want = Quantize.quantizeCodesAgainst(vectors,
         IndexManifest.readFrame(spark, sq8V1, "ranges")).collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toList))
       .filterNot(t => erased.contains(t._1)).toSet
-    assert(Quantize.appendSq8IndexAtomic(spark, sq8Root, rest) == rest.count())
-    Quantize.deleteFromSq8IndexAtomic(spark, sq8Root, erased)
+    assert(AnnIndex.append(spark, sq8Root, AnnIndex.Sq8, rest) == rest.count())
+    AnnIndex.erase(spark, sq8Root, AnnIndex.Sq8, erased)
     val sq8Live = IndexManifest.currentOrFail(spark, sq8Root)
     assert(IndexManifest.readFrame(spark, sq8Live, "codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toSet == sq8Want)
@@ -352,16 +363,97 @@ class ManifestAtomicSpec extends SparkSpecBase {
     // wrong-space pairing would corrupt. Reference: the batch encoded
     // in memory against v1's artifacts, minus the erased ids
     val opqRoot = tmp("graft_atomic_opq_root")
-    val opqV1 = Opq.stageIvfOpqIndexVersion(Opq.buildIvfOpq(base), opqRoot)
-    val staged = Opq.readIvfOpqIndex(spark, opqV1)
+    val opqV1 = AnnIndex.stage(Opq.buildIvfOpq(base), opqRoot)
+    val staged = Opq.IvfOpqIndex(AnnIndex.read(spark, opqV1, AnnIndex.IvfOpq))
     val grown = staged.pq.codes.unionByName(
-      Pq.encodeAgainst(staged.pq, rest, 0, staged.basis))
+      Pq.encodeAgainst(staged.pq, rest, staged.basis))
     val opqWant = canon(Opq.queryIvfOpq(staged.copy(pq = staged.pq.copy(
       codes = grown.filter(!col("vec_id").isInCollection(erased)))), vectors, qids))
-    Opq.appendIvfOpqIndexAtomic(spark, opqRoot, rest)
-    Opq.deleteFromIvfOpqIndexAtomic(spark, opqRoot, erased)
-    assert(canon(Opq.queryIvfOpq(Opq.readIvfOpqIndex(spark,
-        IndexManifest.currentOrFail(spark, opqRoot)), vectors, qids))
+    AnnIndex.append(spark, opqRoot, AnnIndex.IvfOpq, rest)
+    AnnIndex.erase(spark, opqRoot, AnnIndex.IvfOpq, erased)
+    assert(canon(Opq.queryIvfOpq(Opq.IvfOpqIndex(AnnIndex.read(spark,
+        IndexManifest.currentOrFail(spark, opqRoot), AnnIndex.IvfOpq)), vectors, qids))
       .sameElements(opqWant))
+  }
+
+  test("every tier's append guards fail before any claim: a batch missing " +
+      "the riding label or one dimension too wide leaves the live version " +
+      "and the version chain untouched") {
+    def causes(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => Option(e.getMessage).getOrElse("")).toSeq
+    val d = vectors.select(size(col("embedding"))).head().getInt(0)
+    val bare = rest.select(col("vec_id"), col("embedding"))
+    val wide = rest.withColumn("embedding",
+      concat(col("embedding"), array(lit(0f))))
+    // the float tier rides every non-key column, so its label rides too
+    val built: Seq[(AnnIndex.Tier, AnnIndex.Frames)] = Seq(
+      AnnIndex.FloatIvf -> Similarity.buildIvf(base),
+      AnnIndex.IvfPq -> Pq.buildIvfPq(base, metaCols = Seq("label")),
+      AnnIndex.IvfOpq -> Opq.buildIvfOpq(base, metaCols = Seq("label")),
+      AnnIndex.Sq8 -> Quantize.buildSq8(base, metaCols = Seq("label")),
+      AnnIndex.IvfSq8 -> Quantize.buildIvfSq8(base, metaCols = Seq("label")))
+    built.foreach { case (tier, ix) =>
+      val root = tmp(s"graft_atomic_guard_$tier")
+      val live = AnnIndex.stage(ix, root)
+      Seq(
+        ("no label", bare, (m: String) => m.contains("metadata columns")),
+        ("too wide", wide, (m: String) =>
+          m.contains(s"staged index has $d dims") || m.contains("beyond the trained grid"))
+      ).foreach { case (what, batch, diagnosed) =>
+        val e = intercept[Throwable] { AnnIndex.append(spark, root, tier, batch) }
+        assert(causes(e).exists(diagnosed),
+          s"$tier $what: wanted a diagnosis, got: ${causes(e).mkString(" | ")}")
+        assert(IndexManifest.current(spark, root).contains(live),
+          s"$tier $what: a failed append moved the live version")
+        assert(versionDirs(root) == Seq("v=1"),
+          s"$tier $what: a failed append left a version claim behind")
+      }
+    }
+  }
+
+  test("staging is per call: two roots retrained and fed by ingest sinks " +
+      "concurrently in one JVM each equal their serial run") {
+    // two disjoint corpora, one per root, so a root built or fed from
+    // the other root's staging is visible in its rows
+    val halves = Seq(0L, 1L).map(p => vectors.filter(pmod(col("vec_id"), lit(2L)) === p))
+    def both[A](f: Int => A): Seq[A] = {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      try Seq(0, 1).map(i => pool.submit(new java.util.concurrent.Callable[A] {
+        def call(): A = { gate.await(); f(i) } })).map(_.get())
+      finally pool.shutdown()
+    }
+    def postings(root: String) = IndexRefs.postingRows(spark,
+      IndexManifest.currentOrFail(spark, root))
+    def codes(root: String) = IndexManifest.readFrame(spark,
+        IndexManifest.currentOrFail(spark, root), "codes")
+      .select(col("vec_id"), col("cell").cast("long"), col("codes")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
+    // float retrains: each rebuilds from its own postings, staged first
+    def retrained(tag: String, concurrent: Boolean) = {
+      val roots = Seq(0, 1).map(i => tmp(s"graft_two_root_${tag}_$i"))
+      roots.zip(halves).foreach { case (r, h) => AnnIndex.stage(Similarity.buildIvf(h), r) }
+      def retrain(i: Int) = AnnIndex.retrain(spark, roots(i), AnnIndex.FloatIvf)(
+        (v, _) => Similarity.buildIvf(v))
+      if (concurrent) both(retrain) else Seq(0, 1).map(retrain)
+      roots.map(postings)
+    }
+    assert(retrained("par", concurrent = true) == retrained("ser", concurrent = false),
+      "a concurrent retrain rebuilt from the other root's corpus")
+    // ingest sinks: each lands the upper half of its corpus through
+    // the coalescing path (both its stagings) on its own PQ root
+    def ingested(tag: String, concurrent: Boolean) = {
+      val roots = Seq(0, 1).map(i => tmp(s"graft_two_sink_${tag}_$i"))
+      roots.zip(halves).foreach { case (r, h) =>
+        Pq.stageIvfPqIndexVersion(Pq.buildIvfPq(h.filter(col("vec_id") <= cut)), r) }
+      def sink(i: Int) = graft.streaming.Streams.annIngestMicroBatchAtomic(
+        halves(i).filter(col("vec_id") > cut).select(col("vec_id"), col("embedding")),
+        roots(i), publishEveryRows = 1L)
+      if (concurrent) both(sink) else Seq(0, 1).map(sink)
+      roots.map(codes)
+    }
+    assert(ingested("par", concurrent = true) == ingested("ser", concurrent = false),
+      "a concurrent sink landed the other root's codes")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexManifest, Similarity}
+import graft.operators.{AnnIndex, IndexManifest, Similarity}
 
 /** The REFS manifest layout (r19 verdict item 2 — object-store-shaped
   * delta publishes): a delta version is a `_REFS` file list; it lands
@@ -56,14 +56,14 @@ class ManifestRefsSpec extends SparkSpecBase {
   private lazy val base = vectors.filter(col("vec_id") <= cut)
   private lazy val rest = vectors.filter(col("vec_id") > cut)
   private lazy val rootDir = tmp("graft_refs_root")
-  private lazy val v1 = Similarity.stageIvfIndexVersion(base, rootDir)
+  private lazy val v1 = AnnIndex.stage(Similarity.buildIvf(base), rootDir)
 
   test("refs delta publish: append answers bit-identically to in-place; " +
       "the delta version materializes ZERO inherited bytes (pure manifest); " +
       "fresh rows land in the shared store") {
     val v1Answers = canon(Similarity.queryIvfIndex(spark, v1))
     val v1Rows = IndexRefs.postingRows(spark, v1)
-    val n = Similarity.appendIvfIndexAtomic(spark, rootDir, rest)
+    val n = AnnIndex.append(spark, rootDir, AnnIndex.FloatIvf, rest)
     assert(n == rest.count())
     val v2 = IndexManifest.currentOrFail(spark, rootDir)
     assert(v2 != v1)
@@ -98,7 +98,7 @@ class ManifestRefsSpec extends SparkSpecBase {
     val v2 = IndexManifest.currentOrFail(spark, rootDir)
     val want = IndexRefs.postingRows(spark, v2).filterNot(r => erased.contains(r._1))
     val storeBefore = parquetsUnder(s"$rootDir/${IndexManifest.StoreDir}").toSet
-    val nDel = Similarity.deleteFromIvfIndexAtomic(spark, rootDir, erased,
+    val nDel = AnnIndex.erase(spark, rootDir, AnnIndex.FloatIvf, erased,
       keep = 2)
     assert(nDel == erased.size.toLong)
     val v3 = IndexManifest.currentOrFail(spark, rootDir)
@@ -170,14 +170,14 @@ class ManifestRefsSpec extends SparkSpecBase {
     val b2 = vectors.filter(col("vec_id") > 2 * third)
     // control: an all-refs chain from a full publish
     val control = tmp("graft_refs_compat_control")
-    Similarity.stageIvfIndexVersion(b0, control)
-    Similarity.appendIvfIndexAtomic(spark, control, b1)
+    AnnIndex.stage(Similarity.buildIvf(b0), control)
+    AnnIndex.append(spark, control, AnnIndex.FloatIvf, b1)
     val controlV2 = IndexManifest.currentOrFail(spark, control)
     // the chain under test: its v2 is a self-contained delta directory
     // holding the same rows, hand-built the way the retired hardlink
     // layout left it — every artifact in-dir, no _REFS file
     val root = tmp("graft_refs_compat")
-    Similarity.stageIvfIndexVersion(b0, root)
+    AnnIndex.stage(Similarity.buildIvf(b0), root)
     val plainV2 = IndexManifest.publishFrom(spark, root) { (_, next) =>
       IndexManifest.readFrame(spark, controlV2, "centroids")
         .write.parquet(s"$next/centroids")
@@ -199,16 +199,16 @@ class ManifestRefsSpec extends SparkSpecBase {
     // erase rows that live only in the plain version's files: the refs
     // delta on top inherits every untouched cell from it
     val erased = b1.select("vec_id").limit(5).collect().map(_.getLong(0)).toSeq
-    assert(Similarity.deleteFromIvfIndexAtomic(spark, root, erased) == erased.size.toLong)
-    Similarity.deleteFromIvfIndexAtomic(spark, control, erased)
+    assert(AnnIndex.erase(spark, root, AnnIndex.FloatIvf, erased) == erased.size.toLong)
+    AnnIndex.erase(spark, control, AnnIndex.FloatIvf, erased)
     val v3 = IndexManifest.currentOrFail(spark, root)
     assert(parquetsUnder(v3).isEmpty,
       "the refs delta on a plain base must still be a pure manifest")
     assert(IndexManifest.effectiveFiles(spark, v3).exists(_._2.startsWith(plainV2 + "/")),
       "the refs delta must inherit the plain version's files by reference")
     same("refs erase on a plain version")
-    Similarity.appendIvfIndexAtomic(spark, root, b2)
-    Similarity.appendIvfIndexAtomic(spark, control, b2)
+    AnnIndex.append(spark, root, AnnIndex.FloatIvf, b2)
+    AnnIndex.append(spark, control, AnnIndex.FloatIvf, b2)
     same("refs append over a plain version")
     // vacuum: the plain v2 leaves the keep window but the live version
     // still reads its files, so it stays and the chain keeps serving
@@ -226,12 +226,12 @@ class ManifestRefsSpec extends SparkSpecBase {
     val maxId = vectors.agg(max(col("vec_id"))).collect()(0).getLong(0)
     val b0 = vectors.filter(col("vec_id") <= maxId / 2)
     val b1 = vectors.filter(col("vec_id") > maxId / 2)
-    Similarity.stageIvfIndexVersion(b0, root)
+    AnnIndex.stage(Similarity.buildIvf(b0), root)
     val epochAtEncode =
       IndexManifest.epochOf(spark, IndexManifest.currentOrFail(spark, root))
     // a retrain publishes mid-flight: full publishes bump the epoch
     IndexManifest.publish(spark, root)(
-      dir => Similarity.writeIvfIndex(b0, dir))
+      dir => AnnIndex.write(Similarity.buildIvf(b0), dir))
     val e = intercept[IllegalStateException] {
       IndexManifest.publishFrom(spark, root,
         requiredBaseEpoch = Some(epochAtEncode)) { (_, _) =>
@@ -243,6 +243,6 @@ class ManifestRefsSpec extends SparkSpecBase {
     // the fence fired BEFORE claiming: no stale claim poisons the
     // chain — a delta re-derived at the fresh epoch lands normally
     // (the tier wrapper reads the live epoch itself)
-    assert(Similarity.appendIvfIndexAtomic(spark, root, b1) == b1.count())
+    assert(AnnIndex.append(spark, root, AnnIndex.FloatIvf, b1) == b1.count())
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.operators.{Pipeline, Sinks}
+import graft.operators.{AnnIndex, Pipeline, Sinks}
 import graft.streaming.Streams
 
 /** The lake paths through a NON-`file:` Hadoop filesystem scheme
@@ -92,17 +92,17 @@ class ObjectStoreSpec extends SparkSpecBase {
     val root = s"$stubRoot/refs_idx"
     // reference: the same lifecycle on the local filesystem
     val local = java.nio.file.Files.createTempDirectory("graft_stub_local").toString
-    Similarity.stageIvfIndexVersion(base, local)
-    Similarity.appendIvfIndexAtomic(spark, local, rest)
+    AnnIndex.stage(Similarity.buildIvf(base), local)
+    AnnIndex.append(spark, local, AnnIndex.FloatIvf, rest)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
     def localAnswers = canon(Similarity.queryIvfIndex(spark,
       IndexManifest.currentOrFail(spark, local)))
-    val v1 = Similarity.stageIvfIndexVersion(base, root)
+    val v1 = AnnIndex.stage(Similarity.buildIvf(base), root)
     // the non-local claim branch (_CLAIM exclusive create) ran:
     assert(v1.startsWith("stub://"), s"version must resolve through the scheme, got $v1")
-    val n = Similarity.appendIvfIndexAtomic(spark, root, rest)
+    val n = AnnIndex.append(spark, root, AnnIndex.FloatIvf, rest)
     assert(n == rest.count())
     val v2 = IndexManifest.currentOrFail(spark, root)
     assert(canon(Similarity.queryIvfIndex(spark, v2)).sameElements(localAnswers),
@@ -120,8 +120,8 @@ class ObjectStoreSpec extends SparkSpecBase {
       s"a stub-scheme refs delta must move zero unchanged bytes, found $parquets")
     // erasure + vacuum keep the chain serving through the scheme
     val erased = rest.select("vec_id").limit(5).collect().map(_.getLong(0)).toSeq
-    Similarity.deleteFromIvfIndexAtomic(spark, local, erased)
-    assert(Similarity.deleteFromIvfIndexAtomic(spark, root, erased) == erased.size.toLong)
+    AnnIndex.erase(spark, local, AnnIndex.FloatIvf, erased)
+    assert(AnnIndex.erase(spark, root, AnnIndex.FloatIvf, erased) == erased.size.toLong)
     assert(canon(Similarity.queryIvfIndex(spark,
         IndexManifest.currentOrFail(spark, root))).sameElements(localAnswers))
     IndexManifest.vacuum(spark, root, keep = 1)

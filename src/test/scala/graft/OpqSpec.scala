@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Opq, Pq, Similarity}
+import graft.operators.{AnnIndex, Opq, Pq, Similarity}
 import graft.operators.AnnSearch.Radius
 
 class OpqSpec extends SparkSpecBase {
@@ -110,8 +110,8 @@ class OpqSpec extends SparkSpecBase {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val qids = 0L until Similarity.NQueries.toLong
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfopq_idx").toString
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(vectors), dir)
-    val staged = Opq.readIvfOpqIndex(spark, dir)
+    AnnIndex.write(Opq.buildIvfOpq(vectors), dir)
+    val staged = Opq.IvfOpqIndex(AnnIndex.read(spark, dir, AnnIndex.IvfOpq))
     // the staged artifact really carries the rotation: r rows of d doubles
     assert(staged.basis.count() == Opq.OpqComponents)
     val served = canonK(Opq.queryIvfOpq(staged, vectors, qids))
@@ -151,8 +151,8 @@ class OpqSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._4))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfopq_filt").toString
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(vectors, metaCols = Seq("label")), dir)
-    val staged = Opq.readIvfOpqIndex(spark, dir)
+    AnnIndex.write(Opq.buildIvfOpq(vectors, metaCols = Seq("label")), dir)
+    val staged = Opq.IvfOpqIndex(AnnIndex.read(spark, dir, AnnIndex.IvfOpq))
     assert(staged.pq.codes.columns.contains("label"),
       "the staged codes must carry the riding metadata column")
     val served = canonF(Opq.queryIvfOpq(staged, vectors, qids, sameLabel = true))
@@ -181,24 +181,26 @@ class OpqSpec extends SparkSpecBase {
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
     val root = java.nio.file.Files.createTempDirectory("graft_ivfopq_crud").toString
-    Opq.stageIvfOpqIndexVersion(Opq.buildIvfOpq(base), root)
+    AnnIndex.stage(Opq.buildIvfOpq(base), root)
     def dir = graft.operators.IndexManifest.currentOrFail(spark, root)
-    val nApp = Opq.appendIvfOpqIndexAtomic(spark, root, rest)
+    val nApp = AnnIndex.append(spark, root, AnnIndex.IvfOpq, rest)
     assert(nApp == rest.count(), "append must encode every batch row")
     // the incremental-lifecycle equation, rotated: assignment, basis
     // projection, and encode against frozen artifacts equal a rebuild
     // that trained on the base slice
     val twin = Opq.buildIvfOpq(vectors, trainOn = base)
-    val appended = canonK(Opq.queryIvfOpq(Opq.readIvfOpqIndex(spark, dir), vectors, qids))
+    val appended = canonK(Opq.queryIvfOpq(
+      Opq.IvfOpqIndex(AnnIndex.read(spark, dir, AnnIndex.IvfOpq)), vectors, qids))
     assert(appended.sameElements(canonK(Opq.queryIvfOpq(twin, vectors, qids))),
       "append diverged from the trained-on-base rebuild")
     // erasure: ids vanish from answers, the rest of the lifecycle
     // mechanics (untouched-cell byte-identity, idempotence) are the
     // PQ erasure's own specs — the codes tree IS the PQ layout
     val erased = (cut - 3 to cut).filter(_ >= Similarity.NQueries)
-    val nDel = Opq.deleteFromIvfOpqIndexAtomic(spark, root, erased)
+    val nDel = AnnIndex.erase(spark, root, AnnIndex.IvfOpq, erased)
     assert(nDel == erased.length, s"expected ${erased.length} erasures, got $nDel")
-    val after = canonK(Opq.queryIvfOpq(Opq.readIvfOpqIndex(spark, dir), vectors, qids))
+    val after = canonK(Opq.queryIvfOpq(
+      Opq.IvfOpqIndex(AnnIndex.read(spark, dir, AnnIndex.IvfOpq)), vectors, qids))
     assert(after.forall(t => !erased.contains(t._2)),
       "an erased id survived in the staged answers")
   }
@@ -216,11 +218,11 @@ class OpqSpec extends SparkSpecBase {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_opq_nobasis").toString
     val built = Opq.buildIvfOpq(vectors)
-    Opq.writeIvfOpqIndex(built, dir)
+    AnnIndex.write(built, dir)
     built.basis.filter(col("pos") < 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/basis")
     val es = intercept[IllegalStateException] {
-      Opq.queryIvfOpq(Opq.readIvfOpqIndex(spark, dir), vectors,
+      Opq.queryIvfOpq(Opq.IvfOpqIndex(AnnIndex.read(spark, dir, AnnIndex.IvfOpq)), vectors,
         0L until Similarity.NQueries.toLong).collect()
     }
     assert(es.getMessage.contains("rotation basis is empty"))

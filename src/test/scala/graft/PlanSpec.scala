@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{Dedup, Etl, Similarity}
+import graft.operators.{AnnIndex, Dedup, Etl, Similarity}
 import graft.operators.AnnSearch.Radius
 import graft.queries.Analytics
 
@@ -788,7 +788,7 @@ class PlanSpec extends SparkSpecBase {
       "partition directories of the postings scan") {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_dpp").toString
-    graft.operators.Similarity.writeIvfIndex(vectors, dir)
+    graft.operators.AnnIndex.write(graft.operators.Similarity.buildIvf(vectors), dir)
     val df = graft.operators.Similarity.queryIvfIndex(spark, dir)
     // AQE finalizes DPP subqueries at execution — read the final plan
     val p = finalPlan(df)
@@ -806,7 +806,7 @@ class PlanSpec extends SparkSpecBase {
     import graft.operators.Pq
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_prune").toString
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors, metaCols = Seq("label")), dir)
+    AnnIndex.write(Pq.buildIvfPq(vectors, metaCols = Seq("label")), dir)
     val staged = Pq.readIvfPqIndex(spark, dir)
     val qids = 0L until graft.operators.Similarity.NQueries.toLong
     // probes are collected BEFORE plan construction, so the cell cut
@@ -843,7 +843,7 @@ class PlanSpec extends SparkSpecBase {
     import graft.operators.Quantize
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfsq8_plan").toString
-    Quantize.writeIvfSq8Index(vectors, dir)
+    AnnIndex.write(Quantize.buildIvfSq8(vectors), dir)
     val qids = 0L until graft.operators.Similarity.NQueries.toLong
     val p = plan(Quantize.queryIvfSq8Index(spark, dir, vectors, qids))
     val codesScans = p.linesIterator
@@ -864,8 +864,8 @@ class PlanSpec extends SparkSpecBase {
     import graft.operators.Opq
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_opq_prune").toString
-    Opq.writeIvfOpqIndex(Opq.buildIvfOpq(vectors, metaCols = Seq("label")), dir)
-    val staged = Opq.readIvfOpqIndex(spark, dir)
+    AnnIndex.write(Opq.buildIvfOpq(vectors, metaCols = Seq("label")), dir)
+    val staged = Opq.IvfOpqIndex(AnnIndex.read(spark, dir, AnnIndex.IvfOpq))
     val qids = 0L until graft.operators.Similarity.NQueries.toLong
     // the rotation is driver-side (query) and build-time (corpus): the
     // SERVING plan must look exactly like the PQ tier's — a statically
@@ -898,7 +898,7 @@ class PlanSpec extends SparkSpecBase {
     import graft.operators.Quantize
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_sq8_plan").toString
-    Quantize.writeSq8Index(vectors, dir)
+    AnnIndex.write(Quantize.buildSq8(vectors), dir)
     val qids = 0L until graft.operators.Similarity.NQueries.toLong
     val p = plan(Quantize.querySq8Index(spark, dir, vectors, qids))
     // the erasure-bucket partition column must not survive into the
@@ -919,7 +919,7 @@ class PlanSpec extends SparkSpecBase {
     // the filtered tier reads exactly the key + codes + the one riding
     // metadata column — the erasure-bucket layout column still pruned
     val fdir = java.nio.file.Files.createTempDirectory("graft_sq8_fplan").toString
-    Quantize.writeSq8Index(vectors, fdir, metaCols = Seq("label"))
+    AnnIndex.write(Quantize.buildSq8(vectors, metaCols = Seq("label")), fdir)
     val pf = plan(Quantize.querySq8Index(spark, fdir, vectors, qids, sameLabel = true))
     assert(pf.contains("ReadSchema: struct<vec_id:bigint,codes:array<int>,label:int>"),
       s"filtered codes scan reads more than (vec_id, codes, label):\n$pf")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{IndexManifest, Quantize, Similarity}
+import graft.operators.{AnnIndex, IndexManifest, Quantize, Similarity}
 import graft.operators.AnnSearch.Radius
 
 class QuantizeSpec extends SparkSpecBase {
@@ -121,7 +121,7 @@ class QuantizeSpec extends SparkSpecBase {
       "in-memory form; append touches only new code files") {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val path = java.nio.file.Files.createTempDirectory("graft_sq8_idx").toString
-    Quantize.writeSq8Index(vectors, path)
+    AnnIndex.write(Quantize.buildSq8(vectors), path)
     val inMem = Quantize.knnSq8On(vectors).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
@@ -137,14 +137,14 @@ class QuantizeSpec extends SparkSpecBase {
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
     val root2 = java.nio.file.Files.createTempDirectory("graft_sq8_app").toString
-    val v1 = Quantize.stageSq8IndexVersion(base, root2)
+    val v1 = AnnIndex.stage(Quantize.buildSq8(base), root2)
     // a version's files of one frame: version-relative path -> the
     // physical file it resolves to
     def listing(v: String, frame: String): Map[String, String] =
       IndexManifest.effectiveFiles(spark, v)
         .filter(_._1.startsWith(frame + "/")).toMap
     val before = listing(v1, "codes")
-    val appended = Quantize.appendSq8IndexAtomic(spark, root2, rest)
+    val appended = AnnIndex.append(spark, root2, AnnIndex.Sq8, rest)
     assert(appended == rest.count(), "every new vector appends one code row")
     val path2 = IndexManifest.currentOrFail(spark, root2)
     assert(listing(path2, "ranges") == listing(v1, "ranges"),
@@ -168,6 +168,29 @@ class QuantizeSpec extends SparkSpecBase {
     assert(q2.groupBy(_.getLong(0)).forall(_._2.length == operators.Similarity.K))
   }
 
+  test("sq8 restage at a used path: the codes tree holds exactly the new " +
+      "corpus and answers like a fresh path") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(8)
+    def corpus(n: Int) = (0L until n.toLong)
+      .map(i => (i, Array.fill(8)(rnd.nextFloat()), (i % 3).toInt))
+      .toDF("vec_id", "embedding", "label")
+    val path = java.nio.file.Files.createTempDirectory("graft_sq8_restage").toString
+    AnnIndex.write(Quantize.buildSq8(corpus(100)), path)
+    val small = corpus(10)
+    AnnIndex.write(Quantize.buildSq8(small), path)
+    val ids = IndexManifest.readFrame(spark, path, "codes")
+      .select(col("vec_id")).collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq == (0L until 10L),
+      s"restage left ${ids.length - 10} stale code rows behind")
+    val fresh = java.nio.file.Files.createTempDirectory("graft_sq8_fresh").toString
+    AnnIndex.write(Quantize.buildSq8(small), fresh)
+    def canon(dir: String) = Quantize.querySq8Index(spark, dir, small, 0L until 10L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+      .sorted.toSeq
+    assert(canon(path) == canon(fresh), "a restaged path answers unlike a fresh one")
+  }
+
   test("ivf-sq8 serving split: staged composed index answers the one-shot " +
       "key bit-identically; append == trained-on-base restage; erasure") {
     import org.apache.spark.sql.functions.{col, max}
@@ -178,7 +201,7 @@ class QuantizeSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfsq8_idx").toString
-    Quantize.writeIvfSq8Index(vectors, dir)
+    AnnIndex.write(Quantize.buildIvfSq8(vectors), dir)
     val served = canon(Quantize.queryIvfSq8Index(spark, dir, vectors, qids))
     assert(served.sameElements(canon(Quantize.knnIvfSq8On(vectors))),
       "staged composed serving diverged from the one-shot key")
@@ -191,21 +214,21 @@ class QuantizeSpec extends SparkSpecBase {
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
     val root2 = java.nio.file.Files.createTempDirectory("graft_ivfsq8_app").toString
-    Quantize.stageIvfSq8IndexVersion(base, root2)
+    AnnIndex.stage(Quantize.buildIvfSq8(base), root2)
     def dir2 = graft.operators.IndexManifest.currentOrFail(spark, root2)
-    val nApp = Quantize.appendIvfSq8IndexAtomic(spark, root2, rest)
+    val nApp = AnnIndex.append(spark, root2, AnnIndex.IvfSq8, rest)
     assert(nApp == rest.count(), "append must encode every batch row")
     val dir3 = java.nio.file.Files.createTempDirectory("graft_ivfsq8_tw").toString
-    Quantize.writeIvfSq8Index(vectors, dir3, trainOn = base)
+    AnnIndex.write(Quantize.buildIvfSq8(vectors, trainOn = base), dir3)
     assert(canon(Quantize.queryIvfSq8Index(spark, dir2, vectors, qids))
       .sameElements(canon(Quantize.queryIvfSq8Index(spark, dir3, vectors, qids))),
       "append diverged from the trained-on-base restage")
     // erasure is the PQ cell-directory rewrite verbatim: erased ids
     // vanish, a second identical delete finds nothing
     val erased = (cut - 3 to cut).filter(_ >= Similarity.NQueries)
-    val nDel = Quantize.deleteFromIvfSq8IndexAtomic(spark, root2, erased)
+    val nDel = AnnIndex.erase(spark, root2, AnnIndex.IvfSq8, erased)
     assert(nDel == erased.length)
-    assert(Quantize.deleteFromIvfSq8IndexAtomic(spark, root2, erased) == 0L,
+    assert(AnnIndex.erase(spark, root2, AnnIndex.IvfSq8, erased) == 0L,
       "erasure must be idempotent")
     val after = canon(Quantize.queryIvfSq8Index(spark, dir2, vectors, qids))
     assert(after.forall(t => !erased.contains(t._2)),
@@ -254,7 +277,7 @@ class QuantizeSpec extends SparkSpecBase {
     // a staged index queried with NO query ids answers nothing
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val path = java.nio.file.Files.createTempDirectory("graft_sq8_empty").toString
-    Quantize.writeSq8Index(vectors, path)
+    AnnIndex.write(Quantize.buildSq8(vectors), path)
     assert(Quantize.querySq8Index(spark, path, vectors, Seq.empty).count() == 0)
   }
 
@@ -322,7 +345,7 @@ class QuantizeSpec extends SparkSpecBase {
       (2L, Seq(1.0f, 2.0f, 3.0f)),
       (3L, Seq(0.5f, 1.5f, 2.5f))).toDF("vec_id", "embedding")
     val root = java.nio.file.Files.createTempDirectory("graft_sq8_dim").toString
-    val v1 = Quantize.stageSq8IndexVersion(base, root)
+    val v1 = AnnIndex.stage(Quantize.buildSq8(base), root)
     def live = IndexManifest.currentOrFail(spark, root)
     def codesNow() = IndexManifest.readFrame(spark, live, "codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toSet
@@ -331,7 +354,7 @@ class QuantizeSpec extends SparkSpecBase {
     // by the inner join, appending a truncated code row
     val tooLong = Seq((10L, Seq(0.1f, 0.2f, 0.3f, 0.4f))).toDF("vec_id", "embedding")
     val eLong = intercept[Throwable] {
-      Quantize.appendSq8IndexAtomic(spark, root, tooLong) }
+      AnnIndex.append(spark, root, AnnIndex.Sq8, tooLong) }
     assert(causes(eLong).exists(_.contains("beyond the trained grid")),
       s"wanted the out-of-grid diagnosis, got: ${causes(eLong).mkString(" | ")}")
     // too SHORT: every position matches a grid row, so only the width
@@ -339,7 +362,7 @@ class QuantizeSpec extends SparkSpecBase {
     // mismatched 3-wide literal grid downstream
     val tooShort = Seq((11L, Seq(0.1f, 0.2f))).toDF("vec_id", "embedding")
     val eShort = intercept[Throwable] {
-      Quantize.appendSq8IndexAtomic(spark, root, tooShort) }
+      AnnIndex.append(spark, root, AnnIndex.Sq8, tooShort) }
     assert(causes(eShort).exists(_.contains("the trained grid has 3")),
       s"wanted the width diagnosis, got: ${causes(eShort).mkString(" | ")}")
     assert(live == v1 && codesNow() == before,
@@ -347,7 +370,7 @@ class QuantizeSpec extends SparkSpecBase {
     // positive control: a well-dimensioned batch still appends (and
     // saturates out-of-range values instead of failing)
     val ok = Seq((12L, Seq(9.0f, -9.0f, 2.5f))).toDF("vec_id", "embedding")
-    assert(Quantize.appendSq8IndexAtomic(spark, root, ok) == 1L)
+    assert(AnnIndex.append(spark, root, AnnIndex.Sq8, ok) == 1L)
     val row = IndexManifest.readFrame(spark, live, "codes")
       .filter(col("vec_id") === 12L).collect()(0).getSeq[Int](1).toList
     // dim1 spans [0,1]: 9.0 saturates high; dim2 spans [1,2]: -9.0
@@ -361,7 +384,7 @@ class QuantizeSpec extends SparkSpecBase {
       "idempotent; erased ids vanish from staged answers") {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("graft_sq8_del").toString
-    Quantize.stageSq8IndexVersion(vectors, root)
+    AnnIndex.stage(Quantize.buildSq8(vectors), root)
     def path = IndexManifest.currentOrFail(spark, root)
     // the live version's code files: version-relative path -> the
     // physical file it resolves to
@@ -377,7 +400,7 @@ class QuantizeSpec extends SparkSpecBase {
     val partial = ids.filter(_ % Quantize.Sq8Buckets == 9L).take(3)
     assert(fullBucket.nonEmpty && partial.nonEmpty)
     val erase = (fullBucket ++ partial).toSeq
-    val n = Quantize.deleteFromSq8IndexAtomic(spark, root, erase)
+    val n = AnnIndex.erase(spark, root, AnnIndex.Sq8, erase)
     assert(n == erase.length, s"deleted $n of ${erase.length}")
     val after = listing()
     assert(!after.keys.exists(_.startsWith("codes/grp=5/")),
@@ -398,7 +421,7 @@ class QuantizeSpec extends SparkSpecBase {
       "an erased id survived in the staged answers")
     // idempotence: nothing left to delete, nothing published
     val repeat = path
-    assert(Quantize.deleteFromSq8IndexAtomic(spark, root, erase) == 0L)
+    assert(AnnIndex.erase(spark, root, AnnIndex.Sq8, erase) == 0L)
     assert(path == repeat, "a no-op delete must publish nothing")
     assert(listing() == after, "a no-op delete must touch nothing")
   }
@@ -408,7 +431,7 @@ class QuantizeSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions.col
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val path = java.nio.file.Files.createTempDirectory("graft_sq8_rad").toString
-    Quantize.writeSq8Index(vectors, path)
+    AnnIndex.write(Quantize.buildSq8(vectors), path)
     val qids = 0L until operators.Similarity.NQueries.toLong
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
@@ -440,7 +463,7 @@ class QuantizeSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._4))
     val dir = java.nio.file.Files.createTempDirectory("graft_sq8_filt").toString
-    Quantize.writeSq8Index(vectors, dir, metaCols = Seq("label"))
+    AnnIndex.write(Quantize.buildSq8(vectors, metaCols = Seq("label")), dir)
     assert(spark.read.parquet(s"$dir/codes").columns.contains("label"),
       "the staged codes must carry the riding metadata column")
     val served = canonF(Quantize.querySq8Index(spark, dir, vectors, qids, sameLabel = true))
@@ -459,7 +482,7 @@ class QuantizeSpec extends SparkSpecBase {
     // the riding column leaves the UNFILTERED query of the same index
     // unchanged (its scan projects it out)
     val bare = java.nio.file.Files.createTempDirectory("graft_sq8_bare").toString
-    Quantize.writeSq8Index(vectors, bare)
+    AnnIndex.write(Quantize.buildSq8(vectors), bare)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
@@ -472,13 +495,13 @@ class QuantizeSpec extends SparkSpecBase {
     val base = vectors.filter(col("vec_id") <= cut)
     val rest = vectors.filter(col("vec_id") > cut)
     val root2 = java.nio.file.Files.createTempDirectory("graft_sq8_filt_app").toString
-    Quantize.stageSq8IndexVersion(base, root2, metaCols = Seq("label"))
+    AnnIndex.stage(Quantize.buildSq8(base, metaCols = Seq("label")), root2)
     def dir2 = IndexManifest.currentOrFail(spark, root2)
     val e = intercept[IllegalArgumentException] {
-      Quantize.appendSq8IndexAtomic(spark, root2, rest.select("vec_id", "embedding"))
+      AnnIndex.append(spark, root2, AnnIndex.Sq8, rest.select("vec_id", "embedding"))
     }
     assert(e.getMessage.contains("riding set"), e.getMessage)
-    assert(Quantize.appendSq8IndexAtomic(spark, root2, rest) == rest.count())
+    assert(AnnIndex.append(spark, root2, AnnIndex.Sq8, rest) == rest.count())
     val appended = IndexManifest.readFrame(spark, dir2, "codes")
     assert(appended.columns.contains("label") &&
       appended.filter(col("label").isNull).count() == 0,
@@ -486,7 +509,7 @@ class QuantizeSpec extends SparkSpecBase {
     // erasure: the survivor rewrite carries the metadata column and
     // the filtered answers exclude every erased id
     val erase = (cut - 5) to cut
-    assert(Quantize.deleteFromSq8IndexAtomic(spark, root2, erase) > 0L)
+    assert(AnnIndex.erase(spark, root2, AnnIndex.Sq8, erase) > 0L)
     assert(IndexManifest.readFrame(spark, dir2, "codes").columns.contains("label"),
       "delete's survivor rewrite stripped the metadata column")
     val post = canonF(Quantize.querySq8Index(spark, dir2, vectors, qids, sameLabel = true))

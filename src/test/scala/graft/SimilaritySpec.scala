@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{AnnIndex, Similarity}
 import graft.operators.AnnSearch.Radius
 
 class SimilaritySpec extends SparkSpecBase {
@@ -291,7 +291,7 @@ class SimilaritySpec extends SparkSpecBase {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
     // build ONCE, stage, reload — the serving lifecycle
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors), dir)
+    AnnIndex.write(Pq.buildIvfPq(vectors), dir)
     val staged = Pq.readIvfPqIndex(spark, dir)
     val qids = (0L until Similarity.NQueries.toLong)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -599,7 +599,7 @@ class SimilaritySpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
     // --- build once, stage, reload: identical to the one-shot key
-    Similarity.writeIvfIndex(vectors, dir)
+    AnnIndex.write(Similarity.buildIvf(vectors), dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/postings_tmp")),
@@ -666,7 +666,7 @@ class SimilaritySpec extends SparkSpecBase {
     val rest = vectors.filter(col("vec_id") > cut)
     import graft.operators.IndexManifest
     val root2 = java.nio.file.Files.createTempDirectory("graft_ivf_float_app").toString
-    val v1 = Similarity.stageIvfIndexVersion(base, root2)
+    val v1 = AnnIndex.stage(Similarity.buildIvf(base), root2)
     // a version's files of one frame: version-relative path -> the
     // physical file it resolves to
     def listing(v: String, frame: String): Map[String, String] =
@@ -674,7 +674,7 @@ class SimilaritySpec extends SparkSpecBase {
         .filter(_._1.startsWith(frame + "/")).toMap
     val centsBefore = listing(v1, "centroids")
     val postsBefore = listing(v1, "postings")
-    assert(Similarity.appendIvfIndexAtomic(spark, root2, rest) == rest.count())
+    assert(AnnIndex.append(spark, root2, AnnIndex.FloatIvf, rest) == rest.count())
     val v2 = IndexManifest.currentOrFail(spark, root2)
     assert(listing(v2, "centroids") == centsBefore, "append must not retrain centroids")
     assert(listing(v1, "postings") == postsBefore,
@@ -716,7 +716,7 @@ class SimilaritySpec extends SparkSpecBase {
     val partialIds = byCell(otherCell).map(_._1).toSeq.sorted.take(2)
     val erase = byCell(fullCell).map(_._1).toSeq ++ partialIds
     val before = listing(v2, "postings")
-    assert(Similarity.deleteFromIvfIndexAtomic(spark, root2, erase) == erase.length)
+    assert(AnnIndex.erase(spark, root2, AnnIndex.FloatIvf, erase) == erase.length)
     val v3 = IndexManifest.currentOrFail(spark, root2)
     val after = listing(v3, "postings")
     assert(!after.keys.exists(_.startsWith(s"postings/cell=$fullCell/")),
@@ -745,22 +745,22 @@ class SimilaritySpec extends SparkSpecBase {
     val base = (0L until 20L).map(i =>
       (i, Seq(i.toFloat, (i % 5).toFloat, (i % 3).toFloat))).toDF("vec_id", "embedding")
     val root = java.nio.file.Files.createTempDirectory("graft_ivf_dim").toString
-    Similarity.stageIvfIndexVersion(base, root)
+    AnnIndex.stage(Similarity.buildIvf(base), root)
     val tooLong = Seq((100L, Seq(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding")
-    val eL = intercept[Throwable] { Similarity.appendIvfIndexAtomic(spark, root, tooLong) }
+    val eL = intercept[Throwable] { AnnIndex.append(spark, root, AnnIndex.FloatIvf, tooLong) }
     assert(causes(eL).exists(_.contains("staged index has 3")),
       s"wanted the width diagnosis, got: ${causes(eL).mkString(" | ")}")
     val tooShort = Seq((101L, Seq(1f, 2f))).toDF("vec_id", "embedding")
-    val eS = intercept[Throwable] { Similarity.appendIvfIndexAtomic(spark, root, tooShort) }
+    val eS = intercept[Throwable] { AnnIndex.append(spark, root, AnnIndex.FloatIvf, tooShort) }
     assert(causes(eS).exists(_.contains("staged index has 3")))
     // metadata mismatch: the staged postings have NO metadata columns
     val withMeta = Seq((102L, Seq(1f, 2f, 3f), 7)).toDF("vec_id", "embedding", "label")
-    val eM = intercept[Throwable] { Similarity.appendIvfIndexAtomic(spark, root, withMeta) }
+    val eM = intercept[Throwable] { AnnIndex.append(spark, root, AnnIndex.FloatIvf, withMeta) }
     assert(causes(eM).exists(_.contains("metadata columns")),
       s"wanted the metadata diagnosis, got: ${causes(eM).mkString(" | ")}")
     // positive control: a well-shaped batch still appends
     val ok = Seq((103L, Seq(9f, 9f, 9f))).toDF("vec_id", "embedding")
-    assert(Similarity.appendIvfIndexAtomic(spark, root, ok) == 1L)
+    assert(AnnIndex.append(spark, root, AnnIndex.FloatIvf, ok) == 1L)
     // --- PQ tier: 8-dim staged index (M=8, subW=1)
     val base8 = (0L until 20L).map(i =>
       (i, Seq.tabulate(8)(j => (i + j).toFloat))).toDF("vec_id", "embedding")
@@ -860,12 +860,12 @@ class SimilaritySpec extends SparkSpecBase {
     val vectors = graft.sources.Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_restage").toString
     // day 0: index the FULL corpus (populates many cells)
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors), dir)
+    AnnIndex.write(Pq.buildIvfPq(vectors), dir)
     // day N: restage the same path from a small slice — its index
     // populates a strict subset of cells, so any stale directory from
     // day 0 would survive a dynamic-mode overwrite and rejoin reads
     val slice = vectors.filter(col("vec_id") < 40)
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(slice), dir)
+    AnnIndex.write(Pq.buildIvfPq(slice), dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes_tmp")),
@@ -903,7 +903,7 @@ class SimilaritySpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._4))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_filt").toString
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors, metaCols = Seq("label")), dir)
+    AnnIndex.write(Pq.buildIvfPq(vectors, metaCols = Seq("label")), dir)
     val staged = Pq.readIvfPqIndex(spark, dir)
     assert(staged.codes.columns.contains("label"),
       "the staged codes must carry the riding metadata column")
@@ -972,7 +972,7 @@ class SimilaritySpec extends SparkSpecBase {
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_rad").toString
-    Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors), dir)
+    AnnIndex.write(Pq.buildIvfPq(vectors), dir)
     val staged = Pq.readIvfPqIndex(spark, dir)
     val res = canon(Pq.queryIvfPqIndex(staged, vectors, qids, cut = Radius(Similarity.RadiusTau)))
     val tau = Similarity.RadiusTau
@@ -1032,10 +1032,10 @@ class SimilaritySpec extends SparkSpecBase {
     val rest = vectors.filter(col("vec_id") > cut)
     import graft.operators.IndexManifest
     val root = java.nio.file.Files.createTempDirectory("graft_ivf_stats").toString
-    Similarity.stageIvfIndexVersion(base, root)
-    Similarity.appendIvfIndexAtomic(spark, root, rest)
-    val stats = Similarity.ivfIndexStats(spark,
-      IndexManifest.currentOrFail(spark, root), appendedFrom = cut + 1)
+    AnnIndex.stage(Similarity.buildIvf(base), root)
+    AnnIndex.append(spark, root, AnnIndex.FloatIvf, rest)
+    val stats = AnnIndex.stats(spark,
+      IndexManifest.currentOrFail(spark, root), AnnIndex.FloatIvf, appendedFrom = cut + 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     // totals reconcile with the corpus; fractions and skew well-formed
@@ -1054,9 +1054,9 @@ class SimilaritySpec extends SparkSpecBase {
     // rebalance: retrain as a new version — answers equal a FRESH build
     // over the same vectors (toDouble is the identity on the widened
     // payload)
-    val dir = Similarity.rebalanceIvfIndexVersioned(spark, root)
+    val dir = AnnIndex.retrain(spark, root, AnnIndex.FloatIvf)((v, _) => Similarity.buildIvf(v))
     val freshDir = java.nio.file.Files.createTempDirectory("graft_ivf_fresh").toString
-    Similarity.writeIvfIndex(vectors, freshDir)
+    AnnIndex.write(Similarity.buildIvf(vectors), freshDir)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._3))
@@ -1066,7 +1066,7 @@ class SimilaritySpec extends SparkSpecBase {
     // post-rebalance the appended fraction is gone from the skew story:
     // stats still reconcile (the report is watermark-relative, so the
     // same watermark still counts the day-1 half as appended)
-    val post = Similarity.ivfIndexStats(spark, dir, appendedFrom = cut + 1)
+    val post = AnnIndex.stats(spark, dir, AnnIndex.FloatIvf, appendedFrom = cut + 1)
       .collect()
     assert(post.map(_.getLong(1)).sum == vectors.count())
     // all three query types keep serving off the rebalanced artifact
@@ -1086,7 +1086,7 @@ class SimilaritySpec extends SparkSpecBase {
     intercept[IllegalStateException] { IndexManifest.currentOrFail(spark, root) }
     // v1: the full float index via the manifest
     val v1 = IndexManifest.publish(spark, root)(
-      dir => Similarity.writeIvfIndex(vectors, dir))
+      dir => AnnIndex.write(Similarity.buildIvf(vectors), dir))
     assert(IndexManifest.current(spark, root).contains(v1))
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
@@ -1097,7 +1097,7 @@ class SimilaritySpec extends SparkSpecBase {
     // version unchanged: v2 is a different corpus, v1 is immutable
     val slice = vectors.filter(col("vec_id") < 200)
     val v2 = IndexManifest.publish(spark, root)(
-      dir => Similarity.writeIvfIndex(slice, dir))
+      dir => AnnIndex.write(Similarity.buildIvf(slice), dir))
     assert(v2 != v1)
     assert(IndexManifest.current(spark, root).contains(v2))
     assert(canon(Similarity.queryIvfIndex(spark, v1)).sameElements(v1Answers),
@@ -1109,7 +1109,7 @@ class SimilaritySpec extends SparkSpecBase {
     // the pointer still names v2, which keeps serving
     intercept[RuntimeException] {
       IndexManifest.publish(spark, root) { dir =>
-        Similarity.writeIvfIndex(vectors, dir)
+        AnnIndex.write(Similarity.buildIvf(vectors), dir)
         throw new RuntimeException("simulated crash before commit")
       }
     }
@@ -1128,7 +1128,7 @@ class SimilaritySpec extends SparkSpecBase {
     }
     assert(IndexManifest.releaseStaleClaims(spark, root).nonEmpty)
     val v3 = IndexManifest.publish(spark, root)(
-      dir => Similarity.writeIvfIndex(vectors, dir))
+      dir => AnnIndex.write(Similarity.buildIvf(vectors), dir))
     assert(IndexManifest.current(spark, root).contains(v3))
     // keep=1 explicitly: this lifecycle has no overlapping reader and
     // the assertion below wants FULL retirement (default is the
@@ -1146,7 +1146,7 @@ class SimilaritySpec extends SparkSpecBase {
     val pqRoot = java.nio.file.Files.createTempDirectory("graft_manifest_pq").toString
     import graft.operators.Pq
     val pv1 = IndexManifest.publish(spark, pqRoot)(
-      dir => Pq.writeIvfPqIndex(Pq.buildIvfPq(vectors), dir))
+      dir => AnnIndex.write(Pq.buildIvfPq(vectors), dir))
     val qids = (0L until Similarity.NQueries.toLong)
     assert(canon(Pq.queryIvfPq(Pq.readIvfPqIndex(spark,
       IndexManifest.currentOrFail(spark, pqRoot)), vectors, qids))

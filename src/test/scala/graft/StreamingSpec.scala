@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.operators.AnnIndex
 import graft.streaming.Streams
 
 class StreamingSpec extends SparkSpecBase {
@@ -1299,7 +1300,8 @@ class StreamingSpec extends SparkSpecBase {
     // — the assignment function moves, the epoch must advance
     val corpus = vectors.filter(col("vec_id") <= cut2)
       .select(col("vec_id"), col("embedding"))
-    Pq.rebalanceIvfPqIndexVersioned(spark, root, corpus, keep = 4)
+    AnnIndex.retrain(spark, root, AnnIndex.IvfPq, corpus, keep = 4)(
+      (v, m) => Pq.buildIvfPq(v, metaCols = m))
     assert(IndexManifest.epochOf(spark,
       IndexManifest.currentOrFail(spark, root)) == 2L,
       "a retrain must advance the retrain epoch")
@@ -1326,8 +1328,9 @@ class StreamingSpec extends SparkSpecBase {
     val versionsBefore = new java.io.File(root).listFiles().toSeq
       .filter(f => f.isDirectory && f.getName.startsWith("v=")).map(_.getName).sorted
     val fenceHit = intercept[IllegalStateException] {
-      Pq.rebalanceIvfPqIndexVersioned(spark, root,
-        vectors.select(col("vec_id"), col("embedding")), keep = 4)
+      AnnIndex.retrain(spark, root, AnnIndex.IvfPq,
+        vectors.select(col("vec_id"), col("embedding")), keep = 4)(
+        (v, m) => Pq.buildIvfPq(v, metaCols = m))
     }
     assert(fenceHit.getMessage.contains("retrain fence"))
     assert(new java.io.File(root).listFiles().toSeq
@@ -1337,7 +1340,7 @@ class StreamingSpec extends SparkSpecBase {
     // pending tree must make both the flush and the next micro-batch
     // fail loudly — stale-assignment rows can never be published
     IndexManifest.publish(spark, root)(dir =>
-      Pq.writeIvfPqIndex(Pq.buildIvfPq(
+      AnnIndex.write(Pq.buildIvfPq(
         vectors.select(col("vec_id"), col("embedding"))), dir))
     val staleFlush = intercept[IllegalArgumentException] {
       Streams.annIngestFlushPending(spark, root, keep = 4)
