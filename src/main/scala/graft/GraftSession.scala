@@ -119,6 +119,16 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      // a read of more paths (or subdirectories) than this lists them in
+      // a Spark job; at or below it the driver lists them itself. A
+      // staged index tree is one directory per cell (~√(n/2) of them,
+      // about 1000 at 2M vectors) plus the files a `_REFS` manifest
+      // names, so at Spark's default of 32 nearly every index read paid
+      // a listing job that outlasted the listing. The trade-off: above
+      // 1024 paths Spark lists in a job again, and on an object store,
+      // where each listing call is a remote round trip, a serial driver
+      // listing of many paths is slower than the job.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       // managed tables (bucketed sinks) land in a PER-JVM temp dir —
       // a fixed shared path would let concurrent JVMs clobber each
       // other's tables and leave stale locations for saveAsTable

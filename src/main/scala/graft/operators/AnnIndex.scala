@@ -61,10 +61,8 @@ object AnnIndex {
     def partCol = "cell"
     def fixed = Seq("vec_id", "e", "nrm", "cell")
     def artifacts = Seq("centroids")
-    def encode(art: String => DataFrame, batch: DataFrame, dim: Int): DataFrame = {
-      val centroids = art("centroids")
-      assign(batch, centroids, width(dim, centroids)).select(fixed.map(col): _*)
-    }
+    def encode(art: String => DataFrame, batch: DataFrame, dim: Int): DataFrame =
+      assign(batch, art("centroids"), dim)._1.select(fixed.map(col): _*)
     override def ridesAll = true
     override def lossless = true
   }
@@ -76,8 +74,8 @@ object AnnIndex {
     def fixed = Seq("vec_id", "cell", "codes")
     def artifacts = Seq("centroids", "codebooks")
     def encode(art: String => DataFrame, batch: DataFrame, dim: Int): DataFrame = {
-      val d = width(dim, art("centroids"))
-      pqCodes(art, unit(assign(batch, art("centroids"), d)), d)
+      val (assigned, d) = assign(batch, art("centroids"), dim)
+      pqCodes(art, unit(assigned), d)
     }
   }
 
@@ -90,7 +88,7 @@ object AnnIndex {
     def artifacts = Seq("basis", "centroids", "codebooks")
     def encode(art: String => DataFrame, batch: DataFrame, dim: Int): DataFrame = {
       val ba = Pq.basisArrOf(art("basis"))
-      val un = unit(assign(batch, art("centroids"), if (dim > 0) dim else ba(0).length))
+      val un = unit(assign(batch, art("centroids"), if (dim > 0) dim else ba(0).length)._1)
       // the build's column-form basis dots, so appended codes are
       // bit-identical to a rebuild's
       pqCodes(art, un.select(col("vec_id"),
@@ -122,10 +120,9 @@ object AnnIndex {
     def fixed = Seq("vec_id", "cell", "codes")
     def artifacts = Seq("centroids", "ranges")
     def encode(art: String => DataFrame, batch: DataFrame, dim: Int): DataFrame = {
-      val d = width(dim, art("centroids"))
+      val (assigned, d) = assign(batch, art("centroids"), dim)
       Quantize.quantizeCodesAgainst(batch, art("ranges"), Some(d.toLong))
-        .join(assign(batch, art("centroids"), d).select(col("vec_id"), col("cell")),
-          "vec_id")
+        .join(assigned.select(col("vec_id"), col("cell")), "vec_id")
     }
   }
 
@@ -143,23 +140,21 @@ object AnnIndex {
   final case class Index(tier: Tier, artifacts: Seq[DataFrame], tree: DataFrame)
     extends Frames
 
-  /** The input width a batch must have: `dim` when positive, else the
-    * staged centroids' width — a 1-row read of the C-row artifact.
-    * An empty artifact (a path that holds no staged index) fails with
-    * a diagnosis. */
-  private def width(dim: Int, centroids: DataFrame): Int =
-    if (dim > 0) dim
-    else centroids.select(size(col("ce"))).limit(1).collect().headOption
-      .map(_.getInt(0)).getOrElse(throw new IllegalStateException(
-        "AnnIndex: the staged centroids artifact is empty — stage an index " +
-          "before appending to it"))
-
   /** Coarse assignment: `vectors` as `(vec_id, e, nrm, cell, sim)`
-    * against the nearest of `centroids` (the build's argmax). A vector
-    * that is not `d` wide fails in-plan with a diagnosis — a short one
-    * would otherwise prefix-dot its way into some cell and a long one
-    * fail deep in the assignment loop. */
-  private def assign(vectors: DataFrame, centroids: DataFrame, d: Int): DataFrame = {
+    * against the nearest of `centroids` (the build's argmax), plus the
+    * width every vector must have — `dim` when positive, else the
+    * centroids' own, read off the C rows the assignment collects
+    * anyway. An empty artifact (a path that holds no staged index)
+    * fails with a diagnosis. A vector that is not that wide fails
+    * in-plan with a diagnosis — a short one would otherwise prefix-dot
+    * its way into some cell and a long one fail deep in the assignment
+    * loop. */
+  private def assign(vectors: DataFrame, centroids: DataFrame, dim: Int): (DataFrame, Int) = {
+    val cents = Similarity.centroidArray(centroids, "cell", "ce", "cn")
+    if (cents.isEmpty) throw new IllegalStateException(
+      "AnnIndex: the staged centroids artifact is empty — stage an index " +
+        "before appending to it")
+    val d = if (dim > 0) dim else cents.head._2.length
     val v = vectors.select(col("vec_id"),
       when(size(col("embedding")) === lit(d), V.toDouble(col("embedding")))
         .otherwise(raise_error(concat(
@@ -170,7 +165,7 @@ object AnnIndex {
           .cast("array<double>"))
         .as("e"))
       .withColumn("nrm", V.l2Norm(col("e")))
-    Similarity.assignNearest(v, centroids, "cell", "ce", "cn")
+    (Similarity.assignNearestTo(v, cents, "cell"), d)
   }
 
   private def unit(assigned: DataFrame): DataFrame =

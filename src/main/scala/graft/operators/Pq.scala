@@ -31,8 +31,9 @@ import graft.operators.AnnSearch.{Cut, Radius, TopK}
   * lookup-sum, and per-partition Rerank-heaps per query (the
   * knn_bruteforce pruning argument: the global top-Rerank by
   * (adist, vec_id) is a subset of the union of per-partition
-  * top-Reranks) — so the only exchange the candidate side pays is
-  * partitions·Q·Rerank heap survivors into the final exact window.
+  * top-Reranks). The heaps merge into the Rerank·Q sliver by a tree
+  * reduction and the exact scoring and k-cut finish on the driver
+  * ([[AnnSearch.topK]]): no candidate row is shuffled.
   * Queries batch — Q is the throughput knob, and candidate
   * generation work is codes·Q, independent of float width.
   *
@@ -119,7 +120,9 @@ object Pq {
 
   /** The PQ build + ADC search pipeline over a prepared UNIT frame
     * `un` (vec_id, u: array<double>, any width `d` divisible by M) —
-    * exact rerank against the float corpus `vn` (vec_id, e, nrm).
+    * the shared eager top-k tail ([[AnnSearch.topK]]) scores exactly
+    * against the float corpus `vn` (vec_id, e, nrm), whose query rows
+    * (vec_id < NQueries) are collected and checked first.
     * Shared verbatim by [[knnPqOn]] (u = the unit-normalized corpus),
     * [[knnIvfPqOn]] (the same, cell-tagged), and [[Opq.knnOpqOn]] /
     * [[Opq.knnIvfOpqOn]] (u = the PCA-rotated unit corpus): the
@@ -137,6 +140,8 @@ object Pq {
                                        probes: Option[(Map[Long, Set[Long]], Set[Long])] = None)
       : DataFrame = {
     require(d % M == 0, s"PQ input dim $d must be divisible by M=$M")
+    val queries = AnnSearch.queryRows(vn, col("vec_id") < NQueries, sameLabel = false)
+    if (queries.isEmpty) return AnnSearch.empty(vn, TopK(k), sameLabel = false)
     val sub = d / M
     val unFlat = if (probes.isEmpty) un else un.select(col("vec_id"), col("u"))
 
@@ -264,7 +269,7 @@ object Pq {
         }
       }, Rerank)
     }
-    val pruned = (probes match {
+    val heaps = probes match {
       case None =>
         unFlat.as[(Long, Array[Double])]
           .mapPartitions(it =>
@@ -275,13 +280,11 @@ object Pq {
           .mapPartitions(it =>
             scanPartition(it.filter(t => probedCells.contains(t._3)),
               (q, cell) => byQ(q).contains(cell)))
-    }).toDF("query_id", "vec_id", "adist")
+    }
 
-    // --- exact cosine rerank over the Rerank·Q candidate sliver
-    val queries = broadcast(vn.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    AnnSearch.rerank(AnnSearch.sliver(pruned, col("adist")), vn, queries,
-      TopK(k), sameLabel = false)
+    // --- the shared top-k tail: heaps merged into the Rerank·Q
+    //     sliver, exact cosines, the k-cut on the driver
+    AnnSearch.topK(heaps, vn, queries, k, sameLabel = false)
   }
 
   /** Collect each query's probed cells off a built IVF index — the
@@ -419,8 +422,8 @@ object Pq {
     * vec_id, cell, codes array in subspace order — the M-small-ints
     * compressed form that IS the PQ memory story). The original
     * vector column is deliberately NOT part of the index: the exact
-    * rerank reads it from the corpus by key over the bounded
-    * candidate sliver (Rerank·Q rows — a point-lookup join at scale).
+    * scoring pass reads it from the corpus for the bounded candidate
+    * sliver's ids only (Rerank·Q rows).
     * Staged and maintained as [[AnnIndex.IvfPq]]. */
   case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame, codes: DataFrame)
       extends AnnIndex.Frames {
@@ -653,23 +656,27 @@ object Pq {
     * radius, unfiltered or same-label, and (through `basis`) the
     * rotated [[Opq]] tier. Probe cells come from the C-row centroid
     * table, per-query ADC distance tables from the M·Kc codebooks,
-    * then ONE scan over the cell-pruned codes and the shared exact
-    * rerank ([[AnnSearch.rerank]]) against `vectors` restricted to the
-    * candidates. NOTHING is rebuilt: the corpus is touched only by the
-    * codes scan (compressed form), the Q query rows and the candidate
-    * point-lookups — the build-once/query-many contract. Same
-    * arithmetic and tie-breaks as [[knnIvfPqOn]], so a staged
-    * round-trip answers top-k identically (spec-asserted).
+    * then ONE scan over the cell-pruned codes and an exact float
+    * tail against `vectors` restricted to the candidates. NOTHING is
+    * rebuilt: the corpus is touched only by the codes scan (compressed
+    * form), the Q query rows (collected once and checked,
+    * [[AnnSearch.queryRows]]) and the candidates' exact scoring — the
+    * build-once/query-many contract. Same arithmetic and tie-breaks as
+    * [[knnIvfPqOn]], so a staged round-trip answers top-k identically
+    * (spec-asserted).
     *
     * The cut picks the candidate stage once per call:
-    *  - TopK: per-partition Rerank-heaps by (adist, vec_id), then the
-    *    broadcast Rerank·Q sliver;
+    *  - TopK: per-partition Rerank-heaps by (adist, vec_id), merged
+    *    into the Rerank·Q sliver, scored and cut on the driver
+    *    ([[AnnSearch.topK]]): eager, no window or join, a local-frame
+    *    answer;
     *  - Radius: the codes encode the UNIT-normalized corpus, so on the
     *    sphere |q−x|² = 2−2cos and the admission cos ≥ τ is the ADC
     *    cut adist ≤ 2(1−τ) — a stateless filter inside the scan. The
-    *    admitted set is data-dependent, so unlike the sliver it is not
-    *    broadcast. The exact verify keeps precision at 1.0; recall is
-    *    bounded by the probe cut and the ADC error. A rotation shrinks
+    *    admitted set is data-dependent, not bounded, so it stays the
+    *    lazy join tail ([[AnnSearch.rerank]]). The exact verify keeps
+    *    precision at 1.0; recall is bounded by the probe cut and the
+    *    ADC error. A rotation shrinks
     *    norms, so rotated ADC distances sit below their original-space
     *    images and admission errs on the recall side only.
     *
@@ -690,20 +697,14 @@ object Pq {
     require(!sameLabel || index.codes.columns.contains(Label),
       s"index codes carry no '$Label' column — " +
         s"build the index with metaCols = Seq(\"$Label\")")
-    val lab = AnnSearch.labelCols(sameLabel)
-    val vn = vectors
-      .select((Seq(col("vec_id"), V.toDouble(col("embedding")).as("e")) ++ lab): _*)
-      .withColumn("nrm", V.l2Norm(col("e")))
-    // the query rows, collected with their labels (Q point lookups)
-    val isQuery = col("vec_id").isInCollection(queryIds)
-    val qFrame = vn.filter(if (sameLabel) isQuery && col(Label).isNotNull else isQuery)
-    val qAll = qFrame
-      .select((Seq(col("vec_id"), col("e"), col("nrm")) ++ lab.map(_.cast("long"))): _*)
-      .collect()
+    val vn = AnnSearch.floatCorpus(vectors, sameLabel)
+    // the query rows, collected once with their labels (Q point lookups)
+    val qAll = AnnSearch.queryRows(vn, col("vec_id").isInCollection(queryIds), sameLabel)
     if (qAll.isEmpty) return AnnSearch.empty(vectors, cut, sameLabel)
     val qRows = qAll.map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
     val qLab: Map[Long, Long] =
-      if (sameLabel) qAll.map(r => r.getLong(0) -> r.getLong(3)).toMap else Map.empty
+      if (sameLabel) qAll.map(r => r.getLong(0) -> r.getAs[Number](3).longValue).toMap
+      else Map.empty
     // probes rank in ORIGINAL space; the ADC tables live in the
     // index's code space (rotated when an OPQ basis is staged)
     val (adcRows, subW) = adcQueryRows(qRows, basis)
@@ -746,13 +747,13 @@ object Pq {
           (q, vid, acc)
         }
       }))
-      .toDF("query_id", "vec_id", "adist")
-    val cand = cut match {
-      case TopK(_) => AnnSearch.sliver(scanned, col("adist"))
-      case Radius(_) => scanned.select(col("query_id"), col("vec_id"))
+    cut match {
+      case TopK(k) => AnnSearch.topK(scanned, vn, qAll, k, sameLabel)
+      case Radius(_) =>
+        AnnSearch.rerank(scanned.toDF("query_id", "vec_id", "adist")
+          .select(col("query_id"), col("vec_id")), vn,
+          broadcast(AnnSearch.queryFrame(vn, qAll, sameLabel)), cut, sameLabel)
     }
-    AnnSearch.rerank(cand, vn, broadcast(qFrame.select(col("vec_id").as("query_id"),
-      col("e").as("qe"), col("nrm").as("qnrm"))), cut, sameLabel)
   }
 
   /** Top-k off a staged index: [[queryIvfPqIndex]] with `TopK(k)`. */
@@ -768,10 +769,7 @@ object Pq {
   private[operators] def probesAgainst(centroids: DataFrame,
                             qRows: Array[(Long, Array[Double], Double)],
                             nprobe: Int): Map[Long, Set[Long]] = {
-    val cents = centroids
-      .select(col("cell").cast("long"), col("ce"), col("cn")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
+    val cents = Similarity.centroidArray(centroids, "cell", "ce", "cn")
     qRows.map { case (q, qe, qnrm) =>
       val ranked = cents.map { case (cell, ce, cn) =>
         var dot = 0.0; var j = 0

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.sources.Tables
 import graft.functions.{VectorOps => V}
 import graft.operators.AnnSearch.{Cut, Radius, TopK}
@@ -201,8 +203,8 @@ object Quantize {
   }
 
   /** Query a STAGED SQ8 index: [[sq8Scan]] over the persisted codes +
-    * ranges, nothing rebuilt — queries and the exact rerank read the
-    * float corpus only for the query vectors and the candidates.
+    * ranges, nothing rebuilt — the query rows and the exact scoring read
+    * the float corpus only for the query vectors and the candidates.
     * Serves every (cut, sameLabel) pair:
     *  - top-k answers bit-identically to the in-memory [[knnSq8On]]
     *    (spec-asserted);
@@ -289,8 +291,8 @@ object Quantize {
     * codegen: element_at on a constant array + the affine dequant),
     * scores the decoded vector against the broadcast EXACT query set,
     * keeps per-partition lossless top-[[Pq.Rerank]] heaps (the
-    * knn_bruteforce cut), and exact-reranks only the Rerank·Q
-    * candidate sliver against the float corpus.
+    * knn_bruteforce cut), and exact-scores only the Rerank·Q
+    * candidate sliver against the float corpus ([[AnnSearch.topK]]).
     *
     * Where [[Pq]] compresses harder (M code ids per vector) but
     * approximates by codebook cell, SQ8 keeps per-dimension geometry:
@@ -304,10 +306,11 @@ object Quantize {
     * [[knnSq8OracleSql]].
     *
     * 100 TB: ONE narrow scan of the codes column (the serving corpus
-    * a deployment actually persists), broadcast queries, heap cut
-    * before any shuffle, Rerank·Q point lookups on the float corpus —
-    * the same shape that makes knn_bruteforce scan-bound, at the
-    * compressed scan's byte cost. */
+    * a deployment actually persists), broadcast queries, heap cut and
+    * a tree merge of the heaps, one exact pass over the Rerank·Q
+    * candidate ids of the float corpus — the same shape that
+    * makes knn_bruteforce scan-bound, at the compressed scan's byte
+    * cost. */
   def knnSq8(spark: SparkSession, dir: String, k: Int = Similarity.K): DataFrame =
     knnSq8On(Tables.embeddings(spark, dir), k)
 
@@ -354,19 +357,22 @@ object Quantize {
     * ([[knnSq8On]], [[knnIvfSq8On]]) and the staged indexes
     * ([[querySq8Index]], [[queryIvfSq8Index]]): decode-in-kernel over
     * `codes` against the collected `rg` ranges, approximate cosine vs
-    * the broadcast query rows `queryPred` selects from the float
-    * corpus, the same-label predicate (when asked) before the decode
-    * cosine, then the candidate stage — lossless per-partition
-    * top-Rerank heaps and the Rerank·Q sliver for TopK, the stateless
-    * approximate-cosine ≥ τ admission for Radius — and the shared
-    * exact rerank ([[AnnSearch.rerank]]).
+    * the query rows `queryPred` selects from the float corpus
+    * (collected once and checked, [[AnnSearch.queryRows]], then
+    * broadcast as a local frame), the same-label predicate (when
+    * asked) before the decode cosine, then the cut's exact tail —
+    * lossless per-partition top-Rerank heaps under (−cosine, vec_id)
+    * into the eager [[AnnSearch.topK]] for TopK; the
+    * stateless approximate-cosine ≥ τ admission into
+    * [[AnnSearch.rerank]] for Radius.
     *
     * `probe` (centroids, nprobe) restricts the scan to each query's
-    * probed cells (`codes` must carry `cell`): the probed set is a
-    * bounded driver collect (Q·nprobe rows), so the cell cut reaches
-    * the codes scan as a STATIC filter — partition-directory pruning
-    * on a staged index, and no decode work for unprobed codes —
-    * before the per-query cell join. */
+    * probed cells (`codes` must carry `cell`): the probes are ranked on
+    * the driver against the C-row centroids ([[Pq.probesAgainst]], the
+    * PQ tier's), so the cell cut reaches the codes scan as a STATIC
+    * filter — partition-directory pruning on a staged index, and no
+    * decode work for unprobed codes — before the per-query cell join
+    * against a local Q·nprobe-row probe frame. */
   private def sq8Scan(codes: DataFrame, rg: Array[(Long, Double, Double)],
                       vectors: DataFrame, queryPred: Column, cut: Cut,
                       sameLabel: Boolean,
@@ -375,36 +381,39 @@ object Quantize {
     require(!sameLabel || codes.columns.contains(Label),
       s"staged SQ8 codes carry no '$Label' column — " +
         s"stage the index with metaCols = Seq(\"$Label\")")
-    val lab = AnnSearch.labelCols(sameLabel)
-    val vn = vectors
-      .select((Seq(col("vec_id"), V.toDouble(col("embedding")).as("e")) ++ lab): _*)
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val queries = broadcast(vn.filter(queryPred)
-      .select((Seq(col("vec_id").as("query_id"), col("e").as("qe"),
-        col("nrm").as("qnrm")) ++ lab.map(_.as("qlabel"))): _*))
-    val scanCols = Seq(col("vec_id"), col("codes")) ++ lab
+    val spark = vectors.sparkSession
+    val vn = AnnSearch.floatCorpus(vectors, sameLabel)
+    val qAll = AnnSearch.queryRows(vn, queryPred, sameLabel)
+    if (qAll.isEmpty) return AnnSearch.empty(vectors, cut, sameLabel)
+    val queries = broadcast(AnnSearch.queryFrame(vn, qAll, sameLabel))
+    val scanCols = Seq(col("vec_id"), col("codes")) ++ AnnSearch.labelCols(sameLabel)
     val pairs = probe match {
       case None =>
         dequantized(codes.select(scanCols: _*), rg)
           .join(queries, col("vec_id") =!= col("query_id"))
       case Some((centroids, nprobe)) =>
-        val probes = Similarity.probeCells(queries, centroids, nprobe)
-        val probedCells = probes.select(col("cell").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        dequantized(codes.filter(col("cell").isInCollection(probedCells))
+        // each query's probed cells, ranked on the driver
+        // (Pq.probesAgainst), ride its row of a local probe frame
+        val byQ = Pq.probesAgainst(centroids,
+          qAll.map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))), nprobe)
+        val qf = AnnSearch.queryFrame(vn, qAll, sameLabel)
+        val probes = spark.createDataFrame(qAll.toSeq.flatMap(r =>
+          byQ(r.getLong(0)).toSeq.sorted.map(c => Row.fromSeq(r.toSeq :+ c))).asJava,
+          qf.schema.add("cell", LongType, nullable = false))
+        dequantized(codes.filter(col("cell").isInCollection(byQ.values.flatten.toSet))
           .select((scanCols :+ col("cell")): _*), rg)
           .join(broadcast(probes), "cell")
           .filter(col("vec_id") =!= col("query_id"))
     }
     val scored = (if (sameLabel) pairs.filter(col(Label) === col("qlabel")) else pairs)
       .select(col("query_id"), col("vec_id"), AnnSearch.cosineTo("de", "dn"))
-    val cand = cut match {
-      case TopK(_) =>
-        AnnSearch.sliver(Similarity.partitionTopK(scored, Pq.Rerank), col("cosine").desc)
+    cut match {
+      case TopK(k) =>
+        AnnSearch.topK(Similarity.partitionHeaps(scored, Pq.Rerank), vn, qAll, k, sameLabel)
       case Radius(tau) =>
-        scored.filter(col("cosine") >= tau).select(col("query_id"), col("vec_id"))
+        AnnSearch.rerank(scored.filter(col("cosine") >= tau)
+          .select(col("query_id"), col("vec_id")), vn, queries, cut, sameLabel)
     }
-    AnnSearch.rerank(cand, vn, queries, cut, sameLabel)
   }
 
   /** Full DuckDB replay of the SQ8 search: the [[vecQuantizeOracleSql]]
@@ -658,12 +667,11 @@ object Quantize {
   }
 
   /** Query the staged composed index: [[sq8Scan]] restricted to the
-    * probes off the C-row centroid artifact (the SAME
-    * [[Similarity.probeCells]] frame the one-shot key ranks with —
-    * staged top-k answers are bit-identical, spec), a STATICALLY
-    * cell-pruned decode scan over the persisted codes
+    * probes off the C-row centroid artifact (ranked as the one-shot
+    * key ranks them — staged top-k answers are bit-identical, spec),
+    * a STATICALLY cell-pruned decode scan over the persisted codes
     * (partition-directory pruning — the IO cut the layout exists
-    * for), the cut, exact rerank against the float corpus. `nprobe
+    * for), the cut, exact scoring against the float corpus. `nprobe
     * <= 0` picks the width from `sameLabel` ([[AnnSearch.probeWidth]]). */
   def queryIvfSq8Index(spark: SparkSession, path: String,
                        vectors: DataFrame, queryIds: Seq[Long],

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -439,29 +439,18 @@ object Similarity {
     * breaking that equivalence). */
   private[operators] def probeFrame(indexed: DataFrame, centroids: DataFrame,
                                     nprobe: Int = IvfNProbe,
-                                    extraCols: Seq[String] = Nil): DataFrame =
-    broadcast(probeCells(
-      indexed.filter(col("vec_id") < NQueries)
-        .select((Seq(col("vec_id").as("query_id"), col("e").as("qe"),
-          col("nrm").as("qnrm")) ++ extraCols.map(c => col(c).as(s"q$c"))): _*),
-      centroids, nprobe))
-
-  /** [[probeFrame]]'s core over an explicit queries frame (query_id,
-    * qe, qnrm, extras…) — also consumed by the SQ8 tier's probed scan,
-    * whose query frame comes off the float corpus. Output = the input
-    * queries columns plus each survivor's probed `cell` (Q·nprobe
-    * rows). Unhinted, so a caller can also collect it; the join sites
-    * mark it broadcast. */
-  private[operators] def probeCells(queries: DataFrame, centroids: DataFrame,
-                                    nprobe: Int): DataFrame = {
+                                    extraCols: Seq[String] = Nil): DataFrame = {
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("cdist").desc, col("cell"))
-    queries.join(broadcast(centroids))
+    broadcast(indexed.filter(col("vec_id") < NQueries)
+      .select((Seq(col("vec_id").as("query_id"), col("e").as("qe"),
+        col("nrm").as("qnrm")) ++ extraCols.map(c => col(c).as(s"q$c"))): _*)
+      .join(broadcast(centroids))
       .withColumn("cdist", V.cosineWithNorms(
         V.dot(col("qe"), col("ce")), col("qnrm"), col("cn")))
       .withColumn("rk", row_number().over(probeW))
       .filter(col("rk") <= nprobe)
-      .drop("ce", "cn", "cdist", "rk")
+      .drop("ce", "cn", "cdist", "rk"))
   }
 
   /** Assign each vector to its nearest (max-cosine) centroid: ONE
@@ -484,14 +473,25 @@ object Similarity {
     * collect is bounded: C rows (√(n/2) auto-sized — ~22k rows × d
     * doubles even at a 10^9-vector corpus). */
   private[operators] def assignNearest(v: DataFrame, centroids: DataFrame,
-                            cellCol: String, ceCol: String, cnCol: String): DataFrame = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    val cents: Array[(Long, Array[Double], Double)] = centroids
-      .select(col(cellCol).cast("long"), col(ceCol), col(cnCol))
+                            cellCol: String, ceCol: String, cnCol: String): DataFrame =
+    assignNearestTo(v, centroidArray(centroids, cellCol, ceCol, cnCol), cellCol)
+
+  /** A C-row centroid frame collected cell-ascending as
+    * `(cell, ce, cn)` — the closure codebook of [[assignNearest]]. */
+  private[operators] def centroidArray(centroids: DataFrame, cellCol: String,
+                                       ceCol: String, cnCol: String)
+      : Array[(Long, Array[Double], Double)] =
+    centroids.select(col(cellCol).cast("long"), col(ceCol), col(cnCol))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
+
+  /** [[assignNearest]] against an already collected [[centroidArray]]. */
+  private[operators] def assignNearestTo(v: DataFrame,
+                                         cents: Array[(Long, Array[Double], Double)],
+                                         cellCol: String): DataFrame = {
+    val spark = v.sparkSession
+    import spark.implicits._
     v.select(col("vec_id"), col("e"), col("nrm"))
       .as[(Long, Array[Double], Double)]
       .mapPartitions { it =>
@@ -819,12 +819,19 @@ object Similarity {
   private[operators] def partitionTopK(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    // the heaps keep the LOWEST (score, vec_id): score = −cosine, and
     // negation is exact, so the cosines come back bit-identical
-    scored.as[(Long, Long, Double)]
-      .mapPartitions(it => AnnSearch.lowestPerQuery(
-        it.map(s => (s._1, s._2, -s._3)), k).map(s => (s._1, s._2, -s._3)))
+    partitionHeaps(scored, k).mapPartitions(_.map(s => (s._1, s._2, -s._3)))
       .toDF("query_id", "vec_id", "cosine")
+  }
+
+  /** [[partitionTopK]]'s heaps as [[AnnSearch.topK]] takes them:
+    * `(query_id, vec_id, −cosine)`, each query's `k` LOWEST
+    * (−cosine, vec_id) per partition. */
+  private[operators] def partitionHeaps(scored: DataFrame, k: Int): Dataset[(Long, Long, Double)] = {
+    val spark = scored.sparkSession
+    import spark.implicits._
+    scored.as[(Long, Long, Double)]
+      .mapPartitions(it => AnnSearch.lowestPerQuery(it.map(s => (s._1, s._2, -s._3)), k))
   }
 
   /** Each vector's `nprobe` nearest cells, best-first by

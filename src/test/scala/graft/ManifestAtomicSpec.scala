@@ -412,6 +412,21 @@ class ManifestAtomicSpec extends SparkSpecBase {
     }
   }
 
+  test("an append against an empty centroids artifact fails with a " +
+      "diagnosis on every centroid tier") {
+    val ivfPq = Pq.buildIvfPq(base)
+    Seq(
+      AnnIndex.Index(AnnIndex.IvfPq, Seq(ivfPq.centroids.limit(0), ivfPq.codebooks),
+        ivfPq.codes),
+      AnnIndex.Index(AnnIndex.IvfSq8, Seq(ivfPq.centroids.limit(0),
+        Quantize.buildSq8(base).artifacts.head), ivfPq.codes)
+    ).foreach { ix =>
+      val e = intercept[IllegalStateException](AnnIndex.encode(ix, rest))
+      assert(e.getMessage.contains("centroids artifact is empty"),
+        s"${ix.tier}: undiagnosed: ${e.getMessage}")
+    }
+  }
+
   test("staging is per call: two roots retrained and fed by ingest sinks " +
       "concurrently in one JVM each equal their serial run") {
     // two disjoint corpora, one per root, so a root built or fed from

@@ -16,6 +16,25 @@ class PlanSpec extends SparkSpecBase {
   private def optimized(df: DataFrame): String =
     df.queryExecution.optimizedPlan.toString
 
+  /** The plans a compressed tier's eager top-k executes
+    * ([[ExecutedPlans]]; the answer's own plan is a local scan), its
+    * tail checked: the last two executions are the heap merge (the
+    * candidate scan with its per-partition heaps) and the exact scoring
+    * pass, and neither shuffles nor ranks — no Exchange, no Window. */
+  private def topKPlans(what: String)(body: => Any): Seq[String] = {
+    val plans = ExecutedPlans.of(spark)(body)
+    val tail = plans.takeRight(2)
+    assert(tail.size == 2,
+      s"$what: wanted the heap merge and the scoring pass, ran:\n${plans.mkString("\n---\n")}")
+    assert(tail.head.contains("MapPartitions"), s"$what: heap cut missing:\n${tail.head}")
+    tail.foreach { p =>
+      assert("\\bExchange\\b".r.findFirstIn(p).isEmpty && !p.contains("ShuffleQueryStage"),
+        s"$what: the top-k tail shuffles:\n$p")
+      assert(!p.contains("Window"), s"$what: the top-k tail ranks in a window:\n$p")
+    }
+    plans
+  }
+
   /** AQE hides codegen stages until the plan finalizes — execute
     * first, then read the final adaptive plan. */
   private def finalPlan(df: DataFrame): String = {
@@ -679,7 +698,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("knn pq: codebook/distance-table joins broadcast; no cartesian") {
-    val p = plan(graft.operators.Pq.knnPq(spark, sfDir))
+    val p = topKPlans("knnPq")(graft.operators.Pq.knnPq(spark, sfDir)).mkString("\n")
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"BNLJ in:\n$p")
@@ -742,29 +761,26 @@ class PlanSpec extends SparkSpecBase {
 
   test("knn_sq8: serving scan reads the staged codes, heap cut before " +
       "the bounded windows, no cartesian") {
-    val p = plan(graft.operators.Quantize.knnSq8(spark, sfDir))
-    // the search scans the STAGED compressed corpus for candidates
-    assert(p.contains("sq8_codes"), s"scan does not read the staged codes:\n$p")
+    val plans = topKPlans("knnSq8")(graft.operators.Quantize.knnSq8(spark, sfDir))
+    // the heap merge scans the STAGED compressed corpus for candidates
+    val scan = plans.init.last
+    assert(scan.contains("sq8_codes"), s"scan does not read the staged codes:\n$scan")
     // the lossless per-partition top-Rerank heap cut
-    assert(p.contains("MapPartitions"), s"heap cut missing:\n$p")
-    assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
-    // both windows are candidate-sliver-bounded (crk over heap
-    // survivors, final rank over Rerank·Q rows)
-    assert("Window ".r.findAllIn(p).size <= 2,
-      s"expected at most the two bounded windows:\n$p")
+    assert(scan.contains("MapPartitions"), s"heap cut missing:\n$scan")
+    plans.foreach(p => assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p"))
   }
 
   test("knn_ivf_sq8: probed-cell equi-join over the staged cell-tagged " +
       "codes, heap cut, no cartesian") {
-    val p = plan(graft.operators.Quantize.knnIvfSq8(spark, sfDir))
-    assert(p.contains("ivf_sq8_codes"),
-      s"scan does not read the staged cell-tagged codes:\n$p")
+    val plans = topKPlans("knnIvfSq8")(graft.operators.Quantize.knnIvfSq8(spark, sfDir))
+    val scan = plans.init.last
+    assert(scan.contains("ivf_sq8_codes"),
+      s"scan does not read the staged cell-tagged codes:\n$scan")
     // candidate generation must keep the cell equi-key (probes are
     // bounded and broadcast; losing the key would BNLJ the corpus)
-    assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
-    assert(p.contains("MapPartitions"), s"heap cut missing:\n$p")
-    assert("Window ".r.findAllIn(p).size <= 3,
-      s"expected only the probe + bounded candidate windows:\n$p")
+    plans.foreach(p => assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p"))
+    assert(scan.contains("BroadcastHashJoin"), s"probe join lost its cell key:\n$scan")
+    assert(scan.contains("MapPartitions"), s"heap cut missing:\n$scan")
   }
 
   test("graph_bfs: report reads checkpointed walk state — one bounded " +
@@ -814,8 +830,8 @@ class PlanSpec extends SparkSpecBase {
     // PartitionFilters (whole cell=<id> directories skipped — the IO
     // cut the partitioned layout exists for), and prune to fewer
     // files than the index holds
-    def assertPruned(df: DataFrame, what: String): Unit = {
-      val p = plan(df)
+    def assertPruned(plans: Seq[String], what: String): Unit = {
+      val p = plans.mkString("\n")
       val codesScans = p.linesIterator
         .filter(l => l.contains("FileScan") && l.contains(s"$dir/codes"))
         .toSeq
@@ -826,13 +842,14 @@ class PlanSpec extends SparkSpecBase {
       }
       assert(!p.contains("CartesianProduct"), s"$what: cartesian in:\n$p")
     }
-    assertPruned(Pq.queryIvfPq(staged, vectors, qids), "queryIvfPq")
-    assertPruned(Pq.queryIvfPqIndex(staged, vectors, qids, sameLabel = true),
-      "queryIvfPqIndex sameLabel")
+    // top-k is eager: its plans are the ones the call executed
+    assertPruned(topKPlans("queryIvfPq")(Pq.queryIvfPq(staged, vectors, qids)), "queryIvfPq")
+    assertPruned(topKPlans("queryIvfPqIndex sameLabel")(
+      Pq.queryIvfPqIndex(staged, vectors, qids, sameLabel = true)), "queryIvfPqIndex sameLabel")
     // the radius tier prunes the same way and never ranks: admission
     // is a stateless threshold filter, not a window
     val radius = Pq.queryIvfPqIndex(staged, vectors, qids, cut = Radius(Similarity.RadiusTau))
-    assertPruned(radius, "queryIvfPqIndex Radius")
+    assertPruned(Seq(plan(radius)), "queryIvfPqIndex Radius")
     val pr = plan(radius)
     assert("Window \\[".r.findAllIn(pr).isEmpty,
       s"the radius tail must not rank anything:\n$pr")
@@ -845,7 +862,8 @@ class PlanSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfsq8_plan").toString
     AnnIndex.write(Quantize.buildIvfSq8(vectors), dir)
     val qids = 0L until graft.operators.Similarity.NQueries.toLong
-    val p = plan(Quantize.queryIvfSq8Index(spark, dir, vectors, qids))
+    val p = topKPlans("queryIvfSq8Index")(
+      Quantize.queryIvfSq8Index(spark, dir, vectors, qids)).mkString("\n")
     val codesScans = p.linesIterator
       .filter(l => l.contains("FileScan") && l.contains(s"$dir/codes"))
       .toSeq
@@ -870,25 +888,28 @@ class PlanSpec extends SparkSpecBase {
     // the rotation is driver-side (query) and build-time (corpus): the
     // SERVING plan must look exactly like the PQ tier's — a statically
     // cell-pruned codes scan; the basis never joins into the scan
-    def assertPruned(df: DataFrame, what: String): Unit = {
-      val p = plan(df)
-      val codesScans = p.linesIterator
-        .filter(l => l.contains("FileScan") && l.contains(s"$dir/codes"))
-        .toSeq
-      assert(codesScans.nonEmpty, s"$what: no codes scan found in:\n$p")
-      codesScans.foreach { l =>
-        assert(l.contains("PartitionFilters: [cell"),
-          s"$what: codes scan lost the static cell partition filter:\n$l")
+    // (the basis is collected on the driver in its own execution; the
+    // plans that scan the codes must not read it)
+    def assertPruned(plans: Seq[String], what: String): Unit = {
+      val serving = plans.filter(_.contains(s"$dir/codes"))
+      assert(serving.nonEmpty, s"$what: no codes scan found in:\n${plans.mkString("\n")}")
+      serving.foreach { p =>
+        p.linesIterator
+          .filter(l => l.contains("FileScan") && l.contains(s"$dir/codes"))
+          .foreach { l =>
+            assert(l.contains("PartitionFilters: [cell"),
+              s"$what: codes scan lost the static cell partition filter:\n$l")
+          }
+        assert(!p.contains(s"$dir/basis"),
+          s"$what: the basis artifact leaked into the serving plan:\n$p")
       }
-      assert(!p.contains(s"$dir/basis"),
-        s"$what: the basis artifact leaked into the serving plan:\n$p")
-      assert(!p.contains("CartesianProduct"), s"$what: cartesian in:\n$p")
+      plans.foreach(p => assert(!p.contains("CartesianProduct"), s"$what: cartesian in:\n$p"))
     }
-    assertPruned(Opq.queryIvfOpq(staged, vectors, qids), "queryIvfOpq")
-    assertPruned(Opq.queryIvfOpq(staged, vectors, qids, sameLabel = true),
-      "queryIvfOpq sameLabel")
+    assertPruned(topKPlans("queryIvfOpq")(Opq.queryIvfOpq(staged, vectors, qids)), "queryIvfOpq")
+    assertPruned(topKPlans("queryIvfOpq sameLabel")(
+      Opq.queryIvfOpq(staged, vectors, qids, sameLabel = true)), "queryIvfOpq sameLabel")
     val radius = Opq.queryIvfOpq(staged, vectors, qids, cut = Radius(Similarity.RadiusTau))
-    assertPruned(radius, "queryIvfOpq Radius")
+    assertPruned(Seq(plan(radius)), "queryIvfOpq Radius")
     assert("Window \\[".r.findAllIn(plan(radius)).isEmpty,
       "the radius tail must not rank anything")
   }
@@ -900,7 +921,8 @@ class PlanSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_sq8_plan").toString
     AnnIndex.write(Quantize.buildSq8(vectors), dir)
     val qids = 0L until graft.operators.Similarity.NQueries.toLong
-    val p = plan(Quantize.querySq8Index(spark, dir, vectors, qids))
+    val p = topKPlans("querySq8Index")(
+      Quantize.querySq8Index(spark, dir, vectors, qids)).mkString("\n")
     // the erasure-bucket partition column must not survive into the
     // scan's read schema (it is layout, not data) and the flat scan
     // reads only the key + codes
@@ -920,7 +942,8 @@ class PlanSpec extends SparkSpecBase {
     // metadata column — the erasure-bucket layout column still pruned
     val fdir = java.nio.file.Files.createTempDirectory("graft_sq8_fplan").toString
     AnnIndex.write(Quantize.buildSq8(vectors, metaCols = Seq("label")), fdir)
-    val pf = plan(Quantize.querySq8Index(spark, fdir, vectors, qids, sameLabel = true))
+    val pf = topKPlans("querySq8Index sameLabel")(
+      Quantize.querySq8Index(spark, fdir, vectors, qids, sameLabel = true)).mkString("\n")
     assert(pf.contains("ReadSchema: struct<vec_id:bigint,codes:array<int>,label:int>"),
       s"filtered codes scan reads more than (vec_id, codes, label):\n$pf")
     assert(!pf.contains("BatchEvalPython") && !pf.contains("ScalaUDF"),
@@ -930,12 +953,11 @@ class PlanSpec extends SparkSpecBase {
 
   test("knn_ivf_opq: rotation stays native codegen dots, closure scan, " +
       "bounded windows, no cartesian") {
-    val p = plan(graft.operators.Opq.knnIvfOpq(spark, sfDir))
-    assert(p.contains("vec_dot"), s"rotation lost the native dot:\n$p")
-    assert(p.contains("MapPartitions"), s"closure scan pass missing:\n$p")
-    assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
-    assert("Window \\[".r.findAllIn(p).size <= 2,
-      s"expected at most the two bounded candidate windows:\n$p")
+    val plans = topKPlans("knnIvfOpq")(graft.operators.Opq.knnIvfOpq(spark, sfDir))
+    val scan = plans.init.last
+    assert(scan.contains("vec_dot"), s"rotation lost the native dot:\n$scan")
+    assert(scan.contains("MapPartitions"), s"closure scan pass missing:\n$scan")
+    plans.foreach(p => assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p"))
   }
 
   test("knn_radius: stateless filter tail — only the probe window, " +
@@ -979,16 +1001,16 @@ class PlanSpec extends SparkSpecBase {
 
   test("knn_opq: rotation is codegen dots over literal basis rows; " +
       "encode is the closure pass; bounded windows; no cartesian") {
-    val p = plan(graft.operators.Opq.knnOpq(spark, sfDir))
+    val plans = topKPlans("knnOpq")(graft.operators.Opq.knnOpq(spark, sfDir))
+    val scan = plans.init.last
     // the projection must be the native sequential-fold expression
     // (constant basis arrays in the plan), never a UDF or a join
-    assert(p.contains("vec_dot"), s"rotation lost the native dot:\n$p")
-    assert(!p.toLowerCase.contains("batchevalpython"),
-      s"rotation fell out of the JVM:\n$p")
-    assert(p.contains("MapPartitions"), s"closure encode pass missing:\n$p")
-    assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
-    assert("Window ".r.findAllIn(p).size <= 2,
-      s"expected at most the two bounded candidate windows:\n$p")
+    assert(scan.contains("vec_dot"), s"rotation lost the native dot:\n$scan")
+    plans.foreach { p =>
+      assert(!p.toLowerCase.contains("batchevalpython"), s"rotation fell out of the JVM:\n$p")
+      assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
+    }
+    assert(scan.contains("MapPartitions"), s"closure encode pass missing:\n$scan")
   }
 
   test("graph modularity: report shape is the lpa discipline — one " +
