@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextHashing => TH}
@@ -22,159 +27,222 @@ import graft.sources.Tables
   * records it. The merge table IS the tokenizer.
   *
   * Scale shape — what each piece costs at 100 TB:
-  *  - ONE corpus scan builds the (word, count) table, staged durably
-  *    to scratch; every subsequent round reads the staged vocabulary,
-  *    never the corpus. Vocabulary size is Zipf-bounded (millions of
-  *    rows at web scale, not corpus-sized) and stays distributed.
-  *  - Each round is one vocab-sized pair explode (Σ symbols per
-  *    DISTINCT word) + one keyed aggregate + a 1-ROW collect (the
-  *    winning pair) + one narrow fold projection. Rounds are bounded
-  *    by the `rounds` argument; the driver holds only the merge
-  *    table (R rows) — never symbol data.
-  *  - The merge application is a codegen'd higher-order `aggregate`
-  *    fold over each word's symbol array (greedy leftmost semantics,
-  *    exactly replayable in SQL) — no UDF, no shuffle.
+  *  - ONE corpus scan builds the (word, count) vocabulary: one keyed
+  *    aggregate plus a collect. The corpus stays distributed; the
+  *    driver holds the vocabulary, which is Zipf-bounded (millions of
+  *    distinct words at web scale, not corpus-sized). The bound is
+  *    `spark.driver.maxResultSize`.
+  *  - Every round runs in the driver JVM ([[Trainer]]) and starts no
+  *    Spark job: pair counts are kept incrementally with pair → word
+  *    postings, so a round costs the words that contain the winning
+  *    pair, not the vocabulary. A run of R rounds costs the same Spark
+  *    jobs as a run of one.
+  *  - Apply and encode reuse the trained segmentation; only the
+  *    doc-level encode goes back to Spark (one explode, one join
+  *    against the local (word, ids) frame, one groupBy).
   *
-  * Determinism: pair counts are exact integers; ties break on
-  * (count DESC, left, right) — both engines compare ASCII strings
-  * bytewise — so the DuckDB oracle replays training bit-for-bit with
-  * one recursive-fold CTE per round.
+  * Determinism: pair counts are exact `Long`s; ties break on
+  * (count DESC, left, right) under Spark's binary UTF-8 string order —
+  * the order both engines use — so the DuckDB oracle replays training
+  * bit-for-bit with one recursive-fold CTE per round.
   */
 object Bpe {
 
   val BpeRounds = 10
   val EndMark = "</w>"
-  /** Rounds between durable re-stagings of the symbol table in
-    * [[trainOn]] — bounds replayed fold depth (see the restage note). */
-  val RestageEvery = 4
 
-  /** word → initial symbols: characters + end-of-word marker. */
-  private def initialSyms(w: Column): Column =
-    concat(transform(sequence(lit(1), length(w)), i => w.substr(i, lit(1))),
-      array(lit(EndMark)))
+  /** The trainer state over a collected (word, cnt) vocabulary. Each
+    * word is an array of symbol ids: its code points (Spark's
+    * `length`/`substr` unit, so a supplementary character is ONE
+    * symbol) plus [[EndMark]]. Symbols are interned by string, so two
+    * merges that spell the same string yield the same symbol, as they
+    * do in a string fold.
+    *
+    * Pair statistics are exact and incremental: `counts` holds every
+    * adjacent pair's frequency-weighted total, `ranked` the same pairs
+    * in winning order, and `postings` each pair's words (a superset: a
+    * word that lost the pair stays listed and is skipped). A merge
+    * rewrites only the posted words. */
+  private[graft] final class Trainer(vocab: Seq[(String, Long)]) {
+    private val ids = mutable.HashMap.empty[String, Int]
+    private val names = mutable.ArrayBuffer.empty[String]
+    private val bytes = mutable.ArrayBuffer.empty[Array[Byte]]
+    private def intern(s: String): Int =
+      ids.getOrElseUpdate(s, { names += s; bytes += s.getBytes(UTF_8); names.size - 1 })
+    /** Spark's string order (`UTF8String.binaryCompare`): unsigned
+      * UTF-8 bytes, which is code-point order — not UTF-16 order. */
+    private def cmp(a: Int, b: Int): Int = java.util.Arrays.compareUnsigned(bytes(a), bytes(b))
 
-  /** Adjacent-pair counts over the symbol table, weighted by word
-    * frequency. A fully-merged word collapses to ONE symbol (e.g.
-    * "a" + "</w>" -> ["a</w>"]); it contributes no pairs and must be
-    * filtered BEFORE the explode — Spark's `sequence(1, 0)` is the
-    * DESCENDING [1, 0] (probing index 2 of a 1-element array throws
-    * under ANSI), while DuckDB's `generate_series(1, 0)` is empty, so
-    * the size guard is both the crash fix and the engine-agreement
-    * condition. */
-  private def pairCounts(wsyms: DataFrame): DataFrame =
-    wsyms.filter(size(col("syms")) >= 2)
-      .select(col("cnt"),
-        explode(transform(sequence(lit(1), size(col("syms")) - 1), i =>
-          struct(element_at(col("syms"), i).as("l"),
-            element_at(col("syms"), i + 1).as("r")))).as("p"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("cnt")).as("total"))
+    val words: Array[String] = vocab.map(_._1).toArray
+    val cnts: Array[Long] = vocab.map(_._2).toArray
+    private val segs: Array[Array[Int]] = words.map(w =>
+      w.codePoints().toArray.map(cp => intern(new String(Character.toChars(cp)))) :+ intern(EndMark))
 
-  /** Apply one merge (l, r) -> lr to a symbol array: greedy leftmost
-    * non-overlapping, via a single left fold — after a merge the new
-    * token becomes the fold's tail, so overlapping occurrences
-    * ("a a a" under (a,a)) resolve left-to-right exactly like the
-    * reference BPE implementations. Codegen'd array ops, no UDF. */
-  private[operators] def mergeFold(syms: Column, l: String, r: String): Column =
-    aggregate(syms, typedLit(Array.empty[String]),
-      (acc, x) =>
-        when(size(acc) > 0 &&
-            element_at(acc, lit(-1)) === lit(l) && x === lit(r),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-        .otherwise(concat(acc, array(x))))
+    private def key(l: Int, r: Int): Long = (l.toLong << 32) | (r & 0xffffffffL)
+    private val counts = mutable.HashMap.empty[Long, Long]
+    private val postings = mutable.HashMap.empty[Long, mutable.HashSet[Int]]
+    private val order: java.util.Comparator[(Long, Int, Int)] = (a, b) => {
+      val c = java.lang.Long.compare(b._1, a._1)
+      if (c != 0) c else { val l = cmp(a._2, b._2); if (l != 0) l else cmp(a._3, b._3) }
+    }
+    private val ranked = new java.util.TreeSet[(Long, Int, Int)](order)
 
-  /** The staged (word, cnt, syms) start state: one corpus scan,
-    * vocabulary written durably so the per-round actions replay a
-    * vocab-sized parquet read instead of the corpus explode. */
-  private def stagedWordSyms(docs: DataFrame): DataFrame = {
-    val staged = Scratch.dir("graft_bpe_words")
+    private def pairs(seg: Array[Int]): Iterator[Long] =
+      Iterator.range(0, seg.length - 1).map(i => key(seg(i), seg(i + 1)))
+
+    /** Apply summed count deltas to `counts` and `ranked`. */
+    private def shift(delta: mutable.HashMap[Long, Long]): Unit =
+      delta.foreach { case (k, d) => if (d != 0) {
+        val (l, r) = ((k >>> 32).toInt, k.toInt)
+        val old = counts.getOrElse(k, 0L)
+        if (old > 0) ranked.remove((old, l, r))
+        val now = old + d
+        if (now > 0) { counts(k) = now; ranked.add((now, l, r)) } else counts.remove(k)
+      } }
+
+    locally {
+      val delta = mutable.HashMap.empty[Long, Long]
+      segs.indices.foreach(w => pairs(segs(w)).foreach { k =>
+        delta(k) = delta.getOrElse(k, 0L) + cnts(w)
+        postings.getOrElseUpdate(k, mutable.HashSet.empty) += w
+      })
+      shift(delta)
+    }
+
+    /** The `n` best pairs in winning order: (left, right, total). */
+    def best(n: Int): Seq[(String, String, Long)] =
+      ranked.iterator().asScala.take(n).map { case (t, l, r) => (names(l), names(r), t) }.toSeq
+
+    /** Merge a batch of pairs in ONE left fold over each word: when the
+      * fold's tail and the next symbol form a batch pair, the tail
+      * becomes their concatenation. For one pair that is greedy
+      * leftmost, non-overlapping; for a symbol-disjoint batch at most
+      * one pair can match any (tail, next) state. */
+    def merge(batch: Seq[(String, String)]): Unit = {
+      val into = batch.collect { case (l, r) if ids.contains(l) && ids.contains(r) =>
+        key(ids(l), ids(r)) -> (l + r) }.toMap
+      val touched = into.keysIterator.flatMap(k => postings.remove(k).iterator.flatten).toSet
+      if (touched.nonEmpty) {
+        val merged = into.map { case (k, s) => k -> intern(s) }
+        val delta = mutable.HashMap.empty[Long, Long]
+        touched.foreach { w =>
+          val seg = segs(w)
+          val out = mutable.ArrayBuilder.make[Int]
+          var tail = seg(0)
+          var i = 1
+          while (i < seg.length) {
+            merged.get(key(tail, seg(i))) match {
+              case Some(m) => tail = m
+              case None => out += tail; tail = seg(i)
+            }
+            i += 1
+          }
+          out += tail
+          val next = out.result()
+          if (next.length < seg.length) {
+            pairs(seg).foreach(k => delta(k) = delta.getOrElse(k, 0L) - cnts(w))
+            pairs(next).foreach { k =>
+              delta(k) = delta.getOrElse(k, 0L) + cnts(w)
+              postings.getOrElseUpdate(k, mutable.HashSet.empty) += w
+            }
+            segs(w) = next
+          }
+        }
+        shift(delta)
+      }
+    }
+
+    /** Each word's current symbols. */
+    def segments(w: Int): Seq[String] = segs(w).toSeq.map(names)
+
+    /** Every pair's total counted from scratch — what the incremental
+      * statistics must equal after any merge. */
+    def recount(): Map[(String, String), Long] =
+      segs.indices.flatMap(w => pairs(segs(w)).map(_ -> cnts(w))).groupMapReduce(_._1)(_._2)(_ + _)
+        .map { case (k, t) => (names((k >>> 32).toInt), names(k.toInt)) -> t }
+
+    /** Each word's subword ids over the current segmentation, the
+      * subwords ranked by frequency-weighted total DESC, then symbol in
+      * Spark's order. */
+    def wordIds(): Seq[(String, Array[Int])] = {
+      val total = mutable.HashMap.empty[Int, Long]
+      segs.indices.foreach(w => segs(w).foreach(s => total(s) = total.getOrElse(s, 0L) + cnts(w)))
+      val sid = total.toSeq.sortWith { case ((a, ta), (b, tb)) => ta > tb || (ta == tb && cmp(a, b) < 0) }
+        .map(_._1).zipWithIndex.toMap
+      segs.indices.map(w => words(w) -> segs(w).map(sid))
+    }
+  }
+
+  /** The corpus vocabulary on the driver: one keyed aggregate over the
+    * word explode, collected. */
+  private[graft] def vocabulary(docs: DataFrame): Seq[(String, Long)] =
     docs.select(explode(TH.words(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(staged)
-    docs.sparkSession.read.parquet(staged)
-      .select(col("word"), col("cnt"), initialSyms(col("word")).as("syms"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  /** Learn up to `totalMerges` merges over the docs' vocabulary,
+    * `batchSize` per round: each round takes the top 4×batchSize
+    * candidates and accepts their symbol-disjoint prefix by rank. Stops
+    * early when no pair is left. Returns the ranked merge table
+    * (round, left_sym, right_sym, merged, pair_count) and the trained
+    * state. */
+  private def learn(docs: DataFrame, totalMerges: Int, batchSize: Int): (DataFrame, Trainer) = {
+    val t = new Trainer(vocabulary(docs))
+    val merges = mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
+    var exhausted = false
+    while (merges.size < totalMerges && !exhausted) {
+      val cand = t.best(batchSize * 4)
+      if (cand.isEmpty) exhausted = true
+      else {
+        val used = mutable.Set.empty[String]
+        val batch = cand.iterator
+          .filter { case (l, r, _) =>
+            val ok = !used(l) && !used(r)
+            if (ok) { used += l; used += r }
+            ok
+          }
+          .take(math.min(batchSize, totalMerges - merges.size))
+          .toSeq
+        val base = merges.size
+        merges ++= batch.zipWithIndex.map { case ((l, r, total), i) =>
+          (base + i + 1, l, r, l + r, total)
+        }
+        t.merge(batch.map(p => (p._1, p._2)))
+      }
+    }
+    val spark = docs.sparkSession
+    import spark.implicits._
+    (merges.toSeq.toDF("round", "left_sym", "right_sym", "merged", "pair_count"), t)
   }
 
   /** Train `rounds` merges; returns the ranked merge table
     * (round, left_sym, right_sym, merged, pair_count). Stops early if
     * the vocabulary runs out of distinct pairs. */
   def trainOn(docs: DataFrame, rounds: Int = BpeRounds): DataFrame =
-    trainWithSymsOn(docs, rounds)._1
-
-  /** [[trainOn]] plus the POST-TRAINING symbol table — (word, cnt,
-    * syms) with every learned merge applied. The training loop already
-    * computes this table round by round; returning it lets the apply/
-    * encode tier reuse it instead of re-folding the merge list from
-    * scratch. */
-  def trainWithSymsOn(docs: DataFrame,
-                      rounds: Int = BpeRounds): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    var wsyms = stagedWordSyms(docs)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var round = 1
-    var exhausted = false
-    while (round <= rounds && !exhausted) {
-      // 1-row collect per round: the winning pair — the only data the
-      // driver ever holds
-      val top = pairCounts(wsyms)
-        .orderBy(col("total").desc, col("l"), col("r")).limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, total) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((round, l, r, l + r, total))
-        wsyms = wsyms.withColumn("syms", mergeFold(col("syms"), l, r))
-        // Re-stage every few rounds: without this, round R's action
-        // replays all R-1 prior mergeFolds from the round-0 staging —
-        // O(R^2) fold work and an R-deep nested higher-order plan. A
-        // periodic vocab-sized parquet write truncates both, keeping
-        // per-round cost O(vocab · k) at production merge counts
-        // (10^4–10^5 rounds). Fresh dir per restage: never overwrite
-        // a path the live lineage still reads.
-        if (round % RestageEvery == 0) {
-          val staged = Scratch.dir(s"graft_bpe_r$round")
-          wsyms.write.mode("overwrite").parquet(staged)
-          wsyms = spark.read.parquet(staged)
-        }
-        round += 1
-      }
-    }
-    import spark.implicits._
-    (merges.toSeq.toDF("round", "left_sym", "right_sym", "merged", "pair_count"),
-      wsyms)
-  }
+    learn(docs, rounds, 1)._1
 
   /** Driver query over `documents` (key `bpe_train`). */
   def train(spark: SparkSession, dir: String): DataFrame =
     trainOn(Tables.documents(spark, dir))
 
   /** Encode each distinct corpus word with an already-learned merge
-    * list: the same fold, applied in merge order — the subword twin of
+    * list, applied in merge order — the subword twin of
     * `text_encode`'s whole-word lookup. Returns (word, cnt, syms).
     * Used by BpeSpec's round-trip property (decode: concat symbols,
     * strip the marker, recover the word). */
   def encodeWordsOn(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val spark = docs.sparkSession
-    var df = stagedWordSyms(docs)
-    var applied = 0
-    merges.foreach { case (l, r) =>
-      df = df.withColumn("syms", mergeFold(col("syms"), l, r))
-      applied += 1
-      // same plan-depth bound as trainOn: production merge tables are
-      // 10^4–10^5 rows; an unbroken fold chain that deep would not
-      // analyze, let alone codegen
-      if (applied % RestageEvery == 0 && applied < merges.size) {
-        val staged = Scratch.dir(s"graft_bpe_apply_$applied")
-        df.write.mode("overwrite").parquet(staged)
-        df = spark.read.parquet(staged)
-      }
-    }
-    df
+    import spark.implicits._
+    val t = new Trainer(vocabulary(docs))
+    merges.foreach(p => t.merge(Seq(p)))
+    t.words.indices.map(w => (t.words(w), t.cnts(w), t.segments(w)))
+      .toDF("word", "cnt", "syms")
   }
 
   /** The shared DuckDB training replay: per round, a pair-count CTE, a
     * 1-row winner CTE, and a RECURSIVE fold CTE that applies the winner
-    * with the same greedy-leftmost semantics as [[mergeFold]] (the
+    * with the same greedy-leftmost semantics as [[Trainer.merge]] (the
     * accumulator walks each word's symbol array once; acc[-1] is the
     * fold tail). All arithmetic is exact (integer counts, string
     * compares), so the replay is bit-for-bit. `w$rounds` is the
@@ -224,104 +292,42 @@ object Bpe {
        |)""".stripMargin
   }
 
-  /** One fold applying a BATCH of symbol-disjoint merges: the
-    * when-chain is exclusive by construction (all symbols across the
-    * batch are distinct, so at most one arm can match any (tail, x)
-    * state), making one traversal equivalent to composing the
-    * per-pair folds in any order. */
-  private[operators] def mergeFoldBatch(syms: Column,
-                                        pairs: Seq[(String, String)]): Column =
-    aggregate(syms, typedLit(Array.empty[String]),
-      (acc, x) => {
-        val first = pairs.head
-        val chain = pairs.tail.foldLeft(
-          when(size(acc) > 0 &&
-              element_at(acc, lit(-1)) === lit(first._1) && x === lit(first._2),
-            concat(slice(acc, lit(1), size(acc) - 1),
-              array(lit(first._1 + first._2))))) { case (w, (l, r)) =>
-          w.when(size(acc) > 0 &&
-              element_at(acc, lit(-1)) === lit(l) && x === lit(r),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-        }
-        chain.otherwise(concat(acc, array(x)))
-      })
-
   /** BATCHED merge training — the production-scale variant of
-    * [[trainOn]]: production tokenizers learn 32k–256k merges, and one
-    * driver round-trip per merge would make scheduling latency the
-    * bottleneck (10^5 rounds × ~100 ms driver latency is hours of
-    * idle cluster). Each round instead takes the top candidate pairs
-    * and accepts a maximal SYMBOL-DISJOINT prefix by rank (up to
-    * `batchSize`): merging (a, b) only perturbs counts of pairs that
-    * touch `a` or `b`, so the counts of the accepted symbol-disjoint
-    * pairs are exactly invariant under each other's application — the
-    * batch is not an approximation of ITS OWN ranks, and driver
-    * round-trips drop by the achieved batch factor. The cross-batch
-    * sequence can differ from strict sequential BPE where a rejected
-    * overlapping pair would have out-ranked a later accepted one —
-    * the standard scalable-BPE tradeoff; `batchSize = 1` reproduces
-    * [[trainOn]] exactly (spec-asserted).
-    *
-    * Per round: ONE vocab-sized aggregate, one bounded
-    * (4×batchSize-row) collect, one batched fold projection. */
+    * [[trainOn]]: production tokenizers learn 32k–256k merges. Each
+    * round takes the top 4×batchSize candidate pairs and accepts a
+    * maximal SYMBOL-DISJOINT prefix by rank (up to `batchSize`), then
+    * applies the batch in one fold ([[Trainer.merge]]). Merging (a, b)
+    * only perturbs counts of pairs that touch `a` or `b`, so the
+    * accepted pairs' counts hold under each other's application. The
+    * cross-batch sequence can differ from strict sequential BPE where a
+    * rejected overlapping pair would have out-ranked a later accepted
+    * one — the standard scalable-BPE tradeoff; `batchSize = 1`
+    * reproduces [[trainOn]] exactly (spec-asserted). Rounds run in the
+    * driver JVM like [[trainOn]]'s. */
   def trainBatchedOn(docs: DataFrame, totalMerges: Int,
                      batchSize: Int = 16): DataFrame = {
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
-    val spark = docs.sparkSession
-    var wsyms = stagedWordSyms(docs)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var round = 0
-    var exhausted = false
-    while (merges.size < totalMerges && !exhausted) {
-      round += 1
-      // bounded collect: enough candidates that a maximal disjoint
-      // prefix usually fills the batch, never corpus-sized
-      val cand = pairCounts(wsyms)
-        .orderBy(col("total").desc, col("l"), col("r"))
-        .limit(batchSize * 4).collect()
-      if (cand.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val batch = cand.iterator
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-          .filter { case (l, r, _) =>
-            val ok = !used(l) && !used(r)
-            if (ok) { used += l; used += r }
-            ok
-          }
-          .take(math.min(batchSize, totalMerges - merges.size))
-          .toSeq
-        val base = merges.size
-        merges ++= batch.zipWithIndex.map { case ((l, r, total), i) =>
-          (base + i + 1, l, r, l + r, total)
-        }
-        wsyms = wsyms.withColumn("syms",
-          mergeFoldBatch(col("syms"), batch.map(p => (p._1, p._2))))
-        if (round % RestageEvery == 0) {
-          val staged = Scratch.dir(s"graft_bpe_b$round")
-          wsyms.write.mode("overwrite").parquet(staged)
-          wsyms = spark.read.parquet(staged)
-        }
-      }
-    }
-    import spark.implicits._
-    merges.toSeq.toDF("round", "left_sym", "right_sym", "merged", "pair_count")
+    learn(docs, totalMerges, batchSize)._1
   }
 
   /** Subword segmentation of the corpus vocabulary under the learned
     * merge table (key `bpe_apply`) — the tokenizer-APPLY step train
     * leaves open: every distinct corpus word mapped to its subword
-    * sequence. The training loop already materializes exactly this
-    * table ([[trainWithSymsOn]]'s second member), so apply costs
-    * nothing beyond training; a standalone merge-table application is
-    * [[encodeWordsOn]]. Output is vocab-sized (never corpus-sized) and
-    * the subword column rides the driver gate as a space-joined string
-    * (symbols never contain spaces: words come from a space split). */
-  def applySegmentsOn(docs: DataFrame, rounds: Int = BpeRounds): DataFrame =
-    trainWithSymsOn(docs, rounds)._2
-      .select(col("word"), col("cnt"),
-        array_join(col("syms"), " ").as("subwords"),
-        size(col("syms")).as("n_subwords"))
+    * sequence. Training already holds exactly this segmentation, so
+    * apply costs nothing beyond training; a standalone merge-table
+    * application is [[encodeWordsOn]]. Output is vocab-sized (never
+    * corpus-sized) and the subword column rides the driver gate as a
+    * space-joined string (symbols never contain spaces: words come
+    * from a space split). */
+  def applySegmentsOn(docs: DataFrame, rounds: Int = BpeRounds): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val t = learn(docs, rounds, 1)._2
+    t.words.indices.map { w =>
+      val s = t.segments(w)
+      (t.words(w), t.cnts(w), s.mkString(" "), s.size)
+    }.toDF("word", "cnt", "subwords", "n_subwords")
+  }
 
   /** Driver query over `documents` (key `bpe_apply`). */
   def applySegments(spark: SparkSession, dir: String): DataFrame =
@@ -343,44 +349,23 @@ object Bpe {
     * No OOV id is needed: the vocabulary derives from the same corpus,
     * so every word has a segmentation by construction.
     *
-    * Plan shape: the post-training symbol table is staged once to
-    * scratch; subword→id resolution happens ENTIRELY at the vocab
-    * level — (word, syms) explodes, joins the bounded subword-id table
-    * (|chars| + rounds rows, broadcast), and reassembles to a
-    * (word, ids: array<int>) lookup, all over vocab-sized frames. The
-    * corpus then explodes to (doc_id, pos, word) ONCE and equi-joins
-    * that lookup on `word`, so the token-sized stream is never widened
-    * to subword rows (measured 6× at 100×: a per-subword stream doubles
-    * the rows through the reassembly shuffle and adds a second
-    * token-sized join). The lookup join is keyed, not broadcast-hinted
-    * — web-scale vocabularies are millions of rows; Catalyst/AQE still
+    * Plan shape: the subword ranking and the (word, ids: array<int>)
+    * lookup are computed in the driver JVM from the trained
+    * segmentation ([[Trainer.wordIds]]), so Spark runs only the
+    * token-sized part. The corpus explodes to (doc_id, pos, word) ONCE
+    * and equi-joins the local lookup frame on `word`, so the token
+    * stream is never widened to subword rows (measured 6× at 100×: a
+    * per-subword stream doubles the rows through the reassembly
+    * shuffle). The lookup join is keyed, not broadcast-hinted —
+    * web-scale vocabularies are millions of rows; Catalyst/AQE still
     * auto-broadcasts it when its stats fit. Reassembly is the one
     * keyed groupBy(doc_id) shuffle (structs sort on pos before the
     * array field is ever compared), and per-doc streams flatten from
-    * per-word id arrays. The subword-id ranking window is
-    * single-partition over the BOUNDED subword vocabulary, never the
-    * corpus. */
+    * per-word id arrays. */
   def encodeDocsOn(docs: DataFrame, rounds: Int = BpeRounds): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
-    val staged = Scratch.dir("graft_bpe_segs")
-    trainWithSymsOn(docs, rounds)._2.write.mode("overwrite").parquet(staged)
-    val segs = spark.read.parquet(staged)
-    val sv = segs
-      .select(explode(col("syms")).as("subword"), col("cnt"))
-      .groupBy(col("subword")).agg(sum(col("cnt")).as("total"))
-      // lit(0) declares the intentional single-partition rank over the
-      // bounded (chars + merges) subword vocabulary
-      .withColumn("sid", (row_number().over(
-        Window.partitionBy(lit(0))
-          .orderBy(col("total").desc, col("subword"))) - 1).cast("int"))
-      .select(col("subword"), col("sid"))
-    val wordIds = segs
-      .select(col("word"), posexplode(col("syms")).as(Seq("subpos", "subword")))
-      .join(broadcast(sv), Seq("subword"))
-      .groupBy(col("word"))
-      .agg(sort_array(collect_list(struct(col("subpos"), col("sid")))).as("s"))
-      .select(col("word"), col("s")("sid").as("ids"))
+    import spark.implicits._
+    val wordIds = learn(docs, rounds, 1)._2.wordIds().toDF("word", "ids")
     docs
       .select(col("doc_id"), posexplode(TH.words(col("text"))).as(Seq("pos", "word")))
       .filter(col("word") =!= "")

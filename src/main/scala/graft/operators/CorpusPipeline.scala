@@ -49,7 +49,8 @@ object CorpusPipeline {
     * summary disagree with the data it describes). */
   private case class Stages(kept: DataFrame, exact: DataFrame,
                             nearDedup: DataFrame, clean: DataFrame,
-                            sampled: DataFrame, packed: DataFrame)
+                            sampled: DataFrame, packed: DataFrame,
+                            scratch: Seq[String])
 
   private def stages(docs: DataFrame, evalSource: String,
                      qualityMin: Double, weights: Map[String, Double],
@@ -73,8 +74,10 @@ object CorpusPipeline {
     // contamination gram branches, both sides of the packing join) —
     // unstaged, each re-ran the quality scoring scan and the
     // content-hash window (the r20 plan carried 164 Exchanges). One
-    // survivor-corpus write truncates all of it.
-    val exact = Scratch.stageReuse(Merge.keepFirst(kept,
+    // survivor-corpus write truncates all of it. Per call (never a
+    // shared directory): two concurrent prepare calls in one session
+    // would otherwise overwrite each other's survivor corpus.
+    val (exactDir, exact) = Scratch.stageFresh(Merge.keepFirst(kept,
       keys = Seq(Dedup.contentHash(col("text"))),
       orderCol = col("doc_id"), tiebreak = col("doc_id")),
       "graft_corpus_exact")
@@ -100,14 +103,14 @@ object CorpusPipeline {
     // sides (layout window + payload), and the decontamination chain
     // above it is the priciest stretch of the pipeline — unstaged, the
     // whole clean-corpus derivation ran twice
-    val sampled = Scratch.stageReuse(
+    val (sampledDir, sampled) = Scratch.stageFresh(
       Etl.sampleWeightedOn(clean, weights, defaultWeight),
       "graft_corpus_sampled")
     val packed = TrainPrep.packSequencesOn(sampled)
       .join(sampled, Seq("doc_id"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("shard"), col("seq_pos"), col("token_offset"), col("chunk_id"))
-    Stages(kept, exact, nearDedup, clean, sampled, packed)
+    Stages(kept, exact, nearDedup, clean, sampled, packed, Seq(exactDir, sampledDir))
   }
 
   /** The prepared corpus: cleaned + sampled docs with their packing
@@ -131,7 +134,9 @@ object CorpusPipeline {
 
   /** The full corpus → token-id-shards materialization — the DAG a
     * pretraining data build actually ships: [[prepare]]'s cleaned +
-    * sampled corpus, a BPE tokenizer TRAINED ON that surviving corpus
+    * sampled docs (read straight from the sampled stage: the packing
+    * layout of [[prepare]] is 1:1 on `doc_id` and carries nothing the
+    * encode reads), a BPE tokenizer TRAINED ON that surviving corpus
     * (training the tokenizer on the post-filter distribution is the
     * production convention — tokenizing removed spam wastes vocabulary
     * mass), each doc encoded to its subword-id stream, and the streams
@@ -141,11 +146,13 @@ object CorpusPipeline {
     * Output: one row per (shard, chunk_id) with the chunk's
     * `array<int>` token ids — what a training run memory-maps.
     *
-    * Eager like [[prepare]] (the dedup clustering loop and the BPE
-    * training loop both run inside the call), and the encoded corpus
-    * is staged to scratch once so the packer's two branches (layout +
-    * id explode) read a materialization instead of re-running the
-    * encode joins per branch. */
+    * Eager like [[prepare]]: the dedup clustering loop and the BPE
+    * training (one vocabulary collect, rounds in the driver JVM — see
+    * [[Bpe]]) both run inside the call. The encoded corpus is staged
+    * to a per-call scratch directory once, so the packer's two
+    * branches (layout + id explode) read a materialization instead of
+    * re-running the encode join per branch; the survivor stagings are
+    * released as soon as that write is done. */
   def prepareTokenIds(docs: DataFrame,
                       evalSource: String = "src0",
                       qualityMin: Double = QualityMin,
@@ -155,12 +162,11 @@ object CorpusPipeline {
                       bpeRounds: Int = Bpe.BpeRounds,
                       nShards: Int = TrainPrep.NShards,
                       budget: Long = TrainPrep.ChunkBudget): DataFrame = {
-    val corpus = prepare(docs, evalSource, qualityMin, weights,
-      defaultWeight, contamTau)
-    val staged = Scratch.dir("graft_corpus_ids")
-    Bpe.encodeDocsOn(corpus.select(col("doc_id"), col("text")), bpeRounds)
-      .write.mode("overwrite").parquet(staged)
-    val encoded = docs.sparkSession.read.parquet(staged)
+    val st = stages(docs, evalSource, qualityMin, weights, defaultWeight, contamTau)
+    val (_, encoded) =
+      try Scratch.stageFresh(Bpe.encodeDocsOn(
+        st.sampled.select(col("doc_id"), col("text")), bpeRounds), "graft_corpus_ids")
+      finally st.scratch.foreach(Scratch.release)
     TrainPrep.packIdStreamOn(encoded, nShards, budget)
   }
 

@@ -91,6 +91,19 @@ private[graft] object Scratch {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
+  /** Materialize `df` into a fresh per-call [[dir]] and return the
+    * directory with a schema'd scan over it: [[stageReuse]]'s idiom
+    * without the shared directory, so two concurrent callers never
+    * overwrite each other's staging. For a scan that outlives the call
+    * (a returned lazy frame); the caller [[release]]s the directory
+    * once every consumer is done, or leaves it to the exit hook. */
+  def stageFresh(df: org.apache.spark.sql.DataFrame, prefix: String)
+      : (String, org.apache.spark.sql.DataFrame) = {
+    val path = dir(prefix)
+    df.write.mode("overwrite").parquet(path)
+    (path, df.sparkSession.read.schema(df.schema).parquet(path))
+  }
+
   /** Materialize `df` into a fresh per-call [[dir]], hand a scan over
     * it to `use`, and delete the directory once `use` returns — staging
     * that two concurrent callers never share (unlike [[stageReuse]]).
@@ -143,9 +156,8 @@ private[graft] object Scratch {
   def materializeAndRelease(df: org.apache.spark.sql.DataFrame,
                             handle: org.apache.spark.sql.DataFrame,
                             prefix: String): org.apache.spark.sql.DataFrame = {
-    val path = dir(prefix)
-    df.write.mode("overwrite").parquet(path)
+    val (_, scan) = stageFresh(df, prefix)
     handle.unpersist()
-    df.sparkSession.read.schema(df.schema).parquet(path)
+    scan
   }
 }

@@ -1092,13 +1092,11 @@ object Similarity {
     * Shape: k driver rounds; each round broadcasts the newly chosen
     * center into a running `least(dmin, ‖u−c‖²)` column and takes the
     * argmax by ONE TakeOrdered (per-partition heaps + a 1-row driver
-    * collect — the BPE winner-collect precedent). Nothing
-    * corpus-sized ever reaches the driver; per-round cost is one
-    * corpus scan. The k-deep `least` chain re-evaluates prior center
-    * distances per round (Σ = k²/2 dots per row); at production k the
-    * dmin column is staged through Scratch every R rounds exactly
-    * like Bpe.trainOn — the chain here stays under the plan-depth
-    * knob, so the simple form is the honest one to measure.
+    * collect). Nothing corpus-sized ever reaches the driver; per-round
+    * cost is one corpus scan. Unbroken, the k-deep `least` chain would
+    * re-evaluate prior center distances per round (Σ = k²/2 dots per
+    * row) and grow the plan by one node per round, so the dmin column
+    * is restaged through Scratch every 4 rounds.
     *
     * Determinism (full oracle replay): unit-normalized sequential-fold
     * arithmetic, the fixed ((a·a − 2·a·b) + b·b) parenthesization,
@@ -1146,8 +1144,7 @@ object Similarity {
       // truncate the least-chain: without restaging, round t's argmax
       // re-evaluates all t prior center distances per row (Σ = k²/2
       // dots/row over the loop); a periodic dmin materialization makes
-      // the steady-state cost R dots/row/round — the Bpe.trainOn
-      // plan-depth discipline applied to the distance column
+      // the steady-state cost R dots/row/round and bounds the plan depth
       if (round % 4 == 0 && round < k) {
         val staged = Scratch.dir(s"graft_kcenter_d$round")
         scored.write.mode("overwrite").parquet(staged)

@@ -158,4 +158,24 @@ class CorpusPrepSpec extends SparkSpecBase {
     assert(!ids.contains(5L), "short exact eval duplicate must be cut by content hash")
     assert(ids == Set(6L))
   }
+
+  test("corpus pipeline: two concurrent prepareTokenIds calls each equal their serial result") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val docs = sources.Tables.documents(spark, sfDir)
+    // two different corpora, so a staging the calls shared would show
+    // up as a wrong answer in at least one of them
+    val inputs = Seq(docs, docs.filter(col("doc_id") % 2 === 0))
+    def run(d: org.apache.spark.sql.DataFrame) =
+      graft.operators.CorpusPipeline.prepareTokenIds(d).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getSeq[Int](3))).toSet
+    val serial = inputs.map(run)
+    assert(serial(0) != serial(1))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val concurrent = inputs.map(d => Future(run(d)))
+      assert(concurrent.map(Await.result(_, 10.minutes)) == serial)
+    } finally pool.shutdown()
+  }
 }
