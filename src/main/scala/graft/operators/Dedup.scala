@@ -873,28 +873,16 @@ object Dedup {
       .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(staged)
     val p = pairs.sparkSession.read.parquet(staged)
-    // SMALL-GRAPH FAST PATH (r20 optimization, guide §1.2 "the
-    // distributed algorithm"): the verified pair graph is usually
-    // orders of magnitude smaller than the corpus that produced it,
-    // and below the threshold the driver loop's cost is pure
-    // scheduling — each pointer-jumping round is 5+ scheduled jobs
-    // (join, aggregate, checkpoint, convergence count) whose fixed
-    // overhead dwarfs the row work (the r6 profile: seconds of loop
-    // on a few hundred edges). Under the threshold we collect the
-    // staged pairs ONCE (the same bounded-collect contract as a
-    // broadcast join side: the threshold bounds driver memory exactly
-    // the way autoBroadcastJoinThreshold does) and run union-find
-    // with path compression — the same connected-components-by-min-id
-    // the loop converges to, exactly (union by smaller root id keeps
-    // every root the component MINIMUM, so find() returns the
-    // min-label the propagation fixpoint assigns). Above the
-    // threshold — the genuinely corpus-scale pair graph — the
-    // distributed O(log diameter) loop below is unchanged.
-    val localMax = pairs.sparkSession.conf
-      .getOption("spark.graft.clusters.localEdgeThreshold")
-      .map(_.toLong).getOrElse(1000000L)
+    // at most the graph edge cap of pairs (`GraphExec.caps`, the walks'
+    // driver-tier cap): each pointer-jumping round is 5+ scheduled jobs
+    // whose fixed overhead dwarfs the row work (the r6 profile: seconds
+    // of loop on a few hundred edges), so the staged pairs are collected
+    // ONCE for union-find with path compression — the same
+    // connected-components-by-min-id the loop converges to, exactly
+    // (union by smaller root id keeps every root the component MINIMUM,
+    // so find() returns the min-label the propagation fixpoint assigns)
     val nPairs = obs.get("n").asInstanceOf[Long]
-    if (nPairs <= localMax) {
+    if (nPairs <= GraphExec.caps(pairs.sparkSession)._1) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val rows = p.select(col("doc_a"), col("doc_b"))
@@ -940,18 +928,7 @@ object Dedup {
     // lineage to the materialized blocks; superseded checkpoint RDDs
     // are released by the ContextCleaner when the reassignment drops
     // their last reference, so nothing outlives the loop.
-    // RELIABLE vs LOCAL: localCheckpoint stores blocks on executors
-    // with lineage gone — an executor loss (or dynamic-allocation
-    // decommission) mid-loop fails the job unrecoverably. When the
-    // session has a checkpoint dir (a cluster run's shared FS), use
-    // reliable checkpoint(); fall back to localCheckpoint only where
-    // executors and driver share the one JVM (local mode, this repo's
-    // test/bench harness) and executor loss IS process death.
-    def truncated(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    var labels = truncated(edges.groupBy(col("src"))
+    var labels = GraphExec.truncated(edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
       .select(col("src").as("doc_id"), col("cluster_id")))
     var converged = false
@@ -972,7 +949,7 @@ object Dedup {
       // nothing, but coalesce keeps the expression total anyway.
       val jump = labels
         .select(col("doc_id").as("__p"), col("cluster_id").as("__pl"))
-      val next = truncated(labels.join(neighborMin, Seq("doc_id"), "left")
+      val next = GraphExec.truncated(labels.join(neighborMin, Seq("doc_id"), "left")
         .join(jump, col("cluster_id") === col("__p"), "left")
         .select(col("doc_id"), col("cluster_id").as("prev"),
           least(col("cluster_id"),

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.sources.Tables
 
 /** Graph analytics over the part co-order graph (keys
@@ -392,152 +394,38 @@ object Graph {
   }
 
   /** Generic form over any distinct undirected (u, v) edge list (see
-    * [[trianglesOn]] for the contract). */
+    * [[trianglesOn]] for the contract). The rank walk is EXACT-INTEGER
+    * arithmetic (teleport + 85·Σ(rank div deg) div 100 in fixed-point
+    * units), so every tier is bit-identical: integer sums are
+    * order-independent and every op (Long division, multiply, add) is
+    * the one the SQL `div` plan runs. GraphSpec pins the three tiers
+    * row-identical. */
   def pagerankOn(edges: DataFrame, iters: Int = Iters, topK: Int = TopK,
                  knownEdges: Option[Long] = None): DataFrame = {
-    // SMALL-GRAPH FAST PATH (r20 optimization — see
-    // [[localGraphEdgeMax]]): the rank walk is EXACT-INTEGER
-    // arithmetic (teleport + 85·Σ(rank div deg) div 100 in fixed-point
-    // units), so the driver loop below is bit-identical to the
-    // distributed iterations — integer sums are order-independent and
-    // every op (Long division, multiply, add) is the same op the SQL
-    // `div` plan runs. Each distributed iteration paid a broadcast
-    // build + m-row join + aggregate; under the threshold that is
-    // pure scheduling overhead. GraphSpec pins fast path == loop.
-    // gate = ONE bounded probe that doubles as the collect (r21,
-    // VERDICT item 5 — see [[probeLocalEdges]]): no count() pre-pass
-    val probedPr = probeLocalEdges(edges, knownEdges)
-    if (probedPr.isDefined) {
-      val rows = probedPr.get
-      val deg = new java.util.HashMap[Long, Long]()
-      rows.foreach { case (u, v) =>
-        deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _); ()
-      }
-      val n = deg.size.toLong
-      val teleport = 15L * One / (100L * n)
-      var ranks = new java.util.HashMap[Long, Long](deg.size)
-      deg.forEach((node, _) => { ranks.put(node, One / n); () })
-      (1 to iters).foreach { _ =>
-        val sums = new java.util.HashMap[Long, Long](deg.size)
-        val prev = ranks
-        rows.foreach { case (u, v) =>
-          sums.merge(v, prev.get(u) / deg.get(u), _ + _)
-          sums.merge(u, prev.get(v) / deg.get(v), _ + _)
-          ()
-        }
-        val next = new java.util.HashMap[Long, Long](deg.size)
-        sums.forEach { (node, s) => next.put(node, teleport + 85L * s / 100L); () }
-        ranks = next
-      }
-      val nArcs = 2L * rows.length
-      val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](deg.size)
-      ranks.forEach((node, r) => { buf += ((node, r, deg.get(node))); () })
-      val top = buf.sortBy { case (node, r, _) => (-r, node) }.take(topK)
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return top.zipWithIndex.map { case ((node, r, d), i) =>
-        (i + 1, node, r, r.toDouble / One.toDouble, d, n, nArcs)
-      }.toSeq.toDF("rank", "p_partkey", "rank_units", "pagerank",
-        "deg", "n_nodes", "n_arcs")
-    }
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // deg is re-read by every loop iteration — staged once so each
+    // reference is a node-count parquet scan, not the edge agg. Its
+    // count is the node tier's decision AND the loop's N (the BPE-winner
+    // bounded-collect precedent), so above the edge cap it costs no job
+    // the loop did not already pay
+    lazy val deg = staged(degrees(edges), "graft_pr_deg")
+    lazy val n = deg.count()
+    val src = GraphExec.source(edges, knownEdges, cap =>
+      if (n <= cap) Some(deg.select(col("node").cast("long"), col("deg").cast("long"))
+        .as[(Long, Long)].collect())
+      else None)
+    if (src.isDefined) return src.get.run(pagerankWalk(_, iters, topK))
     // symmetric directed view: every undirected edge both ways
     val arcs = edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-    // deg is re-read by every iteration — stage it once so each
-    // reference is a node-count parquet scan, not the edge agg.
     // (r20 note: an attempted rewrite that pre-joined dst-degree onto
     // a STAGED arc frame measured strictly slower — the staging write
     // of the m-row arc list cost more than the five deg joins it
     // removed, because the per-iteration deg broadcast is an
     // identical exchange every round and ReuseExchange builds it
     // once. Left as-is deliberately.)
-    val deg = staged(degrees(edges), "graft_pr_deg")
-    // N is a 1-row bounded collect (the BPE-winner precedent): it
-    // sizes the teleport constant folded into every iteration's plan
-    val n = deg.count()
     val teleport = 15L * One / (100L * n)
-    // NODE-BOUNDED HYBRID TIER (r21, guide §8 "decide with small
-    // rows, move big rows once"): the rank vector is node-sized and
-    // the distributed loop below ALREADY ships it whole into every
-    // iteration (the ranks side broadcasts under AQE) — so whenever
-    // it fits a broadcast it also fits the driver, and an iteration
-    // can be ONE mapPartitions pass over the staged edges producing
-    // per-partition partial contribution arrays, tree-merged. Exact
-    // Long sums are order-independent, so this is bit-identical to
-    // the join+aggregate iteration — GraphSpec pins all three tiers
-    // row-identical. What it removes per iteration: the contribution
-    // shuffle, the rank-broadcast build and the deg join (4+ serial
-    // AQE stages → 1 job). Driver/executor state: 8·n-byte rank and
-    // degree arrays — the same order as the broadcast the loop plan
-    // pays anyway; above the threshold (vector no longer
-    // broadcastable) the unchanged loop runs. Threshold tunable per
-    // deployment (spark.graft.graph.localNodeThreshold; 500k default
-    // keeps the per-partition partial arrays at ≤4 MB).
-    val localNodeMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localNodeThreshold")
-      .map(_.toLong).getOrElse(500000L)
-    if (n > 0 && n <= localNodeMax) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val degArr = deg.select(col("node").cast("long"), col("deg").cast("long"))
-        .as[(Long, Long)].collect()
-      val nInt = degArr.length
-      val nodeIdx = new java.util.HashMap[Long, Integer](nInt * 2)
-      val degByIdx = new Array[Long](nInt)
-      var i = 0
-      while (i < nInt) {
-        nodeIdx.put(degArr(i)._1, Integer.valueOf(i)); degByIdx(i) = degArr(i)._2
-        i += 1
-      }
-      val sc = spark.sparkContext
-      val idxBc = sc.broadcast(nodeIdx)
-      val degBc = sc.broadcast(degByIdx)
-      // the index-mapped edge list is read by every iteration:
-      // persisted once, so a round re-reads cached (int, int) pairs
-      // instead of re-scanning the staged edges and re-hashing ids
-      val edgeIdx = edges
-        .select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)]
-        .rdd.mapPartitions { it =>
-          val ix = idxBc.value
-          it.map { case (u, v) => (ix.get(u).intValue, ix.get(v).intValue) }
-        }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var rankByIdx = Array.fill(nInt)(One / n)
-      val arrayAdd: (Array[Long], Array[Long]) => Array[Long] = (a, b) => {
-        var j = 0
-        while (j < a.length) { a(j) += b(j); j += 1 }
-        a
-      }
-      try {
-        (1 to iters).foreach { _ =>
-          val rankBc = sc.broadcast(rankByIdx)
-          val summed = edgeIdx.mapPartitions { it =>
-            val prev = rankBc.value
-            val dg = degBc.value
-            val sums = new Array[Long](prev.length)
-            it.foreach { case (ui, vi) =>
-              sums(vi) += prev(ui) / dg(ui)
-              sums(ui) += prev(vi) / dg(vi)
-            }
-            Iterator.single(sums)
-          }.treeReduce(arrayAdd, depth = 2)
-          rankBc.destroy()
-          rankByIdx = summed.map(s => teleport + 85L * s / 100L)
-        }
-      } finally {
-        edgeIdx.unpersist(blocking = false)
-        idxBc.destroy(); degBc.destroy()
-      }
-      val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](nInt)
-      var j = 0
-      while (j < nInt) { buf += ((degArr(j)._1, rankByIdx(j), degByIdx(j))); j += 1 }
-      val top = buf.sortBy { case (node, r, _) => (-r, node) }.take(topK)
-      val nArcs = degByIdx.sum
-      return top.zipWithIndex.map { case ((node, r, d), k) =>
-        (k + 1, node, r, r.toDouble / One.toDouble, d, n, nArcs)
-      }.toSeq.toDF("rank", "p_partkey", "rank_units", "pagerank",
-        "deg", "n_nodes", "n_arcs")
-    }
     // state: (node, rank, deg) — 3 longs per node, 24 B × nodes.
     // Keeping deg on the rank row makes each iteration a single
     // arcs⋈ranks join. The Iters-deep plan is linear (each frame
@@ -573,6 +461,25 @@ object Graph {
         // exact Long < 2^53 → double conversion is exact
         (col("rank").cast("double") / lit(One.toDouble)).as("pagerank"),
         col("deg"), col("n_nodes"), col("n_arcs"))
+  }
+
+  /** The rank walk on a kernel edge source: each round spreads every
+    * node's `rank div deg` share to its neighbors as exact Long sums. */
+  private def pagerankWalk(src: GraphExec.EdgeSource, iters: Int, topK: Int): DataFrame = {
+    val (ids, deg) = (src.nodes, src.degree)
+    val n = ids.length
+    val teleport = 15L * One / (100L * n)
+    var rank = Array.fill(n)(One / n)
+    (1 to iters).foreach { _ =>
+      val shares = Array.tabulate(n)(i => rank(i) / deg(i))
+      rank = src.round(GraphExec.Spread, shares).map(s => teleport + 85L * s / 100L)
+    }
+    val top = ids.indices.sortBy(i => (-rank(i), ids(i))).take(topK)
+    val spark = src.spark
+    import spark.implicits._
+    top.zipWithIndex.map { case (i, r) =>
+      (r + 1, ids(i), rank(i), rank(i).toDouble / One.toDouble, deg(i), n.toLong, deg.sum)
+    }.toDF("rank", "p_partkey", "rank_units", "pagerank", "deg", "n_nodes", "n_arcs")
   }
 
   /** Minimum co-occurrence count for a SUPPORTED edge — the
@@ -692,9 +599,10 @@ object Graph {
     kcoreOn(e, oracleRoundBudget = Some(KcorePeelRounds), knownEdges = Some(n))
   }
 
-  /** Generic k-core over a distinct undirected (u, v) edge list.
+  /** Generic k-core over a distinct undirected (u, v) edge list, on
+    * the first [[GraphExec]] tier the graph fits.
     *
-    * Distributed peeling: each round computes degrees (one keyed
+    * Distributed peeling (the loop): each round computes degrees (one keyed
     * aggregate over the live edges) and semi-joins the edge list
     * against the surviving nodes — removing EVERY sub-k node at once,
     * so rounds = peeling DEPTH (how many cascades the removals
@@ -716,71 +624,19 @@ object Graph {
   def kcoreOn(edges: DataFrame, k: Int = KcoreK, topK: Int = TopK,
               oracleRoundBudget: Option[Int] = None,
               knownEdges: Option[Long] = None): DataFrame = {
-    def truncated(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    // SMALL-GRAPH FAST PATH (r20 optimization — the
-    // [[Dedup.pairClusters]] pattern): below the bounded-collect
-    // threshold every peeling round is pure scheduling overhead
-    // (degree aggregate + two semi-joins + checkpoint + convergence
-    // count per round). The synchronized peel runs on the driver with
-    // IDENTICAL round semantics — every sub-k node removed at once —
-    // so the round count feeding the oracle-budget guard is the same
-    // number the distributed loop reports, and the fixpoint is the
-    // same subgraph. Gate = ONE bounded probe that doubles as the
-    // collect (r21, VERDICT item 5 — see [[probeLocalEdges]]).
-    val probedKc = probeLocalEdges(edges, knownEdges)
-    if (probedKc.isDefined) {
-      val rows = probedKc.get
-      var alive = rows
-      var rounds = 0
-      var converged = alive.isEmpty
-      while (!converged) {
-        val deg = new java.util.HashMap[Long, Long]()
-        alive.foreach { case (u, v) =>
-          deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _); ()
-        }
-        val next = alive.filter { case (u, v) => deg.get(u) >= k && deg.get(v) >= k }
-        converged = next.length == alive.length
-        alive = next
-        rounds += 1
-      }
-      oracleRoundBudget.foreach { budget =>
-        require(rounds - 1 <= budget,
-          s"k-core peeling converged in $rounds rounds but the fixed-depth " +
-            s"oracle only unrolls $budget — raise KcorePeelRounds (the engine " +
-            "result is correct; the ORACLE is under-unrolled and would " +
-            "report a false mismatch)")
-      }
-      val coreDeg = new java.util.HashMap[Long, Long]()
-      alive.foreach { case (u, v) =>
-        coreDeg.merge(u, 1L, _ + _); coreDeg.merge(v, 1L, _ + _); ()
-      }
-      val nCoreNodes = coreDeg.size.toLong
-      val nCoreEdges = alive.length.toLong
-      val top = {
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)](coreDeg.size)
-        coreDeg.forEach((node, d) => buf += ((node, d)))
-        buf.sortBy { case (node, d) => (-d, node) }.take(topK)
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return top.zipWithIndex.map { case ((node, d), i) =>
-        (i + 1, node, d, nCoreNodes, nCoreEdges)
-      }.toSeq.toDF("rank", "p_partkey", "core_deg", "n_core_nodes", "n_core_edges")
-    }
-    var alive = truncated(edges.select(col("u"), col("v")))
+    val src = GraphExec.source(edges, knownEdges, GraphExec.nodeTable(edges, _))
+    if (src.isDefined) return src.get.run(kcoreWalk(_, k, topK, oracleRoundBudget))
+    var alive = GraphExec.truncated(edges.select(col("u"), col("v")))
     // the probe overflowed, so the edge list is non-empty — no upfront
     // count needed. A known count seeds the loop, so a first round that
-    // peels nothing converges at once (the driver path's round count);
+    // peels nothing converges at once (the kernel tiers' round count);
     // without one, n = -1 never equals a real count
     var n = knownEdges.getOrElse(-1L)
     var converged = false
     var rounds = 0
     while (!converged) {
       val survivors = degrees(alive).where(col("deg") >= k).select(col("node"))
-      val next = truncated(alive
+      val next = GraphExec.truncated(alive
         .join(survivors.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(survivors.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
       val n2 = next.count()
@@ -788,18 +644,7 @@ object Graph {
       alive = next; n = n2
       rounds += 1
     }
-    oracleRoundBudget.foreach { budget =>
-      // `rounds` counts the final no-change confirming iteration too:
-      // changing peels = rounds - 1, and the oracle only needs to
-      // unroll the CHANGING rounds (further levels are the identity) —
-      // comparing `rounds` itself aborted a graph converging in
-      // exactly `budget` peels (r14 advice off-by-one)
-      require(rounds - 1 <= budget,
-        s"k-core peeling converged in $rounds rounds but the fixed-depth " +
-          s"oracle only unrolls $budget — raise KcorePeelRounds (the engine " +
-          "result is correct; the ORACLE is under-unrolled and would " +
-          "report a false mismatch)")
-    }
+    requirePeelBudget(rounds, oracleRoundBudget)
     val coreDeg = degrees(alive)
     val totals = coreDeg.agg(count(lit(1)).as("n_core_nodes"))
       .crossJoin(alive.agg(count(lit(1)).as("n_core_edges")))
@@ -811,6 +656,51 @@ object Graph {
       .withColumn("rank", row_number().over(w).cast("int"))
       .select(col("rank"), col("node").as("p_partkey"), col("deg").as("core_deg"),
         col("n_core_nodes"), col("n_core_edges"))
+  }
+
+  /** `rounds` counts the final no-change confirming iteration too:
+    * changing peels = rounds - 1, and the oracle only needs to unroll
+    * the CHANGING rounds (further levels are the identity) — comparing
+    * `rounds` itself aborted a graph converging in exactly `budget`
+    * peels (r14 advice off-by-one). */
+  private def requirePeelBudget(rounds: Int, budget: Option[Int]): Unit =
+    budget.foreach { b =>
+      require(rounds - 1 <= b,
+        s"k-core peeling converged in $rounds rounds but the fixed-depth " +
+          s"oracle only unrolls $b — raise KcorePeelRounds (the engine " +
+          "result is correct; the ORACLE is under-unrolled and would " +
+          "report a false mismatch)")
+    }
+
+  /** The synchronized peel on a kernel edge source, with the loop's
+    * round semantics (every sub-k node leaves at once; a round that
+    * peels nothing confirms the fixpoint), so its round count is the
+    * loop's: each round counts every node's degree over the edges whose
+    * endpoints are both still alive. */
+  private def kcoreWalk(src: GraphExec.EdgeSource, k: Int, topK: Int,
+                        budget: Option[Int]): DataFrame = {
+    val ids = src.nodes
+    val alive = Array.fill(ids.length)(1L)
+    var deg = new Array[Long](ids.length)
+    var rounds = 0
+    var peeled = ids.nonEmpty
+    while (peeled) {
+      deg = src.round(GraphExec.Live, alive)
+      rounds += 1
+      peeled = false
+      deg.indices.foreach { i =>
+        if (alive(i) == 1L && deg(i) > 0L && deg(i) < k) { alive(i) = 0L; peeled = true }
+      }
+    }
+    requirePeelBudget(rounds, budget)
+    // the fixpoint round's degrees ARE the core degrees
+    val core = deg.indices.filter(deg(_) > 0L)
+    val top = core.sortBy(i => (-deg(i), ids(i))).take(topK)
+    val spark = src.spark
+    import spark.implicits._
+    top.zipWithIndex.map { case (i, r) =>
+      (r + 1, ids(i), deg(i), core.length.toLong, deg.sum / 2)
+    }.toDF("rank", "p_partkey", "core_deg", "n_core_nodes", "n_core_edges")
   }
 
   val graphKcoreOracleSql: String = {
@@ -876,8 +766,9 @@ object Graph {
     * bit-reproducible (the Raghavan et al. 2007 algorithm with the
     * async/random parts replaced by the deterministic sync variant).
     *
-    * Scale shape: the directed edge frame is staged once; each round
-    * is ONE m-row join against the node-sized label frame plus a
+    * Scale shape: under the edge cap the rounds run on the driver
+    * ([[GraphExec]]); above it the directed edge frame is staged once
+    * and each round is ONE m-row join against the node-sized label frame plus a
     * (node, label)-keyed count whose map-side partials collapse
     * duplicate neighbor labels, then a node-keyed argmax — per-round
     * shuffle is O(m) rows max, state is one label per node, and
@@ -889,6 +780,49 @@ object Graph {
     lpaOn(e, knownEdges = Some(n))
   }
 
+  /** Deterministic synchronous-LPA rounds on the collected edge source —
+    * the semantics of the [[lpaLabels]] loop: labels start as node ids,
+    * each round relabels every node with the (count DESC, label ASC)
+    * argmax of its neighbors' previous-round labels (each neighbor
+    * contributes once — the edge list is distinct pairs). The mode is
+    * a per-node count, not a node-sized merge, so LPA has no node tier:
+    * the neighbor labels of a node are sorted and the first longest run
+    * wins. */
+  private def lpaWalk(src: GraphExec.Collected, rounds: Int): DataFrame = {
+    val (ids, n) = (src.nodes, src.nodes.length)
+    // CSR adjacency: node i's neighbors are adj(off(i) until off(i + 1))
+    val off = new Array[Int](n + 1)
+    src.degree.indices.foreach(i => off(i + 1) = off(i) + src.degree(i).toInt)
+    val adj = new Array[Int](off(n))
+    val fill = off.clone()
+    src.from.indices.foreach { e =>
+      val (u, v) = (src.from(e), src.to(e))
+      adj(fill(u)) = v; fill(u) += 1
+      adj(fill(v)) = u; fill(v) += 1
+    }
+    val buf = new Array[Long](if (n == 0) 0 else src.degree.max.toInt)
+    var labels = ids
+    (1 to rounds).foreach { _ =>
+      val prev = labels
+      labels = Array.tabulate(n) { i =>
+        val d = off(i + 1) - off(i)
+        (0 until d).foreach(j => buf(j) = prev(adj(off(i) + j)))
+        java.util.Arrays.sort(buf, 0, d)
+        var (best, bestC, j) = (buf(0), 0, 0)
+        while (j < d) {
+          var e = j
+          while (e < d && buf(e) == buf(j)) e += 1
+          if (e - j > bestC) { best = buf(j); bestC = e - j }
+          j = e
+        }
+        best
+      }
+    }
+    val spark = src.spark
+    import spark.implicits._
+    ids.zip(labels).toSeq.toDF("node", "label")
+  }
+
   /** The label-propagation core shared by the report key and the
     * modularity grader: [[LpaRounds]]-style synchronous rounds over a
     * distinct undirected edge list, returning the final (node, label)
@@ -896,118 +830,19 @@ object Graph {
     * `stagePrefix` scopes the directed-edge staging dir per OPERATOR
     * (the ivfIndex precedent): a shared prefix would let one
     * operator's restage invalidate the other's not-yet-consumed plan. */
-  /** Checkpoint-truncate an iteration's state frame: every round of
-    * the iterative graph ops feeds the next round's join AND the
-    * final report — unbroken lineage re-expands the whole walk per
-    * consumer. Shared by [[lpaLabels]] and [[bfsDistances]]. */
-  private def truncated(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  /** Edge-count threshold under which the iterative graph loops
-    * (k-core peel, LPA rounds, BFS frontier walk) run on the driver —
-    * the [[Dedup.pairClusters]] fast-path contract: below it the
-    * collect is broadcast-sized (two longs per edge) and each
-    * distributed round's 3–6 scheduled jobs are pure fixed overhead;
-    * above it the unchanged distributed loops carry the corpus-scale
-    * graphs. Tunable per deployment. */
-  private def localGraphEdgeMax(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.localEdgeThreshold")
-      .map(_.toLong).getOrElse(1000000L)
-
-  /** Bounded fast-path probe (r21, VERDICT item 5): ONE incremental
-    * collect-limit job both DECIDES the path and, under the threshold,
-    * already IS the edge list. The r20 gates ran a full `count()` job
-    * over the edge frame and then `collect()`ed it again — an extra
-    * full pass per key (and for unstaged callers the whole edge
-    * lineage evaluated twice). `head(threshold+1)` is Spark's
-    * incremental executeTake (1 partition, then geometric ramp), so an
-    * over-threshold graph pays one bounded scan, never a full pass,
-    * and an under-threshold graph pays exactly the collect it needs.
-    * Returns Some(edges) when the list fits, None when the probe
-    * overflows (callers run the unchanged distributed loops). The
-    * collect budget is additionally clamped at 100M rows — a threshold
-    * above that could not be driver-collected anyway. */
-  private def probeLocalEdges(edges: DataFrame,
-                              known: Option[Long] = None): Option[Array[(Long, Long)]] = {
-    val localMax = localGraphEdgeMax(edges)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val typed = edges.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)]
-    known match {
-      // count already observed on the staging write ([[stagedCounted]]):
-      // over the threshold the gate is FREE; under it, one parallel
-      // collect (the incremental take below is a SERIAL partition ramp)
-      case Some(n) =>
-        if (n <= localMax && n <= 100000000L) Some(typed.collect()) else None
-      case None =>
-        val lim = (math.min(math.max(localMax, 0L), 100000000L) + 1L).toInt
-        val probe = typed.head(lim)
-        if (probe.length < lim) Some(probe) else None
-    }
-  }
-
-  /** Deterministic synchronous-LPA rounds on a collected edge list —
-    * bit-identical semantics to the distributed [[lpaLabels]] loop:
-    * labels start as node ids, each round relabels every node with
-    * the (count DESC, label ASC) argmax of its neighbors'
-    * previous-round labels (each neighbor contributes once — the edge
-    * list is distinct pairs). */
-  private def lpaRoundsLocal(rows: Array[(Long, Long)], rounds: Int)
-      : java.util.HashMap[Long, Long] = {
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-    def add(a: Long, b: Long): Unit = {
-      adj.computeIfAbsent(a, _ => new scala.collection.mutable.ArrayBuffer[Long]) += b
-      ()
-    }
-    rows.foreach { case (u, v) => add(u, v); add(v, u) }
-    var labels = new java.util.HashMap[Long, Long]()
-    adj.forEach((node, _) => { labels.put(node, node); () })
-    (1 to rounds).foreach { _ =>
-      val next = new java.util.HashMap[Long, Long](labels.size)
-      val prev = labels
-      adj.forEach { (node, nbrs) =>
-        val counts = new java.util.HashMap[Long, Long]()
-        nbrs.foreach(d => counts.merge(prev.get(d), 1L, _ + _))
-        var bestLabel = Long.MaxValue
-        var bestC = 0L
-        counts.forEach { (lb, c) =>
-          if (c > bestC || (c == bestC && lb < bestLabel)) { bestC = c; bestLabel = lb }
-        }
-        next.put(node, bestLabel)
-        ()
-      }
-      labels = next
-    }
-    labels
-  }
-
   private[operators] def lpaLabels(edges: DataFrame, rounds: Int,
                                    stagePrefix: String,
                                    knownEdges: Option[Long] = None): DataFrame = {
-    // SMALL-GRAPH FAST PATH (r20 optimization — see
-    // [[localGraphEdgeMax]]): under the threshold the R synchronous
-    // rounds run on the driver over the collected distinct edge list,
-    // skipping the directed-frame staging write and the per-round
-    // join + two aggregates + checkpoint jobs. Same argmax, same
-    // ties, same labels — DedupSpec-style equivalence pinned in
-    // GraphSpec, and the LPA-consuming driver keys stay oracle-gated.
-    val probedLpa = probeLocalEdges(edges, knownEdges)
-    if (probedLpa.isDefined) {
-      val labels = lpaRoundsLocal(probedLpa.get, rounds)
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](labels.size)
-      labels.forEach((node, lb) => { out += ((node, lb)); () })
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return out.toSeq.toDF("node", "label")
-    }
+    // under the edge cap the R synchronous rounds run on the driver over
+    // the collected edges, skipping the directed-frame staging write and
+    // the per-round join + two aggregates + checkpoint jobs
+    val src = GraphExec.collected(edges, knownEdges)
+    if (src.isDefined) return src.get.run(lpaWalk(_, rounds))
     val ed = Scratch.stageReuse(
       edges.select(col("u").as("s"), col("v").as("d"))
         .unionAll(edges.select(col("v").as("s"), col("u").as("d"))),
       stagePrefix)
-    var labels = truncated(
+    var labels = GraphExec.truncated(
       ed.select(col("s").as("node")).distinct()
         .select(col("node"), col("node").as("label")))
     (1 to rounds).foreach { _ =>
@@ -1017,7 +852,7 @@ object Graph {
         .agg(count(lit(1)).as("c"))
       // argmax by (c DESC, label ASC) as ONE struct-min aggregate:
       // min(-c) = max c, then min label — no per-node window
-      labels = truncated(counts
+      labels = GraphExec.truncated(counts
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("lb"))).as("m"))
         .select(col("node"), col("m.lb").as("label")))
@@ -1344,7 +1179,9 @@ object Graph {
     * histogram (count, min/max node per level) with the reach totals
     * attached.
     *
-    * Scale shape: the engine iterates FRONTIER-ONLY — round i joins
+    * Scale shape: under the [[GraphExec]] caps the walk runs the
+    * min-fold on the driver or node tier; the DataFrame loop iterates
+    * FRONTIER-ONLY — round i joins
     * the m-row edge frame against only the nodes discovered at round
     * i−1 and anti-joins the already-reached set, so per-round cost is
     * O(edges touched by the frontier), never O(reached) re-aggregated
@@ -1362,62 +1199,8 @@ object Graph {
   def bfsOn(edges: DataFrame, rounds: Int = BfsRounds,
             nSeeds: Int = BfsSeeds,
             knownEdges: Option[Long] = None): DataFrame = {
-    // SMALL-GRAPH FAST PATH (r20 optimization — see
-    // [[localGraphEdgeMax]]): under the threshold the whole walk —
-    // seed pick, `rounds` synchronous frontier expansions, histogram,
-    // totals — runs on the driver over the collected edge list. The
-    // distributed path paid the directed-frame staging write plus,
-    // per round, an expand join + distinct + anti-join + two eager
-    // checkpoints; all of it fixed scheduling overhead at this size.
-    // Same layers (a node's dist = its first-discovery round), same
-    // exact-integer report.
-    val probedBfs = probeLocalEdges(edges, knownEdges)
-    if (probedBfs.isDefined) {
-      val rows = probedBfs.get
-      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      def add(a: Long, b: Long): Unit = {
-        adj.computeIfAbsent(a, _ => new scala.collection.mutable.ArrayBuffer[Long]) += b
-        ()
-      }
-      rows.foreach { case (u, v) => add(u, v); add(v, u) }
-      val degBuf = new scala.collection.mutable.ArrayBuffer[(Long, Int)](adj.size)
-      adj.forEach((node, nbrs) => { degBuf += ((node, nbrs.length)); () })
-      val seeds = degBuf.sortBy { case (node, d) => (-d, node) }
-        .take(nSeeds).map(_._1)
-      val dist = new java.util.HashMap[Long, Long]()
-      seeds.foreach(s => dist.put(s, 0L))
-      var frontier: Seq[Long] = seeds.toSeq
-      (1 to rounds).foreach { i =>
-        val fresh = new scala.collection.mutable.ArrayBuffer[Long]()
-        frontier.foreach { f =>
-          val nbrs = adj.get(f)
-          if (nbrs != null) nbrs.foreach { s =>
-            if (!dist.containsKey(s)) { dist.put(s, i.toLong); fresh += s }
-          }
-        }
-        frontier = fresh.toSeq
-      }
-      // per-distance histogram + totals, all exact integers
-      val hist = new java.util.HashMap[Long, (Long, Long, Long)]()
-      dist.forEach { (node, d) =>
-        val cur = hist.get(d)
-        hist.put(d, if (cur == null) (1L, node, node)
-          else (cur._1 + 1, math.min(cur._2, node), math.max(cur._3, node)))
-        ()
-      }
-      val nNodes = adj.size.toLong
-      val nReached = dist.size.toLong
-      val out = new scala.collection.mutable
-        .ArrayBuffer[(Long, Long, Long, Long, Long, Long, Long)](hist.size)
-      hist.forEach { (d, t) =>
-        out += ((d, t._1, t._2, t._3, nNodes, nReached, nNodes - nReached))
-        ()
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return out.sortBy(_._1).toSeq.toDF("dist", "nodes", "min_node",
-        "max_node", "n_nodes", "n_reached", "n_unreached")
-    }
+    val src = GraphExec.source(edges, knownEdges, GraphExec.nodeTable(edges, _))
+    if (src.isDefined) return src.get.run(bfsWalk(_, rounds, nSeeds))
     val ed = Scratch.stageReuse(
       edges.select(col("u").as("s"), col("v").as("d"))
         .unionAll(edges.select(col("v").as("s"), col("u").as("d"))),
@@ -1432,15 +1215,15 @@ object Graph {
     // seed pick is a TakeOrdered (distributed heap), not a window
     val seeds = deg.orderBy(col("deg").desc, col("node")).limit(nSeeds)
       .select(col("node"))
-    var reached = truncated(seeds.select(col("node"), lit(0L).as("dist")))
+    var reached = GraphExec.truncated(seeds.select(col("node"), lit(0L).as("dist")))
     var frontier = reached.select(col("node"))
     (1 to rounds).foreach { i =>
       val expand = ed.join(frontier.withColumnRenamed("node", "d"), "d")
         .select(col("s").as("node")).distinct()
-      val fresh = truncated(
+      val fresh = GraphExec.truncated(
         expand.join(reached.select(col("node")), Seq("node"), "left_anti")
           .select(col("node"), lit(i.toLong).as("dist")))
-      reached = truncated(reached.unionAll(fresh))
+      reached = GraphExec.truncated(reached.unionAll(fresh))
       frontier = fresh.select(col("node"))
     }
     val hist = reached.groupBy(col("dist"))
@@ -1453,6 +1236,30 @@ object Graph {
     hist.crossJoin(broadcast(totals))
       .select(col("dist"), col("nodes"), col("min_node"), col("max_node"),
         col("n_nodes"), col("n_reached"), col("n_unreached"))
+  }
+
+  /** The BFS walk on a kernel edge source, in the oracle's min-fold
+    * form: each round every node takes min(own dist, min over neighbors
+    * of their dist + 1) — a node's min dist IS its first-discovery
+    * round, so the layers are the frontier loop's. */
+  private def bfsWalk(src: GraphExec.EdgeSource, rounds: Int, nSeeds: Int): DataFrame = {
+    val (ids, deg) = (src.nodes, src.degree)
+    var dist = Array.fill(ids.length)(GraphExec.Unreached)
+    ids.indices.sortBy(i => (-deg(i), ids(i))).take(nSeeds).foreach(dist(_) = 0L)
+    (1 to rounds).foreach { _ =>
+      val hop = src.round(GraphExec.Hop, dist)
+      dist = Array.tabulate(ids.length)(i => math.min(dist(i), hop(i)))
+    }
+    // per-distance histogram + totals, all exact integers
+    val reached = ids.indices.filter(dist(_) != GraphExec.Unreached)
+    val (nNodes, nReached) = (ids.length.toLong, reached.length.toLong)
+    val hist = reached.groupBy(dist(_)).toSeq.sortBy(_._1).map { case (d, is) =>
+      (d, is.length.toLong, is.map(ids(_)).min, is.map(ids(_)).max,
+        nNodes, nReached, nNodes - nReached)
+    }
+    val spark = src.spark
+    import spark.implicits._
+    hist.toDF("dist", "nodes", "min_node", "max_node", "n_nodes", "n_reached", "n_unreached")
   }
 
   /** Oracle: the min-fold BFS unrolled as [[BfsRounds]] MATERIALIZED
@@ -1493,5 +1300,226 @@ object Graph {
        |    MAX(node) AS max_node
        |  FROM r$BfsRounds GROUP BY dist) h
        |CROSS JOIN totals s""".stripMargin
+  }
+}
+
+/** Where the iterative graph walks run. A walk (PageRank, k-core, LPA,
+  * BFS) writes its round once, as a [[GraphExec.Kernel]]: a per-edge
+  * send into a node-indexed `Long` accumulator, merged exactly (sum or
+  * min — associative and commutative, so any partitioning and any
+  * reduction order give the same array), then a per-node apply on the
+  * driver. [[source]] picks the first tier the graph fits, in order:
+  *
+  *  1. driver: at most `edgeCap` edges are collected once and
+  *     index-compacted ([[Collected]]); every round runs in the driver
+  *     JVM — zero jobs per round;
+  *  2. node tier: at most `nodeCap` nodes — the node-indexed state fits
+  *     the driver and a broadcast, so a round is ONE mapPartitions pass
+  *     over the persisted index pairs, tree-merged ([[Staged]]) — one
+  *     job per round, where the loop pays a shuffle, a broadcast build
+  *     and a join;
+  *  3. otherwise the walk's DataFrame loop.
+  *
+  * The caps are `spark.graft.graph.localEdgeThreshold` (default 1M;
+  * also `Dedup.pairClusters`' union-find gate) and
+  * `spark.graft.graph.localNodeThreshold` (default 500k, which keeps
+  * a round's per-partition accumulator at ≤ 4 MB). Each must be a
+  * non-negative integer. Both are clamped at 100M: the driver holds
+  * the collected edges and the node state in Int-indexed JVM arrays,
+  * and past that a collect could not fit a driver anyway.
+  *
+  * Defs and classes only: no val here may read another object's (the
+  * object-init-cycle class). */
+private[operators] object GraphExec {
+
+  /** (edge cap, node cap), both validated on every read. */
+  def caps(spark: SparkSession): (Long, Long) = {
+    def cap(key: String, default: Long): Long = {
+      val raw = spark.conf.getOption(key)
+      val n = raw.fold(default)(v => Try(v.trim.toLong).getOrElse(-1L))
+      require(n >= 0L, s"$key must be a non-negative integer, got '${raw.getOrElse("")}'")
+      math.min(n, 100000000L)
+    }
+    (cap("spark.graft.graph.localEdgeThreshold", 1000000L),
+      cap("spark.graft.graph.localNodeThreshold", 500000L))
+  }
+
+  private def pairsOf(edges: DataFrame): Dataset[(Long, Long)] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)]
+  }
+
+  /** The driver tier alone (LPA's only kernel tier). ONE bounded probe
+    * both decides and, under the cap, already IS the edge list:
+    * `head(cap + 1)` is Spark's incremental executeTake (1 partition,
+    * then a geometric ramp), so a graph over the cap pays one bounded
+    * scan, never a full pass. A count already observed on the staging
+    * write (`knownEdges`) makes the gate free, and under the cap the
+    * collect is one parallel job instead of the serial ramp. */
+  def collected(edges: DataFrame, known: Option[Long]): Option[Collected] = {
+    val (limit, typed) = (caps(edges.sparkSession)._1, pairsOf(edges))
+    val rows = known match {
+      case Some(n) => if (n <= limit) Some(typed.collect()) else None
+      case None => Some(typed.head(limit.toInt + 1)).filter(_.length <= limit)
+    }
+    rows.map(new Collected(edges.sparkSession, _))
+  }
+
+  /** The tier for a walk with a node tier: the collected edges, else —
+    * when `nodes(nodeCap)` returns the (node, degree) table, which it
+    * does only for graphs with at most that many nodes — the staged
+    * index pairs, else None: the walk's DataFrame loop. */
+  def source(edges: DataFrame, known: Option[Long],
+             nodes: Long => Option[Array[(Long, Long)]]): Option[EdgeSource] = {
+    val nodeCap = caps(edges.sparkSession)._2
+    collected(edges, known).orElse(nodes(nodeCap).map(new Staged(pairsOf(edges), _)))
+  }
+
+  /** The node tier's bounded probe (k-core, BFS): ONE job whose
+    * partitions count endpoint degrees into a map and give up past
+    * `cap` distinct nodes, tree-merged by exact sums under the same
+    * bound — so a graph far over the cap costs a partial scan per
+    * partition and ships at most cap + 1 entries per partial, never a
+    * node-sized shuffle. The (node, degree) table when it fits. */
+  def nodeTable(edges: DataFrame, cap: Long): Option[Array[(Long, Long)]] = {
+    type Deg = java.util.HashMap[Long, Long]
+    val merge: (Option[Deg], Option[Deg]) => Option[Deg] = (a, b) =>
+      a.zip(b).map { case (x, y) => y.forEach((k, c) => { x.merge(k, c, _ + _); () }); x }
+        .filter(_.size <= cap)
+    val partials = pairsOf(edges).rdd.mapPartitions { it =>
+      val d = new Deg()
+      while (it.hasNext && d.size <= cap) {
+        val (u, v) = it.next()
+        d.merge(u, 1L, _ + _); d.merge(v, 1L, _ + _)
+      }
+      Iterator.single(Some(d).filter(_.size <= cap))
+    }
+    partials.treeReduce(merge, depth = 2).map { d =>
+      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](d.size)
+      d.forEach((k, c) => { out += ((k, c)); () })
+      out.toArray
+    }
+  }
+
+  /** Checkpoint-truncate an iteration's state frame (every DataFrame
+    * loop here and `Dedup.pairClusters`): a round's frame feeds the
+    * next round's joins AND the final report, so unbroken lineage
+    * re-expands the whole walk per consumer. RELIABLE vs LOCAL:
+    * localCheckpoint stores blocks on executors with lineage gone —
+    * an executor loss (or dynamic-allocation decommission) mid-loop
+    * fails the job unrecoverably. When the session has a checkpoint
+    * dir (a cluster run's shared FS), use reliable checkpoint(); fall
+    * back to localCheckpoint only where executors and driver share the
+    * one JVM (local mode, this repo's test/bench harness) and executor
+    * loss IS process death. */
+  def truncated(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
+
+  /** One synchronous round, written once for both edge sources:
+    * `send` folds edge (u, v) of the node-indexed `state` into `acc`
+    * with `merge`, whose identity is `zero`. */
+  abstract class Kernel(val zero: Long) extends Serializable {
+    def merge(a: Long, b: Long): Long
+    def send(state: Array[Long], acc: Array[Long], u: Int, v: Int): Unit
+  }
+
+  /** Each endpoint receives the other's state, summed: degrees (state
+    * all 1) and PageRank's rank shares. */
+  case object Spread extends Kernel(0L) {
+    def merge(a: Long, b: Long): Long = a + b
+    def send(s: Array[Long], acc: Array[Long], u: Int, v: Int): Unit = {
+      acc(v) += s(u); acc(u) += s(v)
+    }
+  }
+
+  /** k-core: each node's degree over the edges whose endpoints are both
+    * alive (state 1). */
+  case object Live extends Kernel(0L) {
+    def merge(a: Long, b: Long): Long = a + b
+    def send(s: Array[Long], acc: Array[Long], u: Int, v: Int): Unit =
+      if ((s(u) & s(v)) == 1L) { acc(u) += 1L; acc(v) += 1L }
+  }
+
+  final val Unreached = Long.MaxValue
+
+  /** BFS: the least neighbor distance plus one (state = distance,
+    * [[Unreached]] for none). */
+  case object Hop extends Kernel(Long.MaxValue) {
+    def merge(a: Long, b: Long): Long = math.min(a, b)
+    def send(s: Array[Long], acc: Array[Long], u: Int, v: Int): Unit = {
+      if (s(u) != Unreached) acc(v) = math.min(acc(v), s(u) + 1L)
+      if (s(v) != Unreached) acc(u) = math.min(acc(u), s(v) + 1L)
+    }
+  }
+
+  /** Either tier's edges: node ids by index, their degrees, and one
+    * kernel round over every edge. */
+  abstract class EdgeSource(val spark: SparkSession) {
+    def nodes: Array[Long]
+    def degree: Array[Long]
+    def round(k: Kernel, state: Array[Long]): Array[Long]
+    def close(): Unit = ()
+    def run[T](walk: this.type => T): T = try walk(this) finally close()
+  }
+
+  /** The driver tier: the collected edges as index pairs `from(e)`,
+    * `to(e)`. */
+  final class Collected(spark: SparkSession, rows: Array[(Long, Long)])
+      extends EdgeSource(spark) {
+    private val index = new java.util.HashMap[Long, Int]()
+    private val ids = new scala.collection.mutable.ArrayBuffer[Long]()
+    private def at(node: Long): Int =
+      index.computeIfAbsent(node, _ => { ids += node; ids.length - 1 })
+    val from: Array[Int] = rows.map(r => at(r._1))
+    val to: Array[Int] = rows.map(r => at(r._2))
+    val nodes: Array[Long] = ids.toArray
+    val degree: Array[Long] = round(Spread, Array.fill(nodes.length)(1L))
+    def round(k: Kernel, state: Array[Long]): Array[Long] = {
+      val acc = Array.fill(state.length)(k.zero)
+      var e = 0
+      while (e < from.length) { k.send(state, acc, from(e), to(e)); e += 1 }
+      acc
+    }
+  }
+
+  /** The node tier: the edges as index pairs, persisted once (a round
+    * re-reads cached (int, int) pairs instead of re-scanning and
+    * re-hashing ids); a round broadcasts the state, folds each
+    * partition into one accumulator and tree-merges them. */
+  final class Staged(typed: Dataset[(Long, Long)], table: Array[(Long, Long)])
+      extends EdgeSource(typed.sparkSession) {
+    val nodes: Array[Long] = table.map(_._1)
+    val degree: Array[Long] = table.map(_._2)
+    private val sc = spark.sparkContext
+    private val indexBc = sc.broadcast {
+      val m = new java.util.HashMap[Long, Int](nodes.length * 2)
+      nodes.indices.foreach(i => m.put(nodes(i), i))
+      m
+    }
+    private val pairs = {
+      val ix = indexBc
+      typed.rdd.mapPartitions { it =>
+        val m = ix.value
+        it.map { case (u, v) => (m.get(u), m.get(v)) }
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    def round(k: Kernel, state: Array[Long]): Array[Long] = {
+      val bc = sc.broadcast(state)
+      val n = state.length
+      try pairs.mapPartitions { it =>
+        val (s, acc) = (bc.value, Array.fill(n)(k.zero))
+        it.foreach { case (u, v) => k.send(s, acc, u, v) }
+        Iterator.single(acc)
+      }.treeReduce({ (a, b) =>
+        var i = 0
+        while (i < a.length) { a(i) = k.merge(a(i), b(i)); i += 1 }
+        a
+      }, depth = 2)
+      finally bc.destroy()
+    }
+    override def close(): Unit = { pairs.unpersist(blocking = false); indexBc.destroy() }
   }
 }

@@ -190,7 +190,7 @@ class DedupSpec extends SparkSpecBase {
     // force the DISTRIBUTED loop (this test pins the pointer-jumping
     // convergence bound): the r20 small-graph fast path would
     // otherwise resolve a 50-edge graph on the driver
-    spark.conf.set("spark.graft.clusters.localEdgeThreshold", "0")
+    spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
     try {
       val chain = (1L until 50L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
       val clusters = Dedup.pairClusters(chain).collect()
@@ -204,7 +204,7 @@ class DedupSpec extends SparkSpecBase {
       intercept[IllegalStateException] {
         Dedup.pairClusters(longChain, maxIters = 3)
       }
-    } finally spark.conf.unset("spark.graft.clusters.localEdgeThreshold")
+    } finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
   }
 
   test("pair clusters: the small-graph fast path matches the distributed loop") {
@@ -220,11 +220,11 @@ class DedupSpec extends SparkSpecBase {
       Seq((300L, 310L))).toDF("doc_a", "doc_b")
     val fast = Dedup.pairClusters(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).sorted
-    spark.conf.set("spark.graft.clusters.localEdgeThreshold", "0")
+    spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
     val loop =
       try Dedup.pairClusters(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).sorted
-      finally spark.conf.unset("spark.graft.clusters.localEdgeThreshold")
+      finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
     assert(fast.sameElements(loop),
       "fast-path labels must equal the distributed loop's labels")
     val m = fast.toMap
@@ -245,12 +245,12 @@ class DedupSpec extends SparkSpecBase {
     spark.sparkContext.setCheckpointDir(ckpt.toString)
     // force the loop path: this test pins the LOOP's checkpoint
     // routing, which the r20 small-graph fast path never reaches
-    spark.conf.set("spark.graft.clusters.localEdgeThreshold", "0")
+    spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val clusters =
       try Dedup.pairClusters(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("spark.graft.clusters.localEdgeThreshold")
+      finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
     assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // the loop actually wrote checkpoint data under the reliable dir
     def anyFiles(p: java.io.File): Boolean =

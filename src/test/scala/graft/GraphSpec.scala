@@ -1,10 +1,38 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
 
 class GraphSpec extends SparkSpecBase {
+
+  private val EdgeCap = "spark.graft.graph.localEdgeThreshold"
+  private val NodeCap = "spark.graft.graph.localNodeThreshold"
+
+  /** `f` under the session confs `kv`, unset afterwards. */
+  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally kv.foreach(t => spark.conf.unset(t._1))
+  }
+
+  /** Spark jobs `f` starts (the BpeSpec listener pattern: the listener
+    * bus is asynchronous, so wait until every started job has ended). */
+  private def jobsOf(f: => Unit): Int = {
+    val (started, ended) = (new AtomicInteger, new AtomicInteger)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      val deadline = System.currentTimeMillis() + 10000L
+      do Thread.sleep(200) while (ended.get != started.get && System.currentTimeMillis() < deadline)
+      started.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   private def edgesDf(pairs: (Long, Long)*): DataFrame = {
     import spark.implicits._
@@ -164,9 +192,7 @@ class GraphSpec extends SparkSpecBase {
     def core(): Set[Long] = Graph.kcoreOn(g, k = 2, oracleRoundBudget = Some(0),
       knownEdges = Some(6L)).collect().map(_.getAs[Long]("p_partkey")).toSet
     assert(core() == Set(1L, 2L, 3L, 4L))
-    spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
-    try assert(core() == Set(1L, 2L, 3L, 4L))
-    finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
+    withConfs(EdgeCap -> "0", NodeCap -> "0")(assert(core() == Set(1L, 2L, 3L, 4L)))
   }
 
   test("kcore driver key: every core member keeps >= k core neighbors; core is a subgraph of the supported graph") {
@@ -409,9 +435,11 @@ class GraphSpec extends SparkSpecBase {
 
   test("graph small-graph fast paths match the distributed loops " +
       "(kcore, lpa, modularity, bfs) on seeded random graphs") {
-    // the r20 fast paths run every iterative walk on the driver under
-    // spark.graft.graph.localEdgeThreshold; this pins them row-identical
-    // to the distributed loops (the DedupSpec pairClusters pattern)
+    // every walk on all three tiers: the driver (default caps), the node
+    // tier (edge cap 0; LPA and modularity have none and run their
+    // loop) and the DataFrame loops (both caps 0) stay row-identical,
+    // and k-core's round count — the oracle budget guard's input — is
+    // the same on each: a tight budget passes, one round less fails
     val rnd = new scala.util.Random(4412)
     def snap(df: DataFrame): Seq[Seq[Any]] =
       df.collect().map(_.toSeq.map {
@@ -419,6 +447,17 @@ class GraphSpec extends SparkSpecBase {
         case i: java.lang.Integer => i.longValue(): Any
         case x => x
       }.toSeq).toSeq.sortBy(_.mkString("|"))
+    // changing peels of the synchronized 2-core peel, in plain Scala
+    def peels(pairs: Seq[(Long, Long)]): Int = {
+      var (alive, rounds, changed) = (pairs, 0, true)
+      while (changed) {
+        val deg = alive.flatMap(p => Seq(p._1, p._2)).groupBy(identity).map(t => t._1 -> t._2.size)
+        val next = alive.filter(p => deg(p._1) >= 2 && deg(p._2) >= 2)
+        changed = next.size != alive.size
+        alive = next; rounds += 1
+      }
+      rounds - 1
+    }
     (1 to 3).foreach { trial =>
       val n = 14 + rnd.nextInt(18)
       val pairs = (for {
@@ -427,32 +466,55 @@ class GraphSpec extends SparkSpecBase {
       } yield (u, v)).distinct
       if (pairs.nonEmpty) {
         val g = edgesDf(pairs: _*)
-        def all() = Seq(Graph.kcoreOn(g, k = 2), Graph.lpaOn(g),
-          Graph.modularityOn(g), Graph.bfsOn(g, rounds = 6, nSeeds = 2),
-          Graph.pagerankOn(g)).map(snap)
+        val p = peels(pairs)
+        def kcore(budget: Int) = Graph.kcoreOn(g, k = 2, oracleRoundBudget = Some(budget),
+          knownEdges = Some(pairs.size.toLong))
+        def all() = {
+          intercept[IllegalArgumentException](kcore(p - 1))
+          Seq(kcore(p), Graph.lpaOn(g), Graph.modularityOn(g),
+            Graph.bfsOn(g, rounds = 6, nSeeds = 2), Graph.pagerankOn(g)).map(snap)
+        }
         val fast = all()
-        // edge threshold 0: walks go distributed; pagerank lands on
-        // the r21 node-bounded hybrid tier (nodes << localNodeThreshold)
-        spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
-        val hybrid =
-          try all()
-          finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
-        // both thresholds 0: pagerank runs the full SMJ iteration loop
-        spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
-        spark.conf.set("spark.graft.graph.localNodeThreshold", "0")
-        val loop =
-          try all()
-          finally {
-            spark.conf.unset("spark.graft.graph.localEdgeThreshold")
-            spark.conf.unset("spark.graft.graph.localNodeThreshold")
-          }
+        val node = withConfs(EdgeCap -> "0")(all())
+        val loop = withConfs(EdgeCap -> "0", NodeCap -> "0")(all())
         Seq("kcore", "lpa", "modularity", "bfs", "pagerank")
-          .zip(fast.zip(hybrid.zip(loop))).foreach {
+          .zip(fast.zip(node.zip(loop))).foreach {
             case (name, (f, (h, l))) =>
-              assert(f == h, s"trial $trial: $name fast path != hybrid/loop tier")
-              assert(h == l, s"trial $trial: $name hybrid tier != distributed loop")
+              assert(f == h, s"trial $trial: $name driver tier != node tier")
+              assert(h == l, s"trial $trial: $name node tier != distributed loop")
           }
       }
+    }
+  }
+
+  test("graph tiers: each cap is inclusive — edges == cap takes the " +
+      "driver, cap + 1 the node tier; nodes == cap the node tier, cap + 1 " +
+      "the loop") {
+    // a 6-node, 7-edge graph; the tiers tell apart by their jobs: the
+    // driver's count does not depend on the rounds, the node tier adds
+    // exactly one job per round, the loop more (checkpointed frames)
+    val g = edgesDf((1L,2L),(1L,3L),(2L,3L),(3L,4L),(4L,5L),(5L,6L),(4L,6L))
+    def perRound(known: Option[Long]): Int =
+      jobsOf(Graph.bfsOn(g, rounds = 3, knownEdges = known).collect()) -
+        jobsOf(Graph.bfsOn(g, rounds = 1, knownEdges = known).collect())
+    Seq(None, Some(7L)).foreach { known =>
+      withConfs(EdgeCap -> "7", NodeCap -> "0")(assert(perRound(known) == 0, s"known $known"))
+      withConfs(EdgeCap -> "6", NodeCap -> "6")(assert(perRound(known) == 2, s"known $known"))
+      withConfs(EdgeCap -> "6", NodeCap -> "5")(assert(perRound(known) > 2, s"known $known"))
+    }
+  }
+
+  test("graph tier caps: a non-numeric or negative cap fails before any " +
+      "job, naming its key") {
+    val g = edgesDf((1L,2L),(2L,3L))
+    for (key <- Seq(EdgeCap, NodeCap); bad <- Seq("lots", "-1")) {
+      var e: IllegalArgumentException = null
+      val jobs = withConfs(key -> bad)(jobsOf {
+        e = intercept[IllegalArgumentException](Graph.bfsOn(g))
+      })
+      assert(e.getMessage.contains(s"$key must be a non-negative integer, got '$bad'"),
+        e.getMessage)
+      assert(jobs == 0, s"$key=$bad started $jobs jobs before failing")
     }
   }
 }
