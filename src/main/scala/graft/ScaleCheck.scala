@@ -53,8 +53,8 @@ object ScaleCheck {
     val graphOnly = Set("graph_triangles", "graph_pagerank",
       "graph_edge_jaccard", "graph_components", "graph_kcore",
       "graph_lpa", "graph_link_predict", "graph_modularity", "graph_bfs",
-      "graph_kcore_dist", "graph_lpa_dist", "graph_bfs_dist", "graph_kcore_node",
-      "graph_bfs_node", "graph_components_dist", "graph_pagerank_dist")
+      "graph_kcore_dist", "graph_lpa_dist", "graph_bfs_dist",
+      "graph_components_dist", "graph_pagerank_dist")
     val skipNonGraph = args.length > 1 && args(1).split(",").forall(graphOnly)
     // ops that synthesize their own substrate inline (spark.range) —
     // a run of only these writes no corpus at all
@@ -237,11 +237,10 @@ object ScaleCheck {
       (name, sec, acc.value.toLong)
     }
 
-    // graph tier caps at 0 for one call: the edge cap always, the node
-    // cap too when `nodes`
-    def withCaps[T](nodes: Boolean)(f: => T): T = {
-      val keys = Seq("spark.graft.graph.localEdgeThreshold") ++
-        (if (nodes) Seq("spark.graft.graph.localNodeThreshold") else Nil)
+    // both graph tier caps at 0 for one call: every walk runs its loop
+    def loops[T](f: => T): T = {
+      val keys = Seq("spark.graft.graph.localEdgeThreshold",
+        "spark.graft.graph.localNodeThreshold")
       keys.foreach(spark.conf.set(_, "0"))
       try f finally keys.foreach(spark.conf.unset)
     }
@@ -474,17 +473,13 @@ object ScaleCheck {
       // the whole walk from the driver, so the DataFrame loops — the
       // path a 100 TB graph actually runs — would otherwise go
       // unmeasured at every scale this harness can afford. Both caps 0
-      // force the loops; `*_node` (edge cap 0 only) runs the node tier,
-      // measured against its loop. Results are pinned identical across
-      // tiers by GraphSpec/DedupSpec.
-      run("graph_kcore_dist", withCaps(nodes = true)(G.graphKcore(spark, s"$dir/graph"))),
-      run("graph_kcore_node", withCaps(nodes = false)(G.graphKcore(spark, s"$dir/graph"))),
-      run("graph_lpa_dist", withCaps(nodes = true)(G.graphLpa(spark, s"$dir/graph"))),
-      run("graph_bfs_dist", withCaps(nodes = true)(G.graphBfs(spark, s"$dir/graph"))),
-      run("graph_bfs_node", withCaps(nodes = false)(G.graphBfs(spark, s"$dir/graph"))),
-      run("graph_pagerank_dist", withCaps(nodes = true)(G.graphPagerank(spark, s"$dir/graph"))),
-      run("graph_components_dist",
-        withCaps(nodes = false)(G.graphComponents(spark, s"$dir/graph"))),
+      // force the loops; results are pinned identical across tiers by
+      // GraphSpec/DedupSpec.
+      run("graph_kcore_dist", loops(G.graphKcore(spark, s"$dir/graph"))),
+      run("graph_lpa_dist", loops(G.graphLpa(spark, s"$dir/graph"))),
+      run("graph_bfs_dist", loops(G.graphBfs(spark, s"$dir/graph"))),
+      run("graph_pagerank_dist", loops(G.graphPagerank(spark, s"$dir/graph"))),
+      run("graph_components_dist", loops(G.graphComponents(spark, s"$dir/graph"))),
       run("text_entropy", operators.TextAnalysis.textEntropy(spark, dir)),
       run("salted_join_events", {
         val ev = sources.Tables.events(spark, dir)

@@ -869,11 +869,13 @@ object Dedup {
     // likely cause of dedup_clusters' ~15% drift), then collect()ed a
     // second time under the threshold
     val obs = org.apache.spark.sql.Observation()
+    // read (and validated) before the staging write
+    val edgeCap = GraphExec.edgeCap(pairs.sparkSession)
     pairs.select(col("doc_a"), col("doc_b"))
       .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(staged)
     val p = pairs.sparkSession.read.parquet(staged)
-    // at most the graph edge cap of pairs (`GraphExec.caps`, the walks'
+    // at most the graph edge cap of pairs (`GraphExec.edgeCap`, the walks'
     // driver-tier cap): each pointer-jumping round is 5+ scheduled jobs
     // whose fixed overhead dwarfs the row work (the r6 profile: seconds
     // of loop on a few hundred edges), so the staged pairs are collected
@@ -882,7 +884,7 @@ object Dedup {
     // (union by smaller root id keeps every root the component MINIMUM,
     // so find() returns the min-label the propagation fixpoint assigns)
     val nPairs = obs.get("n").asInstanceOf[Long]
-    if (nPairs <= GraphExec.caps(pairs.sparkSession)._1) {
+    if (nPairs <= edgeCap) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val rows = p.select(col("doc_a"), col("doc_b"))

@@ -599,8 +599,8 @@ object Graph {
     kcoreOn(e, oracleRoundBudget = Some(KcorePeelRounds), knownEdges = Some(n))
   }
 
-  /** Generic k-core over a distinct undirected (u, v) edge list, on
-    * the first [[GraphExec]] tier the graph fits.
+  /** Generic k-core over a distinct undirected (u, v) edge list: the
+    * [[GraphExec]] driver tier when the edges fit, else the loop.
     *
     * Distributed peeling (the loop): each round computes degrees (one keyed
     * aggregate over the live edges) and semi-joins the edge list
@@ -624,7 +624,7 @@ object Graph {
   def kcoreOn(edges: DataFrame, k: Int = KcoreK, topK: Int = TopK,
               oracleRoundBudget: Option[Int] = None,
               knownEdges: Option[Long] = None): DataFrame = {
-    val src = GraphExec.source(edges, knownEdges, GraphExec.nodeTable(edges, _))
+    val src = GraphExec.collected(edges, knownEdges)
     if (src.isDefined) return src.get.run(kcoreWalk(_, k, topK, oracleRoundBudget))
     var alive = GraphExec.truncated(edges.select(col("u"), col("v")))
     // the probe overflowed, so the edge list is non-empty — no upfront
@@ -1179,8 +1179,8 @@ object Graph {
     * histogram (count, min/max node per level) with the reach totals
     * attached.
     *
-    * Scale shape: under the [[GraphExec]] caps the walk runs the
-    * min-fold on the driver or node tier; the DataFrame loop iterates
+    * Scale shape: under the [[GraphExec]] edge cap the walk runs the
+    * min-fold on the driver tier; the DataFrame loop iterates
     * FRONTIER-ONLY — round i joins
     * the m-row edge frame against only the nodes discovered at round
     * i−1 and anti-joins the already-reached set, so per-round cost is
@@ -1199,7 +1199,7 @@ object Graph {
   def bfsOn(edges: DataFrame, rounds: Int = BfsRounds,
             nSeeds: Int = BfsSeeds,
             knownEdges: Option[Long] = None): DataFrame = {
-    val src = GraphExec.source(edges, knownEdges, GraphExec.nodeTable(edges, _))
+    val src = GraphExec.collected(edges, knownEdges)
     if (src.isDefined) return src.get.run(bfsWalk(_, rounds, nSeeds))
     val ed = Scratch.stageReuse(
       edges.select(col("u").as("s"), col("v").as("d"))
@@ -1308,16 +1308,20 @@ object Graph {
   * send into a node-indexed `Long` accumulator, merged exactly (sum or
   * min — associative and commutative, so any partitioning and any
   * reduction order give the same array), then a per-node apply on the
-  * driver. [[source]] picks the first tier the graph fits, in order:
+  * driver. A walk runs on the first tier the graph fits, in order:
   *
-  *  1. driver: at most `edgeCap` edges are collected once and
-  *     index-compacted ([[Collected]]); every round runs in the driver
-  *     JVM — zero jobs per round;
-  *  2. node tier: at most `nodeCap` nodes — the node-indexed state fits
-  *     the driver and a broadcast, so a round is ONE mapPartitions pass
-  *     over the persisted index pairs, tree-merged ([[Staged]]) — one
-  *     job per round, where the loop pays a shuffle, a broadcast build
-  *     and a join;
+  *  1. driver ([[collected]]): at most `edgeCap` edges are collected
+  *     once and index-compacted ([[Collected]]); every round runs in
+  *     the driver JVM — zero jobs per round;
+  *  2. node tier ([[source]], PageRank only): at most `nodeCap` nodes —
+  *     the node-indexed state fits the driver and a broadcast, so a
+  *     round is ONE mapPartitions pass over the persisted index pairs,
+  *     tree-merged ([[Staged]]) — one job per round, where the loop
+  *     pays a shuffle, a broadcast build and a join. PageRank's loop
+  *     already counts the nodes, so its decision is free. k-core's and
+  *     BFS's loops do not: a node-count job in front of them would be
+  *     pure cost on every graph above the node cap, so they have no
+  *     node tier;
   *  3. otherwise the walk's DataFrame loop.
   *
   * The caps are `spark.graft.graph.localEdgeThreshold` (default 1M;
@@ -1332,16 +1336,19 @@ object Graph {
   * object-init-cycle class). */
 private[operators] object GraphExec {
 
-  /** (edge cap, node cap), both validated on every read. */
-  def caps(spark: SparkSession): (Long, Long) = {
-    def cap(key: String, default: Long): Long = {
-      val raw = spark.conf.getOption(key)
-      val n = raw.fold(default)(v => Try(v.trim.toLong).getOrElse(-1L))
-      require(n >= 0L, s"$key must be a non-negative integer, got '${raw.getOrElse("")}'")
-      math.min(n, 100000000L)
-    }
-    (cap("spark.graft.graph.localEdgeThreshold", 1000000L),
-      cap("spark.graft.graph.localNodeThreshold", 500000L))
+  /** The edge cap (also `Dedup.pairClusters`' union-find gate). Each
+    * cap is validated only where it is read. */
+  def edgeCap(spark: SparkSession): Long =
+    cap(spark, "spark.graft.graph.localEdgeThreshold", 1000000L)
+
+  def nodeCap(spark: SparkSession): Long =
+    cap(spark, "spark.graft.graph.localNodeThreshold", 500000L)
+
+  private def cap(spark: SparkSession, key: String, default: Long): Long = {
+    val raw = spark.conf.getOption(key)
+    val n = raw.fold(default)(v => Try(v.trim.toLong).getOrElse(-1L))
+    require(n >= 0L, s"$key must be a non-negative integer, got '${raw.getOrElse("")}'")
+    math.min(n, 100000000L)
   }
 
   private def pairsOf(edges: DataFrame): Dataset[(Long, Long)] = {
@@ -1350,15 +1357,15 @@ private[operators] object GraphExec {
     edges.select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)]
   }
 
-  /** The driver tier alone (LPA's only kernel tier). ONE bounded probe
-    * both decides and, under the cap, already IS the edge list:
-    * `head(cap + 1)` is Spark's incremental executeTake (1 partition,
-    * then a geometric ramp), so a graph over the cap pays one bounded
-    * scan, never a full pass. A count already observed on the staging
-    * write (`knownEdges`) makes the gate free, and under the cap the
-    * collect is one parallel job instead of the serial ramp. */
+  /** The driver tier (k-core's, LPA's and BFS's only kernel tier).
+    * ONE bounded probe both decides and, under the cap, already IS the
+    * edge list: `head(cap + 1)` is Spark's incremental executeTake (1
+    * partition, then a geometric ramp), so a graph over the cap pays
+    * one bounded scan, never a full pass. A count already observed on
+    * the staging write (`knownEdges`) makes the gate free, and under the
+    * cap the collect is one parallel job instead of the serial ramp. */
   def collected(edges: DataFrame, known: Option[Long]): Option[Collected] = {
-    val (limit, typed) = (caps(edges.sparkSession)._1, pairsOf(edges))
+    val (limit, typed) = (edgeCap(edges.sparkSession), pairsOf(edges))
     val rows = known match {
       case Some(n) => if (n <= limit) Some(typed.collect()) else None
       case None => Some(typed.head(limit.toInt + 1)).filter(_.length <= limit)
@@ -1366,40 +1373,14 @@ private[operators] object GraphExec {
     rows.map(new Collected(edges.sparkSession, _))
   }
 
-  /** The tier for a walk with a node tier: the collected edges, else —
-    * when `nodes(nodeCap)` returns the (node, degree) table, which it
-    * does only for graphs with at most that many nodes — the staged
-    * index pairs, else None: the walk's DataFrame loop. */
+  /** PageRank's tier: the collected edges, else — when
+    * `nodes(nodeCap)` returns the (node, degree) table, which it does
+    * only for graphs with at most that many nodes — the staged index
+    * pairs, else None: the DataFrame loop. */
   def source(edges: DataFrame, known: Option[Long],
              nodes: Long => Option[Array[(Long, Long)]]): Option[EdgeSource] = {
-    val nodeCap = caps(edges.sparkSession)._2
-    collected(edges, known).orElse(nodes(nodeCap).map(new Staged(pairsOf(edges), _)))
-  }
-
-  /** The node tier's bounded probe (k-core, BFS): ONE job whose
-    * partitions count endpoint degrees into a map and give up past
-    * `cap` distinct nodes, tree-merged by exact sums under the same
-    * bound — so a graph far over the cap costs a partial scan per
-    * partition and ships at most cap + 1 entries per partial, never a
-    * node-sized shuffle. The (node, degree) table when it fits. */
-  def nodeTable(edges: DataFrame, cap: Long): Option[Array[(Long, Long)]] = {
-    type Deg = java.util.HashMap[Long, Long]
-    val merge: (Option[Deg], Option[Deg]) => Option[Deg] = (a, b) =>
-      a.zip(b).map { case (x, y) => y.forEach((k, c) => { x.merge(k, c, _ + _); () }); x }
-        .filter(_.size <= cap)
-    val partials = pairsOf(edges).rdd.mapPartitions { it =>
-      val d = new Deg()
-      while (it.hasNext && d.size <= cap) {
-        val (u, v) = it.next()
-        d.merge(u, 1L, _ + _); d.merge(v, 1L, _ + _)
-      }
-      Iterator.single(Some(d).filter(_.size <= cap))
-    }
-    partials.treeReduce(merge, depth = 2).map { d =>
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](d.size)
-      d.forEach((k, c) => { out += ((k, c)); () })
-      out.toArray
-    }
+    val limit = nodeCap(edges.sparkSession)
+    collected(edges, known).orElse(nodes(limit).map(new Staged(pairsOf(edges), _)))
   }
 
   /** Checkpoint-truncate an iteration's state frame (every DataFrame
@@ -1503,7 +1484,15 @@ private[operators] object GraphExec {
       val ix = indexBc
       typed.rdd.mapPartitions { it =>
         val m = ix.value
-        it.map { case (u, v) => (m.get(u), m.get(v)) }
+        // the table and the pairs are two evaluations of the edges: an
+        // endpoint missing from the table fails (a plain get would
+        // unbox null to node 0)
+        def at(node: Long): Int = {
+          val i = m.getOrDefault(node, -1)
+          require(i >= 0, s"edge endpoint $node is not in the node table")
+          i
+        }
+        it.map { case (u, v) => (at(u), at(v)) }
       }.persist(StorageLevel.MEMORY_AND_DISK)
     }
     def round(k: Kernel, state: Array[Long]): Array[Long] = {

@@ -192,7 +192,7 @@ class GraphSpec extends SparkSpecBase {
     def core(): Set[Long] = Graph.kcoreOn(g, k = 2, oracleRoundBudget = Some(0),
       knownEdges = Some(6L)).collect().map(_.getAs[Long]("p_partkey")).toSet
     assert(core() == Set(1L, 2L, 3L, 4L))
-    withConfs(EdgeCap -> "0", NodeCap -> "0")(assert(core() == Set(1L, 2L, 3L, 4L)))
+    withConfs(EdgeCap -> "0")(assert(core() == Set(1L, 2L, 3L, 4L)))
   }
 
   test("kcore driver key: every core member keeps >= k core neighbors; core is a subgraph of the supported graph") {
@@ -436,7 +436,7 @@ class GraphSpec extends SparkSpecBase {
   test("graph small-graph fast paths match the distributed loops " +
       "(kcore, lpa, modularity, bfs) on seeded random graphs") {
     // every walk on all three tiers: the driver (default caps), the node
-    // tier (edge cap 0; LPA and modularity have none and run their
+    // tier (edge cap 0; only PageRank has one, the others run their
     // loop) and the DataFrame loops (both caps 0) stay row-identical,
     // and k-core's round count — the oracle budget guard's input — is
     // the same on each: a tight budget passes, one round less fails
@@ -490,31 +490,74 @@ class GraphSpec extends SparkSpecBase {
   test("graph tiers: each cap is inclusive — edges == cap takes the " +
       "driver, cap + 1 the node tier; nodes == cap the node tier, cap + 1 " +
       "the loop") {
-    // a 6-node, 7-edge graph; the tiers tell apart by their jobs: the
-    // driver's count does not depend on the rounds, the node tier adds
-    // exactly one job per round, the loop more (checkpointed frames)
+    // PageRank (the walk with all three tiers) on a 6-node, 7-edge
+    // graph. The kernel tiers return a local relation, the loop a plan;
+    // of the kernel tiers the driver's job count does not depend on the
+    // rounds, the node tier adds exactly one job per round
     val g = edgesDf((1L,2L),(1L,3L),(2L,3L),(3L,4L),(4L,5L),(5L,6L),(4L,6L))
-    def perRound(known: Option[Long]): Int =
-      jobsOf(Graph.bfsOn(g, rounds = 3, knownEdges = known).collect()) -
-        jobsOf(Graph.bfsOn(g, rounds = 1, knownEdges = known).collect())
+    def tier(known: Option[Long]): String = {
+      def run(iters: Int): (DataFrame, Int) = {
+        var df: DataFrame = null
+        val jobs = jobsOf {
+          df = Graph.pagerankOn(g, iters = iters, knownEdges = known); df.collect()
+        }
+        (df, jobs)
+      }
+      val ((df, one), (_, three)) = (run(1), run(3))
+      val kernel = df.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      (kernel, three - one) match {
+        case (false, _) => "loop"
+        case (true, 0) => "driver"
+        case (true, 2) => "node"
+        case t => s"unknown $t"
+      }
+    }
     Seq(None, Some(7L)).foreach { known =>
-      withConfs(EdgeCap -> "7", NodeCap -> "0")(assert(perRound(known) == 0, s"known $known"))
-      withConfs(EdgeCap -> "6", NodeCap -> "6")(assert(perRound(known) == 2, s"known $known"))
-      withConfs(EdgeCap -> "6", NodeCap -> "5")(assert(perRound(known) > 2, s"known $known"))
+      assert(withConfs(EdgeCap -> "7", NodeCap -> "0")(tier(known)) == "driver", s"known $known")
+      assert(withConfs(EdgeCap -> "6", NodeCap -> "6")(tier(known)) == "node", s"known $known")
+      assert(withConfs(EdgeCap -> "6", NodeCap -> "5")(tier(known)) == "loop", s"known $known")
     }
   }
 
   test("graph tier caps: a non-numeric or negative cap fails before any " +
       "job, naming its key") {
     val g = edgesDf((1L,2L),(2L,3L))
-    for (key <- Seq(EdgeCap, NodeCap); bad <- Seq("lots", "-1")) {
+    val pairs = g.toDF("doc_a", "doc_b")
+    // PageRank reads both caps; BFS (no node tier) and pairClusters
+    // read the edge cap only
+    def fails(key: String, bad: String)(f: => Any): Unit = {
       var e: IllegalArgumentException = null
       val jobs = withConfs(key -> bad)(jobsOf {
-        e = intercept[IllegalArgumentException](Graph.bfsOn(g))
+        e = intercept[IllegalArgumentException](f)
       })
       assert(e.getMessage.contains(s"$key must be a non-negative integer, got '$bad'"),
         e.getMessage)
       assert(jobs == 0, s"$key=$bad started $jobs jobs before failing")
     }
+    for (key <- Seq(EdgeCap, NodeCap); bad <- Seq("lots", "-1"))
+      fails(key, bad)(Graph.pagerankOn(g))
+    for (bad <- Seq("lots", "-1")) {
+      fails(EdgeCap, bad)(Graph.bfsOn(g))
+      fails(EdgeCap, bad)(graft.operators.Dedup.pairClusters(pairs))
+      withConfs(NodeCap -> bad) {
+        assert(Graph.bfsOn(g).collect().nonEmpty)
+        assert(graft.operators.Dedup.pairClusters(pairs).collect().length == 3)
+      }
+    }
+  }
+
+  test("graph node tier: an edge endpoint missing from the node table " +
+      "fails instead of landing on node 0") {
+    // the node table and the index pairs are two evaluations of the
+    // edges; an unseeded random edge frame makes them disagree
+    val far = udf(() => java.util.concurrent.ThreadLocalRandom.current()
+      .nextLong(1000L, 1L << 40)).asNondeterministic()
+    val g = spark.range(40).select(col("id").as("u"), far().as("v"))
+    val e = withConfs(EdgeCap -> "0")(intercept[Exception](Graph.pagerankOn(g).collect()))
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(t => String.valueOf(t.getMessage).contains("is not in the node table")),
+      e.toString)
   }
 }

@@ -192,15 +192,11 @@ class PlanSpec extends SparkSpecBase {
     // audits is the 100 TB path, reachable only with the gate off
     // (the DedupSpec loop-contract discipline)
     spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
-    spark.conf.set("spark.graft.graph.localNodeThreshold", "0")
     val p =
       try plan(graft.operators.Graph.lpaOn(
         { import spark.implicits._
           Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("u", "v") }, rounds = 1))
-      finally {
-        spark.conf.unset("spark.graft.graph.localEdgeThreshold")
-        spark.conf.unset("spark.graft.graph.localNodeThreshold")
-      }
+      finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
     assert(!p.contains("CartesianProduct"))
     assert("Window \\[".r.findAllIn(p).length == 1,
       s"expected exactly the bounded report window:\n$p")
@@ -735,17 +731,13 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("kcore: report is a TakeOrdered over checkpointed peel state, not a global sort") {
-    // both caps 0 force the DISTRIBUTED peel loop this test audits
-    // (the driver and node tiers otherwise serve the test-scale graph
+    // threshold 0 forces the DISTRIBUTED peel loop this test audits
+    // (the r20 driver fast path otherwise serves the test-scale graph
     // as a LocalTableScan — see the twin below)
     spark.conf.set("spark.graft.graph.localEdgeThreshold", "0")
-    spark.conf.set("spark.graft.graph.localNodeThreshold", "0")
     val p =
       try plan(graft.operators.Graph.graphKcore(spark, sfDir))
-      finally {
-        spark.conf.unset("spark.graft.graph.localEdgeThreshold")
-        spark.conf.unset("spark.graft.graph.localNodeThreshold")
-      }
+      finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
     assert(p.contains("TakeOrderedAndProject"), s"top-K fell into a global sort:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
   }
